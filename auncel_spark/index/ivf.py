@@ -14,7 +14,10 @@ Physical plan of ``search``:
 2. build a probes literal ``(qid, list_no, rank)``;
 3. ``base.filter(list_no IN probed_lists)`` — static partition pruning:
    only nprobe·nq of nlist Parquet partitions are read, the exact
-   analogue of non-exhaustive list scanning;
+   analogue of non-exhaustive list scanning. ``base`` is the list table
+   opened once per index version, so the filter prunes against Spark's
+   held file listing: no scan re-runs schema inference or partition
+   discovery;
 4. join probes (broadcast) → per-partition GEMM top-k kernel
    (Arrow-batched) → global window top-k.
 
@@ -139,7 +142,11 @@ class IVFIndex:
         self.d = self.centroids.shape[1]
         self.metric = metric
         self.data_path = data_path
+        # the exact (id, vec, list_no) view: given in memory, or opened
+        # from ``data_path`` on first use and held for this version of
+        # the files (``_reopen`` drops it when they change)
         self._data_df = data_df
+        self._codes_df: DataFrame | None = None  # held lists_sq8 table
         # optional orthonormal pre-rotation (OPQ): queries are rotated
         # into code space before coarse-rank/scan; subclasses set it
         self.rotation: np.ndarray | None = None
@@ -285,13 +292,34 @@ class IVFIndex:
         after the replica swap the exact view is reassembled from the
         coded lists' (id, list_no) + positioned reads into the refine
         blob — correct but pread-shaped, so hot paths should use
-        ``scan_source()`` (codes) + ``refine_blob`` instead."""
-        if self._data_df is not None:
-            return self._data_df
-        flat = os.path.join(self.data_path, "lists")
-        if os.path.isdir(flat):
-            return self.spark.read.parquet(flat)
-        return self._data_from_blob()
+        ``scan_source()`` (codes) + ``refine_blob`` instead. Opened once
+        per index version: every later call returns the same frame,
+        whose file listing Spark keeps."""
+        if self._data_df is None:
+            flat = os.path.join(self.data_path, "lists")
+            self._data_df = (
+                self.spark.read.parquet(flat)
+                if os.path.isdir(flat)
+                else self._data_from_blob()
+            )
+        return self._data_df
+
+    def _codes(self) -> DataFrame:
+        """The SQ8 replica table ``lists_sq8/``, opened once per index
+        version like ``data``."""
+        if self._codes_df is None:
+            self._codes_df = self.spark.read.parquet(
+                os.path.join(self.data_path, "lists_sq8")
+            )
+        return self._codes_df
+
+    def _reopen(self) -> None:
+        """Drop the held list tables after the files under ``data_path``
+        or the active scan source changed; the next access re-lists
+        them. An in-memory index has nothing on disk to re-list."""
+        if self.data_path is not None:
+            self._data_df = None
+            self._codes_df = None
 
     def _data_from_blob(self) -> DataFrame:
         from typing import Iterator as _It
@@ -301,9 +329,7 @@ class IVFIndex:
             raise FileNotFoundError(
                 f"{self.data_path}: no lists/ and no refine sidecar"
             )
-        coded = self.spark.read.parquet(
-            os.path.join(self.data_path, "lists_sq8")
-        ).select("id", "list_no")
+        coded = self._codes().select("id", "list_no")
         bdir, n, d = blob.dir, blob.n, blob.d
 
         def fetch(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
@@ -340,9 +366,7 @@ class IVFIndex:
     @property
     def codec_active(self) -> bool:
         """True when scans read SQ8 codes (``scan_source`` would return
-        a codec). Cheap flag check for callers that only need the
-        boolean — ``scan_source()`` constructs a fresh DataFrame
-        (driver file-listing + schema read) per call (ADVICE r09)."""
+        a codec)."""
         return self._use_replica and self._replica_sq is not None
 
     def scan_source(self):
@@ -357,10 +381,7 @@ class IVFIndex:
             levels = 255.0
             scale = np.asarray(sq.vdiff, dtype=np.float64) / levels
             off = np.asarray(sq.vmin, dtype=np.float64) + 0.5 * scale
-            df = self.spark.read.parquet(
-                os.path.join(self.data_path, "lists_sq8")
-            )
-            return df, (off, scale)
+            return self._codes(), (off, scale)
         return self.data, None
 
     def build_scan_replica(self) -> dict:
@@ -436,6 +457,7 @@ class IVFIndex:
         with open(os.path.join(self.data_path, "sq_replica.json"), "w") as f:
             json.dump(sq.to_dict(), f)
         self._replica_sq = sq
+        self._reopen()
         return {"sec": round(_time.time() - t0, 1), "dir": out_dir}
 
     def build_refine_sidecar(self, delete_source: bool = False) -> dict:
@@ -446,12 +468,18 @@ class IVFIndex:
         from SQ8 codes and exactness from positioned reads."""
         from auncel_spark.index.refine_blob import build_refine_blob
 
-        stats = build_refine_blob(
-            self.data_path,
-            os.path.join(self.data_path, "lists"),
-            self.d,
-            delete_source=delete_source,
-        )
+        try:
+            stats = build_refine_blob(
+                self.data_path,
+                os.path.join(self.data_path, "lists"),
+                self.d,
+                delete_source=delete_source,
+            )
+        finally:
+            # a swap deletes list partitions as it goes, even when it
+            # fails part-way: the held listing names files now gone
+            if delete_source:
+                self._reopen()
         self._blob = None
         if delete_source:
             import shutil
@@ -468,6 +496,7 @@ class IVFIndex:
             raise RuntimeError("no scan replica built (build_scan_replica)")
         self._use_replica = on
         self._prefetch_done = False  # scan source changed
+        self._reopen()
         return self
 
     def prefetch(self, lists=None) -> None:

@@ -110,9 +110,6 @@ class ErrorProfile:
         config's topk (≤ max_topk), so the extra tail columns feed ONLY
         the refine pool; flat-scan behavior is unchanged
         (state_k == max_topk when no codec is active)."""
-        # cheap flag check — scan_source() builds a fresh DataFrame
-        # (driver file-listing + schema read) per call, and search()
-        # reads this property 4+ times per query batch (ADVICE r09)
         return self.max_topk + (
             self._REFINE_PAD if self.index.codec_active else 0
         )

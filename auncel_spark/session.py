@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram() -> str:
+    """Half the host's physical memory, in whole GiB (at least 1): the
+    driver JVM runs every task in local mode, and the Python workers
+    and the page cache share the other half."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "auncel_spark",
     shuffle_partitions: int | None = None,
@@ -33,7 +41,7 @@ def get_spark(
     # with the madvise off). Set BEFORE the JVM launches so forked
     # Python workers inherit it (numpy reads it at import time).
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
@@ -66,7 +74,7 @@ def get_spark(
         # Spark's vectorized reader rejects as a timestamp type; read
         # them as epoch-nano longs and normalize in the events helpers
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _half_ram()))
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")

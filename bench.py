@@ -180,7 +180,7 @@ def main() -> None:
         # scaling signal the sf0.1 catalog cannot give (every catalog
         # query there is scheduling-bound, so 8v32 ratios sit at ~1 —
         # VERDICT r10 Next #7). Explicit --tier requests still win.
-        cpus_now = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
+        cpus_now = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
         if cpus_now < 16 and tier in ("auto", "rotate", "all"):
             for key in big_order:
                 scale_out[key] = {

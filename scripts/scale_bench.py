@@ -158,7 +158,7 @@ def _bench_knobs() -> str:
     # invocation (the driver's scaling probe) must not overwrite the
     # standard-core duration estimates; the standard count keeps the
     # legacy signature so existing recorded durations stay valid
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32") or "32"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     return sig if cpus == "32" else f"{sig}x{cpus}"
 
 

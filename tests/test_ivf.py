@@ -102,3 +102,58 @@ def test_search_with_stats(base_df, query_df, tiny_vectors):
     # every scanned (query, row) pair computed one distance
     assert st["ndis"] > 0
     assert st["search_time_s"] > 0
+
+
+def _jobs_of(sc, group: str, action) -> list[int]:
+    """Ids of the Spark jobs ``action()`` launches from this thread."""
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_persisted_lists_opened_once(spark, tmp_path):
+    """A path-built index lists its files once. At nlist 64 — above
+    Spark's 32-path threshold for parallel partition discovery — a
+    fresh ``spark.read.parquet(lists/)`` costs a schema job plus a
+    64-task discovery job; a repeated ``data``/``scan_source()`` must
+    cost none, and a bounded search must run no nlist-task job."""
+    from auncel_spark.profile.error_profile import ErrorProfile
+
+    nlist, d = 64, 8
+    rng = np.random.default_rng(11)
+    xb = rng.standard_normal((3000, d)).astype(np.float32)
+    base = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(xb)], "id bigint, vec array<float>"
+    )
+    # corpus rows as centroids: each list holds at least its own row
+    idx = IVFIndex.build(
+        base, nlist=nlist, centroids=xb[:nlist].astype(np.float64), path=str(tmp_path / "ivf")
+    )
+    sc = spark.sparkContext
+    first = _jobs_of(sc, "lists_first_open", lambda: idx.scan_source())
+    assert first, "the first open lists the files"
+    assert _jobs_of(sc, "lists_scan_source", lambda: idx.scan_source()) == []
+    assert _jobs_of(sc, "lists_data", lambda: idx.data) == []
+
+    def q(n, seed):
+        x = np.random.default_rng(seed).standard_normal((n, d))
+        return spark.createDataFrame(
+            [(i, [float(v) for v in row]) for i, row in enumerate(x)], "qid bigint, vec array<float>"
+        )
+
+    ep = ErrorProfile(idx, max_topk=10)
+    ep.fit(q(40, 1))
+    queries = q(20, 2)
+    res = []
+    jobs = _jobs_of(sc, "bounded_search", lambda: res.append(ep.search(queries, K, 0.9).toPandas()))
+    assert jobs and len(res[0]) == 20 * K
+    st = sc.statusTracker()
+    # the status store may hold no info for a stage the job skipped
+    tasks = {
+        j: max((i.numTasks for s in st.getJobInfo(j).stageIds if (i := st.getStageInfo(s))), default=0)
+        for j in jobs
+    }
+    assert max(tasks.values()) < nlist, tasks

@@ -150,11 +150,38 @@ def test_elp_search_coded_exact_and_bounded(spark, replica_idx):
     assert _recall(res) >= _recall(flat) - 0.02
 
 
+def _assert_exact_search(idx, qdf, q, vec):
+    """Exhaustive-probe top-5 ids equal numpy's over the whole base."""
+    res = idx.search(qdf, 5, nprobe=NLIST).toPandas()
+    base = vec.astype(np.float64)
+    assert res["qid"].nunique() == len(q)
+    for qid, grp in res.groupby("qid"):
+        d = ((base - q[int(qid) - 1000].astype(np.float64)) ** 2).sum(1)
+        order = np.lexsort((np.arange(len(base)), d))[:5]
+        np.testing.assert_array_equal(grp.sort_values("pos")["id"].to_numpy(), order)
+
+
 def test_swap_keeps_exact_data_view(spark, tmp_path):
     idx, vec, ids = _mk(spark, tmp_path, n=3000)
+    qdf, q = _queries(spark, nq=10)
+    # the same in-memory index across every change to its files: each
+    # step must drop the held list tables, or the next scan reads a
+    # stale listing (the swap deletes lists/ under it)
+    _assert_exact_search(idx, qdf, q, vec)  # flat lists, now held
     idx.build_scan_replica()
+    _assert_exact_search(idx, qdf, q, vec)  # flat lists, re-opened
+    idx.use_replica(True)
+    # SQ8 codes without a sidecar are unrefined: exact over the
+    # decoded codes, numpy-decoded from the replica table itself
+    sdf, (off, scale) = idx.scan_source()
+    pdf = sdf.select("id", "code").toPandas().sort_values("id")
+    codes = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8).reshape(len(pdf), D)
+    _assert_exact_search(idx, qdf, q, codes * scale + off)
     idx.build_refine_sidecar(delete_source=True)
     assert not os.path.isdir(os.path.join(idx.data_path, "lists"))
+    _assert_exact_search(idx, qdf, q, vec)  # codes + exact refine
+    got = idx.data.filter(F.col("id") < 5).orderBy("id").toPandas()
+    np.testing.assert_array_equal(np.array(list(got["vec"]), dtype=np.float32), vec[:5])
     # reload from disk: replica becomes the scan source automatically
     idx2 = IVFIndex.load(spark, idx.data_path)
     assert idx2._use_replica
@@ -167,16 +194,7 @@ def test_swap_keeps_exact_data_view(spark, tmp_path):
         np.array(list(got["vec"]), dtype=np.float32), vec[:5], rtol=0, atol=0
     )
     # searches still run and refine exactly
-    qdf, q = _queries(spark, nq=10)
-    res = idx2.search(qdf, 5, nprobe=NLIST).toPandas()  # exhaustive probes
-    base = vec.astype(np.float64)
-    for qid, grp in res.groupby("qid"):
-        qv = q[int(qid) - 1000].astype(np.float64)
-        d = ((base - qv) ** 2).sum(1)
-        order = np.lexsort((np.arange(3000), d))[:5]
-        np.testing.assert_array_equal(
-            grp.sort_values("pos")["id"].to_numpy(), order
-        )
+    _assert_exact_search(idx2, qdf, q, vec)
 
 
 def test_manifest_restart(spark, tmp_path):
