@@ -18,7 +18,6 @@ the reference's recall evaluation convention.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,15 +113,9 @@ def q_shard_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each shard's top-k, so the merged winners are identical — see
     the kernel's docstring). The partials frame is localCheckpoint'd
     (lazy) because the two shard filters would otherwise re-evaluate
-    the scan subtree once each. ``SPARK_GRAFT_SHARD_SINGLESCAN=0``
-    restores the per-shard scans."""
+    the scan subtree once each."""
     q = _emb_queries(spark, sf_dir)
     b = _emb_base(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_SHARD_SINGLESCAN", "1") == "0":
-        r0 = knn_exact(q, b.filter("id % 2 = 0"), K, Metric.L2, STRATEGY)
-        r1 = knn_exact(q, b.filter("id % 2 = 1"), K, Metric.L2, STRATEGY)
-        res = merge_topk(K, r0, r1)
-        return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
     from auncel_spark.operators.knn import knn_exact_shard_partials
 
     partials = knn_exact_shard_partials(q, b, K, 2, Metric.L2).localCheckpoint(

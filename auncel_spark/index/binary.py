@@ -268,66 +268,19 @@ class BinaryIVFIndex:
         idx._data.count()
         return idx
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int, strategy: str = "bcast"
-    ) -> DataFrame:
+    def search(self, queries: DataFrame, k: int, nprobe: int) -> DataFrame:
+        """Broadcast-queries popcount scan: each code crosses Arrow once
+        regardless of how many queries probe its list."""
+        from auncel_spark.index.scan import scan_window_coded
+        from auncel_spark.config import Metric
+
         qrows = queries.select("qid", "bits").collect()
         qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
         qb = np.array([np.frombuffer(r["bits"], dtype=np.uint8) for r in qrows])
         cd = _hamming_matrix(qb, self.centroids)
         order = np.argsort(cd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        if strategy == "bcast":
-            # broadcast-queries popcount kernel: each code crosses Arrow
-            # once regardless of how many queries probe its list
-            from auncel_spark.index.scan import scan_window_coded
-            from auncel_spark.config import Metric
-
-            partial = scan_window_coded(
-                self._data, qids, None, order, 0, nprobe, k, Metric.L2,
-                self.nlist, {"kind": "hamming", "qbits": qb}, code_col="bits",
-                rebalance=self.spark.sparkContext.defaultParallelism,
-            )
-            return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
-        # join path (oracle-shape reference); Arrow probes frame — a
-        # Python tuple list stalls the driver at nq·nprobe scale
-        nq, npb = order.shape
-        probes = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, npb),
-                    "list_no": order.ravel(),
-                }
-            )
+        partial = scan_window_coded(
+            self._data, qids, None, order, 0, nprobe, k, Metric.L2,
+            self.nlist, {"kind": "hamming", "qbits": qb}, code_col="bits",
         )
-        probed = sorted({int(x) for x in np.unique(order)})
-        pruned = self._data.filter(F.col("list_no").isin(probed))
-        joined = pruned.join(F.broadcast(probes), "list_no").select("qid", "id", "bits")
-        bc = self.spark.sparkContext.broadcast((qids, qb, {int(q): i for i, q in enumerate(qids)}))
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            gq, gqb, qpos = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                out = []
-                for qid, grp in pdf.groupby("qid"):
-                    qv = gqb[qpos[int(qid)]][None, :]
-                    bb = np.array([np.frombuffer(x, dtype=np.uint8) for x in grp["bits"]])
-                    dist = _hamming_matrix(qv, bb)[0]
-                    gids = grp["id"].to_numpy(dtype=np.int64)
-                    kk = min(k, len(dist))
-                    sel = np.lexsort((gids, dist))[:kk]  # (dist, id) ties
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "qid": np.full(kk, qid, dtype=np.int64),
-                                "id": gids[sel],
-                                "dist": dist[sel].astype(np.float64),
-                            }
-                        )
-                    )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        partial = joined.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

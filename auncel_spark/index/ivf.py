@@ -11,15 +11,15 @@ Reference surface (SURVEY.md §2.2 B2-B5, §2.3 O6-O7, O21, O31):
 Physical plan of ``search``:
 1. coarse quantize the (small) query set driver-side against broadcast
    centroids — the reference's ``quantizer->search`` (IndexIVF.cpp:364);
-2. build a probes literal ``(qid, list_no, rank)``;
-3. ``base.filter(list_no IN probed_lists)`` — static partition pruning:
-   only nprobe·nq of nlist Parquet partitions are read, the exact
-   analogue of non-exhaustive list scanning. ``base`` is the list table
-   opened once per index version, so the filter prunes against Spark's
-   held file listing: no scan re-runs schema inference or partition
-   discovery;
-4. join probes (broadcast) → per-partition GEMM top-k kernel
-   (Arrow-batched) → global window top-k.
+2. ``base.filter(list_no IN probed_lists)`` — static partition pruning:
+   only the lists some query probes are read, the exact analogue of
+   non-exhaustive list scanning. ``base`` is the list table opened once
+   per index version, so the filter prunes against Spark's held file
+   listing: no scan re-runs schema inference or partition discovery;
+3. one pass over the pruned lists with the broadcast-queries GEMM
+   kernel (index/scan.py): the query matrix and a per-query list→rank
+   table ride in a broadcast, each base vector crosses Arrow once, and
+   every task emits a partial top-k → global window top-k.
 
 Vectors never reach the driver; centroids (nlist×d ≤ 8 MB) and the
 query matrix are the only broadcast state, as the reference holds only
@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 
@@ -246,7 +245,7 @@ class IVFIndex:
         ``lists/`` are absent — the disk-neutral swap keeps only codes
         + the refine sidecar — the replica becomes the scan source
         automatically; with both present the flat lists stay default
-        and ``SPARK_GRAFT_CODED_SCAN=1`` opts the replica in (A/B)."""
+        and ``use_replica(True)`` opts the replica in."""
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         centroids = np.load(os.path.join(path, "centroids.npy"))
@@ -281,9 +280,7 @@ class IVFIndex:
                         "delete_source=True) (the manifest makes the "
                         "build restartable); do not scan the remnant."
                     )
-            idx._use_replica = (not flat_present) or (
-                os.environ.get("SPARK_GRAFT_CODED_SCAN", "0") == "1"
-            )
+            idx._use_replica = not flat_present
         return idx
 
     @property
@@ -543,11 +540,9 @@ class IVFIndex:
         # reproduce inside the committed cold grid (recorded 78.8 MB/s
         # effective, k10_b1 72.9 ms — VERDICT r08 Wrong #1), so the
         # pacer now SELF-CALIBRATES: it times one physical read of the
-        # first file and paces at that measured rate (env override
-        # SPARK_GRAFT_PREFETCH_MBS pins it); the chosen rate is
+        # first file and paces at that measured rate; the chosen rate is
         # recorded in ``prefetch_rate_mbs`` so every cold record can
         # state the clock it ran under.
-        env_rate = os.environ.get("SPARK_GRAFT_PREFETCH_MBS")
         import time as _time
 
         def _measure_rate(fp: str) -> float:
@@ -593,10 +588,7 @@ class IVFIndex:
                     )
                 if not files:
                     return
-                if env_rate:
-                    rate = float(env_rate) * 1e6
-                else:
-                    rate = _measure_rate(files[0]) * 1e6
+                rate = _measure_rate(files[0]) * 1e6
                 self.prefetch_rate_mbs = round(rate / 1e6, 1)
                 t0 = _time.perf_counter()
                 issued = 0
@@ -629,7 +621,7 @@ class IVFIndex:
 
     def preload(self, threads: int = 8) -> dict:
         """SYNCHRONOUS page-cache load of the persisted lists — the
-        cold-start strategy for a batch engine: one sequential pass at
+        cold-start plan for a batch engine: one sequential pass at
         device bandwidth, then the scan runs at memory speed. The
         async ``prefetch`` hint loses to demand paging when 32 scan
         tasks issue competing positioned reads (r07 measured: 37 GB of
@@ -688,30 +680,6 @@ class IVFIndex:
         order = np.argsort(dist, axis=1, kind="stable")[:, :nprobe]
         return order.astype(np.int32), np.take_along_axis(dist, order, axis=1)
 
-    def probes_df(
-        self, queries: DataFrame, nprobe: int
-    ) -> tuple[DataFrame, np.ndarray, np.ndarray, list[int]]:
-        qpdf = queries.select("qid", "vec").toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
-        if self.rotation is not None:
-            qmat = qmat @ self.rotation.T
-        lists, _ = self.coarse_rank(qids, qmat, nprobe)
-        nq, npb = lists.shape
-        # Arrow-path createDataFrame: at nq=100k, nprobe=128 a Python
-        # tuple list would stall the driver; a columnar pandas frame
-        # ships as Arrow batches.
-        probes = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, npb),
-                    "list_no": lists.ravel().astype(np.int32),
-                    "rank": np.tile(np.arange(npb, dtype=np.int32), nq),
-                }
-            )
-        )
-        return probes, qids, qmat, sorted({int(x) for x in np.unique(lists)})
-
     # --- search (O7) -----------------------------------------------------
 
     def search(
@@ -721,152 +689,91 @@ class IVFIndex:
         nprobe: int,
         qid_col: str = "qid",
         vec_col: str = "vec",
-        strategy: str = "gemm",
     ) -> DataFrame:
         """Fixed-nprobe IVF-Flat search. Returns (qid, pos, id, dist).
 
-        strategy="gemm" (default): one pass over the pruned lists with
-        the broadcast-queries GEMM kernel (index/scan.py) — each base
-        vector crosses Arrow once no matter how many queries probe its
-        list. strategy="join": the probes-broadcast-join path (vector
-        payload duplicated per probing query; kept for plan tests and
-        as the oracle-shape reference).
-        """
+        One pass over the pruned lists with the broadcast-queries GEMM
+        kernel (index/scan.py) — each base vector crosses Arrow once no
+        matter how many queries probe its list."""
+        from auncel_spark.index.scan import scan_window
+
         q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        if strategy == "join":
-            probes, qids, qmat, probed = self.probes_df(q, nprobe)
-            partial = self._scan_lists(probes, qids, qmat, k, probed_lists=probed)
-        else:
-            from auncel_spark.index.scan import scan_window
+        qpdf = q.toPandas()
+        qids = qpdf["qid"].to_numpy(dtype=np.int64)
+        qmat = as_matrix(qpdf["vec"])
+        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
+        self.prefetch(np.unique(ranked[:, :nprobe]))
+        sdf, codec = self.scan_source()
+        blob = self.refine_blob if codec is not None else None
+        # refine-pool headroom (shared constant with ErrorProfile —
+        # rank slips under SQ8 span more positions as the corpus
+        # densifies; ADVICE r09: one retune point, not two)
+        from auncel_spark.index.refine_blob import REFINE_PAD
 
-            qpdf = q.toPandas()
-            qids = qpdf["qid"].to_numpy(dtype=np.int64)
-            qmat = as_matrix(qpdf["vec"])
-            ranked, _ = self.coarse_rank(qids, qmat, nprobe)
-            self.prefetch(np.unique(ranked[:, :nprobe]))
-            sdf, codec = self.scan_source()
-            blob = self.refine_blob if codec is not None else None
-            # refine-pool headroom (shared constant with ErrorProfile —
-            # rank slips under SQ8 span more positions as the corpus
-            # densifies; ADVICE r09: one retune point, not two)
-            from auncel_spark.index.refine_blob import REFINE_PAD
-
-            kk = k + REFINE_PAD if blob is not None else k
-            partial = scan_window(
-                sdf, qids, qmat, ranked, 0, nprobe, kk, self.metric,
-                self.nlist, codec=codec,
+        kk = k + REFINE_PAD if blob is not None else k
+        partial = scan_window(
+            sdf, qids, qmat, ranked, 0, nprobe, kk, self.metric,
+            self.nlist, codec=codec,
+        )
+        if blob is not None:
+            # coded scan: exact re-rank of the padded pool against
+            # the refine sidecar (see ErrorProfile._refined_result)
+            pool = topk_per_query(partial, kk).select("qid", "id").toPandas()
+            qpos = {int(x): i for i, x in enumerate(qids)}
+            return blob.refine_topk(
+                self.spark,
+                qids,
+                qmat,
+                pool["qid"].map(qpos).to_numpy(dtype=np.int32),
+                pool["id"].to_numpy(dtype=np.int64),
+                k,
+                self.metric,
             )
-            if blob is not None:
-                # coded scan: exact re-rank of the padded pool against
-                # the refine sidecar (see ErrorProfile._refined_result)
-                pool = topk_per_query(partial, kk).select("qid", "id").toPandas()
-                qpos = {int(x): i for i, x in enumerate(qids)}
-                return blob.refine_topk(
-                    self.spark,
-                    qids,
-                    qmat,
-                    pool["qid"].map(qpos).to_numpy(dtype=np.int32),
-                    pool["id"].to_numpy(dtype=np.int64),
-                    k,
-                    self.metric,
-                )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
     def search_with_stats(
         self, queries: DataFrame, k: int, nprobe: int
     ) -> tuple[DataFrame, dict]:
-        """O31 ``IndexIVFStats`` parity (IndexIVF.h:361-374): run the
-        search eagerly and report nq, nprobe, posting lists touched,
-        distances computed (ndis, via accumulator from the scan
-        kernels), and wall times for the quantization and scan phases.
-        """
+        """O31 ``IndexIVFStats`` parity (IndexIVF.h:361-374): run
+        ``search`` eagerly and report nq, nprobe, posting lists touched,
+        distances computed and wall times for the quantization and scan
+        phases. ndis is Σ over (query, probed list) of the list's row
+        count — every probed row is scored against every query probing
+        its list — taken from one aggregation over the probed lists
+        (exact and retry-safe, unlike an accumulator bumped inside a
+        transformation)."""
         import time as _time
 
-        q = queries.select("qid", "vec")
+        qpdf = queries.select("qid", "vec").toPandas()
+        qmat = as_matrix(qpdf["vec"])
+        if self.rotation is not None:
+            qmat = qmat @ self.rotation.T
         t0 = _time.perf_counter()
-        probes, qids, qmat, probed = self.probes_df(q, nprobe)
+        ranked, _ = self.coarse_rank(
+            qpdf["qid"].to_numpy(dtype=np.int64), qmat, nprobe
+        )
         t_quant = _time.perf_counter() - t0
         t1 = _time.perf_counter()
-        partial = self._scan_lists(probes, qids, qmat, k, probed_lists=probed)
-        res = topk_per_query(partial, k).select("qid", "pos", "id", "dist").cache()
+        res = self.search(queries, k, nprobe).cache()
         res.count()
         t_search = _time.perf_counter() - t1
-        # ndis = rows of the pruned join, counted as an aggregation —
-        # exact and retry-safe, unlike an accumulator bumped inside a
-        # transformation (speculative/retried tasks double-count).
-        ndis = self._pruned_join(probes, probed).count()
+        probed, probes = np.unique(ranked, return_counts=True)
+        sizes = {
+            int(r["list_no"]): int(r["count"])
+            for r in self.data.filter(F.col("list_no").isin(probed.tolist()))
+            .groupBy("list_no")
+            .count()
+            .collect()
+        }
+        ndis = sum(sizes.get(int(ln), 0) * int(c) for ln, c in zip(probed, probes))
         return res, {
-            "nq": int(len(qids)),
+            "nq": int(len(qpdf)),
             "nprobe": int(nprobe),
             "nlists_scanned": len(probed),
             "ndis": int(ndis),
             "quantization_time_s": round(t_quant, 4),
             "search_time_s": round(t_search, 4),
         }
-
-    def _pruned_join(
-        self, probes: DataFrame, probed_lists: list[int] | None
-    ) -> DataFrame:
-        """Partition-pruned lists × broadcast probes — the rows an
-        exhaustive scanner would visit (one row per (query, candidate)
-        distance computation)."""
-        if probed_lists is None:
-            probed_lists = sorted(
-                {int(r["list_no"]) for r in probes.select("list_no").distinct().collect()}
-            )
-        pruned = self.data.filter(F.col("list_no").isin(probed_lists))
-        return pruned.join(F.broadcast(probes), "list_no").select("qid", "id", "vec")
-
-    def _scan_lists(
-        self,
-        probes: DataFrame,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        k: int,
-        probed_lists: list[int] | None = None,
-    ) -> DataFrame:
-        """The InvertedListScanner (``IndexIVF.cpp:439-475``) as a
-        partition-pruned join + Arrow GEMM kernel emitting per-batch
-        partial top-k. ``probed_lists`` skips a distinct-collect job
-        when the caller already knows the probe set."""
-        joined = self._pruned_join(probes, probed_lists)
-
-        bc = self.spark.sparkContext.broadcast(
-            (qids, qmat, {int(q): i for i, q in enumerate(qids)})
-        )
-        is_l2 = self.metric == Metric.L2
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _, bq, qpos = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                out_q, out_i, out_d = [], [], []
-                for qid, grp in pdf.groupby("qid"):
-                    qv = bq[qpos[int(qid)]]
-                    mat = as_matrix(grp["vec"])
-                    dots = mat @ qv
-                    if is_l2:
-                        dist = (mat * mat).sum(axis=1) + (qv @ qv) - 2.0 * dots
-                    else:
-                        dist = -dots
-                    gids = grp["id"].to_numpy(dtype=np.int64)
-                    kk = min(k, len(dist))
-                    # (dist, id) tie-break — see operators/knn.py note
-                    sel = np.lexsort((gids, dist))[:kk]
-                    out_q.append(np.full(kk, qid, dtype=np.int64))
-                    out_i.append(gids[sel])
-                    out_d.append(dist[sel])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(out_q),
-                            "id": np.concatenate(out_i),
-                            "dist": np.concatenate(out_d),
-                        }
-                    )
-
-        return joined.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
 
     # --- maintenance / introspection (O21, O31) --------------------------
 

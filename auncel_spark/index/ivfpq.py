@@ -299,22 +299,11 @@ class IVFPQIndex(IVFIndex):
         nprobe: int,
         qid_col: str = "qid",
         vec_col: str = "vec",
-        strategy: str = "bcast",
-        rebalance: int | None = None,
     ) -> DataFrame:
-        """strategy="bcast" (default): broadcast-queries ADC scan —
-        each M-byte code crosses Arrow once no matter how many queries
-        probe its list; term3 LUTs are built lazily in-task, term2
-        rides in broadcast (index/scan.py). "join": the per-(query,
-        list) probes-join ADC path (kept as the oracle-shape
-        reference). ``rebalance``: tasks for the salted skew split of
-        hot lists (None = defaultParallelism; 0 disables)."""
-        if strategy == "join":
-            return super().search(queries, k, nprobe, qid_col, vec_col, strategy="join")
-        if rebalance is None:
-            rebalance = self.spark.sparkContext.defaultParallelism
+        """Broadcast-queries ADC scan: each M-byte code crosses Arrow
+        once no matter how many queries probe its list; term3 LUTs are
+        built lazily in-task, term2 rides in broadcast (index/scan.py)."""
         from auncel_spark.index.scan import scan_window_coded
-        from auncel_spark.operators.topk import topk_per_query
 
         q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         qpdf = q.toPandas()
@@ -347,112 +336,9 @@ class IVFPQIndex(IVFIndex):
         }
         partial = scan_window_coded(
             self.data, qids, qmat, ranked, 0, nprobe, k, self.metric,
-            self.nlist, codec, rebalance=rebalance or None,
+            self.nlist, codec,
         )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
-
-    def _scan_lists(
-        self,
-        probes: DataFrame,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        k: int,
-        probed_lists: list[int] | None = None,
-    ) -> DataFrame:
-        """ADC scan: partition-pruned code join + per-(query, list) LUT
-        gather-sum (the InvertedListScanner of IndexIVFPQ)."""
-        if probed_lists is None:
-            probed_lists = sorted(
-                {int(r["list_no"]) for r in probes.select("list_no").distinct().collect()}
-            )
-        pruned = self.data.filter(F.col("list_no").isin(probed_lists))
-        joined = pruned.join(F.broadcast(probes), "list_no").select(
-            "qid", "id", "code", "list_no"
-        )
-        use_t2 = (
-            self.use_precomputed_table
-            and self.by_residual
-            and self.metric == Metric.L2
-        )
-        bc = self.spark.sparkContext.broadcast(
-            (
-                qids,
-                qmat,
-                {int(q): i for i, q in enumerate(qids)},
-                self.pq.codebooks,
-                (
-                    (self.enc_centroids if self.enc_centroids is not None else self.centroids)
-                    if self.by_residual
-                    else None
-                ),
-                self.precomputed_term2() if use_t2 else None,
-                self.enc_of,
-            )
-        )
-        metric = self.metric
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _, bq, qpos, books, cents, t2, benc = bc.value
-            kernel = ProductQuantizer(books)
-            M, dsub = kernel.M, kernel.dsub
-            lut_cache: dict[tuple[int, int], np.ndarray] = {}
-            t3_cache: dict[int, np.ndarray] = {}
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                out = []
-                for (qid, list_no), grp in pdf.groupby(["qid", "list_no"]):
-                    q = bq[qpos[int(qid)]]
-                    # encoding-cell row (parent under a split quantizer)
-                    list_no = int(benc[int(list_no)]) if benc is not None else list_no
-                    if t2 is not None:
-                        # precomputed-table path: term3 once per QUERY
-                        # (not per probed list), term2 gathered from the
-                        # broadcast table, term1 a scalar
-                        t3 = t3_cache.get(int(qid))
-                        if t3 is None:
-                            qsub = q.reshape(M, dsub)
-                            t3 = -2.0 * np.einsum("md,mkd->mk", qsub, books)
-                            t3_cache[int(qid)] = t3
-                        diff = q - cents[int(list_no)]
-                        lut = t2[int(list_no)] + t3
-                        base_term = float(diff @ diff)
-                    else:
-                        key = (int(qid), int(list_no) if cents is not None else -1)
-                        lut = lut_cache.get(key)
-                        if lut is None:
-                            # L2: |q−x|² = |(q−c) − r|² → table on (q−c).
-                            # IP: ⟨q,x⟩ = ⟨q,c⟩ + ⟨q,r⟩ → table on q
-                            # itself, constant ⟨q,c⟩ folded in below.
-                            if cents is not None and metric == Metric.L2:
-                                qeff = q - cents[int(list_no)]
-                            else:
-                                qeff = q
-                            lut = kernel.lut_np(qeff, metric)
-                            lut_cache[key] = lut
-                        base_term = 0.0
-                    codes = np.array(
-                        [np.frombuffer(c, dtype=np.uint8) for c in grp["code"]]
-                    )
-                    dist = kernel.adc_np(lut, codes) + base_term
-                    if cents is not None and metric == Metric.IP:
-                        dist = dist - float(q @ cents[int(list_no)])
-                    gids = grp["id"].to_numpy(dtype=np.int64)
-                    kk = min(k, len(dist))
-                    sel = np.lexsort((gids, dist))[:kk]  # (dist, id) ties
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "qid": np.full(kk, qid, dtype=np.int64),
-                                "id": gids[sel],
-                                "dist": dist[sel],
-                            }
-                        )
-                    )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        return joined.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
 
     def search_refine(
         self,
@@ -461,75 +347,45 @@ class IVFPQIndex(IVFIndex):
         k: int,
         nprobe: int,
         k_factor: int = 4,
-        strategy: str = "gemm",
     ) -> DataFrame:
         """IVFPQR / IndexRefineFlat (O9): ADC candidates k·k_factor,
         exact re-rank against the uncompressed vectors.
 
-        strategy="gemm" (default): the candidate pair set is
-        nq·k·k_factor rows — driver-bounded by construction — so it
-        collects once, ships to executors as a CSR (id → probing
-        queries) numpy broadcast, and the refine is ONE Arrow-batched
-        streamed scan of the base with vectorized exact distances. No
-        join, no shuffle of the base, no per-row JVM expression — the
-        r04 measurement chain: r03's shuffle join cost ~21 ms/query at
-        10M; the broadcast HASH join still cost ~25 (hash build of
-        6.4M rows + HOF distance per pair); this path is ~3.
-
-        strategy="join": the relational knn_by_ids path (kept as the
-        oracle-shape reference and for unbounded candidate sets)."""
-        from auncel_spark.operators.knn import knn_by_ids
+        The candidate pair set is nq·k·k_factor rows — driver-bounded
+        by construction — so it collects once. ``full_base`` is either
+        a ``RefineBlob`` (positioned reads of the candidate rows only)
+        or an (id, vec) DataFrame: the candidates then ship to executors
+        as a CSR (id → probing queries) numpy broadcast, and the refine
+        is ONE Arrow-batched streamed scan of the base with vectorized
+        exact distances. No join, no shuffle of the base, no per-row
+        JVM expression — the r04 measurement chain: r03's shuffle join
+        cost ~21 ms/query at 10M; the broadcast HASH join still cost
+        ~25 (hash build of 6.4M rows + HOF distance per pair); this
+        path is ~3."""
         from auncel_spark.index.refine_blob import RefineBlob
 
-        if isinstance(full_base, RefineBlob):
-            # id-addressable refine sidecar: positioned reads of the
-            # nq·k·k_factor candidate rows only — no streamed pass over
-            # the uncompressed corpus per refine call (at 100M the
-            # streamed pass was 38 GB of page-cache traffic per 5000-
-            # query batch; the sidecar reads ~0.5% of that)
-            q = queries.select("qid", "vec")
-            qpdf = q.toPandas()
-            qids = qpdf["qid"].to_numpy(dtype=np.int64)
-            qmat = as_matrix(qpdf["vec"])
-            cand = (
-                self.search(queries, k * k_factor, nprobe)
-                .select("qid", "id")
-                .toPandas()
-            )
-            if len(cand) == 0:
-                return self.spark.createDataFrame(
-                    [], "qid bigint, pos int, id bigint, dist double"
-                )
-            qpos = {int(x): i for i, x in enumerate(qids)}
-            return full_base.refine_topk(
-                self.spark,
-                qids,
-                qmat,
-                cand["qid"].map(qpos).to_numpy(dtype=np.int32),
-                cand["id"].to_numpy(dtype=np.int64),
-                k,
-                self.metric,
-            )
-        if strategy == "join":
-            cand = self.search(queries, k * k_factor, nprobe).select("qid", "id")
-            return knn_by_ids(
-                queries, full_base, cand, k, self.metric, broadcast_candidates=True
-            )
-        q = queries.select("qid", "vec")
-        qpdf = q.toPandas()
+        qpdf = queries.select("qid", "vec").toPandas()
         qids = qpdf["qid"].to_numpy(dtype=np.int64)
         qmat = as_matrix(qpdf["vec"])
         cand = self.search(queries, k * k_factor, nprobe).select("qid", "id").toPandas()
         if len(cand) == 0:
             # empty candidate set (e.g. empty query frame or all-empty
-            # probed lists): skip the scan entirely — the kernel below
-            # assumes a non-empty broadcast id table
+            # probed lists): nothing to re-rank
             return self.spark.createDataFrame(
                 [], "qid bigint, pos int, id bigint, dist double"
             )
         cid = cand["id"].to_numpy(dtype=np.int64)
         qpos = {int(x): i for i, x in enumerate(qids)}
         cqp = cand["qid"].map(qpos).to_numpy(dtype=np.int32)
+        if isinstance(full_base, RefineBlob):
+            # id-addressable refine sidecar: positioned reads of the
+            # nq·k·k_factor candidate rows only — no streamed pass over
+            # the uncompressed corpus per refine call (at 100M the
+            # streamed pass was 38 GB of page-cache traffic per 5000-
+            # query batch; the sidecar reads ~0.5% of that)
+            return full_base.refine_topk(
+                self.spark, qids, qmat, cqp, cid, k, self.metric
+            )
         order = np.argsort(cid, kind="stable")
         cid_s, cqp_s = cid[order], cqp[order]
         uids, starts, counts = np.unique(cid_s, return_index=True, return_counts=True)
@@ -542,11 +398,6 @@ class IVFPQIndex(IVFIndex):
 
         def refine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             bqids, bq, buids, bst, bct, bqp = bc.value
-            if len(buids) == 0:
-                # defense in depth (the driver-side empty-cand early
-                # return above should make this unreachable): indexing
-                # an empty buids with clipped positions would raise
-                return
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
@@ -691,7 +542,7 @@ class IVFPQRIndex(IVFPQIndex):
             refine_pq=ProductQuantizer.from_dict(meta["refine_pq"]),
         )
 
-    def search(self, queries, k, nprobe, qid_col="qid", vec_col="vec", strategy="join", k_factor: int = 4):
+    def search(self, queries, k, nprobe, qid_col="qid", vec_col="vec", k_factor: int = 4):
         """ADC over the first-level codes for k·k_factor candidates,
         then codes-only re-rank through the second-level residual
         (IndexIVFPQR::search_preassigned two-pass shape)."""

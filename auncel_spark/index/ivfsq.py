@@ -12,12 +12,10 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 
 from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,20 +111,10 @@ class IVFSQIndex(IVFIndex):
         nprobe: int,
         qid_col: str = "qid",
         vec_col: str = "vec",
-        strategy: str = "bcast",
-        rebalance: int | None = None,
     ) -> DataFrame:
-        """strategy="bcast" (default): broadcast-queries coded scan —
-        each SQ code crosses Arrow once regardless of how many queries
-        probe its list, decoded in-task (index/scan.py). "join": the
-        probes-broadcast-join decode path (code payload duplicated per
-        probing query; kept as the oracle-shape reference).
-        ``rebalance``: tasks for the salted skew split of hot lists
-        (None = defaultParallelism; 0 disables)."""
-        if strategy == "join":
-            return super().search(queries, k, nprobe, qid_col, vec_col, strategy="join")
-        if rebalance is None:
-            rebalance = self.spark.sparkContext.defaultParallelism
+        """Broadcast-queries coded scan: each SQ code crosses Arrow
+        once regardless of how many queries probe its list, decoded
+        in-task (index/scan.py)."""
         from auncel_spark.index.scan import scan_window_coded
         from auncel_spark.operators.topk import topk_per_query
 
@@ -138,67 +126,5 @@ class IVFSQIndex(IVFIndex):
         partial = scan_window_coded(
             self.data, qids, qmat, ranked, 0, nprobe, k, self.metric,
             self.nlist, {"kind": "sq", "sq": self.sq.to_dict()},
-            rebalance=rebalance or None,
         )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
-
-    def _scan_lists(
-        self,
-        probes: DataFrame,
-        qids: np.ndarray,
-        qmat: np.ndarray,
-        k: int,
-        probed_lists: list[int] | None = None,
-    ) -> DataFrame:
-        if probed_lists is None:
-            probed_lists = sorted(
-                {int(r["list_no"]) for r in probes.select("list_no").distinct().collect()}
-            )
-        pruned = self.data.filter(F.col("list_no").isin(probed_lists))
-        joined = pruned.join(F.broadcast(probes), "list_no").select("qid", "id", "code")
-        bc = self.spark.sparkContext.broadcast(
-            (
-                qids,
-                qmat,
-                {int(q): i for i, q in enumerate(qids)},
-                self.sq.to_dict(),
-            )
-        )
-        is_l2 = self.metric == Metric.L2
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _, bq, qpos, sqd = bc.value
-            dec = ScalarQuantizer.from_dict(sqd)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                out = []
-                codes = np.array(
-                    [np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]]
-                )
-                mat = dec.decode_np(codes)
-                ids_all = pdf["id"].to_numpy(dtype=np.int64)
-                for qid, grp_idx in pdf.groupby("qid").indices.items():
-                    qv = bq[qpos[int(qid)]]
-                    sub = mat[grp_idx]
-                    dots = sub @ qv
-                    if is_l2:
-                        dist = (sub * sub).sum(axis=1) + (qv @ qv) - 2.0 * dots
-                    else:
-                        dist = -dots
-                    gids = ids_all[grp_idx]
-                    kk = min(k, len(dist))
-                    sel = np.lexsort((gids, dist))[:kk]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "qid": np.full(kk, qid, dtype=np.int64),
-                                "id": gids[sel],
-                                "dist": dist[sel],
-                            }
-                        )
-                    )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        return joined.mapInPandas(scan, schema="qid bigint, id bigint, dist double")

@@ -143,10 +143,6 @@ class ProductQuantizer:
                 lut[m] = -(cb @ qs)
         return lut
 
-    def adc_np(self, lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
-        # gather-sum: dist[i] = Σ_m lut[m, codes[i, m]]
-        return lut[np.arange(self.M)[None, :], codes].sum(axis=1)
-
     # --- Spark codecs ----------------------------------------------------
 
     def encode(

@@ -54,6 +54,10 @@ from auncel_spark.config import Metric
 # read it (ADVICE r09: a retune must not miss a hardcoded copy).
 REFINE_PAD = 64
 
+# WILLNEED bridge cap: coalesced readahead ranges may cover at most
+# this multiple of the rows a gather needs (see ``_willneed_rows``)
+_WILLNEED_INFL = 2.0
+
 
 def _refine_dir(path: str) -> str:
     return os.path.join(path, "refine")
@@ -72,16 +76,8 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     readahead of a skipped 96 KB costs less than a second seek), and
     one POSIX_FADV_WILLNEED per range queues the batch asynchronously
     ahead of the gather. No-op without posix_fadvise or on warm pages
-    (the kernel skips resident ranges).
-
-    SPARK_GRAFT_REFINE_WILLNEED=0 disables the hint — the measurement
-    kill-switch for the r10 cold-IO A/B (VERDICT r09 Next #1: the fix
-    landed post-bench and unmeasured)."""
-    if (
-        len(rows_sorted) == 0
-        or not hasattr(os, "posix_fadvise")
-        or os.environ.get("SPARK_GRAFT_REFINE_WILLNEED", "1") == "0"
-    ):
+    (the kernel skips resident ranges)."""
+    if len(rows_sorted) == 0 or not hasattr(os, "posix_fadvise"):
         return
     rb = d * itemsize
     rows = np.asarray(rows_sorted, dtype=np.int64)
@@ -94,30 +90,24 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     ends = rows[np.concatenate((brk, [len(rows) - 1]))]
     # density-aware bridge gate (VERDICT r10 Next #2): at 10M pool
     # density the fixed gap_rows bridged enough holes to read +55%
-    # bytes vs no hint (3.56 vs 2.29 GB measured, scripts/
-    # willneed_ab_10m.py) — a win on that box's device but an
+    # bytes vs no hint (3.56 vs 2.29 GB measured, evidence/
+    # 10m_willneed_ab_r10.json) — a win on that box's device but an
     # unbounded risk where cold bandwidth is the constraint. When the
-    # coalesced ranges would cover more than ``infl``× the bytes the
-    # gather actually needs, halve gap_rows until they don't: dense
+    # coalesced ranges would cover more than _WILLNEED_INFL× the bytes
+    # the gather actually needs, halve gap_rows until they don't: dense
     # pools (the 100M case — most rows touched) keep long sequential
     # ranges, sparse pools degrade toward exact per-row hints instead
-    # of paying bridged readahead. SPARK_GRAFT_REFINE_WILLNEED_INFL
-    # overrides the default cap of 2.0 (<=0 disables the gate).
-    try:
-        infl = float(os.environ.get("SPARK_GRAFT_REFINE_WILLNEED_INFL", "2.0"))
-    except ValueError:
-        infl = 2.0
-    if infl > 0 and len(rows):
-        needed = len(rows)  # row units; byte factor rb cancels
-        gap = gap_rows
-        while gap > 0:
-            covered = int((ends - starts).sum()) + len(starts)
-            if covered <= infl * needed:
-                break
-            gap //= 2
-            brk = np.where(diffs > gap)[0]
-            starts = rows[np.concatenate(([0], brk + 1))]
-            ends = rows[np.concatenate((brk, [len(rows) - 1]))]
+    # of paying bridged readahead.
+    needed = len(rows)  # row units; byte factor rb cancels
+    gap = gap_rows
+    while gap > 0:
+        covered = int((ends - starts).sum()) + len(starts)
+        if covered <= _WILLNEED_INFL * needed:
+            break
+        gap //= 2
+        brk = np.where(diffs > gap)[0]
+        starts = rows[np.concatenate(([0], brk + 1))]
+        ends = rows[np.concatenate((brk, [len(rows) - 1]))]
     try:
         fd = os.open(path, os.O_RDONLY)
     except OSError:

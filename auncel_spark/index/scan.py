@@ -36,10 +36,6 @@ size; scan I/O is the pruned lists, once.
 
 from __future__ import annotations
 
-import json
-import os
-import time
-import uuid
 from typing import Iterator
 
 import numpy as np
@@ -50,25 +46,9 @@ from pyspark.sql import functions as F
 from auncel_spark.config import Metric
 
 
-def _prof_dump(prof: dict, d: str) -> None:
-    """Per-task phase-timing dump for the coded scan, enabled by
-    pointing SPARK_GRAFT_SCAN_PROF at a directory (read DRIVER-side at
-    plan build and captured into the task closure — worker processes
-    fork before driver env changes; local mode shares the filesystem).
-    Used to adjudicate scan-kernel changes with measured phase
-    breakdowns instead of guesses (VERDICT r07 Next #3: 'per-list ADC
-    setup' needed naming before fixing)."""
-    try:
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, f"task_{uuid.uuid4().hex}.json"), "w") as f:
-            json.dump({k: round(v, 4) if isinstance(v, float) else v
-                       for k, v in prof.items()}, f)
-    except OSError:
-        pass
-
 WINDOW_SCHEMA = "qid bigint, id bigint, dist double"
 BUCKET_SCHEMA = "qid bigint, si int, id bigint, dist double"
-_SALT = 8  # skew-split fragments per list under `rebalance`
+_SALT = 8  # skew-split fragments per list in the coded scan
 
 
 def _inv_rank(ranked: np.ndarray, nlist: int, width: int) -> np.ndarray:
@@ -201,8 +181,7 @@ def _group_topk(
         # already exact.
         # rows whose kept kk-th is +inf need no tie-exactness: every
         # finite element is provably inside the partition window
-        # already, and the inf entries are masked padding (the
-        # parent-grouped coded scan marks them id=-1 afterwards)
+        # already, and inf entries are padding whose ids carry no meaning
         spill = (out_d[:, kk - 1] == pd_s[:, kk2 - 1]) & np.isfinite(
             out_d[:, kk - 1]
         )
@@ -463,16 +442,14 @@ def scan_window_coded(
     metric: Metric,
     nlist: int,
     codec: dict,
-    active: np.ndarray | None = None,
     code_col: str = "code",
-    rebalance: int | None = None,
 ) -> DataFrame:
     """``scan_window`` over CODED lists (``(id, code BINARY, list_no)``)
-    — the broadcast-queries analogue of the IVFPQ/IVFSQ probes-join
-    scans, restoring scan-each-code-once asymptotics for compressed
-    lists too (the join path ships every M-byte code once per probing
-    query; at nprobe=128 over shared lists that is a ~100× payload
-    blow-up even for codes).
+    — the only search path of IVF-PQ, IVF-SQ and binary IVF, with
+    scan-each-code-once asymptotics for compressed lists too (a
+    probes join would ship every M-byte code once per probing query;
+    at nprobe=128 over shared lists that is a ~100× payload blow-up
+    even for codes).
 
     ``codec`` selects the in-task decoder:
 
@@ -505,43 +482,19 @@ def scan_window_coded(
     spark = data.sparkSession
     nq = len(qids)
     hi = min(hi, ranked.shape[1], nlist)
-    if active is None:
-        active = np.ones(nq, dtype=bool)
-    act = np.where(active)[0]
-    if len(act) == 0 or hi <= lo:
+    if nq == 0 or hi <= lo:
         return spark.createDataFrame([], WINDOW_SCHEMA)
     inv = _inv_rank(ranked, nlist, hi)
-    probed = sorted({int(x) for x in np.unique(ranked[act, lo:hi])})
+    probed = sorted({int(x) for x in np.unique(ranked[:, lo:hi])})
     if qmat is None:  # hamming codec: queries ride in codec["qbits"]
         qmat = np.zeros((nq, 1))
     bc = spark.sparkContext.broadcast(
-        (qids, np.asarray(qmat, dtype=np.float64), inv, active.copy(), codec)
+        (qids, np.asarray(qmat, dtype=np.float64), inv, codec)
     )
     is_l2 = metric == Metric.L2
 
-    prof_dir = os.environ.get("SPARK_GRAFT_SCAN_PROF")
-    # split-index scan mode (read driver-side at plan build):
-    # "list" (default) = the per-list path; "parent" = shared-LUT
-    # parent grouping + parent-keyed repartition with a split-scaled
-    # salt. MEASURED VERDICT (r08, evidence/100m_h2h_nlist.json +
-    # BENCH_RUNS/profile_split_10m_v*): parent grouping LOSES at both
-    # tiers — 46.8 vs 33.6 ms/q at 100M (np24/4096), 14.1 vs 12.2 at
-    # 10M (np64) — because the per-child column slice of the shared
-    # LUT is a strided gather over the (M, ksub, ns_union) block, not
-    # a memcpy, and it costs more than the 3-pass per-child build it
-    # replaces once the THP-compaction allocator tax (the REAL r07
-    # bottleneck, see session.py) is gone. Kept switchable as the
-    # recorded negative result.
-    split_mode = os.environ.get("SPARK_GRAFT_SPLIT_SCAN", "list")
-
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        prof_on = bool(prof_dir)
-        prof = {
-            "t_decode": 0.0, "t_t3": 0.0, "t_lut": 0.0, "t_term1": 0.0,
-            "t_gather": 0.0, "t_topk": 0.0, "t_merge": 0.0, "t_sel": 0.0,
-            "n_list_groups": 0, "n_rows": 0, "n_qlist": 0, "n_batches": 0,
-        }
-        bqids, bq, binv, bact, cdc = bc.value
+        bqids, bq, binv, cdc = bc.value
         qn = (bq * bq).sum(axis=1)
         sq_dec = books = cents = t2 = znorm = qbits = enc_of = None
         t3 = t3_done = None
@@ -572,11 +525,14 @@ def scan_window_coded(
         state_d = state_i = None
         touched = np.zeros(len(bqids), dtype=bool)
 
-        def build_lut(sel: np.ndarray, el: int):
-            """Fused per-cell LUT (term3 + term2) in gather layout
-            (M, ksub, ns) plus the per-query term1, both in the ADC
-            dtype, for queries ``sel`` against encoding cell ``el``."""
-            tp0 = time.perf_counter() if prof_on else 0.0
+        def pq_dist(sel: np.ndarray, codes_g: np.ndarray, ln: int) -> np.ndarray:
+            """ADC distances (ns × nL) of queries ``sel`` against the
+            codes of list ``ln``: a fused LUT (term3 + term2) in gather
+            layout (M, ksub, ns) plus the per-query term1, both in the
+            ADC dtype."""
+            # encoding-centroid row for this list: identity unless the
+            # codec carries a split-list parent map (refined quantizer)
+            el = int(enc_of[ln]) if enc_of is not None else ln
             miss = sel[~t3_done[sel]]
             if len(miss):
                 # per-m BLAS GEMMs — an einsum('qmd,mkd->qmk') here hits
@@ -589,10 +545,6 @@ def scan_window_coded(
                         qsub[:, mm * dsub : (mm + 1) * dsub] @ books[mm].T
                     )
                 t3_done[miss] = True
-            if prof_on:
-                tp1 = time.perf_counter()
-                prof["t_t3"] += tp1 - tp0
-                tp0 = tp1
             if is_l2:
                 if cents is not None:
                     t2_ln = (
@@ -607,10 +559,6 @@ def scan_window_coded(
                 else:
                     t2_ln = znorm
                     term1 = qn[sel]
-                if prof_on:
-                    tp1 = time.perf_counter()
-                    prof["t_term1"] += tp1 - tp0
-                    tp0 = tp1
                 lut = t3[sel] + t2_ln[None]
             else:
                 lut = t3[sel]
@@ -626,27 +574,10 @@ def scan_window_coded(
             # 766 M/s (float32) on the same shapes — the per-task ADC
             # cost is this gather, so the layout IS the kernel.
             lutT = np.ascontiguousarray(lut.transpose(1, 2, 0), dtype=dt)
-            if prof_on:
-                prof["t_lut"] += time.perf_counter() - tp0
-            return lutT, np.asarray(term1, dtype=dt)
-
-        def adc(lutT: np.ndarray, term1: np.ndarray, codes_g: np.ndarray):
-            tp0 = time.perf_counter() if prof_on else 0.0
             acc = np.zeros((codes_g.shape[0], lutT.shape[2]), dtype=dt)
             for m in range(M):
                 acc += lutT[m][codes_g[:, m]]
-            dist = np.ascontiguousarray(acc.T)
-            if prof_on:
-                prof["t_gather"] += time.perf_counter() - tp0
-                prof["n_qlist"] += lutT.shape[2]
-            return dist + term1[:, None]
-
-        def pq_dist(sel: np.ndarray, codes_g: np.ndarray, ln: int) -> np.ndarray:
-            # encoding-centroid row for this list: identity unless the
-            # codec carries a split-list parent map (refined quantizer)
-            el = int(enc_of[ln]) if enc_of is not None else ln
-            lutT, term1 = build_lut(sel, el)
-            return adc(lutT, term1, codes_g)
+            return np.ascontiguousarray(acc.T) + np.asarray(term1, dtype=dt)[:, None]
 
         for batch in batches:
             if batch.num_rows == 0:
@@ -655,98 +586,15 @@ def scan_window_coded(
                 state_d = np.full((len(bqids), k), np.inf)
                 state_i = np.full((len(bqids), k), -1, dtype=np.int64)
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            tb0 = time.perf_counter() if prof_on else 0.0
             codes = _binary_matrix(batch.column(1))
             lns = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
             mat = sq_dec.decode_np(codes) if sq_dec is not None else None
-            if prof_on:
-                tb1 = time.perf_counter()
-                prof["t_decode"] += tb1 - tb0
-                prof["n_batches"] += 1
-                prof["n_rows"] += batch.num_rows
-            if books is not None and enc_of is not None and split_mode == "parent":
-                # parent-grouped ADC (VERDICT r07 Next #3): children of
-                # one parent share the encoding centroid, hence the
-                # whole term2/term1/t3 LUT build. Build the fused LUT
-                # ONCE per (parent, batch) over the UNION of the
-                # children's probing queries, then serve each child a
-                # contiguous column slice — one memcpy instead of the
-                # 3-pass add+transpose per child. Scoring stays
-                # strictly per-child (identical windows, distances and
-                # merge order to the per-list path; a masked
-                # union-scoring variant was measured 2.4x WORSE — the
-                # union is ~1.5x wider than each child's query set and
-                # inf padding poisons argpartition). The r07 split
-                # index paid the full LUT build x (children x salt
-                # fragments) and lost its head-to-head despite
-                # gathering 2.7x fewer rows.
-                pars = enc_of[lns]
-                for p in np.unique(pars):
-                    mp = pars == p
-                    lns_p = lns[mp]
-                    child_lists = np.unique(lns_p)
-                    tl0 = time.perf_counter() if prof_on else 0.0
-                    sels = {}
-                    union = np.zeros(len(bqids), dtype=bool)
-                    for ln in child_lists:
-                        r = binv[:, int(ln)]
-                        s = bact & (r >= lo) & (r < hi)
-                        sels[int(ln)] = s
-                        union |= s
-                    sel_u = np.where(union)[0]
-                    if prof_on:
-                        prof["t_sel"] += time.perf_counter() - tl0
-                    if len(sel_u) == 0:
-                        continue
-                    lutT_u, term1_u = build_lut(sel_u, int(p))
-                    pos = np.full(len(bqids), -1, dtype=np.int64)
-                    pos[sel_u] = np.arange(len(sel_u))
-                    ids_p, codes_p = ids[mp], codes[mp]
-                    for ln in child_lists:
-                        sel_c = np.where(sels[int(ln)])[0]
-                        if len(sel_c) == 0:
-                            continue
-                        if prof_on:
-                            prof["n_list_groups"] += 1
-                        mc = lns_p == ln
-                        codes_c, ids_c = codes_p[mc], ids_p[mc]
-                        cols = pos[sel_c]
-                        blk = max(1, 4_000_000 // max(codes_c.shape[0], 1))
-                        parts = []
-                        for i in range(0, len(cols), blk):
-                            ts0 = time.perf_counter() if prof_on else 0.0
-                            lutT_c = np.ascontiguousarray(
-                                lutT_u[:, :, cols[i : i + blk]]
-                            )
-                            term1_c = term1_u[cols[i : i + blk]]
-                            if prof_on:
-                                prof["t_lut"] += time.perf_counter() - ts0
-                            parts.append(adc(lutT_c, term1_c, codes_c))
-                        dist = (
-                            parts[0] if len(parts) == 1 else np.concatenate(parts)
-                        )
-                        tk0 = time.perf_counter() if prof_on else 0.0
-                        nd, ni = _group_topk(dist, ids_c, k)
-                        if prof_on:
-                            tk1 = time.perf_counter()
-                            prof["t_topk"] += tk1 - tk0
-                            tk0 = tk1
-                        _merge_rows(state_d, state_i, sel_c, nd, ni)
-                        if prof_on:
-                            prof["t_merge"] += time.perf_counter() - tk0
-                        touched[sel_c] = True
-                continue
             for ln in np.unique(lns):
-                tl0 = time.perf_counter() if prof_on else 0.0
                 r = binv[:, int(ln)]
-                sel = np.where(bact & (r >= lo) & (r < hi))[0]
-                if prof_on:
-                    prof["t_sel"] += time.perf_counter() - tl0
+                sel = np.where((r >= lo) & (r < hi))[0]
                 if len(sel) == 0:
                     continue
                 m = lns == ln
-                if prof_on:
-                    prof["n_list_groups"] += 1
                 if sq_dec is not None:
                     dist = _dist_block(bq[sel], qn[sel], mat[m], metric)
                 elif qbits is not None:
@@ -767,18 +615,9 @@ def scan_window_coded(
                         )
                     else:
                         dist = pq_dist(sel, codes[m], int(ln))
-                tk0 = time.perf_counter() if prof_on else 0.0
                 nd, ni = _group_topk(dist, ids[m], k)
-                if prof_on:
-                    tk1 = time.perf_counter()
-                    prof["t_topk"] += tk1 - tk0
-                    tk0 = tk1
                 _merge_rows(state_d, state_i, sel, nd, ni)
-                if prof_on:
-                    prof["t_merge"] += time.perf_counter() - tk0
                 touched[sel] = True
-        if prof_on:
-            _prof_dump(prof, prof_dir)
         if state_d is None or not touched.any():
             return
         t = np.where(touched)[0]
@@ -791,55 +630,32 @@ def scan_window_coded(
             }
         )
 
-    pruned = data.filter(F.col("list_no").isin(probed)).select(
-        "id", F.col(code_col), F.col("list_no").cast("long")
-    )
-    # parent-grouped layout for split-list quantizers: when enc_of is
-    # the contiguous `parent*split + j` mapping (split_ivfpq_lists),
-    # partition AND sort by parent so a task holds whole parents and
-    # the in-task parent grouping sees every child of a parent
-    # together. The salt shrinks by the same factor — per-(query,
-    # parent) LUT work is built `salt` times across fragments, and the
-    # split index's lists are `split`x smaller, so the skew the salt
-    # guards against shrank by split too.
-    group_div = None
-    eo = codec.get("enc_of") if split_mode == "parent" else None
-    if eo is not None and len(eo):
-        eo = np.asarray(eo)
-        npar = int(eo.max()) + 1
-        if nlist % npar == 0 and np.array_equal(
-            eo, np.repeat(np.arange(npar, dtype=eo.dtype), nlist // npar)
-        ):
-            group_div = nlist // npar
-    if rebalance:
-        # Salted skew split: Spark's size-sorted file bin-packing puts
-        # the biggest lists — which are also the most-probed under
-        # clustered queries — into the SAME task, and scan cost is
-        # probes(list)·rows(list), so that task straggles (measured 85s
-        # vs 2s siblings at 1M×nlist=1024). Hashing on (list_no, salt)
-        # splits each hot list _SALT ways while keeping list locality
-        # (a task holds whole (list, salt) groups, so per-list LUT
-        # state is built O(groups/task) times, not O(nlist) times).
-        # Shuffle volume = the pruned CODES — M bytes/row, cheap.
-        # sortWithinPartitions: the repartition interleaves a task's
-        # ~(nlist·_SALT/tasks) groups row-by-row, so every Arrow batch
-        # fragmented EVERY group into ~40-row slivers — and the scan
-        # pays one k-wide state merge per (group, batch) fragment
-        # (measured: ~8000 merges/task at 10M with k·kf=1280 states =
-        # the dominant ADC cost). Sorting makes lists contiguous: one
-        # fragment per group per batch boundary, ~30x fewer merges.
-        salt = _SALT if group_div is None else max(2, _SALT // group_div)
-        salt = int(os.environ.get("SPARK_GRAFT_SCAN_SALT", salt))
-        key = (
-            F.col("list_no")
-            if group_div is None
-            else F.floor(F.col("list_no") / F.lit(group_div))
+    # Salted skew split: Spark's size-sorted file bin-packing puts the
+    # biggest lists — which are also the most-probed under clustered
+    # queries — into the SAME task, and scan cost is
+    # probes(list)·rows(list), so that task straggles (measured 85s vs
+    # 2s siblings at 1M×nlist=1024). Hashing on (list_no, salt) over
+    # the default parallelism splits each hot list _SALT ways while
+    # keeping list locality (a task holds whole (list, salt) groups, so
+    # per-list LUT state is built O(groups/task) times, not O(nlist)
+    # times). Shuffle volume = the pruned CODES — M bytes/row, cheap.
+    # sortWithinPartitions: the repartition interleaves a task's
+    # ~(nlist·_SALT/tasks) groups row-by-row, so every Arrow batch
+    # fragmented EVERY group into ~40-row slivers — and the scan pays
+    # one k-wide state merge per (group, batch) fragment (measured:
+    # ~8000 merges/task at 10M with k·kf=1280 states = the dominant ADC
+    # cost). Sorting makes lists contiguous: one fragment per group per
+    # batch boundary, ~30x fewer merges.
+    pruned = (
+        data.filter(F.col("list_no").isin(probed))
+        .select("id", F.col(code_col), F.col("list_no").cast("long"))
+        .repartition(
+            spark.sparkContext.defaultParallelism,
+            F.col("list_no"),
+            F.pmod(F.col("id"), F.lit(_SALT)),
         )
-        pruned = pruned.repartition(
-            rebalance,
-            key,
-            F.pmod(F.col("id"), F.lit(salt)),
-        ).sortWithinPartitions("list_no")
+        .sortWithinPartitions("list_no")
+    )
     return pruned.mapInArrow(scan, schema=WINDOW_SCHEMA)
 
 

@@ -25,8 +25,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -358,23 +356,6 @@ def simhash(
     ex = df.select(F.col(id_col).alias("id"), tok.alias("t")).withColumn("h", h60(F.col("t")))
     # shiftright keeps the arithmetic on exact 64-bit integers (a double
     # division would lose low bits of the 60-bit hash)
-    if os.environ.get("SPARK_GRAFT_SIMHASH_PACK", "1") == "0":
-        # reference shape: one ±1 sum per bit (the r10 A/B baseline)
-        votes = ex.select(
-            "id",
-            *[
-                (F.shiftright(F.col("h"), b) % 2 * 2 - 1).alias(f"v{b}")
-                for b in range(bits)
-            ],
-        )
-        agg = votes.groupBy("id").agg(
-            *[F.sum(f"v{b}").alias(f"s{b}") for b in range(bits)]
-        )
-        fp = None
-        for b in range(bits):
-            bit = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            fp = bit if fp is None else fp + bit
-        return agg.select("id", fp.cast("bigint").alias("simhash"))
     # Packed vote lanes (r10, guide §2.2 — shuffle/aggregate fewer,
     # narrower columns): the per-bit ±1 vote sum equals 2·c_b − n where
     # c_b counts set bits and n counts tokens, so instead of ``bits``
@@ -382,7 +363,7 @@ def simhash(
     # (c_b ≤ n, exact up to 2^21−1 = 2M tokens per doc — three orders
     # of magnitude above any corpus document; the arithmetic is
     # integer-exact, so the fingerprint is bit-identical to the
-    # reference shape, which SPARK_GRAFT_SIMHASH_PACK=0 restores).
+    # one-sum-per-bit reference shape).
     # Aggregation state per group: 32 longs -> 12.
     _LANE = 21
     _PER = 63 // _LANE  # 3 lanes per bigint

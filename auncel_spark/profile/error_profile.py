@@ -18,11 +18,12 @@ sequential probing inside a thread, the engine runs synchronized
 stages nprobe ∈ {1,2,4,…,nlist/8}. Each stage:
 1. builds the *delta* probe set (lists ranked [prev, cur)) for the
    still-active queries only — no list is ever scanned twice;
-2. scans those lists distributed (partition-pruned join + Arrow GEMM
-   kernel, the same ``IVFIndex._scan_lists``), returning ≤ nq·k rows;
+2. scans those lists distributed (partition-pruned broadcast-queries
+   GEMM kernel, the same ``scan_window`` as ``IVFIndex.search``),
+   returning ≤ nq·k rows;
 3. merges them into the running per-query top-k and evaluates the
    stop predicate vectorized in numpy;
-4. anti-joins satisfied queries out of the next stage.
+4. drops satisfied queries from the next stage's active mask.
 
 Semantic refinement vs the reference (documented in SURVEY §7.3): the
 reference may stop at non-power-of-two stages; we stop at the next
@@ -578,11 +579,7 @@ class ErrorProfile:
             # per-query bound is the target rounded UP to the next
             # executed stage (capped at the ladder's last stage) — the
             # scanned list set per query is identical, results bit-equal.
-            if (
-                si >= nbf
-                and not (active & (target == 0)).any()
-                and os.environ.get("SPARK_GRAFT_EXT_COLLAPSE", "1") != "0"
-            ):
+            if si >= nbf and not (active & (target == 0)).any():
                 s_last = 1 << int(np.log2(self.index.nlist))
                 depth = np.minimum(
                     np.exp2(np.ceil(np.log2(np.maximum(target, 1)))).astype(

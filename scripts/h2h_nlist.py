@@ -14,11 +14,10 @@ re-measuring superseded configs.
 Sides:
 - parent1024: the pinned nlist=1024 quantizer at its recorded operating
   point (M32, nprobe 16, k_factor 32; recall 0.9084 at r07).
-- split4096_parent: the refined nlist=4096 quantizer (split_ivfpq_lists)
-  at its ladder point (nprobe 24, kf 32 — same recall), scanned with
-  the r08 parent-grouped shared-LUT kernel.
-- split4096_list: same index/point on the plain per-list kernel (the
-  r07 loser) — the control that shows what the kernel change bought.
+- split4096_list: the refined nlist=4096 quantizer (split_ivfpq_lists)
+  at its ladder point (nprobe 24, kf 32 — same recall) on the per-list
+  kernel (the r08 parent-grouped shared-LUT kernel lost this
+  head-to-head, 46.8 vs 33.6 ms/q — evidence/100m_h2h_nlist.json).
 
 Usage: python scripts/h2h_nlist.py [--rounds N]
 """
@@ -87,42 +86,28 @@ def main() -> None:
 
     k = 10
     sides = [
-        ("parent1024", parent, 16, 32, None),
-        ("split4096_parent", split, 24, 32, "parent"),
-        ("split4096_list", split, 24, 32, "list"),
+        ("parent1024", parent, 16, 32),
+        ("split4096_list", split, 24, 32),
     ]
     base = idx.data.select("id", "vec")
     out: dict = {"rounds": rounds, "k": k, "sides": {}}
-    for name, pq, nprobe, kf, mode in sides:
+    for name, pq, nprobe, kf in sides:
         out["sides"][name] = {
             "nlist": pq.nlist,
             "nprobe": nprobe,
             "k_factor": kf,
-            "scan_mode": mode,
             "runs": [],
         }
-    def _pin_mode(mode):
-        # ADVICE r08 #1: a side with mode=None must RESET the env var,
-        # not inherit whatever the previous side pinned — reordering
-        # sides or adding an enc_of-bearing side must not silently
-        # change the kernel under test
-        if mode is not None:
-            os.environ["SPARK_GRAFT_SPLIT_SCAN"] = mode
-        else:
-            os.environ.pop("SPARK_GRAFT_SPLIT_SCAN", None)
 
     # one untimed warm-up pass per side (JIT/Arrow spin-up)
-    for name, pq, nprobe, kf, mode in sides:
-        _pin_mode(mode)
+    for name, pq, nprobe, kf in sides:
         _refine_point(pq, base, test, gt, k, nprobe, kf)
     for r in range(rounds):
-        for name, pq, nprobe, kf, mode in sides:
-            _pin_mode(mode)
+        for name, pq, nprobe, kf in sides:
             pt = _refine_point(pq, base, test, gt, k, nprobe, kf)
             out["sides"][name]["runs"].append(pt["ms_per_query"])
             out["sides"][name]["recall_at_10"] = pt["recall_at_10"]
             print(f"# round {r} {name}: {pt}", file=sys.stderr)
-    os.environ.pop("SPARK_GRAFT_SPLIT_SCAN", None)
 
     for name, s in out["sides"].items():
         runs = sorted(s["runs"])

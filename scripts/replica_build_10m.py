@@ -1,7 +1,7 @@
 """One-off: non-destructive SQ8 replica + refine sidecar at the 10M tier.
 
-delete_source=False keeps flat lists/ default for the driver's bench;
-SPARK_GRAFT_CODED_SCAN=1 opts the replica in for the r10 cold-IO A/B.
+delete_source=False keeps flat lists/ the default scan source; a
+caller opts the replica in with ``IVFIndex.use_replica(True)``.
 """
 import os, sys, time, json
 os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")

@@ -1731,9 +1731,6 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
         # adjudication rather than silently trusting a stale cache.
         h2h = _load_stamped(cache / "h2h_nlist.json")
         if h2h is not None and h2h.get("winner"):
-            # ADVICE r08 #2: restore any externally pinned scan mode
-            # instead of popping it for the rest of the process
-            _prev_split_scan = os.environ.get("SPARK_GRAFT_SPLIT_SCAN")
             try:
                 w = h2h["winner"]
                 ws = h2h["sides"][w]
@@ -1747,15 +1744,13 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                             for kk in (
                                 "ms_median", "ms_min", "ms_max",
                                 "recall_at_10", "nlist", "nprobe",
-                                "k_factor", "scan_mode",
+                                "k_factor",
                             )
                         }
                         for nn, ss in h2h["sides"].items()
                     },
                 }
                 is_split = int(ws["nlist"]) > NLIST
-                if ws.get("scan_mode"):
-                    os.environ["SPARK_GRAFT_SPLIT_SCAN"] = ws["scan_mode"]
                 point = [
                     {
                         "M": 32, "opq": False,
@@ -1799,10 +1794,6 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                 out["ivfpq_default"] = {"skipped": str(e)}
             except Exception as e:
                 out["ivfpq_default"] = {"error": f"{type(e).__name__}: {e}"}
-            if _prev_split_scan is None:
-                os.environ.pop("SPARK_GRAFT_SPLIT_SCAN", None)
-            else:
-                os.environ["SPARK_GRAFT_SPLIT_SCAN"] = _prev_split_scan
             _h2h_decided = True
         else:
             _h2h_decided = False

@@ -67,12 +67,11 @@ def test_binary_ivf_full_probe_exact(bin_data):
     xb, xq, base, queries = bin_data
     idx = BinaryIVFIndex.build(base, nlist=8)
     ids, dists = np_hamming_knn(xq, xb, K)
-    for strategy in ("bcast", "join"):
-        res = idx.search(queries, K, nprobe=8, strategy=strategy)
-        got = {(r["qid"], r["pos"]): r["id"] for r in res.collect()}
-        for qi in range(xq.shape[0]):
-            for p in range(K):
-                assert got[(qi, p)] == ids[qi, p], strategy
+    res = idx.search(queries, K, nprobe=8)
+    got = {(r["qid"], r["pos"]): r["id"] for r in res.collect()}
+    for qi in range(xq.shape[0]):
+        for p in range(K):
+            assert got[(qi, p)] == ids[qi, p]
 
 
 def test_float_to_binary_and_lsh(base_df, tiny_vectors):

@@ -1,11 +1,12 @@
-"""Broadcast-queries coded scan (index/scan.py scan_window_coded)
-equivalence vs the probes-join ADC/decode path.
+"""Broadcast-queries coded scan (index/scan.py scan_window_coded) —
+the only search path of IVF-SQ and IVF-PQ — against a numpy reference.
 
-The two strategies implement the same InvertedListScanner semantics
-(``Auncel/IndexIVF.cpp:439-475`` specialized by IndexIVFPQ /
-IndexScalarQuantizer scanners); they must return identical neighbor
-sets and matching distances for every (metric, residual, codec)
-combination."""
+The reference scores every decoded code in each query's ``nprobe``
+nearest lists directly (the InvertedListScanner semantics of
+``Auncel/IndexIVF.cpp:439-475`` specialized by the IndexIVFPQ /
+IndexScalarQuantizer scanners) with a (dist, id) tie-break; the scan
+must return identical neighbor ids and matching distances for every
+(metric, residual, codec) combination."""
 
 from __future__ import annotations
 
@@ -34,12 +35,43 @@ def _assert_equiv(res_a, res_b, tol=1e-8):
         assert da == pytest.approx(db, abs=tol)
 
 
+def _np_reference(spark, idx, xq, decode):
+    """(qid, pos, id, dist) frame of the numpy top-K over each query's
+    NPROBE coarse-ranked lists; ``decode(codes, list_nos)`` returns the
+    float64 vectors the codes stand for."""
+    lists = idx.data.select("id", "code", "list_no").toPandas()
+    ids = lists["id"].to_numpy(dtype=np.int64)
+    lns = lists["list_no"].to_numpy(dtype=np.int64)
+    codes = np.stack([np.frombuffer(c, dtype=np.uint8) for c in lists["code"]])
+    vecs = decode(codes, lns)
+    q = xq.astype(np.float64)
+    ranked, _ = idx.coarse_rank(np.arange(len(q)), q, NPROBE)
+    rows = []
+    for qi in range(len(q)):
+        m = np.isin(lns, ranked[qi])
+        x, xid = vecs[m], ids[m]
+        if idx.metric == Metric.L2:
+            dist = ((x - q[qi]) ** 2).sum(axis=1)
+        else:
+            dist = -(x @ q[qi])
+        order = np.lexsort((xid, dist))[:K]
+        rows += [
+            (qi, p, int(xid[j]), float(dist[j])) for p, j in enumerate(order)
+        ]
+    return spark.createDataFrame(rows, "qid bigint, pos int, id bigint, dist double")
+
+
 @pytest.mark.parametrize("qtype", ["8bit", "4bit", "fp16"])
-def test_ivfsq_bcast_matches_join(base_df, query_df, qtype):
+def test_ivfsq_bcast_matches_join(base_df, query_df, tiny_vectors, qtype):
+    """SQ scan == numpy over the decoded codes (the probes-join path
+    this test is named for is gone; numpy is the reference now)."""
+    _, xq = tiny_vectors
     idx = IVFSQIndex.build(base_df, nlist=NLIST, kmeans_iter=5, qtype=qtype)
     _assert_equiv(
-        idx.search(query_df, K, NPROBE, strategy="join"),
-        idx.search(query_df, K, NPROBE, strategy="bcast"),
+        _np_reference(
+            base_df.sparkSession, idx, xq, lambda codes, _: idx.sq.decode_np(codes)
+        ),
+        idx.search(query_df, K, NPROBE),
     )
 
 
@@ -47,14 +79,22 @@ def test_ivfsq_bcast_matches_join(base_df, query_df, qtype):
     "metric,by_residual",
     [(Metric.L2, True), (Metric.L2, False), (Metric.IP, True), (Metric.IP, False)],
 )
-def test_ivfpq_bcast_matches_join(base_df, query_df, metric, by_residual):
+def test_ivfpq_bcast_matches_join(base_df, query_df, tiny_vectors, metric, by_residual):
+    """ADC scan == numpy over the decoded codes (plus the list centroid
+    when residual-encoded)."""
+    _, xq = tiny_vectors
     idx = IVFPQIndex.build(
         base_df, nlist=NLIST, M=4, metric=metric, by_residual=by_residual,
         kmeans_iter=5,
     )
+
+    def decode(codes, lns):
+        x = idx.pq.decode_np(codes)
+        return x + idx.centroids[lns] if by_residual else x
+
     _assert_equiv(
-        idx.search(query_df, K, NPROBE, strategy="join"),
-        idx.search(query_df, K, NPROBE, strategy="bcast"),
+        _np_reference(base_df.sparkSession, idx, xq, decode),
+        idx.search(query_df, K, NPROBE),
     )
 
 
@@ -62,10 +102,10 @@ def test_ivfpq_bcast_without_precomputed_table(base_df, query_df):
     """term2 fallback: the in-task per-list table must equal the
     broadcast precomputed one."""
     idx = IVFPQIndex.build(base_df, nlist=NLIST, M=4, kmeans_iter=5)
-    with_t2 = idx.search(query_df, K, NPROBE, strategy="bcast")
+    with_t2 = idx.search(query_df, K, NPROBE)
     idx.use_precomputed_table = False
     idx._term2 = None
-    without = idx.search(query_df, K, NPROBE, strategy="bcast")
+    without = idx.search(query_df, K, NPROBE)
     _assert_equiv(with_t2, without)
 
 

@@ -167,18 +167,26 @@ def test_embedding_lsh_recall_vs_brute_on_near_identical(spark):
     assert len(lsh) >= 0.9 * len(brute)  # multi-probe recall on near-identicals
 
 
-def test_simhash_packed_lanes_match_reference(docs, monkeypatch):
+def _simhash_reference(text: str, bits: int) -> int:
+    """One ±1 vote per bit per whitespace token over the 60-bit md5
+    hash (first 15 hex chars); a bit is set when its vote is > 0."""
+    import hashlib
+
+    votes = [0] * bits
+    for tok in text.lower().split():
+        h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+        for b in range(bits):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    return sum(1 << b for b in range(bits) if votes[b] > 0)
+
+
+def test_simhash_packed_lanes_match_reference(docs):
     """The 21-bit-lane packed vote aggregation (r10) must be
-    bit-identical to the reference one-sum-per-bit shape, including a
-    partial final lane (bits=32 -> 11 lanes, last holding 2 bits)."""
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_PACK", "0")
-    ref = sorted(map(tuple, simhash(docs).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_PACK", "1")
-    packed = sorted(map(tuple, simhash(docs).collect()))
-    assert packed == ref
-    # non-default bit width: full lanes only (30 bits / 3 per lane)
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_PACK", "0")
-    ref30 = sorted(map(tuple, simhash(docs, bits=30).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_PACK", "1")
-    packed30 = sorted(map(tuple, simhash(docs, bits=30).collect()))
-    assert packed30 == ref30
+    bit-identical to the one-sum-per-bit reference, including a
+    partial final lane (bits=32 -> 11 lanes, last holding 2 bits) and
+    full lanes only (bits=30 -> 10 lanes)."""
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    for bits in (32, 30):
+        got = sorted(map(tuple, simhash(docs, bits=bits).collect()))
+        want = sorted((i, _simhash_reference(t, bits)) for i, t in texts.items())
+        assert got == want, bits

@@ -93,14 +93,21 @@ def test_remove_ids_anti_join(base_df, tiny_vectors):
 
 
 def test_search_with_stats(base_df, query_df, tiny_vectors):
-    xb, _ = tiny_vectors
+    xb, xq = tiny_vectors
     idx = IVFIndex.build(base_df, nlist=NLIST, centroids=xb[:NLIST].astype(np.float64))
     res, st = idx.search_with_stats(query_df, K, nprobe=4)
     assert res.count() > 0
     assert st["nq"] == 20 and st["nprobe"] == 4
     assert 0 < st["nlists_scanned"] <= NLIST
-    # every scanned (query, row) pair computed one distance
-    assert st["ndis"] > 0
+    # every scanned (query, row) pair computed one distance: ndis is
+    # Σ over (query, probed list) of the list's size
+    b, q = xb.astype(np.float64), xq.astype(np.float64)
+    c = b[:NLIST]
+    sizes = np.bincount(
+        ((b[:, None, :] - c[None]) ** 2).sum(-1).argmin(axis=1), minlength=NLIST
+    )
+    probed = np.argsort(((q[:, None, :] - c[None]) ** 2).sum(-1), axis=1)[:, :4]
+    assert st["ndis"] == int(sizes[probed].sum())
     assert st["search_time_s"] > 0
 
 

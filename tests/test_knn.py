@@ -76,8 +76,7 @@ def test_shard_partials_single_scan_matches_per_shard_scans(
 ):
     """The one-scan per-shard kernel must reproduce, through merge_topk,
     exactly the rows of the two filtered-scan searches (r10 single-scan
-    rewrite of q_shard_merge_topk; kill-switch
-    SPARK_GRAFT_SHARD_SINGLESCAN=0)."""
+    rewrite of q_shard_merge_topk)."""
     from auncel_spark.operators.knn import knn_exact_shard_partials
 
     xb, xq = tiny_vectors

@@ -16,13 +16,12 @@ def test_ivf_scan_prunes_partitions_and_broadcasts(base_df, query_df, tiny_vecto
         base_df, nlist=16, centroids=xb[:16].astype(np.float64), path=path
     )
     idx2 = IVFIndex.load(base_df.sparkSession, path)
-    probes, qids, qmat, probed = idx2.probes_df(query_df.select("qid", "vec"), 4)
-    partial = idx2._scan_lists(probes, qids, qmat, 10, probed_lists=probed)
-    plan = partial._jdf.queryExecution().executedPlan().toString()
+    res = idx2.search(query_df, 10, 4)
+    plan = res._jdf.queryExecution().executedPlan().toString()
     # static partition pruning from the isin filter over list_no
     assert "PartitionFilters" in plan and "INSET" in plan, plan[:2000]
-    # the probe side must broadcast (never shuffle the lists table)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # queries ride in a task broadcast: no join against the lists table
+    assert "Join" not in plan, plan[:2000]
     # no full-corpus exchange before the scan kernel
     assert plan.count("FileScan parquet") == 1
 
@@ -48,7 +47,7 @@ def test_coded_scan_prunes_partitions_no_join(base_df, query_df, tmp_path):
     path = str(tmp_path / "ivfsq_plan")
     idx = IVFSQIndex.build(base_df, nlist=16, kmeans_iter=3, qtype="4bit", path=path)
     idx2 = IVFSQIndex.load(base_df.sparkSession, path)
-    res = idx2.search(query_df.limit(3), 5, 2, strategy="bcast")
+    res = idx2.search(query_df.limit(3), 5, 2)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and (
         "INSET" in plan or "list_no" in plan.split("PartitionFilters")[1][:120]
