@@ -35,10 +35,6 @@ from auncel_spark.operators.topk import merge_topk
 K = 10
 QUERY_FILTER = "vec_id % 20 = 0"
 RANGE_RADIUS = 1.4  # squared L2; ~1% of pairs on the unit-norm corpus
-# GEMM path for the scored catalog queries: float64 BLAS matches the
-# float64 SQL oracle to ~1e-13 relative — far tighter than any distance
-# gap in continuous random data, so (dist, id) ordering agrees.
-STRATEGY = "gemm"
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -73,14 +69,14 @@ def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exact_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2, STRATEGY
+        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2
     )
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
 
 
 def q_exact_knn_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.IP, STRATEGY
+        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.IP
     )
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
 
@@ -96,7 +92,7 @@ def q_knn_rerank_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3/O9: candidate generation by IP top-50, exact L2 re-rank to top-10."""
     q = _emb_queries(spark, sf_dir)
     b = _emb_base(spark, sf_dir)
-    cand = knn_exact(q, b, 50, Metric.IP, STRATEGY).select("qid", "id")
+    cand = knn_exact(q, b, 50, Metric.IP).select("qid", "id")
     res = knn_by_ids(q, b, cand, K, Metric.L2)
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
 
@@ -146,8 +142,8 @@ def q_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O17: recall of IP-ranked top-10 against true L2 top-10."""
     q = _emb_queries(spark, sf_dir)
     b = _emb_base(spark, sf_dir)
-    approx = knn_exact(q, b, K, Metric.IP, STRATEGY)
-    gt = knn_exact(q, b, K, Metric.L2, STRATEGY).select(
+    approx = knn_exact(q, b, K, Metric.IP)
+    gt = knn_exact(q, b, K, Metric.L2).select(
         "qid", "pos", F.col("id").alias("gt_id")
     )
     rec = intersection_recall(approx, gt, K)
@@ -390,7 +386,7 @@ def q_bounded_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _gt_pdf():
         return (
-            knn_exact(q_local, _emb_base(spark, sf_dir), K, Metric.L2, STRATEGY)
+            knn_exact(q_local, _emb_base(spark, sf_dir), K, Metric.L2)
             .select("qid", "pos", "dist")
             .toPandas()
         )
@@ -566,7 +562,6 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_base(spark, sf_dir),
         ANN_K,
         Metric.COSINE,
-        "gemm",
     )
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
 
@@ -964,7 +959,7 @@ def q_ivf_recall_worst_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _seed_ivf(spark, sf_dir)
     res = idx.search(_emb_queries(spark, sf_dir), K, nprobe=NPROBE)
     gt = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2, STRATEGY
+        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2
     ).select("qid", "pos", F.col("id").alias("gt_id"))
     minf = intersection_criterion(res, gt, K, worst_case=True)
     return spark.createDataFrame(
@@ -1353,7 +1348,7 @@ def _overlap_contract_jobs(spark, q, search_fn, sf_dir):
 
     def _gt_pdf():
         return (
-            knn_exact(q, _emb_base(spark, sf_dir), K, Metric.L2, STRATEGY)
+            knn_exact(q, _emb_base(spark, sf_dir), K, Metric.L2)
             .select("qid", "pos", "dist")
             .toPandas()
         )

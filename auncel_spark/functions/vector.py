@@ -4,10 +4,10 @@ Re-expresses the reference's dense-kernel surface (``Auncel/utils.h``:
 ``fvec_L2sqr``, ``fvec_inner_product``, ``fvec_norm_L2sqr``,
 ``fvec_renorm_L2``, ``inner_product_to_L2sqr``) as ``pyspark.sql``
 higher-order functions over ``ARRAY<FLOAT>`` columns. These stay inside
-whole-stage codegen — no Python round-trip — which is the right trade
-for moderate d (the test corpus is d=64). For large d in hot loops, the
-GEMM pandas-UDF kernels in ``operators/knn.py`` take over, exactly as
-the reference switches to BLAS above ``distance_compute_blas_threshold``
+whole-stage codegen — no Python round-trip. They serve row-wise
+scoring (``knn_by_ids`` re-ranking, dedup similarity); every
+brute-force scan runs the Arrow GEMM kernel in ``operators/knn.py``
+(``_flat_partials``), the reference's BLAS path
 (``Auncel/utils.h:186-187``).
 
 All arithmetic is performed in float64 (inputs cast element-wise) so

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from auncel_spark.operators.knn import _flat_partials, ids_codes_from_arrow
 from auncel_spark.operators.topk import topk_per_query
 
 _POP = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
@@ -109,38 +110,20 @@ def hamming_knn(
     id_col: str = "id",
     bits_col: str = "bits",
 ) -> DataFrame:
-    """Brute Hamming top-k (``hammings_knn_hc``): broadcast packed query
-    codes, per-partition popcount + argpartition, global window merge.
-    Returns (qid, pos, id, dist) with dist = hamming distance; ties by
-    id, as everywhere."""
-    spark = queries.sparkSession
-    qrows = queries.select(qid_col, q_bits_col).collect()
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    qb = np.array([np.frombuffer(r[q_bits_col], dtype=np.uint8) for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, qb))
-    b = base.select(F.col(id_col).alias("id"), F.col(bits_col).alias("bits"))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gqids, gqb = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            bb = np.array([np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]])
-            dist = _hamming_matrix(gqb, bb)
-            kk = min(k, dist.shape[1])
-            # integer distances tie constantly: (dist, id) selection is
-            # mandatory for a correct distributed partial top-k
-            part = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(gqids, kk),
-                    "id": ids[part].ravel(),
-                    "dist": np.take_along_axis(dist, part, axis=1).ravel().astype(np.float64),
-                }
-            )
-
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
+    """Brute Hamming top-k (``hammings_knn_hc``): the ``knn_exact`` scan
+    (``_flat_partials``) over packed codes with a popcount distance
+    block. Returns (qid, pos, id, dist) with dist = hamming distance;
+    ties by id, as everywhere — integer distances tie constantly, so
+    the scan's (dist, id) selection is what keeps the distributed
+    partial top-k correct."""
+    partial = _flat_partials(
+        queries.select(qid_col, q_bits_col),
+        base.select(id_col, bits_col),
+        k,
+        lambda qb: lambda bb: _hamming_matrix(qb, bb).astype(np.float64),
+        decode=ids_codes_from_arrow,
+        qdecode=ids_codes_from_arrow,
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
 
@@ -193,37 +176,16 @@ def generalized_hamming_knn(
     id_col: str = "id",
     bits_col: str = "bits",
 ) -> DataFrame:
-    """Top-k by generalized (per-byte) Hamming distance. Same broadcast
-    + per-partition partial + window merge shape as ``hamming_knn``.
-    Returns (qid, pos, id, dist)."""
-    from auncel_spark.operators.topk import topk_per_query
-
-    spark = queries.sparkSession
-    qrows = queries.select(qid_col, q_bits_col).collect()
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    qb = np.array([np.frombuffer(r[q_bits_col], dtype=np.uint8) for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, qb))
-    b = base.select(F.col(id_col).alias("id"), F.col(bits_col).alias("bits"))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gqids, gqb = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            bb = np.array([np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]])
-            dist = _generalized_hamming_matrix(gqb, bb).astype(np.float64)
-            kk = min(k, dist.shape[1])
-            sel = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(gqids, kk),
-                    "id": ids[sel].ravel(),
-                    "dist": np.take_along_axis(dist, sel, axis=1).ravel(),
-                }
-            )
-
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
+    """Top-k by generalized (per-byte) Hamming distance. Same scan as
+    ``hamming_knn``. Returns (qid, pos, id, dist)."""
+    partial = _flat_partials(
+        queries.select(qid_col, q_bits_col),
+        base.select(id_col, bits_col),
+        k,
+        lambda qb: lambda bb: _generalized_hamming_matrix(qb, bb).astype(np.float64),
+        decode=ids_codes_from_arrow,
+        qdecode=ids_codes_from_arrow,
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
 

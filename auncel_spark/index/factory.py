@@ -144,12 +144,12 @@ class SearchIndex:
         t = self.spec.index_type
         k_eff = k * 4 if self.spec.refine else k
         if t == "flat":
-            res = knn_exact(q, self.tbase, k_eff, self.metric, strategy="gemm")
+            res = knn_exact(q, self.tbase, k_eff, self.metric)
         elif t == "sq8":
             dec = self.sq.decode(self.coded).select(
                 "id", F.col("vec_dec").alias("vec")
             )
-            res = knn_exact(q, dec, k_eff, self.metric, strategy="gemm")
+            res = knn_exact(q, dec, k_eff, self.metric)
         elif t == "pq":
             res = pq_knn(q, self.coded, self.pq, k_eff, self.metric)
         elif t in ("ivfflat", "ivfsq", "ivfpq", "ivfpqr"):

@@ -28,9 +28,9 @@ import numpy as np
 from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
+from auncel_spark.operators.knn import _flat_partials, ids_codes_from_arrow
 from auncel_spark.operators.topk import topk_per_query
 
 
@@ -208,40 +208,25 @@ def pq_knn(
     code_col: str = "code",
 ) -> DataFrame:
     """Flat ADC search over a coded table (IndexPQ::search, ST_PQ mode,
-    Auncel/IndexPQ.h:74-91): per-query LUT, gather-sum over codes,
-    partial top-k per partition, global window top-k.
+    Auncel/IndexPQ.h:74-91): the ``knn_exact`` scan (``_flat_partials``)
+    with a per-query LUT gather-sum as the distance block.
 
     Approximation contract: distances are ADC estimates; callers wanting
     exact ranks re-rank with ``knn_by_ids`` (O9 / IndexRefineFlat)."""
-    spark = queries.sparkSession
-    qrows = queries.select("qid", "vec").collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["vec"] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, qmat, pq.codebooks))
-    b = coded_base.select(F.col("id"), F.col(code_col).alias("code"))
+    books = queries.sparkSession.sparkContext.broadcast(pq.codebooks)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bqids, bq, books = bc.value
-        kernel = ProductQuantizer(books)
-        luts = np.stack([kernel.lut_np(q, metric) for q in bq])  # (nq, M, ksub)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]])
-            # dist (nq, n): batch gather-sum
-            gathered = luts[:, np.arange(kernel.M)[None, :], codes]  # (nq, n, M)
-            dist = gathered.sum(axis=2)
-            kk = min(k, dist.shape[1])
-            # (dist, id) tie-break — see operators/knn.py note
-            part = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(bqids, kk),
-                    "id": ids[part].ravel(),
-                    "dist": np.take_along_axis(dist, part, axis=1).ravel(),
-                }
-            )
+    def kernel(qmat):
+        adc = ProductQuantizer(books.value)
+        luts = np.stack([adc.lut_np(q, metric) for q in qmat])  # (nq, M, ksub)
+        sub = np.arange(adc.M)[None, :]
+        # (nq, n, M) gather, summed per row
+        return lambda codes: luts[:, sub, codes].sum(axis=2)
 
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
+    partial = _flat_partials(
+        queries.select("qid", "vec"),
+        coded_base.select("id", code_col),
+        k,
+        kernel,
+        decode=ids_codes_from_arrow,
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

@@ -15,11 +15,11 @@ re-expresses that Spark-first and lifts the k=1 restriction:
   dimensions it owns (column pruning across tables, the reason this
   index exists);
 - search reassembles rows with ONE id-equijoin chain (Spark
-  co-partitions the join sides on the key), then a fused Arrow kernel
-  computes per-shard GEMMs against the broadcast query slices and folds
-  their sum into a per-task running top-k — shuffle out is
-  O(tasks·nq·k), independent of corpus size, like every scan kernel in
-  this engine;
+  co-partitions the join sides on the key), then the flat scan
+  (``operators/knn.py::_flat_partials``) computes per-shard GEMMs
+  against the broadcast query slices and folds their sum into a
+  per-task running top-k — shuffle out is O(tasks·nq·k), independent
+  of corpus size, like every scan kernel in this engine;
 - a bare per-shard top-k would be WRONG pre-sum (the best total can be
   mediocre in every shard), which is why the kernel sums before
   selecting — the one barrier this operator genuinely needs.
@@ -27,17 +27,13 @@ re-expresses that Spark-first and lifts the k=1 restriction:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
-from auncel_spark.operators.knn import RESULT_SCHEMA
+from auncel_spark.functions.vector import ids_mat_from_arrow
+from auncel_spark.operators.knn import _flat_partials, _metric_dist
 from auncel_spark.operators.topk import topk_per_query
 
 
@@ -92,60 +88,27 @@ def split_vectors_knn(
     joined = shards[0].select("id", F.col("vec").alias("_v0"))
     for s, sh in enumerate(shards[1:], start=1):
         joined = joined.join(sh.select("id", F.col("vec").alias(f"_v{s}")), "id")
+    ns = len(shards)
 
-    spark = queries.sparkSession
-    qpdf = queries.select(
-        F.col(qid_col).alias("qid"), F.col(q_vec_col).alias("vec")
-    ).toPandas()
-    qids = qpdf["qid"].to_numpy(dtype=np.int64)
-    qmat = as_matrix(qpdf["vec"])
-    bc = spark.sparkContext.broadcast((qids, qmat))
-    ns, is_l2 = len(shards), metric == Metric.L2
+    def decode(batch):
+        ids, m0 = ids_mat_from_arrow(batch)
+        rest = (ids_mat_from_arrow(batch, 0, c)[1] for c in range(2, ns + 1))
+        return (ids, m0, *rest)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from auncel_spark.index.scan import _group_topk, _merge_rows
-
-        bqids, bq = bc.value
-        nq = len(bqids)
-        qs = [bq[:, offs[s] : offs[s + 1]] for s in range(ns)]
+    def kernel(qmat):
+        qs = [qmat[:, offs[s] : offs[s + 1]] for s in range(ns)]
         qn = [(x * x).sum(axis=1)[:, None] for x in qs]
-        block = max(64, 4_000_000 // max(nq, 1))
-        state_d = state_i = None
-        rows_all = np.arange(nq)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if state_d is None:
-                state_d = np.full((nq, k), np.inf)
-                state_i = np.full((nq, k), -1, dtype=np.int64)
-            ids_b = pdf["id"].to_numpy(dtype=np.int64)
-            mats_b = [
-                as_matrix(pdf[f"_v{s}"]) for s in range(ns)
-            ]
-            for s0 in range(0, len(ids_b), block):
-                ids = ids_b[s0 : s0 + block]
-                dist = None
-                for s in range(ns):
-                    mat = mats_b[s][s0 : s0 + block]
-                    dots = qs[s] @ mat.T
-                    part = (
-                        qn[s] + (mat * mat).sum(axis=1)[None, :] - 2.0 * dots
-                        if is_l2
-                        else -dots
-                    )
-                    dist = part if dist is None else dist + part
-                nd, ni = _group_topk(dist, ids, k)
-                _merge_rows(state_d, state_i, rows_all, nd, ni)
-        if state_d is None:
-            return
-        keep = (state_i >= 0).ravel()
-        yield pd.DataFrame(
-            {
-                "qid": np.repeat(bqids, k)[keep],
-                "id": state_i.ravel()[keep],
-                "dist": state_d.ravel()[keep],
-            }
-        )
 
-    partial = joined.mapInPandas(scan, schema=RESULT_SCHEMA)
+        def score(*mats):
+            dist = None
+            for x, n, mat in zip(qs, qn, mats):
+                part = _metric_dist(metric, x @ mat.T, n, mat)
+                dist = part if dist is None else dist + part
+            return dist
+
+        return score
+
+    partial = _flat_partials(
+        queries.select(qid_col, q_vec_col), joined, k, kernel, decode=decode
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

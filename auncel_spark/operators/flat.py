@@ -17,8 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from auncel_spark.functions.vector import as_matrix
-
+from auncel_spark.config import Metric
+from auncel_spark.functions.vector import ids_mat_from_arrow
+from auncel_spark.operators.knn import _flat_partials, _metric_dist
 from auncel_spark.operators.topk import topk_per_query
 
 
@@ -32,47 +33,30 @@ def knn_base_shift(
     id_col: str = "id",
     vec_col: str = "vec",
 ) -> DataFrame:
-    """O5 BaseShift: rank by L2²(q, x) − shift(x). Same GEMM partial
-    top-k shape as ``knn_exact(strategy='gemm')`` with the per-row
-    shift applied inside the kernel."""
-    from typing import Iterator
-
+    """O5 BaseShift: rank by L2²(q, x) − shift(x). The ``knn_exact``
+    scan (``_flat_partials``) with the per-row shift subtracted from
+    each L2² distance block."""
     import numpy as np
-    import pandas as pd
 
-    spark = queries.sparkSession
-    qrows = queries.select(qid_col, q_vec_col).collect()
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[q_vec_col] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, qmat))
-    b = base.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.col(shift_col).alias("shift"),
+    def decode(batch):
+        ids, mat = ids_mat_from_arrow(batch)
+        shift = batch.column(2).to_numpy(zero_copy_only=False).astype(np.float64)
+        return ids, mat, shift
+
+    def kernel(qmat):
+        q_norms = (qmat * qmat).sum(axis=1)[:, None]
+        return (
+            lambda mat, shift: _metric_dist(Metric.L2, qmat @ mat.T, q_norms, mat)
+            - shift[None, :]
+        )
+
+    partial = _flat_partials(
+        queries.select(qid_col, q_vec_col),
+        base.select(id_col, vec_col, shift_col),
+        k,
+        kernel,
+        decode=decode,
     )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gq, gm = bc.value
-        qn = (gm * gm).sum(axis=1)[:, None]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            mat = as_matrix(pdf["vec"])
-            shift = pdf["shift"].to_numpy(dtype=np.float64)
-            dist = qn + (mat * mat).sum(axis=1)[None, :] - 2.0 * (gm @ mat.T)
-            dist = dist - shift[None, :]
-            kk = min(k, dist.shape[1])
-            part = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(gq, kk),
-                    "id": ids[part].ravel(),
-                    "dist": np.take_along_axis(dist, part, axis=1).ravel(),
-                }
-            )
-
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
 

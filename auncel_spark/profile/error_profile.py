@@ -474,7 +474,6 @@ class ErrorProfile:
             self.index.data.select("id", "vec"),
             self.max_topk,
             self.index.metric,
-            strategy="gemm",
         ).collect()
         qids = sorted({r["qid"] for r in res})
         qpos = {q: i for i, q in enumerate(qids)}

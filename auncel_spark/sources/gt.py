@@ -36,7 +36,7 @@ def generate_ground_truth(
 ) -> DataFrame:
     """S7: exact top-max_topk per query → (qid, pos, gt_id, gt_dist);
     optionally persisted as the gtd/gti analogue."""
-    gt = knn_exact(queries, base, max_topk, metric, strategy="gemm").select(
+    gt = knn_exact(queries, base, max_topk, metric).select(
         "qid",
         F.col("pos").cast("int").alias("pos"),
         F.col("id").alias("gt_id"),

@@ -8,8 +8,8 @@ sets update as new base vectors stream in — the streaming analogue of
 
 Dataflow per micro-batch:
 1. score the incoming vector batch against the broadcast standing
-   query set (GEMM kernel, same as batch knn) → (qid, id, dist)
-   candidates, k per query per batch;
+   query set (the batch ``knn_exact`` scan, ``_flat_partials``) →
+   (qid, id, dist) candidates, k per query per task;
 2. group by qid → ``applyInPandasWithState`` merges candidates into
    the persisted per-query top-k (ids+dists arrays in state, ≤ k each)
    and emits the refreshed result rows.
@@ -22,40 +22,15 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from auncel_spark.config import Metric
+from auncel_spark.operators.knn import _flat_partials, _metric_kernel
+
 RESULT_SCHEMA = "qid bigint, pos int, id bigint, dist double"
 STATE_SCHEMA = "ids array<long>, dists array<double>"
-
-
-def _score_batch(stream_df: DataFrame, qids: np.ndarray, qmat: np.ndarray, k: int) -> DataFrame:
-    spark = stream_df.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gq, gm = bc.value
-        qn = (gm * gm).sum(axis=1)[:, None]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            mat = as_matrix(pdf["vec"])
-            dist = qn + (mat * mat).sum(axis=1)[None, :] - 2.0 * (gm @ mat.T)
-            kk = min(k, dist.shape[1])
-            part = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(gq, kk),
-                    "id": ids[part].ravel(),
-                    "dist": np.take_along_axis(dist, part, axis=1).ravel(),
-                }
-            )
-
-    return stream_df.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
 
 
 def _merge_fn(k: int):
@@ -104,11 +79,15 @@ def continuous_topk(
     """Start the standing-query stream. Each micro-batch appends the
     refreshed per-query top-k rows to ``out_dir`` (the latest batch per
     qid is the current answer). Returns the StreamingQuery."""
-    qrows = queries.select("qid", "vec").collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["vec"] for r in qrows], dtype=np.float64)
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    scored = _score_batch(stream, qids, qmat, k)
+    # per-task L2 top-k partials of each micro-batch: the batch
+    # knn_exact scan over the stream
+    scored = _flat_partials(
+        queries.select("qid", "vec"),
+        stream.select("id", "vec"),
+        k,
+        _metric_kernel(Metric.L2),
+    )
     merged = scored.groupBy("qid").applyInPandasWithState(
         _merge_fn(k),
         outputStructType=RESULT_SCHEMA,

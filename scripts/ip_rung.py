@@ -179,7 +179,7 @@ def main() -> None:
         from auncel_spark.operators.knn import knn_exact
 
         ex = knn_exact(
-            q_df, base.select("id", "vec"), K, Metric.IP, strategy="gemm"
+            q_df, base.select("id", "vec"), K, Metric.IP
         ).toPandas()
         gt = np.full((N_Q, K), np.inf)
         gt[ex["qid"].to_numpy() - 10_000_000, ex["pos"].to_numpy()] = ex[
@@ -226,7 +226,7 @@ def main() -> None:
             )
         ).cache()
         vex = knn_exact(
-            val_df, base.select("id", "vec"), K, Metric.IP, strategy="gemm"
+            val_df, base.select("id", "vec"), K, Metric.IP
         ).toPandas()
         vgt = np.full((N_Q, K), np.inf)
         vgt[vex["qid"].to_numpy() - 30_000_000, vex["pos"].to_numpy()] = vex[

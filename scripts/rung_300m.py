@@ -332,7 +332,7 @@ def ensure_gt(spark, cache: Path) -> np.ndarray:
     t0 = time.perf_counter()
     q_df = spark.createDataFrame(_gen_queries_pdf(17, N_Q, QID0))
     ex = knn_exact(
-        q_df, _lazy_base_df(spark, N300), GT_K, strategy="gemm"
+        q_df, _lazy_base_df(spark, N300), GT_K
     ).toPandas()
     gt = np.full((N_Q, GT_K), np.inf)
     gt[ex["qid"].to_numpy() - QID0, ex["pos"].to_numpy()] = ex["dist"].to_numpy()

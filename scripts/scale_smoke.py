@@ -87,7 +87,7 @@ def main(n: int = 200_000, d: int = 64, nq: int = 1000, nlist: int = 256) -> Non
     # verify the bound on the eval queries
     from auncel_spark.operators.knn import knn_exact
 
-    gt = knn_exact(queries, base, 10, Metric.L2, "gemm").selectExpr(
+    gt = knn_exact(queries, base, 10, Metric.L2).selectExpr(
         "qid", "pos", "id as gt_id", "dist as gt_dist"
     )
     rec = threshold_recall(bres, gt, 10)

@@ -51,6 +51,9 @@ def np_knn(xq: np.ndarray, xb: np.ndarray, k: int, metric: str = "l2"):
     b = xb.astype(np.float64)
     if metric == "l2":
         d = ((q[:, None, :] - b[None, :, :]) ** 2).sum(-1)
+    elif metric == "cosine":
+        denom = np.linalg.norm(q, axis=1)[:, None] * np.linalg.norm(b, axis=1)[None, :]
+        d = -(q @ b.T) / np.where(denom == 0, 1.0, denom)
     else:
         d = -(q @ b.T)
     ids = np.arange(b.shape[0])

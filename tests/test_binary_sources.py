@@ -216,7 +216,7 @@ def test_spectral_hash_beats_random_and_roundtrips(spark, base_df, query_df, tin
 
     K = 10
     res = sh.knn(query_df, codes, K)
-    gt = knn_exact(query_df, base_df, K, Metric.L2, "gemm")
+    gt = knn_exact(query_df, base_df, K, Metric.L2)
     gt_ids, got_ids = {}, {}
     for r in gt.collect():
         gt_ids.setdefault(r["qid"], set()).add(r["id"])

@@ -277,6 +277,27 @@ def test_knn_1d_and_base_shift(spark):
     assert shifted.collect()[0]["id"] == 5  # huge shift wins despite distance
 
 
+def test_knn_base_shift_matches_numpy(spark, base_df, query_df, tiny_vectors):
+    """Top-5 by L2² − shift equals numpy's, with the (dist, id) tie-break."""
+    from pyspark.sql import functions as F
+
+    xb, xq = tiny_vectors
+    shift = (np.arange(xb.shape[0]) % 7) / 4.0
+    base = base_df.withColumn("shift", (F.col("id") % 7) / 4.0)
+    res = knn_base_shift(query_df, base, 5)
+    got = {(r["qid"], r["pos"]): (r["id"], r["dist"]) for r in res.collect()}
+    q, b = xq.astype(np.float64), xb.astype(np.float64)
+    d = ((q[:, None, :] - b[None, :, :]) ** 2).sum(-1) - shift[None, :]
+    ids = np.arange(xb.shape[0])
+    order = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)[:, :5]
+    assert len(got) == xq.shape[0] * 5
+    for qi in range(xq.shape[0]):
+        for p in range(5):
+            gid, gdist = got[(qi, p)]
+            assert gid == order[qi, p], (qi, p)
+            assert abs(gdist - d[qi, order[qi, p]]) < 1e-9
+
+
 def test_matrix_stats(base_df, tiny_vectors):
     xb, _ = tiny_vectors
     st = matrix_stats(base_df).collect()
@@ -358,7 +379,7 @@ def test_ivfpqr_recall_between_adc_and_exact_refine(spark, base_df, query_df, ti
     xb, xq = tiny_vectors
     cents = xb[:4].astype(np.float64)
     K = 10
-    gt = knn_exact(query_df, base_df, K, Metric.L2, "gemm")
+    gt = knn_exact(query_df, base_df, K, Metric.L2)
     gt_ids = {}
     for r in gt.collect():
         gt_ids.setdefault(r["qid"], set()).add(r["id"])

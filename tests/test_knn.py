@@ -12,11 +12,10 @@ from tests.conftest import np_knn
 K = 10
 
 
-@pytest.mark.parametrize("metric", [Metric.L2, Metric.IP])
-@pytest.mark.parametrize("strategy", ["join", "gemm"])
-def test_knn_exact_matches_numpy_oracle(base_df, query_df, tiny_vectors, metric, strategy):
+@pytest.mark.parametrize("metric", [Metric.L2, Metric.IP, Metric.COSINE])
+def test_knn_exact_matches_numpy_oracle(base_df, query_df, tiny_vectors, metric):
     xb, xq = tiny_vectors
-    res = knn_exact(query_df, base_df, K, metric=metric, strategy=strategy)
+    res = knn_exact(query_df, base_df, K, metric=metric)
     got = {
         (r["qid"], r["pos"]): (r["id"], r["dist"])
         for r in res.collect()
@@ -30,14 +29,79 @@ def test_knn_exact_matches_numpy_oracle(base_df, query_df, tiny_vectors, metric,
             assert abs(gdist - dists[qi, pos]) < 1e-9
 
 
-def test_range_search_matches_oracle(base_df, query_df, tiny_vectors):
+@pytest.mark.parametrize(
+    "metric, radius", [(Metric.L2, 1.5), (Metric.IP, 0.5), (Metric.COSINE, 0.5)]
+)
+def test_range_search_matches_oracle(spark, query_df, tiny_vectors, metric, radius):
+    """Base rows rescaled to norms 0.5–3, so a cosine filter and a raw
+    dot-product filter keep different pairs. dist is in the metric's
+    native sign: squared L2, dot, cosine similarity."""
     xb, xq = tiny_vectors
-    radius = 1.5  # squared L2
-    res = range_search(query_df, base_df, radius, metric=Metric.L2)
-    got = {(r["qid"], r["id"]) for r in res.collect()}
-    d = ((xq.astype(np.float64)[:, None, :] - xb.astype(np.float64)[None, :, :]) ** 2).sum(-1)
-    want = {(qi, bi) for qi, bi in zip(*np.where(d < radius))}
-    assert got == want
+    scale = np.random.default_rng(7).uniform(0.5, 3.0, xb.shape[0])
+    xs = (xb * scale[:, None]).astype(np.float32)
+    base = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(xs)],
+        "id bigint, vec array<float>",
+    )
+    res = range_search(query_df, base, radius, metric=metric)
+    got = {(r["qid"], r["id"]): r["dist"] for r in res.collect()}
+    q, b = xq.astype(np.float64), xs.astype(np.float64)
+    if metric == Metric.L2:
+        d = ((q[:, None, :] - b[None, :, :]) ** 2).sum(-1)
+        hit = d < radius
+    else:
+        d = q @ b.T
+        if metric == Metric.COSINE:
+            d /= np.linalg.norm(q, axis=1)[:, None] * np.linalg.norm(b, axis=1)[None, :]
+        hit = d > radius
+    assert not np.isclose(d, radius, rtol=0, atol=1e-9).any()  # no boundary pair
+    assert set(got) == {(qi, bi) for qi, bi in zip(*np.nonzero(hit))}
+    assert 0 < len(got) < hit.size
+    for (qi, bi), dist in got.items():
+        assert abs(dist - d[qi, bi]) < 1e-9
+
+
+def test_knn_exact_multi_equals_per_metric_calls(base_df, query_df):
+    """Each metric's rows of the one-scan multi-metric kNN equal the
+    single-metric ``knn_exact`` rows: identical ids and identical dists."""
+    from auncel_spark.operators.knn import knn_exact_multi
+
+    both = knn_exact_multi(query_df, base_df, K, [Metric.L2, Metric.IP]).toPandas()
+    for m in (Metric.L2, Metric.IP):
+        want = knn_exact(query_df, base_df, K, m).toPandas()
+        got = both[both["metric"] == m.value].drop(columns="metric")
+        key = ["qid", "pos"]
+        want = want.sort_values(key).reset_index(drop=True)
+        got = got.sort_values(key).reset_index(drop=True)
+        assert len(got) == len(query_df.collect()) * K
+        assert got.equals(want), m
+
+
+def _empty_query_op(op, spark, base_df, query_df):
+    from auncel_spark.index.binary import hamming_knn
+    from auncel_spark.index.pq import ProductQuantizer, pq_knn
+    from auncel_spark.operators.knn import knn_exact_multi
+
+    none = query_df.limit(0)
+    if op == "knn_exact":
+        return knn_exact(none, base_df, K)
+    if op == "knn_exact_multi":
+        return knn_exact_multi(none, base_df, K, [Metric.L2, Metric.IP])
+    if op == "range_search":
+        return range_search(none, base_df, 1.5)
+    if op == "hamming_knn":
+        bits = spark.createDataFrame([(0, b"\x0f\x01")], "id bigint, bits binary")
+        return hamming_knn(bits.withColumnRenamed("id", "qid").limit(0), bits, K)
+    pq = ProductQuantizer(np.zeros((2, 4, 8)))
+    coded = spark.createDataFrame([(0, b"\x00\x01")], "id bigint, code binary")
+    return pq_knn(none, coded, pq, K)
+
+
+@pytest.mark.parametrize(
+    "op", ["knn_exact", "knn_exact_multi", "range_search", "hamming_knn", "pq_knn"]
+)
+def test_empty_query_frame_returns_no_rows(spark, base_df, query_df, op):
+    assert _empty_query_op(op, spark, base_df, query_df).collect() == []
 
 
 def test_knn_by_ids_reranks_candidates(base_df, query_df, tiny_vectors, spark):
@@ -80,8 +144,8 @@ def test_shard_partials_single_scan_matches_per_shard_scans(
     from auncel_spark.operators.knn import knn_exact_shard_partials
 
     xb, xq = tiny_vectors
-    r0 = knn_exact(query_df, base_df.filter("id % 2 = 0"), K, strategy="gemm")
-    r1 = knn_exact(query_df, base_df.filter("id % 2 = 1"), K, strategy="gemm")
+    r0 = knn_exact(query_df, base_df.filter("id % 2 = 0"), K)
+    r1 = knn_exact(query_df, base_df.filter("id % 2 = 1"), K)
     want = (
         merge_topk(K, r0, r1)
         .toPandas()

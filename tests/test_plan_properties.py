@@ -30,12 +30,73 @@ def test_exact_knn_has_no_shuffle_before_kernel(base_df, query_df):
     from auncel_spark.config import Metric
     from auncel_spark.operators.knn import knn_exact
 
-    res = knn_exact(query_df, base_df, 5, Metric.L2, "gemm")
+    res = knn_exact(query_df, base_df, 5, Metric.L2)
     plan = res._jdf.queryExecution().executedPlan().toString()
     # exactly one exchange: the qid hash for the global top-k window —
     # the scan side must not shuffle vectors
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan[:2000]
+
+
+def _flat_op(op, spark, base_df, query_df, tiny_vectors):
+    from pyspark.sql import functions as F
+
+    from auncel_spark.config import Metric
+    from auncel_spark.index.binary import (
+        generalized_hamming_knn,
+        hamming_knn,
+        pack_bits_np,
+    )
+    from auncel_spark.index.pq import ProductQuantizer, pq_knn
+    from auncel_spark.operators.flat import knn_base_shift
+    from auncel_spark.operators.knn import knn_exact, knn_exact_multi
+
+    xb, xq = tiny_vectors
+    if op == "knn_exact":
+        return knn_exact(query_df, base_df, 5)
+    if op == "knn_exact_multi":
+        return knn_exact_multi(query_df, base_df, 5, [Metric.L2, Metric.IP])
+    if op == "knn_base_shift":
+        return knn_base_shift(query_df, base_df.withColumn("shift", F.col("id") / 100), 5)
+    if op == "pq_knn":
+        pq = ProductQuantizer(np.random.default_rng(3).standard_normal((4, 16, 4)))
+        codes = pq.encode_np(xb.astype(np.float64))
+        coded = spark.createDataFrame(
+            [(i, bytes(c)) for i, c in enumerate(codes)], "id bigint, code binary"
+        )
+        return pq_knn(query_df, coded, pq, 5)
+    bb, qb = pack_bits_np(xb > 0), pack_bits_np(xq > 0)
+    base = spark.createDataFrame(
+        [(i, bytes(c)) for i, c in enumerate(bb)], "id bigint, bits binary"
+    )
+    queries = spark.createDataFrame(
+        [(i, bytes(c)) for i, c in enumerate(qb)], "qid bigint, bits binary"
+    )
+    fn = hamming_knn if op == "hamming_knn" else generalized_hamming_knn
+    return fn(queries, base, 5)
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "knn_exact",
+        "knn_exact_multi",
+        "knn_base_shift",
+        "hamming_knn",
+        "generalized_hamming_knn",
+        "pq_knn",
+    ],
+)
+def test_flat_topk_is_one_arrow_scan(spark, base_df, query_df, tiny_vectors, op):
+    """Every brute-force top-k is the one flat scan: a single Arrow
+    kernel over the base, no pandas round trip, no join, and exactly
+    one exchange (the qid hash of the window merge)."""
+    res = _flat_op(op, spark, base_df, query_df, tiny_vectors)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan[:2000]
+    assert "MapInPandas" not in plan, plan[:2000]
+    assert "Join" not in plan, plan[:2000]
+    assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
 
 
 def test_coded_scan_prunes_partitions_no_join(base_df, query_df, tmp_path):

@@ -23,7 +23,7 @@ def test_split_matches_whole_vector(base_df, query_df, nsplit, metric):
     # d=16: nsplit=3 exercises the uneven last shard (6, 6, 4)
     shards = split_columns(base_df, nsplit, d=16)
     got = split_vectors_knn(query_df, shards, K, metric)
-    want = knn_exact(query_df, base_df, K, metric, strategy="gemm")
+    want = knn_exact(query_df, base_df, K, metric)
     assert _ids(got) == _ids(want)
     gd = {(r["qid"], r["id"]): r["dist"] for r in got.collect()}
     wd = {(r["qid"], r["id"]): r["dist"] for r in want.collect()}

@@ -179,7 +179,7 @@ def test_transform_plus_rflat_refines_in_transformed_space(base_df, query_df, ti
     si = build_index(base_df, "PCA8,IVF8,Flat,RFlat")
     res = si.search(query_df, 5, nprobe=8)  # full probe -> candidates exact
     tq = si.chain.apply(query_df, vec_col="vec")
-    want = knn_exact(tq, si.tbase, 5, Metric.L2, "gemm")
+    want = knn_exact(tq, si.tbase, 5, Metric.L2)
     got = {(r["qid"], r["pos"]): r["id"] for r in res.collect()}
     exp = {(r["qid"], r["pos"]): r["id"] for r in want.collect()}
     assert got == exp
