@@ -695,12 +695,13 @@ class IVFIndex:
         One pass over the pruned lists with the broadcast-queries GEMM
         kernel (index/scan.py) — each base vector crosses Arrow once no
         matter how many queries probe its list."""
-        from auncel_spark.index.scan import scan_window
+        from auncel_spark.index.scan import scan_ranked
 
         q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         qpdf = q.toPandas()
         qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
+        # width from the index: zero cells decode to shape (0,)
+        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.d)
         ranked, _ = self.coarse_rank(qids, qmat, nprobe)
         self.prefetch(np.unique(ranked[:, :nprobe]))
         sdf, codec = self.scan_source()
@@ -711,8 +712,8 @@ class IVFIndex:
         from auncel_spark.index.refine_blob import REFINE_PAD
 
         kk = k + REFINE_PAD if blob is not None else k
-        partial = scan_window(
-            sdf, qids, qmat, ranked, 0, nprobe, kk, self.metric,
+        partial = scan_ranked(
+            sdf, qids, qmat, ranked, [0, nprobe], kk, self.metric,
             self.nlist, codec=codec,
         )
         if blob is not None:

@@ -18,17 +18,16 @@ asymptotics, distributed:
   top-k per task, not per (query, list);
 - a window reduce (operators/topk.py) merges task partials.
 
-Two modes:
-
-``scan_window``    score lists whose per-query rank is in [lo, hi) — the
-    fixed-nprobe search and the ELP per-stage delta scan.
-
-``scan_bucketed``  one pass emitting partials per (query, stage bucket),
-    where bucket si covers ranks [stages[si-1], stages[si]) — the ELP
-    training sweep (every stage's state from ONE job, the stage-fusion
-    the reference gets for free inside its sequential loop,
-    ``IndexIVF.cpp:526-536``) and the fused early stages of the online
-    bounded search.
+One flat-vector kernel, ``scan_ranked``: a query's probe order is its
+ranked list of centroids, and one pass emits partials per (query, rank
+bucket), where bucket si covers ranks [edges[si], edges[si+1]). A
+fixed-nprobe search is the one-bucket case ``[0, nprobe]``; the ELP
+training sweep and the fused early stages of the online bounded search
+use one bucket per stage (every stage's state from ONE job, the
+stage-fusion the reference gets for free inside its sequential loop,
+``IndexIVF.cpp:526-536``); the ELP per-stage delta scan is the bucket
+[prev, stage). ``scan_window_coded`` is the one-window scan of coded
+(PQ/SQ/binary) lists.
 
 Shuffle volume is O(tasks · touched-queries · k), independent of corpus
 size; scan I/O is the pruned lists, once.
@@ -255,13 +254,12 @@ def _pruned(data: DataFrame, probed_lists: list[int], coded: bool = False) -> Da
     )
 
 
-def scan_window(
+def scan_ranked(
     data: DataFrame,
     qids: np.ndarray,
     qmat: np.ndarray,
     ranked: np.ndarray,
-    lo: int,
-    hi: int,
+    edges: list[int],
     k: int,
     metric: Metric,
     nlist: int,
@@ -269,108 +267,43 @@ def scan_window(
     codec=None,
     hi_q: np.ndarray | None = None,
 ) -> DataFrame:
-    """Partial top-k (qid, id, dist) over lists ranked [lo, hi) per
-    query. Callers window-reduce with ``topk_per_query``. ``codec``:
-    scan SQ8 codes instead of fp32 vectors (see ``_batch_arrays``).
+    """Partial top-k (qid, si, id, dist) per (query, rank bucket) in ONE
+    scan of the lists ranked [edges[0], edges[-1]). Bucket si covers
+    list ranks [edges[si], edges[si+1]); a fixed-nprobe search is the
+    one-bucket case ``edges=[0, nprobe]``. Callers reduce with
+    ``reduce_bucketed`` (or ``topk_per_query``, dropping ``si``, when
+    there is one bucket). ``codec``: scan SQ8 codes instead of fp32
+    vectors (see ``_batch_arrays``).
 
-    ``hi_q``: optional per-query exclusive rank bound (clipped to the
-    scalar ``hi``) — one job scans each query exactly to its own
-    target, so callers whose per-query probe depths are already known
-    (LAET budgets, ELP post-stop extension targets) need ONE scan
-    instead of a log2-deep ladder of stage jobs."""
+    ``active``: optional mask of the queries to scan. ``hi_q``:
+    optional per-query exclusive rank bound (clipped to edges[-1]) —
+    one job scans each query exactly to its own target, so callers
+    whose per-query probe depths are already known (LAET budgets, ELP
+    post-stop extension targets) need ONE scan instead of a log2-deep
+    ladder of stage jobs."""
     spark = data.sparkSession
     nq = len(qids)
-    hi = min(hi, ranked.shape[1], nlist)
+    lo = edges[0]
+    hi = min(edges[-1], ranked.shape[1], nlist)
     if active is None:
         active = np.ones(nq, dtype=bool)
     act = np.where(active)[0]
     if len(act) == 0 or hi <= lo:
-        return spark.createDataFrame([], WINDOW_SCHEMA)
+        return spark.createDataFrame([], BUCKET_SCHEMA)
     inv = _inv_rank(ranked, nlist, hi)
+    cols = ranked[act, lo:hi]
     if hi_q is None:
-        probed = sorted({int(x) for x in np.unique(ranked[act, lo:hi])})
         bhi = hi
     else:
         bhi = np.minimum(np.asarray(hi_q, dtype=np.int64), hi)
-        cols = ranked[act, lo:hi]
         mask = np.arange(lo, hi)[None, :] < bhi[act, None]
         if not mask.any():
-            return spark.createDataFrame([], WINDOW_SCHEMA)
-        probed = sorted({int(x) for x in np.unique(cols[mask])})
-    bc = spark.sparkContext.broadcast(
-        (qids, np.asarray(qmat, dtype=np.float64), inv, active.copy(), codec, bhi)
-    )
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bqids, bq, binv, bact, bcodec, bbhi = bc.value
-        if bcodec is not None:
-            bq = bq.astype(np.float32)  # f32 GEMM against f32 codes
-        qn = (bq * bq).sum(axis=1)
-        state_d = state_i = None
-        touched = np.zeros(len(bqids), dtype=bool)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if state_d is None:
-                state_d = np.full((len(bqids), k), np.inf)
-                state_i = np.full((len(bqids), k), -1, dtype=np.int64)
-            ids, mat, lns = _batch_arrays(batch, bcodec)
-            for ln in np.unique(lns):
-                r = binv[:, int(ln)]
-                sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
-                if len(sel) == 0:
-                    continue
-                m = lns == ln
-                mat_m, ids_m = mat[m], ids[m]
-                for _, ss, nd, ni in _tiled_topk(bq, qn, sel, mat_m, ids_m, metric, k):
-                    _merge_rows(state_d, state_i, ss, nd, ni)
-                touched[sel] = True
-        if state_d is None or not touched.any():
-            return
-        t = np.where(touched)[0]
-        keep = state_i[t] >= 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "qid": np.repeat(bqids[t], k)[keep.ravel()],
-                "id": state_i[t].ravel()[keep.ravel()],
-                "dist": state_d[t].ravel()[keep.ravel()],
-            }
-        )
-
-    return _pruned(data, probed, coded=codec is not None).mapInArrow(
-        scan, schema=WINDOW_SCHEMA
-    )
-
-
-def scan_bucketed(
-    data: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    ranked: np.ndarray,
-    stages: list[int],
-    k: int,
-    metric: Metric,
-    nlist: int,
-    active: np.ndarray | None = None,
-    codec=None,
-) -> DataFrame:
-    """Partial top-k per (qid, stage bucket) in ONE scan. Bucket si
-    covers list ranks [stages[si-1], stages[si]) (stages[-1] exclusive
-    overall); cumulative stage states are reassembled by merging buckets
-    0..si in order (``assemble_states``)."""
-    spark = data.sparkSession
-    nq = len(qids)
-    smax = min(stages[-1], ranked.shape[1], nlist)
-    if active is None:
-        active = np.ones(nq, dtype=bool)
-    act = np.where(active)[0]
-    if len(act) == 0 or smax <= 0:
-        return spark.createDataFrame([], BUCKET_SCHEMA)
-    inv = _inv_rank(ranked, nlist, smax)
-    # bucket of rank r: index of first stage > r
-    bucket_of_rank = np.searchsorted(np.asarray(stages), np.arange(smax), side="right")
-    nb = len(stages)
-    probed = sorted({int(x) for x in np.unique(ranked[act, :smax])})
+            return spark.createDataFrame([], BUCKET_SCHEMA)
+        cols = cols[mask]
+    probed = np.unique(cols).tolist()
+    # bucket of rank r: index of the last edge <= r
+    bucket_of_rank = np.searchsorted(np.asarray(edges), np.arange(hi), side="right") - 1
+    nb = len(edges) - 1
     bc = spark.sparkContext.broadcast(
         (
             qids,
@@ -379,11 +312,12 @@ def scan_bucketed(
             active.copy(),
             bucket_of_rank.astype(np.int32),
             codec,
+            bhi,
         )
     )
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bqids, bq, binv, bact, brank2b, bcodec = bc.value
+        bqids, bq, binv, bact, brank2b, bcodec, bbhi = bc.value
         if bcodec is not None:
             bq = bq.astype(np.float32)  # f32 GEMM against f32 codes
         qn = (bq * bq).sum(axis=1)
@@ -398,7 +332,7 @@ def scan_bucketed(
             ids, mat, lns = _batch_arrays(batch, bcodec)
             for ln in np.unique(lns):
                 r = binv[:, int(ln)]
-                sel = np.where(bact & (r < smax))[0]
+                sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
                 if len(sel) == 0:
                     continue
                 m = lns == ln
@@ -444,7 +378,8 @@ def scan_window_coded(
     codec: dict,
     code_col: str = "code",
 ) -> DataFrame:
-    """``scan_window`` over CODED lists (``(id, code BINARY, list_no)``)
+    """Partial top-k (qid, id, dist) over CODED lists (``(id, code
+    BINARY, list_no)``) ranked [lo, hi) per query
     — the only search path of IVF-PQ, IVF-SQ and binary IVF, with
     scan-each-code-once asymptotics for compressed lists too (a
     probes join would ship every M-byte code once per probing query;
@@ -476,8 +411,7 @@ def scan_window_coded(
       ``hamming.h``). ``qmat``/``metric`` are ignored — the query BIT
       matrix rides in the codec.
 
-    Callers window-reduce with ``topk_per_query`` exactly as for
-    ``scan_window``.
+    Callers window-reduce with ``topk_per_query``.
     """
     spark = data.sparkSession
     nq = len(qids)
@@ -679,8 +613,6 @@ def assemble_states(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(nq, nb, k) per-BUCKET dist/id arrays from a reduce_bucketed
     frame (cumulative merging is the caller's loop)."""
-    import pandas as pd  # noqa: F401
-
     nq = len(qids)
     arr_d = np.full((nq, nb, k), np.inf)
     arr_i = np.full((nq, nb, k), -1, dtype=np.int64)

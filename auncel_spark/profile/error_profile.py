@@ -19,7 +19,7 @@ stages nprobe ∈ {1,2,4,…,nlist/8}. Each stage:
 1. builds the *delta* probe set (lists ranked [prev, cur)) for the
    still-active queries only — no list is ever scanned twice;
 2. scans those lists distributed (partition-pruned broadcast-queries
-   GEMM kernel, the same ``scan_window`` as ``IVFIndex.search``),
+   GEMM kernel, the same ``scan_ranked`` as ``IVFIndex.search``),
    returning ≤ nq·k rows;
 3. merges them into the running per-query top-k and evaluates the
    stop predicate vectorized in numpy;
@@ -54,8 +54,20 @@ from pyspark.sql import functions as F
 from auncel_spark.config import ELP_STAGE_CAP_FRACTION, Metric
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.refine_blob import REFINE_PAD
+from auncel_spark.index.scan import (
+    _merge_rows,
+    assemble_states,
+    reduce_bucketed,
+    scan_ranked,
+)
 from auncel_spark.profile.geometry import boundary_distances, sum_angle
 from auncel_spark.profile.traces import Trace, kscaling
+
+
+# queries per training-sweep scan job: bounds the broadcast (inv_rank is
+# nq·nlist int32) and the kernel state per task; larger sweeps run one
+# job per shard over the same pruned scan
+_QSHARD = 4096
 
 
 def _subsweep(sweep: dict, mask: np.ndarray) -> dict:
@@ -118,10 +130,44 @@ class ErrorProfile:
     def _coarse(self, queries: DataFrame):
         qpdf = queries.select("qid", "vec").toPandas()
         qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
+        # width from the index: zero cells decode to shape (0,)
+        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.index.d)
         ranked, cdist = self.index.coarse_rank(qids, qmat, self.index.nlist)
         dtb = boundary_distances(cdist, ranked, self.index.interdis, self.index.metric)
         return qids, qmat, ranked, cdist, dtb
+
+    def _scan_buckets(
+        self,
+        qids: np.ndarray,
+        qmat: np.ndarray,
+        ranked: np.ndarray,
+        edges: list[int],
+        active: np.ndarray | None = None,
+        hi_q: np.ndarray | None = None,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(nq, nb, state_k) per-bucket top-k dist/id arrays over the
+        lists each query ranks in [edges[b], edges[b+1]) — one
+        ``scan_ranked`` job, reduced distributed BEFORE collecting
+        (per-partition partials are nq·k rows EACH; at hundreds of
+        partitions the raw collect blows spark.driver.maxResultSize).
+        Rows of inactive queries, and buckets a query did not reach,
+        hold (inf, -1)."""
+        sk = self.state_k
+        sdf, codec = self.index.scan_source()
+        part = scan_ranked(
+            sdf,
+            qids,
+            qmat,
+            ranked,
+            edges,
+            sk,
+            self.index.metric,
+            self.index.nlist,
+            active=active,
+            codec=codec,
+            hi_q=hi_q,
+        )
+        return assemble_states(reduce_bucketed(part, sk), qids, len(edges) - 1, sk)
 
     def _scan_delta(
         self,
@@ -131,79 +177,18 @@ class ErrorProfile:
         active: np.ndarray,
         lo: int,
         hi: int,
+        state_d: np.ndarray,
+        state_i: np.ndarray,
         hi_q: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        """Distributed scan of lists ranked [lo, hi) for active queries
-        — broadcast-queries GEMM kernel; each pruned list vector crosses
-        Arrow once, not once per probing query. ``hi_q``: per-query
-        exclusive bound (see scan_window) — used to scan every query to
-        its own known target in ONE job."""
-        from auncel_spark.index.scan import scan_window
-        from auncel_spark.operators.topk import topk_per_query
-
-        act = np.where(active)[0]
-        hi_eff = min(hi, ranked.shape[1])
-        if len(act) == 0 or hi_eff <= lo:
-            return pd.DataFrame(columns=["qid", "id", "dist"])
-        sdf, codec = self.index.scan_source()
-        part = scan_window(
-            sdf,
-            qids,
-            qmat,
-            ranked,
-            lo,
-            hi_eff,
-            self.state_k,
-            self.index.metric,
-            self.index.nlist,
-            active=active,
-            codec=codec,
-            hi_q=hi_q,
-        )
-        # reduce distributed BEFORE collecting: per-partition partials
-        # are nq·k rows EACH — at hundreds of partitions the raw
-        # collect blows spark.driver.maxResultSize. One window pass
-        # caps the driver transfer at nq·max_topk rows per stage.
-        reduced = topk_per_query(part, self.state_k).select("qid", "id", "dist")
-        return reduced.toPandas()
-
-    @staticmethod
-    def _merge_state(
-        state_d: np.ndarray, state_i: np.ndarray, new: pd.DataFrame, qpos: dict
     ) -> None:
-        """Fold freshly scanned candidates into the running per-query
-        top-k (ids are globally unique per list ⇒ no dedup needed).
-        Vectorized: one lexsort groups the frame by query, rows pad into
-        a (nu, maxc) block, and the scan kernel's ``_merge_rows`` does
-        the batched (dist, id) top-k — no per-qid Python loop (this was
-        part of the 200 s fit_calibrate cost at nq=5000, VERDICT r02
-        Wrong #3)."""
-        if new.empty:
-            return
-        from auncel_spark.index.scan import _merge_rows
-
-        qid_a = new["qid"].to_numpy(dtype=np.int64)
-        d_a = new["dist"].to_numpy(dtype=np.float64)
-        i_a = new["id"].to_numpy(dtype=np.int64)
-        order = np.lexsort((i_a, d_a, qid_a))
-        qid_s, d_s, i_s = qid_a[order], d_a[order], i_a[order]
-        uq, starts, counts = np.unique(qid_s, return_index=True, return_counts=True)
-        # vectorized qid → state-row lookup
-        keys = np.fromiter(qpos.keys(), dtype=np.int64, count=len(qpos))
-        vals = np.fromiter(qpos.values(), dtype=np.int64, count=len(qpos))
-        ko = np.argsort(keys)
-        rows = vals[ko[np.searchsorted(keys[ko], uq)]]
-        maxc = int(counts.max())
-        # pad with (inf, INT64_MAX) so padding sorts after real rows AND
-        # after pre-existing empty (inf, -1) slots — kept slots identical
-        # to the per-query merge
-        pad_d = np.full((len(uq), maxc), np.inf)
-        pad_i = np.full((len(uq), maxc), np.iinfo(np.int64).max)
-        idx_row = np.repeat(np.arange(len(uq)), counts)
-        idx_col = np.arange(len(qid_s)) - np.repeat(starts, counts)
-        pad_d[idx_row, idx_col] = d_s
-        pad_i[idx_row, idx_col] = i_s
-        _merge_rows(state_d, state_i, rows, pad_d, pad_i)
+        """Scan the lists ranked [lo, hi) for the active queries and
+        fold them into the running per-query top-k (state_d, state_i) —
+        ids are globally unique per list, so no dedup is needed.
+        ``hi_q``: per-query exclusive bound (see scan_ranked) — used to
+        scan every query to its own known target in ONE job."""
+        new_d, new_i = self._scan_buckets(qids, qmat, ranked, [lo, hi], active, hi_q)
+        rows = np.where(active)[0]
+        _merge_rows(state_d, state_i, rows, new_d[rows, 0], new_i[rows, 0])
 
     def _tval(self, dists: np.ndarray) -> np.ndarray:
         """Candidate distances in phi space: L2 → squared L2 as-is; IP →
@@ -229,17 +214,7 @@ class ErrorProfile:
         if gt_dists is None:
             gt_dists = self._exact_gt(train_queries)
         sweep = self._sweep_states(train_queries, self._stages())
-        gt_dists = self._align_gt(gt_dists, sweep["qids"])
-        max_collect = max(1, self.max_topk // 4)
-        self.traces = []
-        for si, s in enumerate(self._stages()):
-            state_d = sweep["states_d"][si]
-            tvals = self._tval(state_d)
-            self.traces.append(
-                self._collect_stage_pairs(
-                    state_d, tvals, gt_dists, sweep["dtb"], s, max_collect
-                )
-            )
+        self._traces_from_sweep(sweep, self._align_gt(gt_dists, sweep["qids"]))
         return self
 
     def _all_stages(self) -> list[int]:
@@ -248,6 +223,16 @@ class ErrorProfile:
             out.append(s)
             s <<= 1
         return out
+
+    def _stage_depth(self, target: np.ndarray) -> np.ndarray:
+        """Lists the stage ladder scans for a query whose stop target
+        is ``target``: the ladder retires a query at the first stage
+        boundary >= its target, so the depth is the target rounded UP to
+        a power of two, capped at the ladder's last stage."""
+        return np.minimum(
+            np.exp2(np.ceil(np.log2(np.maximum(target, 1)))).astype(np.int64),
+            self._all_stages()[-1],
+        )
 
     def _traces_from_sweep(self, sweep: dict, gt_dists: np.ndarray) -> None:
         max_collect = max(1, self.max_topk // 4)
@@ -348,23 +333,16 @@ class ErrorProfile:
         sample. Calibrating against half the bound (safety=0.5) buys
         the generalization margin at a modest nprobe cost.
 
-        ``holdout``: traces are fitted on the even-index half of the
-        training queries and every grid config is scored on the odd
-        half — the config never sees its own validation queries, which
-        kills the winner's-curse failure mode (the cheapest config that
-        looks perfect in-sample is systematically the one that
+        Holdout: with at least 64 training queries, traces are fitted
+        on the even-index half and every grid config is scored on the
+        odd half — the config never sees its own validation queries,
+        which kills the winner's-curse failure mode (the cheapest config
+        that looks perfect in-sample is systematically the one that
         overfits)."""
-        return self._fit_and_calibrate_many(
-            train_queries, configs, std_m_grid, multipler_grid, safety, True
-        )
-
-    def _fit_and_calibrate_many(
-        self, train_queries, configs, std_m_grid, multipler_grid, safety, holdout
-    ) -> dict:
         sweep = self._sweep_states(train_queries, self._all_stages())
         gt_dists = sweep["states_d"][-1].copy()
         nq = len(sweep["qids"])
-        if holdout and nq >= 64:
+        if nq >= 64:
             fit_m = np.arange(nq) % 2 == 0
             val_m = ~fit_m
         else:
@@ -379,59 +357,31 @@ class ErrorProfile:
             for topk, bound in configs
         }
 
-    def _sweep_states(
-        self, queries: DataFrame, stages: list[int], qshard: int = 4096
-    ) -> dict:
+    def _sweep_states(self, queries: DataFrame, stages: list[int]) -> dict:
         """Every stage's running top-k from ONE bucketed scan job (per
-        query shard): the kernel emits per-(query, stage-bucket) task
+        ``_QSHARD`` queries): the kernel emits per-(query, stage-bucket) task
         partials, a window reduces them globally, and the cumulative
         per-stage states are assembled by merging buckets in order on
         the driver (nq·nstages·k floats — the same state the reference
         accumulates inside its sequential loop). Shared by fit (trace
         extraction needs every stage) and calibrate (stop-rule
         simulation replays stages in numpy with zero extra Spark jobs).
-
-        ``qshard`` bounds broadcast (inv_rank is nq·nlist int32) and
-        kernel-state size per task; shards run as separate jobs over the
-        same pruned scan.
         """
-        from auncel_spark.index.scan import (
-            assemble_states,
-            reduce_bucketed,
-            scan_bucketed,
-        )
-
         qids, qmat, ranked, cdist, dtb = self._coarse(queries)
         nq = len(qids)
-        nb = len(stages)
-        sk = self.state_k
-        arr_d = np.empty((nq, nb, sk))
-        arr_i = np.empty((nq, nb, sk), dtype=np.int64)
-        for s0 in range(0, nq, qshard):
-            sl = slice(s0, min(s0 + qshard, nq))
-            sdf_sw, codec_sw = self.index.scan_source()
-            part = scan_bucketed(
-                sdf_sw,
-                qids[sl],
-                qmat[sl],
-                ranked[sl],
-                stages,
-                sk,
-                self.index.metric,
-                self.index.nlist,
-                codec=codec_sw,
+        arr_d = np.empty((nq, len(stages), self.state_k))
+        arr_i = np.empty((nq, len(stages), self.state_k), dtype=np.int64)
+        for s0 in range(0, nq, _QSHARD):
+            sl = slice(s0, min(s0 + _QSHARD, nq))
+            arr_d[sl], arr_i[sl] = self._scan_buckets(
+                qids[sl], qmat[sl], ranked[sl], [0, *stages]
             )
-            pdf = reduce_bucketed(part, sk)
-            d, i = assemble_states(pdf, qids[sl], nb, sk)
-            arr_d[sl], arr_i[sl] = d, i
         # cumulative merge: state after stage si = best-k over buckets 0..si
-        from auncel_spark.index.scan import _merge_rows
-
-        state_d = np.full((nq, sk), np.inf)
-        state_i = np.full((nq, sk), -1, dtype=np.int64)
+        state_d = np.full((nq, self.state_k), np.inf)
+        state_i = np.full((nq, self.state_k), -1, dtype=np.int64)
         allrows = np.arange(nq)
         states_d, states_i = [], []
-        for si in range(nb):
+        for si in range(len(stages)):
             _merge_rows(state_d, state_i, allrows, arr_d[:, si], arr_i[:, si])
             states_d.append(state_d.copy())
             states_i.append(state_i.copy())
@@ -517,12 +467,6 @@ class ErrorProfile:
         if not self.traces:
             raise RuntimeError("ErrorProfile.fit must run before search")
         from auncel_spark.config import ELP_FUSE_PREFIX
-        from auncel_spark.index.scan import (
-            _merge_rows,
-            assemble_states,
-            reduce_bucketed,
-            scan_bucketed,
-        )
 
         qids, qmat, ranked, cdist, dtb = self._coarse(queries)
         # readahead for the whole reachable probe set: stage extensions
@@ -532,7 +476,6 @@ class ErrorProfile:
         self.index.prefetch()
         nq = len(qids)
         acc = np.broadcast_to(np.asarray(require_acc, dtype=np.float64), (nq,)).copy()
-        qpos = {int(q): i for i, q in enumerate(qids)}
         state_d = np.full((nq, self.state_k), np.inf)
         state_i = np.full((nq, self.state_k), -1, dtype=np.int64)
         active = np.ones(nq, dtype=bool)
@@ -554,15 +497,7 @@ class ErrorProfile:
         fused = [st for st in stages if st <= ELP_FUSE_PREFIX]
         nbf = len(fused) if len(fused) > 1 else 0
         if nbf:
-            sdf_f, codec_f = self.index.scan_source()
-            fpart = scan_bucketed(
-                sdf_f, qids, qmat, ranked, fused,
-                self.state_k, self.index.metric, self.index.nlist,
-                codec=codec_f,
-            )
-            fused_d, fused_i = assemble_states(
-                reduce_bucketed(fpart, self.state_k), qids, nbf, self.state_k
-            )
+            fused_d, fused_i = self._scan_buckets(qids, qmat, ranked, [0, *fused])
         prev = 0
         s = 1
         si = 0
@@ -579,42 +514,23 @@ class ErrorProfile:
             # executed stage (capped at the ladder's last stage) — the
             # scanned list set per query is identical, results bit-equal.
             if si >= nbf and not (active & (target == 0)).any():
-                s_last = 1 << int(np.log2(self.index.nlist))
-                depth = np.minimum(
-                    np.exp2(np.ceil(np.log2(np.maximum(target, 1)))).astype(
-                        np.int64
-                    ),
-                    s_last,
-                )
+                depth = self._stage_depth(target)
                 hi_all = int(depth[active].max())
-                new = self._scan_delta(
-                    qids, qmat, ranked, active, prev, hi_all, hi_q=depth
+                self._scan_delta(
+                    qids, qmat, ranked, active, prev, hi_all, state_d, state_i,
+                    hi_q=depth,
                 )
-                self._merge_state(state_d, state_i, new, qpos)
                 active[:] = False
                 break
             if si < nbf:
                 rows = np.where(active)[0]
                 _merge_rows(state_d, state_i, rows, fused_d[rows, si], fused_i[rows, si])
             else:
-                new = self._scan_delta(qids, qmat, ranked, active, prev, s)
-                self._merge_state(state_d, state_i, new, qpos)
-            undecided = active & (target == 0)
-            act = np.where(undecided)[0]
-            if len(act) > 0:
-                recall = self._predicted_recall(state_d[act], dtb[act], si, s, topk)
-                # stagnation heuristic: force recall=1 when the running
-                # worst kept distance is unchanged for ≥ require_acc*12
-                # scanned lists
-                worst = state_d[act, topk - 1]
-                same = worst == prev_worst[act]
-                stagnant[act] = np.where(same, stagnant[act] + (s - prev), 0)
-                prev_worst[act] = worst
-                recall = np.where(stagnant[act] >= acc[act] * 12.0, 1.0, recall)
-
-                satisfied = (recall >= acc[act]) | (s >= cap)
-                tgt = int(min(max(np.ceil(s * self.multipler), s), self.index.nlist))
-                target[act[satisfied]] = tgt
+                self._scan_delta(qids, qmat, ranked, active, prev, s, state_d, state_i)
+            # a query is undecided (target 0) only while it is active
+            self._stop_step(
+                state_d, dtb, si, s, prev, topk, acc, target, prev_worst, stagnant
+            )
             # retire queries whose target is reached
             reached = active & (target > 0) & (target <= s)
             active[reached] = False
@@ -734,15 +650,59 @@ class ErrorProfile:
         self.multipler, self.std_m = best["multipler"], best["std_m"]
         return best
 
+    def _stop_step(
+        self,
+        state_d: np.ndarray,
+        dtb: np.ndarray,
+        si: int,
+        s: int,
+        prev: int,
+        topk: int,
+        acc: np.ndarray,
+        target: np.ndarray,
+        prev_worst: np.ndarray,
+        stagnant: np.ndarray,
+        pred_cache: dict | None = None,
+    ) -> None:
+        """The stop rule at stage ``s`` (previous stage ``prev``) for
+        every undecided query (target 0), given each query's running
+        top-k ``state_d`` after the stage: predict recall from the
+        geometry, force recall 1 when the worst kept distance has not
+        improved for ≥ require_acc·12 scanned lists (stagnation,
+        IndexIVF.cpp:570-601), and fix target = stage·multipler for each
+        satisfied query, or for all at the cap (IndexIVF.cpp:615-626).
+        Updates ``target``, ``prev_worst`` and ``stagnant`` in place.
+        ``pred_cache``: optional {(si, topk, std_m): recall_all_rows}
+        memo — the prediction is row-independent, so the full-set value
+        restricted to the undecided rows equals the direct call."""
+        und = np.where(target == 0)[0]
+        if len(und) == 0:
+            return
+        if pred_cache is not None:
+            key = (si, topk, self.std_m)
+            full = pred_cache.get(key)
+            if full is None:
+                full = pred_cache[key] = self._predicted_recall(
+                    state_d, dtb, si, s, topk
+                )
+            recall = full[und]
+        else:
+            recall = self._predicted_recall(state_d[und], dtb[und], si, s, topk)
+        worst = state_d[und, topk - 1]
+        same = worst == prev_worst[und]
+        stagnant[und] = np.where(same, stagnant[und] + (s - prev), 0)
+        prev_worst[und] = worst
+        recall = np.where(stagnant[und] >= acc[und] * 12.0, 1.0, recall)
+        satisfied = (recall >= acc[und]) | (s >= self._stages()[-1])
+        tgt = int(min(max(np.ceil(s * self.multipler), s), self.index.nlist))
+        target[und[satisfied]] = tgt
+
     def _simulate_targets(
         self, sweep: dict, topk: int, require_acc: float, pred_cache: dict | None = None
     ) -> np.ndarray:
         """Replay the staged stop rules over pre-scanned states; returns
-        per-query chosen nprobe (identical math to ``search``).
-        ``pred_cache``: optional {(si, topk, std_m): recall_all_rows}
-        memo — the prediction is row-independent, so the full-set value
-        restricted to the undecided rows equals the direct call."""
-        stages = sweep["stages"]
+        per-query chosen nprobe (the same ``_stop_step`` as ``search``).
+        ``pred_cache``: see ``_stop_step``."""
         cap = self._stages()[-1]
         nq = len(sweep["qids"])
         acc = np.full(nq, require_acc)
@@ -750,31 +710,11 @@ class ErrorProfile:
         prev_worst = np.full(nq, np.nan)
         stagnant = np.zeros(nq, dtype=np.int64)
         prev = 0
-        for si, s in enumerate(stages):
-            und = np.where(target == 0)[0]
-            if len(und) == 0:
-                break
-            state_d = sweep["states_d"][si]
-            if pred_cache is not None:
-                key = (si, topk, self.std_m)
-                full = pred_cache.get(key)
-                if full is None:
-                    full = pred_cache[key] = self._predicted_recall(
-                        state_d, sweep["dtb"], si, s, topk
-                    )
-                recall = full[und]
-            else:
-                recall = self._predicted_recall(
-                    state_d[und], sweep["dtb"][und], si, s, topk
-                )
-            worst = state_d[und, topk - 1]
-            same = worst == prev_worst[und]
-            stagnant[und] = np.where(same, stagnant[und] + (s - prev), 0)
-            prev_worst[und] = worst
-            recall = np.where(stagnant[und] >= acc[und] * 12.0, 1.0, recall)
-            satisfied = (recall >= acc[und]) | (s >= cap)
-            tgt = int(min(max(np.ceil(s * self.multipler), s), self.index.nlist))
-            target[und[satisfied]] = tgt
+        for si, s in enumerate(sweep["stages"]):
+            self._stop_step(
+                sweep["states_d"][si], sweep["dtb"], si, s, prev, topk, acc,
+                target, prev_worst, stagnant, pred_cache,
+            )
             prev = s
         return np.where(target > 0, target, cap)
 
@@ -863,7 +803,6 @@ class ErrorProfile:
         self.index.prefetch()  # see search(): disk-resident readahead
         nq = len(qids)
         budget = np.broadcast_to(np.asarray(budget_ms, dtype=np.float64), (nq,)).copy()
-        qpos = {int(q): i for i, q in enumerate(qids)}
         state_d = np.full((nq, self.state_k), np.inf)
         state_i = np.full((nq, self.state_k), -1, dtype=np.int64)
         active = np.ones(nq, dtype=bool)
@@ -877,8 +816,7 @@ class ErrorProfile:
             s = stages[s_idx]
             if not active.any():
                 break
-            new = self._scan_delta(qids, qmat, ranked, active, prev, s)
-            self._merge_state(state_d, state_i, new, qpos)
+            self._scan_delta(qids, qmat, ranked, active, prev, s, state_d, state_i)
             elapsed_ms = (_time.perf_counter() - t0) * 1000.0
             if amortized:
                 elapsed_ms /= nq

@@ -56,11 +56,7 @@ class LearnedTermination:
 
         if gt_dists is None:
             gt_dists = self._helper._exact_gt(train_queries)
-        stages = []
-        s = 1
-        while s <= self.index.nlist:
-            stages.append(s)
-            s <<= 1
+        stages = self._helper._all_stages()
         sweep = self._helper._sweep_states(train_queries, stages)
         qids = sweep["qids"]
         # gt rows are ascending-qid; sweep rows follow collect order
@@ -102,7 +98,8 @@ class LearnedTermination:
 
         q = queries.select("qid", "vec").collect()
         qids = np.array([r["qid"] for r in q], dtype=np.int64)
-        qmat = np.array([r["vec"] for r in q], dtype=np.float64)
+        # width from the index: zero rows decode to shape (0,)
+        qmat = np.array([r["vec"] for r in q], dtype=np.float64).reshape(-1, self.index.d)
         _, cdist = self.index.coarse_rank(qids, qmat, self.index.nlist)
         feats = self._features(qmat, cdist)
         spark = self.index.spark
@@ -133,26 +130,14 @@ class LearnedTermination:
         state_i = np.full((len(qids), ep.max_topk), -1, dtype=np.int64)
         # every per-query probe budget is known BEFORE any scan (the
         # learned predictor fixes it), so the staged ladder collapses
-        # to ONE per-query-bounded scan job (scan_window hi_q). The
-        # ladder retired a query at the first stage boundary >= its
-        # target, so depths round up to the next power of two (capped
-        # at the ladder's last stage) — identical scanned list sets,
+        # to ONE per-query-bounded scan job (scan_ranked hi_q) to the
+        # ladder's depth for each target — identical scanned list sets,
         # log2(max nprobe) fewer Spark jobs per search.
-        s_last = 1
-        while (s_last << 1) <= self.index.nlist:
-            s_last <<= 1
-        depth = np.minimum(
-            np.exp2(np.ceil(np.log2(np.maximum(targets, 1)))).astype(np.int64),
-            s_last,
-        )
+        depth = ep._stage_depth(targets)
         active = np.ones(len(qids), dtype=bool)
-        ep._merge_state(
-            state_d,
-            state_i,
-            ep._scan_delta(
-                qids, qmat, ranked, active, 0, int(depth.max()), hi_q=depth
-            ),
-            pos,
+        ep._scan_delta(
+            qids, qmat, ranked, active, 0, int(depth.max(initial=0)),
+            state_d, state_i, hi_q=depth,
         )
         res = ep._state_to_df(qids, state_d, state_i, topk)
         if return_info:

@@ -12,7 +12,8 @@ normal DataFrame, so the full batch search machinery (partition-pruned
 IVF scans, broadcast-queries kernels, even the ELP bounded search with
 a trained profile) runs unchanged — no operator re-implementation, and
 micro-batch size is the natural query-sharding unit the batch path
-already assumes (STATUS: qshard bounds broadcast state).
+already assumes (the training sweep shards at
+``error_profile._QSHARD`` queries to bound broadcast state).
 """
 
 from __future__ import annotations

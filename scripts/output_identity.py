@@ -1,0 +1,169 @@
+"""Output identity of the IVF/ELP ranked-list scans between two source trees.
+
+``dump`` imports the engine from TREE, builds one seeded corpus and
+index, and pickles the result rows (qid, pos, id, dist) and
+``return_info`` arrays of ``IVFIndex.search``, ``ErrorProfile.search``,
+``ErrorProfile.time_search`` and ``LearnedTermination.search`` — first on
+the flat lists, then on the SQ8 scan replica with its refine sidecar.
+``compare`` checks two dumps with ``DataFrame.equals`` / ``array_equal``
+and exits non-zero on any difference. A refactor that claims "the same
+bits" runs ``dump`` once per tree (e.g. a ``git archive`` of the parent
+and the working tree) and ``compare`` on the two files.
+
+Usage:
+    python scripts/output_identity.py dump TREE OUT.pkl [--corpus small|perf] [--work DIR]
+    python scripts/output_identity.py compare A.pkl B.pkl
+
+Corpora: ``small`` is the tier-1 error-profile fixture's shape (24 blobs,
+2,880 × d16, nlist 64, 60 queries); ``perf`` is perfbench's scale
+(40k × d96, nlist 256, 300 queries). Centroids come from numpy Lloyd
+iterations, not the engine's k-means, so both trees index the same lists.
+``time_search`` runs with an unbounded budget (its wall-clock
+``retired_ms`` is not compared).
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import pickle
+import sys
+import tempfile
+
+import numpy as np
+
+CORPORA = {
+    # n_blobs, per_blob, d, nq, n_train, nlist, max_topk, topk
+    "small": (24, 120, 16, 60, 60, 64, 40, 10),
+    "perf": (64, 625, 96, 300, 256, 256, 100, 10),
+}
+
+
+def _data(corpus: str):
+    n_blobs, per, d, nq, n_train, nlist, _, _ = CORPORA[corpus]
+    rng = np.random.default_rng(11)
+    centres = rng.standard_normal((n_blobs, d)) * 3.0
+    xb = np.vstack([centres[i] + rng.standard_normal((per, d)) for i in range(n_blobs)])
+    pick = rng.integers(0, n_blobs, nq + n_train)
+    xq = centres[pick] + rng.standard_normal((nq + n_train, d))
+    cents = xb[rng.choice(len(xb), nlist, replace=False)]
+    for _ in range(4):  # Lloyd iterations, empty lists keep their centroid
+        a = _assign(xb, cents)
+        for c in range(nlist):
+            m = a == c
+            if m.any():
+                cents[c] = xb[m].mean(0)
+    f32 = np.float32
+    return xb.astype(f32), xq[:nq].astype(f32), xq[nq:].astype(f32), cents
+
+
+def _assign(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    d = (x * x).sum(1)[:, None] + (cents * cents).sum(1)[None] - 2.0 * x @ cents.T
+    return d.argmin(1)
+
+
+def _frame(spark, ids, x, id_col: str):
+    return spark.createDataFrame(
+        [(int(i), [float(v) for v in r]) for i, r in zip(ids, x)],
+        f"{id_col} bigint, vec array<float>",
+    )
+
+
+def dump(tree: str, out: str, corpus: str, work: str) -> None:
+    tree = os.path.abspath(tree)
+    sys.path.insert(0, tree)
+    # Python workers import the engine too: set before the JVM starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (tree, os.environ.get("PYTHONPATH")) if p
+    )
+    import auncel_spark
+
+    if not os.path.abspath(auncel_spark.__file__).startswith(tree + os.sep):
+        raise SystemExit(f"engine imported from {auncel_spark.__file__}, not {tree}")
+    from auncel_spark.index.ivf import IVFIndex
+    from auncel_spark.profile.error_profile import ErrorProfile
+    from auncel_spark.profile.laet import LearnedTermination
+    from auncel_spark.session import get_spark
+
+    _, _, _, _, _, nlist, max_topk, topk = CORPORA[corpus]
+    xb, xq, xt, cents = _data(corpus)
+    spark = get_spark("output_identity", shuffle_partitions=8)
+    base = _frame(spark, np.arange(len(xb)), xb, "id").cache()
+    queries = _frame(spark, np.arange(len(xq)), xq, "qid").cache()
+    train = _frame(spark, np.arange(len(xt)), xt, "qid").cache()
+    idx = IVFIndex.build(base, nlist=nlist, centroids=cents, path=os.path.join(work, "ivf"))
+    ep = ErrorProfile(idx, max_topk=max_topk)
+    ep.fit(train)
+    lt = LearnedTermination(idx, max_topk=max_topk, multiplier=1.5)
+    lt.fit(train, topk, target_recall=0.9, gbt_iter=4)
+
+    def rows(df):
+        pdf = df.toPandas()[["qid", "pos", "id", "dist"]]
+        return pdf.sort_values(["qid", "pos"]).reset_index(drop=True)
+
+    def info(d):
+        return {k: np.asarray(v) for k, v in d.items() if k != "retired_ms"}
+
+    got = {}
+    for mode in ("flat", "replica"):
+        if mode == "replica":
+            idx.build_scan_replica()
+            idx.build_refine_sidecar()
+            idx.use_replica(True)
+        for nprobe in (1, 8):
+            got[f"{mode}/ivf.search/nprobe{nprobe}"] = (rows(idx.search(queries, topk, nprobe)), {})
+        for acc, mult in ((0.5, 1.0), (0.9, 1.0), (0.9, 3.0)):
+            ep.multipler = mult
+            res, inf = ep.search(queries, topk, acc, return_info=True)
+            got[f"{mode}/elp.search/acc{acc}_m{mult}"] = (rows(res), info(inf))
+        ep.multipler = 1.0
+        res, inf = ep.time_search(queries, topk, 1e9, return_info=True)
+        got[f"{mode}/elp.time_search"] = (rows(res), info(inf))
+        res, inf = lt.search(queries, topk, return_info=True)
+        got[f"{mode}/laet.search"] = (rows(res), info(inf))
+    with open(out, "wb") as f:
+        pickle.dump(got, f)
+    for name, (pdf, _) in got.items():
+        print(f"{name}: {len(pdf)} rows")
+
+
+def compare(a: str, b: str) -> int:
+    with open(a, "rb") as f:
+        da = pickle.load(f)
+    with open(b, "rb") as f:
+        db = pickle.load(f)
+    bad = 0
+    for name in sorted(set(da) | set(db)):
+        if name not in da or name not in db:
+            print(f"MISSING {name}")
+            bad += 1
+            continue
+        (ra, ia), (rb, ib) = da[name], db[name]
+        same = ra.equals(rb) and ia.keys() == ib.keys()
+        same = same and all(np.array_equal(ia[k], ib[k]) for k in ia)
+        print(f"{'same' if same else 'DIFF'} {name} ({len(ra)} rows)")
+        bad += not same
+    print(f"{len(da) - bad}/{len(da)} identical")
+    return 1 if bad else 0
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    d = sub.add_parser("dump")
+    d.add_argument("tree")
+    d.add_argument("out")
+    d.add_argument("--corpus", choices=sorted(CORPORA), default="small")
+    d.add_argument("--work", default=None, help="index directory (default: a temp dir)")
+    c = sub.add_parser("compare")
+    c.add_argument("a")
+    c.add_argument("b")
+    args = ap.parse_args()
+    if args.cmd == "compare":
+        sys.exit(compare(args.a, args.b))
+    with tempfile.TemporaryDirectory() as tmp:
+        dump(args.tree, args.out, args.corpus, args.work or tmp)
+
+
+if __name__ == "__main__":
+    main()

@@ -59,3 +59,28 @@ def np_knn(xq: np.ndarray, xb: np.ndarray, k: int, metric: str = "l2"):
     ids = np.arange(b.shape[0])
     order = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)[:, :k]
     return order, np.take_along_axis(d, order, axis=1)
+
+
+def assert_ranked_topk(res, idx, xq, xb, depth, k):
+    """Each query's result rows (qid, pos, id, dist) must be the numpy
+    (dist, id) top-k over the base rows of the lists it ranks
+    [0, depth[qid]) — the exact rows a staged scan to that depth sees.
+    Query ``qid`` is row ``qid`` of ``xq``; base id is row id of ``xb``."""
+    lists = idx.data.select("id", "list_no").toPandas()
+    list_of = np.empty(len(xb), dtype=np.int64)
+    list_of[lists["id"].to_numpy()] = lists["list_no"].to_numpy()
+    q = xq.astype(np.float64)
+    ranked, _ = idx.coarse_rank(np.arange(len(q)), q, idx.nlist)
+    pdf = res.toPandas().sort_values(["qid", "pos"])
+    got = {qid: g for qid, g in pdf.groupby("qid")}
+    for qi in range(len(q)):
+        rows = np.nonzero(np.isin(list_of, ranked[qi, : depth[qi]]))[0]
+        kk = min(k, len(rows))
+        if kk == 0:
+            assert qi not in got
+            continue
+        order, d = np_knn(q[qi : qi + 1], xb[rows], kk, "l2")
+        g = got[qi]
+        np.testing.assert_array_equal(g["pos"].to_numpy(), np.arange(kk))
+        np.testing.assert_array_equal(g["id"].to_numpy(), rows[order[0]])
+        np.testing.assert_allclose(g["dist"].to_numpy(), d[0], rtol=1e-9, atol=1e-9)

@@ -13,7 +13,7 @@ from auncel_spark.operators.recall import (
 from auncel_spark.profile.error_profile import ErrorProfile
 from auncel_spark.profile.geometry import boundary_distances, sum_angle
 from auncel_spark.profile.traces import Trace, kscaling
-from tests.conftest import np_knn
+from tests.conftest import assert_ranked_topk, np_knn
 
 NLIST = 64
 TOPK = 10
@@ -243,9 +243,13 @@ def test_kscaling_batch_equals_scalar():
 
 
 def test_merge_state_equals_scalar():
-    """Vectorized _merge_state must keep the exact slots the per-qid
-    (dist, id) lexsort merge kept."""
+    """Folding a scan's reduced frame into the running top-k — the
+    ``_scan_delta`` merge: ``assemble_states`` then ``_merge_rows`` over
+    the active rows — must keep the exact slots the per-qid (dist, id)
+    lexsort merge kept."""
     import pandas as pd
+
+    from auncel_spark.index.scan import _merge_rows, assemble_states
 
     rng = np.random.default_rng(7)
     nq, k, rows_n = 50, 8, 600
@@ -270,8 +274,18 @@ def test_merge_state_equals_scalar():
         order = np.lexsort((ids, d))[:k]
         exp_d[i] = d[order]
         exp_i[i] = ids[order]
+    # the distributed reduce (reduce_bucketed): one bucket, top-k per
+    # qid in (dist, id) order
+    red = new.sort_values(["qid", "dist", "id"]).assign(si=0)
+    red["pos"] = red.groupby("qid").cumcount()
+    red = red[red["pos"] < k]
+    new_d, new_i = assemble_states(red, qids, 1, k)
+    active = np.ones(nq, dtype=bool)
+    active[::7] = False  # inactive rows have no candidates and stay put
+    exp_d[~active], exp_i[~active] = state_d[~active], state_i[~active]
+    rows = np.where(active)[0]
     got_d, got_i = state_d.copy(), state_i.copy()
-    ErrorProfile._merge_state(got_d, got_i, new, qpos)
+    _merge_rows(got_d, got_i, rows, new_d[rows, 0], new_i[rows, 0])
     np.testing.assert_allclose(got_d, exp_d)
     np.testing.assert_array_equal(got_i, exp_i)
 
@@ -285,3 +299,95 @@ def test_simulate_targets_pred_cache_identical(fitted):
     memo = ep._simulate_targets(sweep, TOPK, 0.8, cache)
     np.testing.assert_array_equal(direct, memo)
     assert cache  # the memo was actually populated
+
+
+def test_empty_query_frame_returns_no_rows(fitted):
+    _, _, idx, ep, queries = fitted
+    empty = queries.limit(0)
+    assert idx.search(empty, TOPK, 4).collect() == []
+    res, info = ep.search(empty, TOPK, 0.9, return_info=True)
+    assert res.collect() == []
+    assert len(info["qid"]) == 0 and len(info["nprobe"]) == 0
+    res, info = ep.time_search(empty, TOPK, 1e6, return_info=True)
+    assert res.collect() == []
+    assert len(info["qid"]) == len(info["nprobe"]) == len(info["retired_ms"]) == 0
+
+
+@pytest.mark.parametrize(
+    "acc,multipler,fuse_prefix",
+    [(0.5, 1.0, 2), (0.95, 1.0, 2), (0.9, 3.0, 2), (0.9, 3.0, 8)],
+)
+def test_search_scans_each_query_to_its_stop_stage(
+    fitted, monkeypatch, acc, multipler, fuse_prefix
+):
+    """Each query's top-k is the numpy top-k over exactly the lists it
+    ranks below the stage boundary where it retired. A fused prefix of
+    2 leaves stages 4 and 8 to per-stage delta scans; multipler 3 sends
+    queries past the cap through the per-query-bounded extension."""
+    from auncel_spark import config
+
+    xb, xq, idx, ep, queries = fitted
+    monkeypatch.setattr(config, "ELP_FUSE_PREFIX", fuse_prefix)
+    saved = ep.multipler
+    ep.multipler = multipler
+    try:
+        # the widest k: a list past a query's depth rarely reaches a top 10
+        res, info = ep.search(queries, MAXK, acc, return_info=True)
+    finally:
+        ep.multipler = saved
+    depth = np.empty(len(xq), dtype=np.int64)
+    depth[info["qid"]] = ep._stage_depth(info["nprobe"])
+    if multipler > 1:
+        assert depth.max() > ep._stages()[-1]  # the extension ran
+    assert_ranked_topk(res, idx, xq, xb, depth, MAXK)
+
+
+@pytest.mark.parametrize("acc,multipler", [(0.5, 1.0), (0.95, 1.0), (0.9, 3.0)])
+def test_search_stops_where_the_replay_stops(fitted, acc, multipler):
+    """Calibration replays the stop rule on a sweep and assumes the
+    replay picks the nprobe ``search`` picks."""
+    _, _, idx, ep, queries = fitted
+    saved = ep.multipler
+    ep.multipler = multipler
+    try:
+        _, info = ep.search(queries, TOPK, acc, return_info=True)
+        sweep = ep._sweep_states(queries, ep._all_stages())
+        replay = ep._simulate_targets(sweep, TOPK, acc)
+    finally:
+        ep.multipler = saved
+    np.testing.assert_array_equal(info["qid"], sweep["qids"])
+    np.testing.assert_array_equal(info["nprobe"], replay)
+
+
+def test_scan_ranked_keeps_each_bucket_and_query_bound(fitted):
+    """With k no smaller than the base, nothing is cut by top-k: the
+    scan must emit exactly the rows of the lists each active query
+    ranks in [edges[si], min(edges[si+1], hi_q[q])), under bucket si."""
+    from auncel_spark.index.scan import scan_ranked
+
+    xb, xq, idx, _, _ = fitted
+    q = xq.astype(np.float64)
+    qids = np.arange(len(q), dtype=np.int64)
+    ranked, _ = idx.coarse_rank(qids, q, idx.nlist)
+    edges = [2, 5, 9, 14]
+    rng = np.random.default_rng(3)
+    hi_q = rng.integers(0, 18, len(q))  # some below edges[0], some past edges[-1]
+    active = np.ones(len(q), dtype=bool)
+    active[::5] = False
+    sdf, codec = idx.scan_source()
+    pdf = scan_ranked(
+        sdf, qids, q, ranked, edges, len(xb), idx.metric, idx.nlist,
+        active=active, codec=codec, hi_q=hi_q,
+    ).toPandas()
+    lists = idx.data.select("id", "list_no").toPandas()
+    list_of = np.empty(len(xb), dtype=np.int64)
+    list_of[lists["id"].to_numpy()] = lists["list_no"].to_numpy()
+    want = set()
+    for qi in np.where(active)[0]:
+        for si in range(len(edges) - 1):
+            top = min(edges[si + 1], hi_q[qi])
+            for r in np.nonzero(np.isin(list_of, ranked[qi, edges[si] : top]))[0]:
+                want.add((qi, si, int(r)))
+    got = list(zip(pdf["qid"], pdf["si"], pdf["id"]))
+    assert len(got) == len(set(got))
+    assert set(got) == want

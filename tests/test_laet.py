@@ -5,7 +5,7 @@ import pytest
 
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.profile.laet import LearnedTermination
-from tests.conftest import np_knn
+from tests.conftest import assert_ranked_topk, np_knn
 
 TOPK = 10
 
@@ -50,3 +50,25 @@ def test_laet_search_recall(laet_setup):
     ]
     assert np.mean(recs) >= 0.8  # learned budgets hit the recall target on average
     assert info["nprobe"].mean() < 32  # and do so without exhaustive probing
+
+
+def test_laet_search_scans_each_query_to_its_stage_depth(laet_setup):
+    """Each query's top-k is the numpy top-k over exactly the lists it
+    ranks below the stage boundary its predicted nprobe rounds up to."""
+    xb, xq, lt, queries = laet_setup
+    saved = lt.multiplier
+    lt.multiplier = 1.5  # non-power-of-two targets: depth rounds up
+    try:
+        res, info = lt.search(queries, lt.max_topk, return_info=True)
+    finally:
+        lt.multiplier = saved
+    depth = np.empty(len(xq), dtype=np.int64)
+    depth[info["qid"]] = lt._helper._stage_depth(info["nprobe"])
+    assert_ranked_topk(res, lt.index, xq, xb, depth, lt.max_topk)
+
+
+def test_laet_empty_query_frame_returns_no_rows(laet_setup):
+    _, _, lt, queries = laet_setup
+    res, info = lt.search(queries.limit(0), TOPK, return_info=True)
+    assert res.collect() == []
+    assert len(info["qid"]) == len(info["nprobe"]) == 0
