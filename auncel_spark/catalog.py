@@ -67,20 +67,6 @@ def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- M0: exact search family (SURVEY §2.3 O1-O5, O15-O17) ---------------
 
 
-def q_exact_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2
-    )
-    return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
-
-
-def q_exact_knn_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.IP
-    )
-    return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
-
-
 def q_range_search_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = range_search(
         _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), RANGE_RADIUS, Metric.L2
@@ -136,18 +122,6 @@ def q_split_vectors_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_queries(spark, sf_dir), shards, K, Metric.L2, dims=[16, 16, 16, 16]
     )
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
-
-
-def q_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O17: recall of IP-ranked top-10 against true L2 top-10."""
-    q = _emb_queries(spark, sf_dir)
-    b = _emb_base(spark, sf_dir)
-    approx = knn_exact(q, b, K, Metric.IP)
-    gt = knn_exact(q, b, K, Metric.L2).select(
-        "qid", "pos", F.col("id").alias("gt_id")
-    )
-    rec = intersection_recall(approx, gt, K)
-    return rec.select("qid", F.round(F.col("recall"), 6).alias("recall"))
 
 
 # --- M1/M2: IVF build + search family (SURVEY §2.2 B1-B5, §2.3 O6-O7) ---
@@ -467,18 +441,6 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auncel_spark.operators.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(
-        _toked_docs(spark, sf_dir),
-        n_hashes=N_MINHASH,
-        bands=4,
-        id_col="id",
-        tokens_col="_tok",
-    )
-
-
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auncel_spark.operators.dedup import ngram_jaccard
 
@@ -498,12 +460,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from auncel_spark.operators.dedup import simhash
 
     return simhash(_toked_docs(spark, sf_dir), id_col="id", tokens_col="_tok")
-
-
-def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auncel_spark.operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(load(spark, sf_dir, "documents"), max_hamming=3)
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,26 +488,6 @@ def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = embedding_near_dup_lsh(emb.unionByName(clones), threshold=0.9)
     return out.select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auncel_spark.functions.text import text_stats
-
-    return text_stats(load(spark, sf_dir, "documents"))
-
-
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auncel_spark.functions.text import langid
-
-    return load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id"), langid("text").alias("lang_pred")
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from auncel_spark.functions.text import fingerprint_df
-
-    return fingerprint_df(load(spark, sf_dir, "documents"))
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,23 +884,6 @@ def q_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = hamming_knn(q, emb_bits, K)
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
-
-
-def q_ivf_recall_worst_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O29 (bounded-faiss flavor): worst-case intersection criterion of
-    the fixed-nprobe config — the 'global ELP' strawman's selection
-    metric (faiss/AutoTune.cpp:93-101)."""
-    from auncel_spark.profile.autotune import intersection_criterion
-
-    idx = _seed_ivf(spark, sf_dir)
-    res = idx.search(_emb_queries(spark, sf_dir), K, nprobe=NPROBE)
-    gt = knn_exact(
-        _emb_queries(spark, sf_dir), _emb_base(spark, sf_dir), K, Metric.L2
-    ).select("qid", "pos", F.col("id").alias("gt_id"))
-    minf = intersection_criterion(res, gt, K, worst_case=True)
-    return spark.createDataFrame(
-        [(NPROBE, int(np.floor(minf * 1e6)))], "nprobe bigint, minf_u bigint"
-    )
 
 
 def q_events_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2381,16 +2300,6 @@ CHUNK_SIZE, CHUNK_STRIDE = 32, 24  # token chunker budget / overlap step
 BLOOM_M, BLOOM_K = 1 << 16, 3  # bloom sketch bits / hash count
 
 
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style intra-document repetition metrics over word
-    2-grams (duplicate-occurrence fraction, top-n-gram mass,
-    duplicate-char fraction) — the pre-training quality gate beside
-    the cross-doc dedup family."""
-    from auncel_spark.operators.repetition import ngram_repetition_stats
-
-    return ngram_repetition_stats(load(spark, sf_dir, "documents"), REP_N)
-
-
 _ORACLE_REPETITION = rf"""
 WITH tok AS (
   SELECT doc_id AS id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
@@ -2416,15 +2325,6 @@ SELECT d.doc_id AS id,
        coalesce(floor(a.dchars * 1e6 / a.chars), 0)::BIGINT AS dup_char_frac_u
 FROM documents d LEFT JOIN agg a ON a.id = d.doc_id
 """
-
-
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget chunking with stride overlap (RAG / context-window
-    prep): 32-token chunks every 24 tokens. Pure per-row array ops —
-    zero shuffle."""
-    from auncel_spark.operators.repetition import word_chunks
-
-    return word_chunks(load(spark, sf_dir, "documents"), CHUNK_SIZE, CHUNK_STRIDE)
 
 
 _ORACLE_CHUNKS = rf"""

@@ -23,10 +23,6 @@ class Metric(enum.Enum):
     IP = "ip"
     COSINE = "cosine"
 
-    @property
-    def ascending_is_closer(self) -> bool:
-        return True  # both normalized to ascending "dist"
-
 
 # Default number of inverted lists, matching the reference's flagship
 # config "IVF1024,Flat" (Auncel/eval/bound.cpp:220).

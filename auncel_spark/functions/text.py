@@ -11,7 +11,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from auncel_spark.operators.dedup import tokens, word_shingles
+from auncel_spark.operators.dedup import tokens
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -96,19 +96,6 @@ def langid(text_col: Column | str, tok: Column | None = None) -> Column:
     ]
     # array_min over (neg_count, lang) structs = max count, tie → 'de' < 'en' < ...
     return F.array_min(F.array(*scores)).getField("lang")
-
-
-def doc_fingerprint(text_col: Column | str, shingle_n: int = 5) -> Column:
-    """Winnowing-style fingerprint: lexicographic min of the md5 of
-    word shingles (rolling-hash selection, one value per doc).
-
-    Hot paths should use ``fingerprint_df`` (tokens materialized in a
-    separate projection — see the perf note on ``word_shingles``)."""
-    sh = word_shingles(text_col, shingle_n)
-    return F.coalesce(
-        F.array_min(F.transform(sh, lambda s: F.md5(s))),
-        F.md5(F.col(text_col) if isinstance(text_col, str) else text_col),
-    )
 
 
 def fingerprint_df(

@@ -79,12 +79,6 @@ def dist_expr(a: Column | str, b: Column | str, metric: Metric) -> Column:
     return -inner_product(a, b)
 
 
-def ip_to_l2sq(ip: Column, norm_a_sq: Column, norm_b_sq: Column) -> Column:
-    """|x−y|² = |x|² + |y|² − 2⟨x,y⟩ (reference:
-    ``inner_product_to_L2sqr``, Auncel/utils.h:156-159)."""
-    return norm_a_sq + norm_b_sq - 2.0 * ip
-
-
 def ids_mat_from_arrow(batch, id_idx: int = 0, vec_idx: int = 1, dtype=None):
     """(int64 ids, float64 (n, d) matrix) from an Arrow record batch of
     (id bigint, vec array<float>) — the ``mapInArrow`` twin of

@@ -28,7 +28,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from auncel_spark.operators.knn import _flat_partials, ids_codes_from_arrow
+from auncel_spark.operators.knn import (
+    _bcast_queries,
+    _block_rows,
+    _flat_partials,
+    ids_codes_from_arrow,
+)
 from auncel_spark.operators.topk import topk_per_query
 
 _POP = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
@@ -137,24 +142,35 @@ def hamming_range_count(
     bits_col: str = "bits",
 ) -> DataFrame:
     """``hamming_count_thres`` (hamming.h:118): per query, the number
-    of base codes within the Hamming threshold. Returns (qid, cnt)."""
-    spark = queries.sparkSession
-    qrows = queries.select(qid_col, q_bits_col).collect()
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    qb = np.array([np.frombuffer(r[q_bits_col], dtype=np.uint8) for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, qb))
-    b = base.select(F.col(bits_col).alias("bits"))
+    of base codes within the Hamming threshold. Returns (qid, cnt).
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gqids, gqb = bc.value
-        for pdf in batches:
-            if pdf.empty:
+    The query broadcast and Arrow code decode of the top-k scan, with a
+    count in place of the top-k: each task folds its rows into one
+    per-query count and emits it once. No queries → an empty frame,
+    without launching a scan."""
+    import pyarrow as pa
+
+    schema = "qid bigint, cnt bigint"
+    bc = _bcast_queries(queries.select(qid_col, q_bits_col), ids_codes_from_arrow)
+    if bc is None:
+        return queries.sparkSession.createDataFrame([], schema)
+
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        qids, qb = bc.value
+        block = _block_rows(len(qids))
+        cnt = None
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            bb = np.array([np.frombuffer(x, dtype=np.uint8) for x in pdf["bits"]])
-            cnt = (_hamming_matrix(gqb, bb) < threshold).sum(axis=1)
-            yield pd.DataFrame({"qid": gqids, "cnt": cnt.astype(np.int64)})
+            _, bb = ids_codes_from_arrow(batch)
+            if cnt is None:
+                cnt = np.zeros(len(qids), dtype=np.int64)
+            for s0 in range(0, len(bb), block):
+                cnt += (_hamming_matrix(qb, bb[s0 : s0 + block]) < threshold).sum(axis=1)
+        if cnt is not None:
+            yield pa.RecordBatch.from_pydict({"qid": qids, "cnt": cnt})
 
-    partial = b.mapInPandas(scan, schema="qid bigint, cnt bigint")
+    partial = base.select(id_col, bits_col).mapInArrow(scan, schema=schema)
     return partial.groupBy("qid").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -231,18 +247,22 @@ class BinaryIVFIndex:
         return idx
 
     def search(self, queries: DataFrame, k: int, nprobe: int) -> DataFrame:
-        """Broadcast-queries popcount scan: each code crosses Arrow once
-        regardless of how many queries probe its list."""
-        from auncel_spark.index.scan import scan_window_coded
+        """The ranked-list kernel with the popcount scanner: each code
+        crosses Arrow once regardless of how many queries probe its
+        list."""
         from auncel_spark.config import Metric
+        from auncel_spark.index.scan import HammingScanner, scan_ranked
 
         qrows = queries.select("qid", "bits").collect()
         qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-        qb = np.array([np.frombuffer(r["bits"], dtype=np.uint8) for r in qrows])
+        # width from the index: no queries decode to shape (0,)
+        qb = np.array(
+            [np.frombuffer(r["bits"], dtype=np.uint8) for r in qrows], dtype=np.uint8
+        ).reshape(-1, self.centroids.shape[1])
         cd = _hamming_matrix(qb, self.centroids)
         order = np.argsort(cd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        partial = scan_window_coded(
-            self._data, qids, None, order, 0, nprobe, k, Metric.L2,
-            self.nlist, {"kind": "hamming", "qbits": qb}, code_col="bits",
+        partial = scan_ranked(
+            self._data, qids, qb, order, [0, nprobe], k, Metric.L2,
+            self.nlist, codec=HammingScanner(),
         )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

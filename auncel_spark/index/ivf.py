@@ -682,6 +682,12 @@ class IVFIndex:
 
     # --- search (O7) -----------------------------------------------------
 
+    def _scanner(self):
+        """(lists frame, codec) that ``search`` hands to ``scan_ranked``:
+        ``scan_source()`` here; a coded index returns its code lists and
+        their scanner (index/scan.py)."""
+        return self.scan_source()
+
     def search(
         self,
         queries: DataFrame,
@@ -690,22 +696,26 @@ class IVFIndex:
         qid_col: str = "qid",
         vec_col: str = "vec",
     ) -> DataFrame:
-        """Fixed-nprobe IVF-Flat search. Returns (qid, pos, id, dist).
+        """Fixed-nprobe IVF search. Returns (qid, pos, id, dist).
 
-        One pass over the pruned lists with the broadcast-queries GEMM
-        kernel (index/scan.py) — each base vector crosses Arrow once no
-        matter how many queries probe its list."""
+        One pass over the pruned lists with the ranked-list kernel
+        (index/scan.py), scored by this index's scanner (``_scanner``)
+        — each base vector or code crosses Arrow once no matter how
+        many queries probe its list."""
         from auncel_spark.index.scan import scan_ranked
 
         q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
         qpdf = q.toPandas()
         qids = qpdf["qid"].to_numpy(dtype=np.int64)
         # width from the index: zero cells decode to shape (0,)
-        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.d)
+        rot = self.rotation
+        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.d if rot is None else rot.shape[1])
+        if rot is not None:
+            qmat = qmat @ rot.T  # into code space
         ranked, _ = self.coarse_rank(qids, qmat, nprobe)
         self.prefetch(np.unique(ranked[:, :nprobe]))
-        sdf, codec = self.scan_source()
-        blob = self.refine_blob if codec is not None else None
+        sdf, codec = self._scanner()
+        blob = self.refine_blob if self.codec_active else None
         # refine-pool headroom (shared constant with ErrorProfile —
         # rank slips under SQ8 span more positions as the corpus
         # densifies; ADVICE r09: one retune point, not two)

@@ -292,53 +292,29 @@ class IVFPQIndex(IVFIndex):
             enc_centroids=enc_centroids,
         )
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int,
-        qid_col: str = "qid",
-        vec_col: str = "vec",
-    ) -> DataFrame:
-        """Broadcast-queries ADC scan: each M-byte code crosses Arrow
-        once no matter how many queries probe its list; term3 LUTs are
-        built lazily in-task, term2 rides in broadcast (index/scan.py)."""
-        from auncel_spark.index.scan import scan_window_coded
+    def _scanner(self):
+        """The code lists and their ADC scanner: term3 LUTs are built
+        lazily in-task, term2 rides in broadcast (index/scan.py)."""
+        from auncel_spark.index.scan import PQScanner
 
-        q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        qpdf = q.toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
-        if self.rotation is not None:
-            qmat = qmat @ self.rotation.T  # into code space (see __init__)
-        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
         use_t2 = (
             self.use_precomputed_table
             and self.by_residual
             and self.metric == Metric.L2
         )
-        codec = {
-            "kind": "pq",
-            "books": self.pq.codebooks,
-            "cents": (
-                (self.enc_centroids if self.enc_centroids is not None else self.centroids)
-                if self.by_residual
-                else None
-            ),
-            "term2": self.precomputed_term2() if use_t2 else None,
-            "enc_of": self.enc_of,
+        cents = self.enc_centroids if self.enc_centroids is not None else self.centroids
+        return self.data, PQScanner(
+            self.pq.codebooks,
+            cents=cents if self.by_residual else None,
+            term2=self.precomputed_term2() if use_t2 else None,
+            enc_of=self.enc_of,
             # float32 ADC arithmetic (the reference engine's dtype —
             # Faiss computes ADC in float32): ~2x scan throughput.
             # Default False so hash-exact SQL-oracle replays (float64
             # in DuckDB) keep bit-matched boundary ordering; the scale
             # bench enables it via `idx.adc_fp32 = True`.
-            "fp32": getattr(self, "adc_fp32", False),
-        }
-        partial = scan_window_coded(
-            self.data, qids, qmat, ranked, 0, nprobe, k, self.metric,
-            self.nlist, codec,
+            fp32=getattr(self, "adc_fp32", False),
         )
-        return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
     def search_refine(
         self,

@@ -15,7 +15,6 @@ import os
 
 import numpy as np
 
-from auncel_spark.functions.vector import as_matrix
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -104,27 +103,8 @@ class IVFSQIndex(IVFIndex):
             Metric(meta["metric"]),
         )
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int,
-        qid_col: str = "qid",
-        vec_col: str = "vec",
-    ) -> DataFrame:
-        """Broadcast-queries coded scan: each SQ code crosses Arrow
-        once regardless of how many queries probe its list, decoded
-        in-task (index/scan.py)."""
-        from auncel_spark.index.scan import scan_window_coded
-        from auncel_spark.operators.topk import topk_per_query
+    def _scanner(self):
+        """The code lists and their decoding scanner (index/scan.py)."""
+        from auncel_spark.index.scan import SQScanner
 
-        q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        qpdf = q.toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
-        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
-        partial = scan_window_coded(
-            self.data, qids, qmat, ranked, 0, nprobe, k, self.metric,
-            self.nlist, {"kind": "sq", "sq": self.sq.to_dict()},
-        )
-        return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
+        return self.data, SQScanner(self.sq)

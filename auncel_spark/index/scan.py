@@ -18,16 +18,24 @@ asymptotics, distributed:
   top-k per task, not per (query, list);
 - a window reduce (operators/topk.py) merges task partials.
 
-One flat-vector kernel, ``scan_ranked``: a query's probe order is its
-ranked list of centroids, and one pass emits partials per (query, rank
-bucket), where bucket si covers ranks [edges[si], edges[si+1]). A
-fixed-nprobe search is the one-bucket case ``[0, nprobe]``; the ELP
-training sweep and the fused early stages of the online bounded search
-use one bucket per stage (every stage's state from ONE job, the
-stage-fusion the reference gets for free inside its sequential loop,
+One kernel, ``scan_ranked``: a query's probe order is its ranked list
+of centroids, and one pass emits partials per (query, rank bucket),
+where bucket si covers ranks [edges[si], edges[si+1]). A fixed-nprobe
+search is the one-bucket case ``[0, nprobe]``; the ELP training sweep
+and the fused early stages of the online bounded search use one bucket
+per stage (every stage's state from ONE job, the stage-fusion the
+reference gets for free inside its sequential loop,
 ``IndexIVF.cpp:526-536``); the ELP per-stage delta scan is the bucket
-[prev, stage). ``scan_window_coded`` is the one-window scan of coded
-(PQ/SQ/binary) lists.
+[prev, stage).
+
+Every list codec runs through that one loop. As the reference's index
+types each supply only an ``InvertedListScanner``
+(``Auncel/IndexIVF.h:316-358``), a scanner here supplies only the list
+column it reads, the decode of that Arrow column, and a per-task scorer
+of (queries × decoded rows) distances: fp32 vectors (``FlatScanner``),
+the SQ8 scan replica (``SQ8Scanner``), IVF-SQ codes (``SQScanner``),
+PQ codes by ADC (``PQScanner``) and packed bits by popcount
+(``HammingScanner``).
 
 Shuffle volume is O(tasks · touched-queries · k), independent of corpus
 size; scan I/O is the pruned lists, once.
@@ -45,9 +53,7 @@ from pyspark.sql import functions as F
 from auncel_spark.config import Metric
 
 
-WINDOW_SCHEMA = "qid bigint, id bigint, dist double"
 BUCKET_SCHEMA = "qid bigint, si int, id bigint, dist double"
-_SALT = 8  # skew-split fragments per list in the coded scan
 
 
 def _inv_rank(ranked: np.ndarray, nlist: int, width: int) -> np.ndarray:
@@ -87,36 +93,6 @@ def _binary_matrix(arr: pa.Array) -> np.ndarray:
             data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
             return data[offs[0] : offs[-1]].reshape(n, int(widths[0]))
     return np.stack([np.frombuffer(b, dtype=np.uint8) for b in arr.to_pylist()])
-
-
-def _batch_arrays(batch: pa.RecordBatch, codec=None):
-    """(ids, fp64 matrix, list_nos) from a scan batch. ``codec`` =
-    (off, scale) decodes an SQ8 ``code`` binary column in place of the
-    fp32 ``vec`` column: mat = codes·scale + off — one fused
-    multiply-add per element against 4x less scan IO (the coded scan
-    replica; exactness restored downstream by the refine sidecar)."""
-    ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    vc = batch.column(1)
-    n = len(vc)
-    if codec is not None:
-        # float32 end-to-end for the coded scan: the flat scan's f64
-        # GEMM is the exactness source in flat mode, but here exactness
-        # is settled downstream by the fp32 refine sidecar and the SQ8
-        # step (~1e-2 of typical distances) dwarfs f32 rounding (~1e-6
-        # relative). f64 decode allocated an 8x-expanded temporary and
-        # ran the GEMM at half BLAS throughput for precision the path
-        # cannot use — measured as the warm-grid regression vs the
-        # flat scan at 100M (20.9 vs 15.8 ms/q mean).
-        off, scale = codec
-        codes = _binary_matrix(vc)
-        mat = codes.astype(np.float32)
-        mat *= np.asarray(scale, dtype=np.float32)[None, :]
-        mat += np.asarray(off, dtype=np.float32)[None, :]
-    else:
-        flat = vc.flatten().to_numpy(zero_copy_only=False)
-        mat = np.asarray(flat, dtype=np.float64).reshape(n, -1)
-    lns = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    return ids, mat, lns
 
 
 def _merge_rows(
@@ -211,28 +187,21 @@ def _query_tiles(sel: np.ndarray, n_rows: int):
 
 
 def _tiled_topk(
-    bq: np.ndarray,
-    qn: np.ndarray,
-    sel: np.ndarray,
-    mat_m: np.ndarray,
-    ids_m: np.ndarray,
-    metric: Metric,
-    k: int,
+    score, sel: np.ndarray, rows: np.ndarray, ids: np.ndarray, ln: int, k: int
 ):
     """Partial top-k tiles over BOTH dimensions of the (sel × list)
-    distance computation. Query tiles keep blocks ~_TILE_ELEMS; the
-    list-dimension chunk bounds the block even when one skewed list
-    holds millions of rows (the 64-query floor alone would allow a
-    ~5 GB block at nL=10M). Yields (q0, ss, nd, ni) partial top-k per
-    chunk — exact after downstream (dist, id) lexsort merging."""
+    distance computation ``score(sel, rows, ln)``. Query tiles keep
+    blocks ~_TILE_ELEMS; the list-dimension chunk bounds the block even
+    when one skewed list holds millions of rows (the 64-query floor
+    alone would allow a ~5 GB block at nL=10M). Yields (q0, ss, nd, ni)
+    partial top-k per chunk — exact after downstream (dist, id) lexsort
+    merging."""
     lchunk = max(4096, _TILE_ELEMS // 64)
-    nL = mat_m.shape[0]
-    for ls in range(0, nL, lchunk):
-        mat_c, ids_c = mat_m[ls : ls + lchunk], ids_m[ls : ls + lchunk]
+    for ls in range(0, rows.shape[0], lchunk):
+        rows_c, ids_c = rows[ls : ls + lchunk], ids[ls : ls + lchunk]
         q0 = 0
-        for ss in _query_tiles(sel, mat_c.shape[0]):
-            dist = _dist_block(bq[ss], qn[ss], mat_c, metric)
-            nd, ni = _group_topk(dist, ids_c, k)
+        for ss in _query_tiles(sel, rows_c.shape[0]):
+            nd, ni = _group_topk(score(ss, rows_c, ln), ids_c, k)
             yield q0, ss, nd, ni
             q0 += len(ss)
 
@@ -246,226 +215,117 @@ def _dist_block(
     return -dots
 
 
-def _pruned(data: DataFrame, probed_lists: list[int], coded: bool = False) -> DataFrame:
-    vcol = "code" if coded else "vec"
-    return (
-        data.filter(F.col("list_no").isin(probed_lists))
-        .select("id", vcol, F.col("list_no").cast("long"))
-    )
+# --- scanners: what each list codec supplies to the one loop ----------
+#
+# ``col``: the list column read. ``decode(arrow_column)``: its rows as
+# one array, once per Arrow batch. ``kernel(qmat, metric)``: called once
+# per task, returns ``score(sel, rows, list_no)`` → the (len(sel) ×
+# len(rows)) ascending distances of queries ``sel`` to one list's rows.
 
 
-def scan_ranked(
-    data: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    ranked: np.ndarray,
-    edges: list[int],
-    k: int,
-    metric: Metric,
-    nlist: int,
-    active: np.ndarray | None = None,
-    codec=None,
-    hi_q: np.ndarray | None = None,
-) -> DataFrame:
-    """Partial top-k (qid, si, id, dist) per (query, rank bucket) in ONE
-    scan of the lists ranked [edges[0], edges[-1]). Bucket si covers
-    list ranks [edges[si], edges[si+1]); a fixed-nprobe search is the
-    one-bucket case ``edges=[0, nprobe]``. Callers reduce with
-    ``reduce_bucketed`` (or ``topk_per_query``, dropping ``si``, when
-    there is one bucket). ``codec``: scan SQ8 codes instead of fp32
-    vectors (see ``_batch_arrays``).
+class FlatScanner:
+    """fp32 ``vec`` lists, scored by a float64 GEMM — the exactness
+    source of IVF-Flat, ELP and LAET."""
 
-    ``active``: optional mask of the queries to scan. ``hi_q``:
-    optional per-query exclusive rank bound (clipped to edges[-1]) —
-    one job scans each query exactly to its own target, so callers
-    whose per-query probe depths are already known (LAET budgets, ELP
-    post-stop extension targets) need ONE scan instead of a log2-deep
-    ladder of stage jobs."""
-    spark = data.sparkSession
-    nq = len(qids)
-    lo = edges[0]
-    hi = min(edges[-1], ranked.shape[1], nlist)
-    if active is None:
-        active = np.ones(nq, dtype=bool)
-    act = np.where(active)[0]
-    if len(act) == 0 or hi <= lo:
-        return spark.createDataFrame([], BUCKET_SCHEMA)
-    inv = _inv_rank(ranked, nlist, hi)
-    cols = ranked[act, lo:hi]
-    if hi_q is None:
-        bhi = hi
-    else:
-        bhi = np.minimum(np.asarray(hi_q, dtype=np.int64), hi)
-        mask = np.arange(lo, hi)[None, :] < bhi[act, None]
-        if not mask.any():
-            return spark.createDataFrame([], BUCKET_SCHEMA)
-        cols = cols[mask]
-    probed = np.unique(cols).tolist()
-    # bucket of rank r: index of the last edge <= r
-    bucket_of_rank = np.searchsorted(np.asarray(edges), np.arange(hi), side="right") - 1
-    nb = len(edges) - 1
-    bc = spark.sparkContext.broadcast(
-        (
-            qids,
-            np.asarray(qmat, dtype=np.float64),
-            inv,
-            active.copy(),
-            bucket_of_rank.astype(np.int32),
-            codec,
-            bhi,
-        )
-    )
+    col = "vec"
+    dtype = np.float64
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bqids, bq, binv, bact, brank2b, bcodec, bbhi = bc.value
-        if bcodec is not None:
-            bq = bq.astype(np.float32)  # f32 GEMM against f32 codes
+    def decode(self, col: pa.Array) -> np.ndarray:
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return np.asarray(flat, dtype=np.float64).reshape(len(col), -1)
+
+    def kernel(self, qmat: np.ndarray, metric: Metric):
+        bq = np.asarray(qmat, dtype=np.float64).astype(self.dtype, copy=False)
         qn = (bq * bq).sum(axis=1)
-        state_d = state_i = None
-        touched = np.zeros((len(bqids), nb), dtype=bool)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if state_d is None:
-                state_d = np.full((len(bqids), nb, k), np.inf)
-                state_i = np.full((len(bqids), nb, k), -1, dtype=np.int64)
-            ids, mat, lns = _batch_arrays(batch, bcodec)
-            for ln in np.unique(lns):
-                r = binv[:, int(ln)]
-                sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
-                if len(sel) == 0:
-                    continue
-                m = lns == ln
-                mat_m, ids_m = mat[m], ids[m]
-                si_all = brank2b[r[sel]]
-                for q0, ss, nd, ni in _tiled_topk(bq, qn, sel, mat_m, ids_m, metric, k):
-                    si = si_all[q0 : q0 + len(ss)]
-                    for b in np.unique(si):
-                        pick = si == b
-                        rows = ss[pick]
-                        _merge_rows(
-                            state_d[:, b, :], state_i[:, b, :], rows, nd[pick], ni[pick]
-                        )
-                        touched[rows, b] = True
-        if state_d is None or not touched.any():
-            return
-        tq, tb = np.where(touched)
-        keep = state_i[tq, tb] >= 0  # (nt, k)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "qid": np.repeat(bqids[tq], k)[keep.ravel()],
-                "si": np.repeat(tb.astype(np.int32), k)[keep.ravel()],
-                "id": state_i[tq, tb].ravel()[keep.ravel()],
-                "dist": state_d[tq, tb].ravel()[keep.ravel()],
-            }
-        )
-
-    return _pruned(data, probed, coded=codec is not None).mapInArrow(
-        scan, schema=BUCKET_SCHEMA
-    )
+        return lambda sel, rows, ln: _dist_block(bq[sel], qn[sel], rows, metric)
 
 
-def scan_window_coded(
-    data: DataFrame,
-    qids: np.ndarray,
-    qmat: np.ndarray | None,
-    ranked: np.ndarray,
-    lo: int,
-    hi: int,
-    k: int,
-    metric: Metric,
-    nlist: int,
-    codec: dict,
-    code_col: str = "code",
-) -> DataFrame:
-    """Partial top-k (qid, id, dist) over CODED lists (``(id, code
-    BINARY, list_no)``) ranked [lo, hi) per query
-    — the only search path of IVF-PQ, IVF-SQ and binary IVF, with
-    scan-each-code-once asymptotics for compressed lists too (a
-    probes join would ship every M-byte code once per probing query;
-    at nprobe=128 over shared lists that is a ~100× payload blow-up
-    even for codes).
+class SQ8Scanner(FlatScanner):
+    """The SQ8 scan replica (``IVFIndex.scan_source``'s (off, scale)
+    codec): codes·scale + off — one fused multiply-add per element
+    against 4x less scan IO (exactness restored downstream by the
+    refine sidecar).
 
-    ``codec`` selects the in-task decoder:
+    float32 end-to-end: the flat scan's f64 GEMM is the exactness source
+    in flat mode, but here exactness is settled downstream by the fp32
+    refine sidecar and the SQ8 step (~1e-2 of typical distances) dwarfs
+    f32 rounding (~1e-6 relative). f64 decode allocated an 8x-expanded
+    temporary and ran the GEMM at half BLAS throughput for precision the
+    path cannot use — measured as the warm-grid regression vs the flat
+    scan at 100M (20.9 vs 15.8 ms/q mean)."""
 
-    - ``{"kind": "sq", "sq": ScalarQuantizer.to_dict()}`` — each Arrow
-      batch is decoded once to a float block, then scored with the same
-      per-list GEMM as the raw-vector kernel (the reference's
-      IVFScalarQuantizer scanner decodes inline,
-      ``Auncel/IndexScalarQuantizer.h:90-150``).
-    - ``{"kind": "pq", "books": (M,ksub,dsub), "cents": centroids|None,
-      "term2": (nlist,M,ksub)|None}`` — ADC via LUT gather-sum
-      (``Auncel/IndexIVFPQ.h:34-130``). The query-dependent term3 LUT
-      (−2·q_m·z for L2, −q_m·z for IP) is computed lazily PER TASK and
-      only for queries that actually probe a list in that task's
-      partitions (partition pruning keeps this a small subset); the
-      query-independent term2 rides in broadcast. Residual L2 requires
-      ``term2`` (build it with ``IVFPQIndex.precomputed_term2``).
-      Optional ``"enc_of": (nlist,) int`` maps a list to the row of
-      ``cents``/``term2`` its codes were ENCODED against — the refined
-      (split-list) quantizer stores residuals vs the PARENT centroid
-      while probing the finer child lists, so cents/term2 stay sized by
-      the parent count (``split_ivfpq_lists``).
-    - ``{"kind": "hamming", "qbits": (nq, code_size) uint8}`` — packed
-      binary codes scored by popcount (``Auncel/IndexBinaryIVF`` scan;
-      ``hamming.h``). ``qmat``/``metric`` are ignored — the query BIT
-      matrix rides in the codec.
+    col = "code"
+    dtype = np.float32
 
-    Callers window-reduce with ``topk_per_query``.
-    """
-    spark = data.sparkSession
-    nq = len(qids)
-    hi = min(hi, ranked.shape[1], nlist)
-    if nq == 0 or hi <= lo:
-        return spark.createDataFrame([], WINDOW_SCHEMA)
-    inv = _inv_rank(ranked, nlist, hi)
-    probed = sorted({int(x) for x in np.unique(ranked[:, lo:hi])})
-    if qmat is None:  # hamming codec: queries ride in codec["qbits"]
-        qmat = np.zeros((nq, 1))
-    bc = spark.sparkContext.broadcast(
-        (qids, np.asarray(qmat, dtype=np.float64), inv, codec)
-    )
-    is_l2 = metric == Metric.L2
+    def __init__(self, off: np.ndarray, scale: np.ndarray):
+        self.off, self.scale = off, scale
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bqids, bq, binv, cdc = bc.value
+    def decode(self, col: pa.Array) -> np.ndarray:
+        mat = _binary_matrix(col).astype(np.float32)
+        mat *= np.asarray(self.scale, dtype=np.float32)[None, :]
+        mat += np.asarray(self.off, dtype=np.float32)[None, :]
+        return mat
+
+
+class SQScanner(FlatScanner):
+    """IVF-SQ lists: ``ScalarQuantizer`` codes decoded to float64 once
+    per batch, then the flat GEMM (the reference's IVFScalarQuantizer
+    scanner decodes inline, ``Auncel/IndexScalarQuantizer.h:90-150``)."""
+
+    col = "code"
+
+    def __init__(self, sq):
+        self.sq = sq
+
+    def decode(self, col: pa.Array) -> np.ndarray:
+        return self.sq.decode_np(_binary_matrix(col))
+
+
+class PQScanner:
+    """IVF-PQ lists: ADC by LUT gather-sum (``Auncel/IndexIVFPQ.h:34-130``).
+
+    ``books`` (M, ksub, dsub). ``cents``: the encoding centroids of
+    residual codes, None for plain codes. ``term2``: the precomputed
+    query-independent (ncents, M, ksub) table of residual L2
+    (``IVFPQIndex.precomputed_term2``), None to build each list's row in
+    the task. ``enc_of`` (nlist,): the row of ``cents``/``term2`` a
+    list's codes were ENCODED against — the split-list quantizer stores
+    residuals vs the PARENT centroid while probing the finer child lists
+    (``split_ivfpq_lists``); None is the identity. ``fp32``: float32 ADC
+    arithmetic, as the reference engine computes it; float64 (IVFPQ's default)
+    keeps boundary ordering bit-matched to the SQL oracles' float64
+    replay for the hash-exact correctness gate.
+
+    The query-dependent term3 LUT (−2·q_m·z for L2, −q_m·z for IP) is
+    built lazily PER TASK, only for the queries that probe a list in
+    that task's partitions (partition pruning keeps this a small
+    subset)."""
+
+    col = "code"
+
+    def __init__(self, books, cents, term2, enc_of, fp32):
+        self.books, self.cents, self.term2 = books, cents, term2
+        self.enc_of, self.fp32 = enc_of, fp32
+
+    def decode(self, col: pa.Array) -> np.ndarray:
+        return _binary_matrix(col)
+
+    def kernel(self, qmat: np.ndarray, metric: Metric):
+        bq = np.asarray(qmat, dtype=np.float64)
         qn = (bq * bq).sum(axis=1)
-        sq_dec = books = cents = t2 = znorm = qbits = enc_of = None
-        t3 = t3_done = None
-        if cdc["kind"] == "sq":
-            from auncel_spark.index.sq import ScalarQuantizer
+        books = np.asarray(self.books, dtype=np.float64)
+        cents, t2, enc_of = self.cents, self.term2, self.enc_of
+        znorm = (books * books).sum(-1)  # (M, ksub)
+        M, ksub, dsub = books.shape
+        dt = np.float32 if self.fp32 else np.float64
+        is_l2 = metric == Metric.L2
+        # np.empty commits pages only for the rows actually touched
+        t3 = np.empty((len(bq), M, ksub))
+        t3_done = np.zeros(len(bq), dtype=bool)
 
-            sq_dec = ScalarQuantizer.from_dict(cdc["sq"])
-        elif cdc["kind"] == "hamming":
-            qbits = cdc["qbits"]
-        else:
-            books = np.asarray(cdc["books"], dtype=np.float64)
-            cents = cdc.get("cents")
-            t2 = cdc.get("term2")
-            enc_of = cdc.get("enc_of")
-            znorm = (books * books).sum(-1)  # (M, ksub)
-            M, ksub, dsub = books.shape
-            # ADC arithmetic dtype: float32 matches the reference
-            # engine (Faiss computes ADC in float32 throughout) and
-            # doubles gather/sort throughput; float64 (default) keeps
-            # boundary ordering bit-matched to the SQL oracles'
-            # float64 replay for the hash-exact correctness gate.
-            dt = np.float32 if cdc.get("fp32") else np.float64
-            # lazily-filled per-task term3 LUTs; np.empty commits pages
-            # only for rows actually touched (queries probing this
-            # task's lists)
-            t3 = np.empty((len(bqids), M, ksub))
-            t3_done = np.zeros(len(bqids), dtype=bool)
-        state_d = state_i = None
-        touched = np.zeros(len(bqids), dtype=bool)
-
-        def pq_dist(sel: np.ndarray, codes_g: np.ndarray, ln: int) -> np.ndarray:
-            """ADC distances (ns × nL) of queries ``sel`` against the
-            codes of list ``ln``: a fused LUT (term3 + term2) in gather
-            layout (M, ksub, ns) plus the per-query term1, both in the
-            ADC dtype."""
-            # encoding-centroid row for this list: identity unless the
-            # codec carries a split-list parent map (refined quantizer)
+        def score(sel: np.ndarray, codes: np.ndarray, ln: int) -> np.ndarray:
+            """A fused LUT (term3 + term2) in gather layout (M, ksub,
+            ns) plus the per-query term1, both in the ADC dtype."""
             el = int(enc_of[ln]) if enc_of is not None else ln
             miss = sel[~t3_done[sel]]
             if len(miss):
@@ -497,9 +357,7 @@ def scan_window_coded(
             else:
                 lut = t3[sel]
                 term1 = (
-                    -(bq[sel] @ cents[el])
-                    if cents is not None
-                    else np.zeros(len(sel))
+                    -(bq[sel] @ cents[el]) if cents is not None else np.zeros(len(sel))
                 )
             # ROW-major gather: numpy's column fancy-index
             # (lut[:, m, :][:, codes_m]) measured 60 M gathers/s;
@@ -508,89 +366,146 @@ def scan_window_coded(
             # 766 M/s (float32) on the same shapes — the per-task ADC
             # cost is this gather, so the layout IS the kernel.
             lutT = np.ascontiguousarray(lut.transpose(1, 2, 0), dtype=dt)
-            acc = np.zeros((codes_g.shape[0], lutT.shape[2]), dtype=dt)
+            acc = np.zeros((codes.shape[0], lutT.shape[2]), dtype=dt)
             for m in range(M):
-                acc += lutT[m][codes_g[:, m]]
+                acc += lutT[m][codes[:, m]]
             return np.ascontiguousarray(acc.T) + np.asarray(term1, dtype=dt)[:, None]
 
+        return score
+
+
+class HammingScanner:
+    """Binary IVF lists: packed ``bits`` scored by popcount
+    (``Auncel/IndexBinaryIVF``, ``hamming.h``). ``qmat`` is the (nq,
+    code_size) uint8 query bit matrix; ``metric`` is ignored."""
+
+    col = "bits"
+
+    def decode(self, col: pa.Array) -> np.ndarray:
+        return _binary_matrix(col)
+
+    def kernel(self, qmat: np.ndarray, metric: Metric):
+        from auncel_spark.index.binary import _hamming_matrix
+
+        qb = np.asarray(qmat, dtype=np.uint8)
+        return lambda sel, rows, ln: _hamming_matrix(qb[sel], rows).astype(np.float64)
+
+
+def scan_ranked(
+    data: DataFrame,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    ranked: np.ndarray,
+    edges: list[int],
+    k: int,
+    metric: Metric,
+    nlist: int,
+    active: np.ndarray | None = None,
+    codec=None,
+    hi_q: np.ndarray | None = None,
+) -> DataFrame:
+    """Partial top-k (qid, si, id, dist) per (query, rank bucket) in ONE
+    scan of the lists ranked [edges[0], edges[-1]). Bucket si covers
+    list ranks [edges[si], edges[si+1]); a fixed-nprobe search is the
+    one-bucket case ``edges=[0, nprobe]``. Callers reduce with
+    ``reduce_bucketed`` (or ``topk_per_query``, dropping ``si``, when
+    there is one bucket). ``codec``: the list scanner — None scans
+    fp32 vectors (``FlatScanner``), a ``scan_source()`` (off, scale)
+    pair the SQ8 replica (``SQ8Scanner``); any other scanner is used as
+    given, its ``col`` read from ``data``.
+
+    ``active``: optional mask of the queries to scan. ``hi_q``:
+    optional per-query exclusive rank bound (clipped to edges[-1]) —
+    one job scans each query exactly to its own target, so callers
+    whose per-query probe depths are already known (LAET budgets, ELP
+    post-stop extension targets) need ONE scan instead of a log2-deep
+    ladder of stage jobs."""
+    spark = data.sparkSession
+    if codec is None:
+        codec = FlatScanner()
+    elif isinstance(codec, tuple):
+        codec = SQ8Scanner(*codec)
+    nq = len(qids)
+    lo = edges[0]
+    hi = min(edges[-1], ranked.shape[1], nlist)
+    if active is None:
+        active = np.ones(nq, dtype=bool)
+    act = np.where(active)[0]
+    if len(act) == 0 or hi <= lo:
+        return spark.createDataFrame([], BUCKET_SCHEMA)
+    inv = _inv_rank(ranked, nlist, hi)
+    cols = ranked[act, lo:hi]
+    if hi_q is None:
+        bhi = hi
+    else:
+        bhi = np.minimum(np.asarray(hi_q, dtype=np.int64), hi)
+        mask = np.arange(lo, hi)[None, :] < bhi[act, None]
+        if not mask.any():
+            return spark.createDataFrame([], BUCKET_SCHEMA)
+        cols = cols[mask]
+    probed = np.unique(cols).tolist()
+    # bucket of rank r: index of the last edge <= r
+    bucket_of_rank = np.searchsorted(np.asarray(edges), np.arange(hi), side="right") - 1
+    nb = len(edges) - 1
+    bc = spark.sparkContext.broadcast(
+        (
+            qids,
+            np.asarray(qmat),
+            inv,
+            active.copy(),
+            bucket_of_rank.astype(np.int32),
+            codec,
+            bhi,
+        )
+    )
+
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        bqids, bq, binv, bact, brank2b, scanner, bbhi = bc.value
+        score = scanner.kernel(bq, metric)
+        state_d = state_i = None
+        touched = np.zeros((len(bqids), nb), dtype=bool)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             if state_d is None:
-                state_d = np.full((len(bqids), k), np.inf)
-                state_i = np.full((len(bqids), k), -1, dtype=np.int64)
+                state_d = np.full((len(bqids), nb, k), np.inf)
+                state_i = np.full((len(bqids), nb, k), -1, dtype=np.int64)
             ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            codes = _binary_matrix(batch.column(1))
+            vals = scanner.decode(batch.column(1))
             lns = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            mat = sq_dec.decode_np(codes) if sq_dec is not None else None
             for ln in np.unique(lns):
                 r = binv[:, int(ln)]
-                sel = np.where((r >= lo) & (r < hi))[0]
+                sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
                 if len(sel) == 0:
                     continue
                 m = lns == ln
-                if sq_dec is not None:
-                    dist = _dist_block(bq[sel], qn[sel], mat[m], metric)
-                elif qbits is not None:
-                    from auncel_spark.index.binary import _hamming_matrix
-
-                    dist = _hamming_matrix(qbits[sel], codes[m]).astype(np.float64)
-                else:
-                    nL = int(m.sum())
-                    # tile sel so the (ns × nL) gather block stays
-                    # bounded (STATUS kernel-memory discipline)
-                    blk = max(1, 4_000_000 // max(nL, 1))
-                    if len(sel) > blk:
-                        dist = np.concatenate(
-                            [
-                                pq_dist(sel[i : i + blk], codes[m], int(ln))
-                                for i in range(0, len(sel), blk)
-                            ]
+                si_all = brank2b[r[sel]]
+                for q0, ss, nd, ni in _tiled_topk(score, sel, vals[m], ids[m], int(ln), k):
+                    si = si_all[q0 : q0 + len(ss)]
+                    for b in np.unique(si):
+                        pick = si == b
+                        rows = ss[pick]
+                        _merge_rows(
+                            state_d[:, b, :], state_i[:, b, :], rows, nd[pick], ni[pick]
                         )
-                    else:
-                        dist = pq_dist(sel, codes[m], int(ln))
-                nd, ni = _group_topk(dist, ids[m], k)
-                _merge_rows(state_d, state_i, sel, nd, ni)
-                touched[sel] = True
+                        touched[rows, b] = True
         if state_d is None or not touched.any():
             return
-        t = np.where(touched)[0]
-        keep = state_i[t] >= 0
+        tq, tb = np.where(touched)
+        keep = state_i[tq, tb] >= 0  # (nt, k)
         yield pa.RecordBatch.from_pydict(
             {
-                "qid": np.repeat(bqids[t], k)[keep.ravel()],
-                "id": state_i[t].ravel()[keep.ravel()],
-                "dist": state_d[t].ravel()[keep.ravel()],
+                "qid": np.repeat(bqids[tq], k)[keep.ravel()],
+                "si": np.repeat(tb.astype(np.int32), k)[keep.ravel()],
+                "id": state_i[tq, tb].ravel()[keep.ravel()],
+                "dist": state_d[tq, tb].ravel()[keep.ravel()],
             }
         )
 
-    # Salted skew split: Spark's size-sorted file bin-packing puts the
-    # biggest lists — which are also the most-probed under clustered
-    # queries — into the SAME task, and scan cost is
-    # probes(list)·rows(list), so that task straggles (measured 85s vs
-    # 2s siblings at 1M×nlist=1024). Hashing on (list_no, salt) over
-    # the default parallelism splits each hot list _SALT ways while
-    # keeping list locality (a task holds whole (list, salt) groups, so
-    # per-list LUT state is built O(groups/task) times, not O(nlist)
-    # times). Shuffle volume = the pruned CODES — M bytes/row, cheap.
-    # sortWithinPartitions: the repartition interleaves a task's
-    # ~(nlist·_SALT/tasks) groups row-by-row, so every Arrow batch
-    # fragmented EVERY group into ~40-row slivers — and the scan pays
-    # one k-wide state merge per (group, batch) fragment (measured:
-    # ~8000 merges/task at 10M with k·kf=1280 states = the dominant ADC
-    # cost). Sorting makes lists contiguous: one fragment per group per
-    # batch boundary, ~30x fewer merges.
-    pruned = (
-        data.filter(F.col("list_no").isin(probed))
-        .select("id", F.col(code_col), F.col("list_no").cast("long"))
-        .repartition(
-            spark.sparkContext.defaultParallelism,
-            F.col("list_no"),
-            F.pmod(F.col("id"), F.lit(_SALT)),
-        )
-        .sortWithinPartitions("list_no")
+    pruned = data.filter(F.col("list_no").isin(probed)).select(
+        "id", codec.col, F.col("list_no").cast("long")
     )
-    return pruned.mapInArrow(scan, schema=WINDOW_SCHEMA)
+    return pruned.mapInArrow(scan, schema=BUCKET_SCHEMA)
 
 
 def reduce_bucketed(partial: DataFrame, k: int) -> "pd.DataFrame":

@@ -502,36 +502,3 @@ def extract_byte_features(
         df.select(id_col, payload_col), payload_col
     ).mapInPandas(work, schema=schema)
 
-
-def frame_sample(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "id",
-    every_n_bytes: int = 64,
-    frame_len: int = 8,
-) -> DataFrame:
-    """Frame/segment sampler over an opaque payload (the video
-    frame-sampling shape): emit one row per sampled window with its
-    offset — a 1→N flatMap, the partition-preserving pattern real
-    frame extraction uses."""
-    schema = "id bigint, frame_no int, offset bigint, frame binary"
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, fnos, offs, frames = [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(b)
-                for fno, off in enumerate(range(0, len(raw), every_n_bytes)):
-                    ids.append(i)
-                    fnos.append(fno)
-                    offs.append(off)
-                    frames.append(raw[off : off + frame_len])
-            yield pd.DataFrame(
-                {"id": ids, "frame_no": fnos, "offset": offs, "frame": frames}
-            )
-
-    return bound_payload_partitions(
-        df.select(id_col, payload_col), payload_col
-    ).mapInPandas(work, schema=schema)

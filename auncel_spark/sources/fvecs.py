@@ -99,21 +99,6 @@ def _parse_fvecs(buf: bytes, dtype: np.dtype, d: int | None = None) -> np.ndarra
     return body.reshape(n, d)
 
 
-def _parse_fbin(buf: bytes, dtype: np.dtype) -> np.ndarray:
-    n, d = struct.unpack("<ii", buf[:8])
-    if n < 0 or d <= 0:
-        raise ValueError(f"fbin: invalid header n={n} d={d}")
-    if len(buf) - 8 != n * d * dtype.itemsize:
-        raise ValueError(
-            f"fbin: body is {len(buf) - 8} bytes, header promises "
-            f"{n * d * dtype.itemsize}"
-        )
-    body = np.frombuffer(buf, dtype=dtype, offset=8, count=n * d)
-    if dtype == np.int8:  # int8 data is cast up to float (bound.cpp:81-91)
-        body = body.astype(np.float32)
-    return body.reshape(n, d)
-
-
 def _plan_chunks(
     spark: SparkSession, path: str, fmt: str, dtype: np.dtype, chunk_bytes: int
 ) -> pd.DataFrame:
@@ -132,9 +117,14 @@ def _plan_chunks(
             rec = 4 + d * 4
             data_off, body = 0, size
         else:  # fbin
-            _n, d = struct.unpack("<ii", head)
+            n, d = struct.unpack("<ii", head)
             rec = d * dtype.itemsize
             data_off, body = 8, size - 8
+            if n < 0 or d <= 0 or body != n * rec:
+                raise ValueError(
+                    f"fbin: {p} header says n={n} d={d} ({n * rec} body "
+                    f"bytes) but the body is {body} bytes"
+                )
         if d <= 0 or body % rec != 0:
             raise ValueError(f"{fmt}: {p} is truncated or has invalid d={d}")
         n = body // rec
@@ -266,9 +256,3 @@ def write_fvecs_dist(
 ) -> list[tuple[str, int]]:
     """Distributed fvecs export: returns [(part_path, n_rows), ...]."""
     return _write_parts(df, dir_path, vec_col, np.float32, "fvecs")
-
-
-def write_ivecs_dist(
-    df: DataFrame, dir_path: str, vec_col: str = "vec"
-) -> list[tuple[str, int]]:
-    return _write_parts(df, dir_path, vec_col, np.int32, "ivecs")

@@ -5,10 +5,24 @@ index, and pickles the result rows (qid, pos, id, dist) and
 ``return_info`` arrays of ``IVFIndex.search``, ``ErrorProfile.search``,
 ``ErrorProfile.time_search`` and ``LearnedTermination.search`` — first on
 the flat lists, then on the SQ8 scan replica with its refine sidecar.
-``compare`` checks two dumps with ``DataFrame.equals`` / ``array_equal``
-and exits non-zero on any difference. A refactor that claims "the same
-bits" runs ``dump`` once per tree (e.g. a ``git archive`` of the parent
-and the working tree) and ``compare`` on the two files.
+A third, coded section dumps searches over coded lists at nprobe <
+nlist: ``IVFPQIndex.search`` (residual L2 and IP), ``search_refine``
+against a DataFrame base, ``IVFSQIndex.search`` (8bit and 4bit) and
+``BinaryIVFIndex.search``. ``compare`` checks two dumps with
+``DataFrame.equals`` / ``array_equal`` and exits non-zero on any
+difference. A refactor that claims "the same bits" runs ``dump`` once
+per tree (e.g. a ``git archive`` of the parent and the working tree) and
+``compare`` on the two files.
+
+One exception: the distances of ``IVFPQIndex.search`` and
+``IVFSQIndex.search`` need only agree within 1e-9 relative (qid, pos
+and id must still be equal). Their scan reads a list in whichever row
+groups the task layout gives it, and BLAS may round one element of a
+GEMM differently when the block has another shape: the IVF-SQ distance
+block is one GEMM per row group, and a PQ scan task builds the
+query-side lookup table with one GEMM over the queries it meets first.
+A change of task layout may so move a coded distance by a rounding
+step.
 
 Usage:
     python scripts/output_identity.py dump TREE OUT.pkl [--corpus small|perf] [--work DIR]
@@ -31,6 +45,9 @@ import sys
 import tempfile
 
 import numpy as np
+
+# dumps whose dist may move by a rounding step with the task layout
+ROUNDED = ("coded/ivfpq.search/", "coded/ivfsq.search/")
 
 CORPORA = {
     # n_blobs, per_blob, d, nq, n_train, nlist, max_topk, topk
@@ -71,7 +88,11 @@ def _frame(spark, ids, x, id_col: str):
 
 def dump(tree: str, out: str, corpus: str, work: str) -> None:
     tree = os.path.abspath(tree)
+    out, work = os.path.abspath(out), os.path.abspath(work)
     sys.path.insert(0, tree)
+    # Python workers start with their cwd first on sys.path: run from
+    # the tree, or a tree under the cwd shadows the one given
+    os.chdir(tree)
     # Python workers import the engine too: set before the JVM starts
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (tree, os.environ.get("PYTHONPATH")) if p
@@ -80,7 +101,12 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
 
     if not os.path.abspath(auncel_spark.__file__).startswith(tree + os.sep):
         raise SystemExit(f"engine imported from {auncel_spark.__file__}, not {tree}")
+    from auncel_spark.config import Metric
+    from auncel_spark.index.binary import BinaryIVFIndex, pack_bits_np
     from auncel_spark.index.ivf import IVFIndex
+    from auncel_spark.index.ivfpq import IVFPQIndex
+    from auncel_spark.index.ivfsq import IVFSQIndex
+    from auncel_spark.index.pq import ProductQuantizer
     from auncel_spark.profile.error_profile import ErrorProfile
     from auncel_spark.profile.laet import LearnedTermination
     from auncel_spark.session import get_spark
@@ -121,6 +147,40 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
         got[f"{mode}/elp.time_search"] = (rows(res), info(inf))
         res, inf = lt.search(queries, topk, return_info=True)
         got[f"{mode}/laet.search"] = (rows(res), info(inf))
+
+    # coded lists, every codec at nprobe < nlist
+    nprobe = 8
+    # seeded codebooks (sub-spaces of 4 dims, 256 codes each): 256
+    # residuals sliced per sub-space, so no tree trains its own
+    rng = np.random.default_rng(5)
+    resid = (xb - cents[_assign(xb, cents)])[rng.choice(len(xb), 256, replace=False)]
+    m = xb.shape[1] // 4
+    pq = ProductQuantizer(resid.reshape(256, m, 4).transpose(1, 0, 2).copy())
+    for metric in (Metric.L2, Metric.IP):
+        pidx = IVFPQIndex.build(
+            base, nlist=nlist, centroids=cents, pq=pq, metric=metric,
+            path=os.path.join(work, f"ivfpq_{metric.value}"),
+        )
+        got[f"coded/ivfpq.search/{metric.value}"] = (rows(pidx.search(queries, topk, nprobe)), {})
+        if metric == Metric.L2:
+            res = pidx.search_refine(queries, base, topk, nprobe)
+            got["coded/ivfpq.search_refine"] = (rows(res), {})
+    for qtype in ("8bit", "4bit"):
+        sidx = IVFSQIndex.build(
+            base, nlist=nlist, centroids=cents, qtype=qtype,
+            path=os.path.join(work, f"ivfsq_{qtype}"),
+        )
+        got[f"coded/ivfsq.search/{qtype}"] = (rows(sidx.search(queries, topk, nprobe)), {})
+
+    def bits(x, id_col):
+        return spark.createDataFrame(
+            [(i, bytes(b)) for i, b in enumerate(pack_bits_np(x > 0))],
+            f"{id_col} bigint, bits binary",
+        )
+
+    bidx = BinaryIVFIndex.build(bits(xb, "id"), nlist=16)
+    got["coded/binary_ivf.search"] = (rows(bidx.search(bits(xq, "qid"), topk, 4)), {})
+
     with open(out, "wb") as f:
         pickle.dump(got, f)
     for name, (pdf, _) in got.items():
@@ -139,7 +199,14 @@ def compare(a: str, b: str) -> int:
             bad += 1
             continue
         (ra, ia), (rb, ib) = da[name], db[name]
-        same = ra.equals(rb) and ia.keys() == ib.keys()
+        if name.startswith(ROUNDED):
+            keys = ["qid", "pos", "id"]
+            same = ra[keys].equals(rb[keys]) and np.allclose(
+                ra["dist"], rb["dist"], rtol=1e-9, atol=0
+            )
+        else:
+            same = ra.equals(rb)
+        same = same and ia.keys() == ib.keys()
         same = same and all(np.array_equal(ia[k], ib[k]) for k in ia)
         print(f"{'same' if same else 'DIFF'} {name} ({len(ra)} rows)")
         bad += not same

@@ -224,3 +224,45 @@ def test_spectral_hash_beats_random_and_roundtrips(spark, base_df, query_df, tin
         got_ids.setdefault(r["qid"], set()).add(r["id"])
     rec = np.mean([len(gt_ids[q] & got_ids.get(q, set())) / K for q in gt_ids])
     assert rec > 3 * K / len(xb)  # far above the random-k baseline
+
+
+def test_hamming_range_count_no_queries(bin_data):
+    """No queries → an empty (qid, cnt) frame, not a worker error."""
+    _, _, base, queries = bin_data
+    res = hamming_range_count(queries.limit(0), base, 28)
+    assert res.columns == ["qid", "cnt"]
+    assert res.count() == 0
+
+
+def test_binary_ivf_partial_probe_matches_numpy(bin_data):
+    """At nprobe < nlist each query scans exactly its nprobe
+    lowest-Hamming lists (stable argsort over the medoids), ranked by
+    (dist, id) — a numpy replay of the build's medoid assignment."""
+    xb, xq, base, queries = bin_data
+    nlist, nprobe = 8, 3
+    idx = BinaryIVFIndex.build(base, nlist=nlist)
+    cents = xb[:nlist]  # medoids: the nlist lowest-id codes
+    lists = (xb[:, None, :] != cents[None]).sum(-1).argmin(axis=1)
+    dq = (xq[:, None, :] != cents[None]).sum(-1)
+    probe = np.argsort(dq, axis=1, kind="stable")[:, :nprobe]
+    res = idx.search(queries, K, nprobe=nprobe)
+    got = {(r["qid"], r["pos"]): (r["id"], r["dist"]) for r in res.collect()}
+    assert len(got) == xq.shape[0] * K
+    ids = np.arange(xb.shape[0])
+    for qi in range(xq.shape[0]):
+        m = np.isin(lists, probe[qi])
+        d = (xq[qi][None] != xb[m]).sum(-1)
+        for p, j in enumerate(np.lexsort((ids[m], d))[:K]):
+            assert got[(qi, p)] == (ids[m][j], d[j])
+
+
+def test_fbin_header_count_checked(spark, tmp_path):
+    """A header n that disagrees with the body is rejected, not read
+    as however many whole records the body holds."""
+    mat = np.zeros((9, 8), dtype=np.float32)
+    p = str(tmp_path / "short.fbin")
+    with open(p, "wb") as f:
+        f.write(struct.pack("<ii", 10, 8))
+        f.write(mat.tobytes())
+    with pytest.raises(ValueError, match="n=10"):
+        read_fbin(spark, p)

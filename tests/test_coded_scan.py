@@ -1,5 +1,7 @@
-"""Broadcast-queries coded scan (index/scan.py scan_window_coded) —
-the only search path of IVF-SQ and IVF-PQ — against a numpy reference.
+"""The ranked-list kernel (index/scan.py ``scan_ranked``) with the
+coded scanners — ``SQScanner`` and ``PQScanner``, the search path of
+IVF-SQ and IVF-PQ through ``IVFIndex.search`` — against a numpy
+reference.
 
 The reference scores every decoded code in each query's ``nprobe``
 nearest lists directly (the InvertedListScanner semantics of
@@ -169,13 +171,12 @@ def test_tiled_topk_list_dimension_chunking():
     import numpy as np
 
     import auncel_spark.index.scan as scan_mod
-    from auncel_spark.index.scan import _merge_rows, _tiled_topk
+    from auncel_spark.index.scan import FlatScanner, _merge_rows, _tiled_topk
     from auncel_spark.operators.knn import Metric
 
     rng = np.random.default_rng(11)
     nq, nL, d, k = 7, 10000, 8, 5  # nL > the 4096 chunk floor -> 3 list chunks
     bq = rng.standard_normal((nq, d))
-    qn = (bq * bq).sum(axis=1)
     mat = rng.standard_normal((nL, d))
     ids = rng.permutation(nL).astype(np.int64)
     sel = np.arange(nq)
@@ -185,7 +186,8 @@ def test_tiled_topk_list_dimension_chunking():
     try:
         state_d = np.full((nq, k), np.inf)
         state_i = np.full((nq, k), -1, dtype=np.int64)
-        for _, ss, nd, ni in _tiled_topk(bq, qn, sel, mat, ids, Metric.L2, k):
+        score = FlatScanner().kernel(bq, Metric.L2)
+        for _, ss, nd, ni in _tiled_topk(score, sel, mat, ids, 0, k):
             _merge_rows(state_d, state_i, ss, nd, ni)
     finally:
         scan_mod._TILE_ELEMS = old
@@ -224,3 +226,24 @@ def test_group_topk_inf_padding_contract():
         assert (i[r, :nf] == ids[finite][ref]).all()
         assert (d[r, :nf] == dist[r][finite][ref]).all()
         assert np.isinf(d[r, nf:]).all()
+
+
+def test_coded_search_no_queries(spark, base_df, query_df):
+    """An empty query frame gives 0 rows from every coded search: IVF-PQ
+    (plain and refined), IVF-SQ and binary IVF."""
+    from auncel_spark.index.binary import BinaryIVFIndex, pack_bits_np
+
+    none = query_df.limit(0)
+    pq = IVFPQIndex.build(base_df, nlist=NLIST, M=4, kmeans_iter=5)
+    sq = IVFSQIndex.build(base_df, nlist=NLIST, kmeans_iter=5)
+    bits = pack_bits_np(np.random.default_rng(3).integers(0, 2, (40, 16)))
+    bidx = BinaryIVFIndex.build(
+        spark.createDataFrame(
+            [(i, bytes(b)) for i, b in enumerate(bits)], "id bigint, bits binary"
+        ),
+        nlist=4,
+    )
+    assert pq.search(none, K, NPROBE).count() == 0
+    assert pq.search_refine(none, base_df, K, NPROBE).count() == 0
+    assert sq.search(none, K, NPROBE).count() == 0
+    assert bidx.search(spark.createDataFrame([], "qid bigint, bits binary"), K, 2).count() == 0
