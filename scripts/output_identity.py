@@ -7,7 +7,8 @@ index, and pickles the result rows (qid, pos, id, dist) and
 the flat lists, then on the SQ8 scan replica with its refine sidecar.
 A third, coded section dumps searches over coded lists at nprobe <
 nlist: ``IVFPQIndex.search`` (residual L2 and IP), ``search_refine``
-against a DataFrame base, ``IVFSQIndex.search`` (8bit and 4bit) and
+against a DataFrame base (twice, so the second call reads the store the
+first wrote), ``IVFSQIndex.search`` (8bit and 4bit) and
 ``BinaryIVFIndex.search``. ``compare`` checks two dumps with
 ``DataFrame.equals`` / ``array_equal`` and exits non-zero on any
 difference. A refactor that claims "the same bits" runs ``dump`` once
@@ -163,8 +164,11 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
         )
         got[f"coded/ivfpq.search/{metric.value}"] = (rows(pidx.search(queries, topk, nprobe)), {})
         if metric == Metric.L2:
-            res = pidx.search_refine(queries, base, topk, nprobe)
-            got["coded/ivfpq.search_refine"] = (rows(res), {})
+            # twice with one base: the second call reads the store the
+            # first one wrote from it
+            for call in ("", "/again"):
+                res = pidx.search_refine(queries, base, topk, nprobe)
+                got[f"coded/ivfpq.search_refine{call}"] = (rows(res), {})
     for qtype in ("8bit", "4bit"):
         sidx = IVFSQIndex.build(
             base, nlist=nlist, centroids=cents, qtype=qtype,

@@ -127,6 +127,69 @@ def test_ivfpqr_search_uses_bcast_candidates(base_df, query_df, tiny_vectors):
     assert hits / (len(xq) * K) > 0.5
 
 
+@pytest.mark.parametrize("metric", [Metric.L2, Metric.IP])
+def test_search_refine_dataframe_base(spark, base_df, query_df, tiny_vectors, metric):
+    """``search_refine`` against an (id, vec) DataFrame base == a numpy
+    re-rank of the ``search(k·k_factor)`` candidates in (dist, id)
+    order. The base is read once: a second call with the same base
+    DataFrame runs no task over it, and so fewer jobs than the first."""
+    xb, xq = tiny_vectors
+    kf = 4
+    idx = IVFPQIndex.build(base_df, nlist=NLIST, M=4, metric=metric, kmeans_iter=5)
+    cand = idx.search(query_df, K * kf, NPROBE).toPandas()
+    sc = spark.sparkContext
+    read = sc.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            read.add(len(b))
+            yield b
+
+    base = base_df.mapInPandas(counted, base_df.schema)
+    q, b = xq.astype(np.float64), xb.astype(np.float64)
+    jobs = []
+    for call in ("first", "second"):
+        group = f"search_refine_{metric.value}_{call}"
+        sc.setJobGroup(group, group)
+        try:
+            res = idx.search_refine(query_df, base, K, NPROBE, k_factor=kf).toPandas()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        if call == "first":
+            assert read.value == len(xb)
+        for qi in range(len(xq)):
+            c = cand[cand.qid == qi]["id"].to_numpy(dtype=np.int64)
+            if metric == Metric.L2:
+                d = ((b[c] - q[qi]) ** 2).sum(1)
+            else:
+                d = -(b[c] * q[qi]).sum(1)
+            order = np.lexsort((c, d))[:K]
+            sub = res[res.qid == qi].sort_values("pos")
+            np.testing.assert_array_equal(sub["pos"].to_numpy(), np.arange(len(order)))
+            np.testing.assert_array_equal(sub["id"].to_numpy(), c[order])
+            np.testing.assert_allclose(sub["dist"].to_numpy(), d[order], rtol=0, atol=1e-12)
+    assert read.value == len(xb), "the second call scanned the base again"
+    assert jobs[1] < jobs[0], jobs
+
+
+def test_search_refine_rejects_double_base(base_df, query_df):
+    """The refine store holds float32 vectors, so an ``array<double>``
+    base raises instead of re-ranking silently rounded vectors; the
+    same base cast to ``array<float>`` states the rounding and is
+    served like the float base."""
+    from pyspark.sql import functions as F
+
+    idx = IVFPQIndex.build(base_df, nlist=NLIST, M=4, kmeans_iter=5)
+    dbl = base_df.select("id", F.col("vec").cast("array<double>").alias("vec"))
+    with pytest.raises(ValueError, match="array<float>"):
+        idx.search_refine(query_df, dbl, K, NPROBE)
+    flt = dbl.select("id", F.col("vec").cast("array<float>").alias("vec"))
+    assert _rows(idx.search_refine(query_df, flt, K, NPROBE)) == _rows(
+        idx.search_refine(query_df, base_df, K, NPROBE)
+    )
+
+
 def test_group_topk_exact_under_massive_ties():
     """ADVICE r04: the argpartition fast path keeps k+16 rows before
     the exact lexsort — when >16 elements tie exactly at the k-th

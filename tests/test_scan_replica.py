@@ -222,6 +222,32 @@ def test_manifest_restart(spark, tmp_path):
     assert stats["rows"] == 2000
     got = np.fromfile(os.path.join(rdir, "vectors.f32"), dtype=np.float32)
     np.testing.assert_array_equal(got, full)
+    # the resumed id stream still maps every id to its own vector
+    np.testing.assert_array_equal(RefineBlob(idx.data_path).gather(ids), vec)
+
+
+@pytest.mark.parametrize("ids", [[0, 0, 2, 3], [5, 9, 9, 12]])
+def test_blob_rejects_duplicate_ids(tmp_path, ids):
+    """A store addressed by id needs unique ids. [0, 0, 2, 3] spans
+    0..n-1 yet repeats 0: without the check, absent id 1 read id 0's
+    vector and the first copy of id 0 could not be reached."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "lists" / "list_no=0"
+    part.mkdir(parents=True)
+    vec = np.arange(4 * D, dtype=np.float32).reshape(4, D)
+    pq.write_table(
+        pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "vec": pa.array([r.tolist() for r in vec], pa.list_(pa.float32())),
+        }),
+        str(part / "part-0.parquet"),
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="duplicate ids"):
+        build_refine_blob(out, str(tmp_path / "lists"), D)
+    assert not RefineBlob.exists(out)
 
 
 def test_interrupted_swap_refuses_partial_flat(spark, tmp_path):
