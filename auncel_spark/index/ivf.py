@@ -762,9 +762,11 @@ class IVFIndex:
         distances computed and wall times for the quantization and scan
         phases. ndis is Σ over (query, probed list) of the list's row
         count — every probed row is scored against every query probing
-        its list — taken from one aggregation over the probed lists
-        (exact and retry-safe, unlike an accumulator bumped inside a
-        transformation)."""
+        its list — taken from one aggregation over the probed lists of
+        the scan source (exact and retry-safe, unlike an accumulator
+        bumped inside a transformation; after a swap ``data`` would
+        gather every probed vector from the refine blob just to count
+        rows)."""
         import time as _time
 
         qpdf = queries.select("qid", "vec").toPandas()
@@ -783,7 +785,8 @@ class IVFIndex:
         probed, probes = np.unique(ranked, return_counts=True)
         sizes = {
             int(r["list_no"]): int(r["count"])
-            for r in self.data.filter(F.col("list_no").isin(probed.tolist()))
+            for r in self._scanner()[0]
+            .filter(F.col("list_no").isin(probed.tolist()))
             .groupBy("list_no")
             .count()
             .collect()

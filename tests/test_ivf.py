@@ -92,13 +92,8 @@ def test_remove_ids_anti_join(base_df, tiny_vectors):
     assert kept.filter("id < 50").count() == 0
 
 
-def test_search_with_stats(base_df, query_df, tiny_vectors):
+def test_search_with_stats(base_df, query_df, tiny_vectors, tmp_path):
     xb, xq = tiny_vectors
-    idx = IVFIndex.build(base_df, nlist=NLIST, centroids=xb[:NLIST].astype(np.float64))
-    res, st = idx.search_with_stats(query_df, K, nprobe=4)
-    assert res.count() > 0
-    assert st["nq"] == 20 and st["nprobe"] == 4
-    assert 0 < st["nlists_scanned"] <= NLIST
     # every scanned (query, row) pair computed one distance: ndis is
     # Σ over (query, probed list) of the list's size
     b, q = xb.astype(np.float64), xq.astype(np.float64)
@@ -107,8 +102,24 @@ def test_search_with_stats(base_df, query_df, tiny_vectors):
         ((b[:, None, :] - c[None]) ** 2).sum(-1).argmin(axis=1), minlength=NLIST
     )
     probed = np.argsort(((q[:, None, :] - c[None]) ** 2).sum(-1), axis=1)[:, :4]
-    assert st["ndis"] == int(sizes[probed].sum())
-    assert st["search_time_s"] > 0
+    idx = IVFIndex.build(base_df, nlist=NLIST, centroids=c)
+    swapped = IVFIndex.build(base_df, nlist=NLIST, centroids=c, path=str(tmp_path / "ivf"))
+    swapped.build_scan_replica()
+    swapped.build_refine_sidecar(delete_source=True)
+
+    def gather_all():
+        raise AssertionError("counting list rows must not gather vectors")
+
+    # after the swap ``data`` gathers every vector from the refine blob;
+    # the list sizes come from the scan source (the SQ8 codes)
+    swapped._data_from_blob = gather_all
+    for index in (idx, swapped):
+        res, st = index.search_with_stats(query_df, K, nprobe=4)
+        assert res.count() > 0
+        assert st["nq"] == 20 and st["nprobe"] == 4
+        assert 0 < st["nlists_scanned"] <= NLIST
+        assert st["ndis"] == int(sizes[probed].sum())
+        assert st["search_time_s"] > 0
 
 
 def _jobs_of(sc, group: str, action) -> list[int]:
