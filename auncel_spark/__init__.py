@@ -5,8 +5,10 @@ A from-scratch re-expression of the capabilities of pkusys/Auncel
 Datasets") on top of the Spark DataFrame/SQL engine:
 
 - exact k-NN / range search over L2 and inner-product metrics,
-- IVF (inverted-file) indexes backed by ``partitionBy("list_no")``
-  Parquet so Catalyst partition pruning replaces posting-list seeks,
+- IVF (inverted-file) indexes whose lists live in one list-ordered,
+  memmapped file set per index (``index/list_store.py``, the
+  reference's ``OnDiskInvertedLists``): list scans, the exact refine and
+  the ``data`` view all read it,
 - PQ / SQ compression with ADC scanning in Arrow-vectorized kernels,
 - Auncel's error-profile system (phi–U traces + geometric recall
   prediction) expressed as a driver-staged iterative DataFrame job,
@@ -15,11 +17,11 @@ Datasets") on top of the Spark DataFrame/SQL engine:
 
 Design rule (SURVEY.md §4): the relational shell stays pure DataFrame so
 Catalyst does pruning/pushdown/AQE; numeric kernels run inside tasks —
-the scan kernels on Arrow batches (``mapInArrow``), encoders and
-k-means steps in ``mapInPandas``. Scans never bring the base to the
-driver: only small state (centroids, codebooks, traces — MBs) crosses
-to the driver or a broadcast, plus the exact refine's nq × pool
-candidate vectors, which ``RefineBlob.refine_topk`` reads there by
+the scan kernels in ``mapInArrow`` tasks that memmap the list store,
+encoders and k-means steps in ``mapInPandas``. Scans never bring the
+base to the driver: only small state (centroids, codebooks, traces —
+MBs) crosses to the driver or a broadcast, plus the exact refine's nq ×
+pool candidate vectors, which ``ListStore.refine_topk`` reads there by
 positioned reads.
 """
 

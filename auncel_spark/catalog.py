@@ -154,10 +154,9 @@ def _seed_centroids(spark: SparkSession, sf_dir: str, k: int) -> np.ndarray:
 
 def _seed_ivf(spark: SparkSession, sf_dir: str) -> IVFIndex:
     """The shared seed-centroid IVF index (deterministic; reused by
-    every IVF-family catalog query). Persisted to a temp dir so the
-    gate exercises the real partition-pruned Parquet scan path
-    (PartitionFilters INSET + broadcast probes), not just the cached
-    in-memory variant."""
+    every IVF-family catalog query). Persisted to a temp dir and loaded
+    back, so the gate exercises a loaded index's list store (the
+    probed lists memmapped by the scan tasks, broadcast queries)."""
 
     def _build():
         import tempfile
@@ -197,7 +196,7 @@ def q_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6+O7: fixed-nprobe IVF-Flat search through the real index path
-    (partition-pruned list join + Arrow GEMM scan + window top-k)."""
+    (probed-list scan of the list store + GEMM + window top-k)."""
     idx = _seed_ivf(spark, sf_dir)
     res = idx.search(_emb_queries(spark, sf_dir), K, nprobe=NPROBE)
     return res.select("qid", F.col("pos").cast("bigint").alias("pos"), "id")
@@ -505,7 +504,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for ann_cosine_topk (which is the brute-force
     baseline): L2-normalize, then IVF with the IP metric — dot on unit
-    vectors IS cosine, so a partition-pruned probe scan replaces the
+    vectors IS cosine, so a probed-list scan replaces the
     full cross join. Seed-IVF trick keeps it oracle-expressible."""
     from auncel_spark.functions.vector import l2_normalize
     from auncel_spark.index.ivf import IVFIndex

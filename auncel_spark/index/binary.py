@@ -207,14 +207,15 @@ def generalized_hamming_knn(
 
 class BinaryIVFIndex:
     """IVF shell over binary codes (``IndexBinaryIVF``): coarse
-    centroids in bit space (medoids by Hamming), lists partitioned, scan
-    kernel = popcount. Reuses the float IVF's relational plan."""
+    centroids in bit space (medoids by Hamming), the lists a ``bits``
+    column of a list store (index/list_store.py), scan kernel =
+    popcount. Reuses the float IVF's ranked-list scan."""
 
     def __init__(self, spark, centroids_bits: np.ndarray):
         self.spark = spark
         self.centroids = centroids_bits  # (nlist, code_size) uint8
         self.nlist = centroids_bits.shape[0]
-        self._data = None
+        self.store = None
 
     @classmethod
     def build(cls, base: DataFrame, nlist: int, id_col: str = "id", bits_col: str = "bits"):
@@ -242,14 +243,18 @@ class BinaryIVFIndex:
             list(base.select(id_col, bits_col).schema.fields)
             + [T.StructField("list_no", T.IntegerType())]
         )
-        idx._data = base.select(id_col, bits_col).mapInPandas(assign, schema).cache()
-        idx._data.count()
+        from auncel_spark.index.list_store import temp_store
+
+        assigned = base.select(id_col, bits_col).mapInPandas(assign, schema)
+        idx.store = temp_store(
+            assigned.select(F.col(id_col).alias("id"), F.col(bits_col).alias("bits"), "list_no"),
+            idx.nlist, ("bits",),
+        )
         return idx
 
     def search(self, queries: DataFrame, k: int, nprobe: int) -> DataFrame:
         """The ranked-list kernel with the popcount scanner: each code
-        crosses Arrow once regardless of how many queries probe its
-        list."""
+        is read once regardless of how many queries probe its list."""
         from auncel_spark.config import Metric
         from auncel_spark.index.scan import HammingScanner, scan_ranked
 
@@ -262,7 +267,7 @@ class BinaryIVFIndex:
         cd = _hamming_matrix(qb, self.centroids)
         order = np.argsort(cd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
         partial = scan_ranked(
-            self._data, qids, qb, order, [0, nprobe], k, Metric.L2,
+            self.store, qids, qb, order, [0, nprobe], k, Metric.L2,
             self.nlist, codec=HammingScanner(),
         )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

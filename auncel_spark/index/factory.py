@@ -177,10 +177,11 @@ class SearchIndex:
 
     def save(self, path: str, spec_str: str) -> None:
         """Persist the full pipeline: spec + transform chain + codec
-        state + data tables. IVF-backed variants write their own list
-        layout; flat/coded variants write the (id, vec/code) table."""
+        state + data tables. IVF-backed variants copy their list store;
+        flat/coded variants write the (id, vec/code) table."""
         import json
         import os
+        import shutil
 
         import numpy as np
 
@@ -202,12 +203,10 @@ class SearchIndex:
             json.dump(meta, f)
         if self.ivf is not None:
             np.save(os.path.join(path, "centroids.npy"), self.ivf.centroids)
-            (
-                self.ivf.data.repartition("list_no")
-                .write.mode("overwrite")
-                .partitionBy("list_no")
-                .parquet(os.path.join(path, "lists"))
-            )
+            dst = os.path.join(path, "store")
+            if os.path.realpath(self.ivf.store.dir) != os.path.realpath(dst):
+                shutil.rmtree(dst, ignore_errors=True)
+                shutil.copytree(self.ivf.store.dir, dst)
         if self.coded is not None:
             self.coded.write.mode("overwrite").parquet(os.path.join(path, "coded"))
         self.base.write.mode("overwrite").parquet(os.path.join(path, "base"))
@@ -237,24 +236,23 @@ class SearchIndex:
         ivf = None
         if meta["index_type"] in ("ivfflat", "ivfsq", "ivfpq", "ivfpqr"):
             cents = np.load(os.path.join(path, "centroids.npy"))
-            data = spark.read.parquet(os.path.join(path, "lists"))
             if meta["index_type"] == "ivfpqr":
                 from auncel_spark.index.ivfpq import IVFPQRIndex
 
                 ivf = IVFPQRIndex(
-                    spark, cents, pq, None, metric, True, data,
+                    spark, cents, pq, path, metric, True,
                     refine_pq=ProductQuantizer.from_dict(meta["refine_pq"]),
                 )
             elif meta["index_type"] == "ivfpq":
                 from auncel_spark.index.ivfpq import IVFPQIndex
 
-                ivf = IVFPQIndex(spark, cents, pq, None, metric, True, data)
+                ivf = IVFPQIndex(spark, cents, pq, path, metric, True)
             elif meta["index_type"] == "ivfsq":
                 from auncel_spark.index.ivfsq import IVFSQIndex
 
-                ivf = IVFSQIndex(spark, cents, sq, None, metric, data)
+                ivf = IVFSQIndex(spark, cents, sq, path, metric)
             else:
-                ivf = IVFIndex(spark, cents, None, metric, data)
+                ivf = IVFIndex(spark, cents, path, metric)
         coded = None
         if os.path.isdir(os.path.join(path, "coded")):
             coded = spark.read.parquet(os.path.join(path, "coded"))

@@ -7,8 +7,8 @@ two sub-quantizers over the two vector halves; a cell is
 much finer partitioning for the same training cost.
 
 Spark shape: two argmin columns from two broadcast half-codebooks,
-composed into one ``list_no`` — after which the IVF shell (partitioned
-writes, pruned probe joins, window top-k) is reused unchanged. Probe
+composed into one ``list_no`` — after which the IVF shell (list store,
+ranked-list scan, window top-k) is reused unchanged. Probe
 ranking sorts cell pairs by the sum of half-distances (the reference's
 multi-sequence scan, here exact since nq·ksub² is small driver-side).
 """
@@ -79,8 +79,6 @@ class IMIIndex(IVFIndex):
             half1 = b.select("id", F.slice("vec", dsub + 1, d - dsub).alias("vec"))
             c0, _ = train_kmeans(half0, ksub, metric=metric, max_iter=kmeans_iter, seed=seed)
             c1, _ = train_kmeans(half1, ksub, metric=metric, max_iter=kmeans_iter, seed=seed + 1)
-        idx = cls(base.sparkSession, np.stack([c0, c1]), None, metric)
-
         # assignment: two half-argmins composed into list_no
         from typing import Iterator
 
@@ -104,9 +102,10 @@ class IMIIndex(IVFIndex):
         schema = T.StructType(
             list(b.schema.fields) + [T.StructField("list_no", T.IntegerType())]
         )
-        idx._data_df = b.mapInPandas(assign, schema).cache()
-        idx._data_df.count()
-        return idx
+        return cls(
+            base.sparkSession, np.stack([c0, c1]), None, metric,
+            data_df=b.mapInPandas(assign, schema),
+        )
 
     def coarse_rank(self, qids: np.ndarray, qmat: np.ndarray, nprobe: int):
         """Rank cells by d0(a) + d1(b) — the multi-sequence order."""

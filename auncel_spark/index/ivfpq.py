@@ -5,9 +5,9 @@ Reference (SURVEY.md §2.3 O8-O9): ``IndexIVFPQ``
 distance tables over (optionally residual) codes, gather-sum ADC, with
 ``IndexIVFPQR``/``IndexRefineFlat`` re-ranking on top.
 
-Storage: ``(id, code BINARY, list_no)`` partitioned by list_no — codes
-are M bytes instead of 4·d, cutting scan+shuffle bytes ~32× at d=64/M=8
-(SURVEY §7.3: what makes 100 TB realistic). Residual mode
+Storage: the ``code`` column of the index's list store (index/
+list_store.py) — codes are M bytes instead of 4·d, cutting scan bytes
+~32× at d=64/M=8 (SURVEY §7.3: what makes 100 TB realistic). Residual mode
 (``by_residual``, the reference default) encodes r = x − centroid(list)
 and builds one LUT per (query, probed list); plain mode builds one LUT
 per query.
@@ -31,6 +31,13 @@ from pyspark.sql.types import ArrayType, FloatType
 from auncel_spark.config import DEFAULT_NLIST, Metric
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.kmeans import assign_lists, train_kmeans
+from auncel_spark.index.list_store import (
+    RESULT_SCHEMA,
+    ListStore,
+    pair_topk,
+    temp_store,
+    write_store,
+)
 from auncel_spark.index.pq import ProductQuantizer
 
 # search_refine's store per DataFrame base, shared by every index that
@@ -39,6 +46,8 @@ _REFINE_STORES = weakref.WeakKeyDictionary()
 
 
 class IVFPQIndex(IVFIndex):
+    columns = ("code",)
+
     def __init__(
         self,
         spark: SparkSession,
@@ -243,14 +252,8 @@ class IVFPQIndex(IVFIndex):
                 coded = pq.encode(assigned, gemm=encode_gemm)
 
         idx = cls(spark, centroids, pq, path, metric, by_residual, rotation=rotation)
-        coded = coded.select("id", "code", "list_no")
+        idx._write_lists(coded, path)
         if path is not None:
-            (
-                coded.repartition("list_no")
-                .write.mode("overwrite")
-                .partitionBy("list_no")
-                .parquet(os.path.join(path, "lists"))
-            )
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump(
                     {
@@ -266,9 +269,6 @@ class IVFPQIndex(IVFIndex):
             np.save(os.path.join(path, "centroids.npy"), centroids)
             if rotation is not None:
                 np.save(os.path.join(path, "rotation.npy"), rotation)
-        else:
-            idx._data_df = coded.cache()
-            idx._data_df.count()
         return idx
 
     @classmethod
@@ -298,8 +298,8 @@ class IVFPQIndex(IVFIndex):
         )
 
     def _scanner(self):
-        """The code lists and their ADC scanner: term3 LUTs are built
-        lazily in-task, term2 rides in broadcast (index/scan.py)."""
+        """The store and its ADC scanner: term3 LUTs are built lazily
+        in-task, term2 rides in broadcast (index/scan.py)."""
         from auncel_spark.index.scan import PQScanner
 
         use_t2 = (
@@ -308,7 +308,7 @@ class IVFPQIndex(IVFIndex):
             and self.metric == Metric.L2
         )
         cents = self.enc_centroids if self.enc_centroids is not None else self.centroids
-        return self.data, PQScanner(
+        return self.store, PQScanner(
             self.pq.codebooks,
             cents=cents if self.by_residual else None,
             term2=self.precomputed_term2() if use_t2 else None,
@@ -334,16 +334,16 @@ class IVFPQIndex(IVFIndex):
 
         The queries cross to the driver once, and so do the nq·k·k_factor
         candidate pairs (driver-bounded by construction). The re-rank
-        reads each candidate's vector by id from a ``RefineBlob``
-        (``RefineBlob.refine_topk``: positioned reads and a numpy
-        kernel, no Spark job), as the reference's ``IndexRefineFlat``
-        reads its own id-addressed store and never scans the corpus.
-        ``full_base`` is a ``RefineBlob`` or an (id, vec) DataFrame with
-        unique ids. A DataFrame base is read once per DataFrame object:
-        its first ``search_refine`` (on any index) writes it into a
-        store that every later call with the same object reads, as
-        ``IVFIndex`` opens its list table once per index version and as
-        Spark's ``cache()`` behaves.
+        reads each candidate's vector by id from a ``ListStore``'s
+        ``vec`` column (``ListStore.refine_topk``: positioned reads and
+        a numpy kernel, no Spark job), as the reference's
+        ``IndexRefineFlat`` reads its own id-addressed store and never
+        scans the corpus. ``full_base`` is a ``ListStore`` with a
+        ``vec`` column (e.g. an IVF-Flat index's ``store``) or an (id,
+        vec) DataFrame with unique ids. A DataFrame base is read once
+        per DataFrame object: its first ``search_refine`` (on any index)
+        writes it into a store that every later call with the same
+        object reads, as Spark's ``cache()`` behaves.
 
         What a DataFrame base needs: ``vec`` must be ``array<float>``
         (the store holds float32, so an ``array<double>`` base raises
@@ -353,18 +353,16 @@ class IVFPQIndex(IVFIndex):
         with the store: plan driver disk about the size of the base.
         The executors write the base there first, so their writes must
         be visible to the driver — local mode or a shared filesystem.
-        On a cluster without one, pass a ``RefineBlob`` built on shared
-        storage (``IVFIndex.build_refine_sidecar``)."""
+        On a cluster without one, pass a ``ListStore`` built on shared
+        storage."""
         qids, qmat = self._query_arrays(queries)
         cand = self.search((qids, qmat), k * k_factor, nprobe).select("qid", "id").toPandas()
         if len(cand) == 0:
             # empty candidate set (e.g. empty query frame or all-empty
             # probed lists): nothing to re-rank
-            return self.spark.createDataFrame(
-                [], "qid bigint, pos int, id bigint, dist double"
-            )
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
         qpos = {int(x): i for i, x in enumerate(qids)}
-        return self._refine_store(full_base, qmat.shape[1]).refine_topk(
+        return self._refine_store(full_base).refine_topk(
             self.spark,
             qids,
             qmat,
@@ -374,41 +372,28 @@ class IVFPQIndex(IVFIndex):
             self.metric,
         )
 
-    def _refine_store(self, base, d: int):
-        """The ``RefineBlob`` that ``search_refine`` reads for ``base``:
-        the blob itself, or the store written from a DataFrame base on
-        its first use (one parquet write, then ``build_refine_blob``
-        appending one file at a time, so the driver never holds the
-        whole base)."""
-        import shutil
-        import tempfile
-
-        from auncel_spark.index.refine_blob import RefineBlob, build_refine_blob
-
-        if isinstance(base, RefineBlob):
+    def _refine_store(self, base) -> ListStore:
+        """The store that ``search_refine`` reads for ``base``: the
+        store itself, or the one written from a DataFrame base on its
+        first use (the list store writer with one list per partition of
+        the base and no shuffle, so the driver appends one staged file
+        at a time and never holds the whole base)."""
+        if isinstance(base, ListStore):
             return base
-        blob = _REFINE_STORES.get(base)
-        if blob is None:
+        store = _REFINE_STORES.get(base)
+        if store is None:
             vt = base.schema["vec"].dataType
             if not (isinstance(vt, ArrayType) and isinstance(vt.elementType, FloatType)):
                 raise ValueError(
                     "search_refine: a DataFrame base needs vec array<float> "
                     f"(the refine store is float32), got {vt.simpleString()}"
                 )
-            tmp = tempfile.mkdtemp(prefix="auncel-refine-")
-            try:
-                src = os.path.join(tmp, "src")
-                base.select("id", "vec").withColumn(
-                    "list_no", F.spark_partition_id()
-                ).write.partitionBy("list_no").parquet(src)
-                build_refine_blob(tmp, src, d, delete_source=True)
-                blob = RefineBlob(tmp)
-            except BaseException:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            weakref.finalize(blob, shutil.rmtree, tmp, ignore_errors=True)
-            _REFINE_STORES[base] = blob
-        return blob
+            store = temp_store(
+                base.withColumn("list_no", F.spark_partition_id()),
+                base.rdd.getNumPartitions(), ("vec",), shuffle=False,
+            )
+            _REFINE_STORES[base] = store
+        return store
 
 
 class IVFPQRIndex(IVFPQIndex):
@@ -417,8 +402,10 @@ class IVFPQRIndex(IVFPQIndex):
     and re-ranking reconstructs x̂ = c + z₁ + z₂ from CODES ONLY — the
     refine never touches raw vectors (unlike IndexRefineFlat), which is
     what matters when the uncompressed corpus is too big to scan.
-    Storage: lists carry (code, rcode); rcode adds refine_M bytes/row
-    (the reference defaults refine_M = 2·M)."""
+    Storage: the store carries ``code`` and ``rcode`` columns; rcode adds
+    refine_M bytes/row (the reference defaults refine_M = 2·M)."""
+
+    columns = ("code", "rcode")
 
     def __init__(self, *args, refine_pq: ProductQuantizer | None = None, **kw):
         super().__init__(*args, **kw)
@@ -458,23 +445,14 @@ class IVFPQRIndex(IVFPQIndex):
         # r2 = rvec − decode(code): the second-level residual
         r2 = _residual2_df(coded, pq)
         rpq = refine_pq or ProductQuantizer.train(r2, M=refine_M, nbits=nbits, vec_col="r2", seed=seed + 1)
-        full = rpq.encode(r2, vec_col="r2", code_col="rcode").select(
-            "id", "code", "rcode", "list_no"
-        )
+        full = rpq.encode(r2, vec_col="r2", code_col="rcode")
         idx = cls(
             spark, centroids, pq, path, metric, True, refine_pq=rpq
         )
+        idx._write_lists(full, path)
         if path is not None:
-            import json as _json
-
-            (
-                full.repartition("list_no")
-                .write.mode("overwrite")
-                .partitionBy("list_no")
-                .parquet(os.path.join(path, "lists"))
-            )
             with open(os.path.join(path, "meta.json"), "w") as f:
-                _json.dump(
+                json.dump(
                     {
                         "kind": "ivfpqr",
                         "nlist": idx.nlist,
@@ -487,9 +465,6 @@ class IVFPQRIndex(IVFPQIndex):
                     f,
                 )
             np.save(os.path.join(path, "centroids.npy"), centroids)
-        else:
-            idx._data_df = full.cache()
-            idx._data_df.count()
         return idx
 
     @classmethod
@@ -511,73 +486,38 @@ class IVFPQRIndex(IVFPQIndex):
         """ADC over the first-level codes for k·k_factor candidates,
         then codes-only re-rank through the second-level residual
         (IndexIVFPQR::search_preassigned two-pass shape)."""
-        cand = super().search(queries, k * k_factor, nprobe, qid_col, vec_col)
-        return self.refine_by_codes(
-            queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")),
-            cand.select("qid", "id"),
-            k,
-        )
+        qids, qmat = self._query_arrays(queries, qid_col, vec_col)
+        cand = super().search((qids, qmat), k * k_factor, nprobe)
+        return self.refine_by_codes((qids, qmat), cand, k)
 
-    def refine_by_codes(self, queries: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    def refine_by_codes(self, queries, cand: DataFrame, k: int) -> DataFrame:
         """Exact-in-reconstruction distances |q − (c + z₁ + z₂)|² for
-        the candidate pairs; no raw vectors are read."""
-        from auncel_spark.operators.topk import topk_per_query
-
-        qpdf = queries.toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        qmat = as_matrix(qpdf["vec"])
-        rows = self.data.join(F.broadcast(cand), "id").select(
-            "qid", "id", "code", "rcode", "list_no"
+        the (qid, id) candidate pairs, ranked as the vector refine ranks
+        (``pair_topk``); no raw vectors are read. ``queries``: a (qid,
+        vec) DataFrame or collected (qids, qmat) arrays. A driver-side
+        kernel: the candidates' ``code``/``rcode`` rows are read by
+        position through the store's id → row map, no Spark job."""
+        qids, qmat = self._query_arrays(queries)
+        pool = cand.select("qid", "id").toPandas()
+        if len(pool) == 0:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        qpos = {int(x): i for i, x in enumerate(qids)}
+        cand_qpos = pool["qid"].map(qpos).to_numpy(dtype=np.int64)
+        cand_ids = pool["id"].to_numpy(dtype=np.int64)
+        store = self.store
+        rows = store.rows_of(cand_ids)
+        xhat = (
+            self.centroids[store.list_of_rows(rows)]
+            + self.pq.decode_np(store.gather(cand_ids, "code"))
+            + self.refine_pq.decode_np(store.gather(cand_ids, "rcode"))
         )
-        bc = self.spark.sparkContext.broadcast(
-            (
-                qids,
-                qmat,
-                {int(q): i for i, q in enumerate(qids)},
-                self.pq.codebooks,
-                self.refine_pq.codebooks,
-                self.centroids,
-            )
-        )
-        is_l2 = self.metric == Metric.L2
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _, bq, qpos, books1, books2, cents = bc.value
-            k1 = ProductQuantizer(books1)
-            k2 = ProductQuantizer(books2)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                c1 = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]])
-                c2 = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["rcode"]])
-                xhat = (
-                    cents[pdf["list_no"].to_numpy()]
-                    + k1.decode_np(c1)
-                    + k2.decode_np(c2)
-                )
-                ids = pdf["id"].to_numpy(dtype=np.int64)
-                out_q, out_i, out_d = [], [], []
-                for qid, idxs in pdf.groupby("qid").indices.items():
-                    qv = bq[qpos[int(qid)]]
-                    sub = xhat[idxs]
-                    if is_l2:
-                        diff = sub - qv[None, :]
-                        dist = (diff * diff).sum(axis=1)
-                    else:
-                        dist = -(sub @ qv)
-                    out_q.append(np.full(len(idxs), qid, dtype=np.int64))
-                    out_i.append(ids[idxs])
-                    out_d.append(dist)
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "id": np.concatenate(out_i),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
-
-        scored = rows.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
-        return topk_per_query(scored, k).select("qid", "pos", "id", "dist")
+        qv = np.asarray(qmat, dtype=np.float64)[cand_qpos]
+        if self.metric == Metric.L2:
+            diff = xhat - qv
+            dist = (diff * diff).sum(axis=1)
+        else:
+            dist = -(xhat * qv).sum(axis=1)
+        return pair_topk(self.spark, qids, cand_qpos, cand_ids, dist, k)
 
 
 def _residual2_df(coded: DataFrame, pq: ProductQuantizer) -> DataFrame:
@@ -697,19 +637,14 @@ def split_ivfpq_lists(
     routed = flat_idx.data.select("id", "vec", "list_no").mapInPandas(
         route, "id bigint, rlist int"
     )
-    # 3) re-key the code table by the refined list id (codes unchanged)
+    # 3) re-key the codes by the refined list id (codes unchanged) into
+    #    the new index's store
     coded = (
         pq_idx.data.select("id", "code")
         .join(routed, "id")
         .select("id", "code", F.col("rlist").alias("list_no"))
     )
-    (
-        coded.repartition(write_partitions, "list_no")
-        .sortWithinPartitions("list_no")
-        .write.mode("overwrite")
-        .partitionBy("list_no")
-        .parquet(os.path.join(path, "lists"))
-    )
+    write_store(coded, path, nlist * split, IVFPQIndex.columns, partitions=write_partitions)
     child_flat = children.reshape(nlist * split, d)
     enc_of = np.repeat(np.arange(nlist, dtype=np.int32), split)
     with open(os.path.join(path, "meta.json"), "w") as f:

@@ -4,8 +4,9 @@ Reference (SURVEY.md §2.2 B8): ``IndexIVFScalarQuantizer``
 (``Auncel/IndexScalarQuantizer.h:90-150``): lists hold SQ codes
 (d bytes/vector at QT_8bit, d/2 at QT_4bit, 3d/4 at QT_6bit, 2d at
 QT_fp16), decoded on the fly inside the scan. Same storage layout and
-probe machinery as IVF-Flat/IVF-PQ; the scan kernel decodes each Arrow
-batch with the broadcast quantizer state before the GEMM.
+probe machinery as IVF-Flat/IVF-PQ: the codes are the ``code`` column
+of the index's list store, and the scan kernel decodes each list with
+the broadcast quantizer state before the GEMM.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from auncel_spark.index.sq import ScalarQuantizer
 
 
 class IVFSQIndex(IVFIndex):
+    columns = ("code",)
+
     def __init__(
         self,
         spark: SparkSession,
@@ -63,16 +66,8 @@ class IVFSQIndex(IVFIndex):
         centroids = np.asarray(centroids, dtype=np.float64)
         sq = ScalarQuantizer.train(b, rangestat=rangestat, rs_arg=rs_arg, qtype=qtype)
         idx = cls(spark, centroids, sq, path, metric)
-        coded = sq.encode(assign_lists(b, centroids, metric)).select(
-            "id", "code", "list_no"
-        )
+        idx._write_lists(sq.encode(assign_lists(b, centroids, metric)), path)
         if path is not None:
-            (
-                coded.repartition("list_no")
-                .write.mode("overwrite")
-                .partitionBy("list_no")
-                .parquet(os.path.join(path, "lists"))
-            )
             with open(os.path.join(path, "meta.json"), "w") as f:
                 json.dump(
                     {
@@ -85,9 +80,6 @@ class IVFSQIndex(IVFIndex):
                     f,
                 )
             np.save(os.path.join(path, "centroids.npy"), centroids)
-        else:
-            idx._data_df = coded.cache()
-            idx._data_df.count()
         return idx
 
     @classmethod
@@ -104,7 +96,7 @@ class IVFSQIndex(IVFIndex):
         )
 
     def _scanner(self):
-        """The code lists and their decoding scanner (index/scan.py)."""
+        """The store and its code-decoding scanner (index/scan.py)."""
         from auncel_spark.index.scan import SQScanner
 
-        return self.data, SQScanner(self.sq)
+        return self.store, SQScanner(self.sq)

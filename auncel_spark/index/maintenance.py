@@ -15,8 +15,9 @@ Reference (SURVEY.md §2.3 O18-O21):
 - ``IVFlib::SlidingIndexWindow`` (``Auncel/IVFlib.h:62-122``): rolling
   window of per-period invlist batches.
 
-All of these are one-line relational ops on the lists DataFrame —
-exactly why the Parquet-partitioned layout was chosen (SURVEY §2.4).
+Each is a relational op on an index's ``data`` view — the ``(id, vec,
+list_no)`` DataFrame read from its list store (index/list_store.py) —
+and an index made from the result writes that frame into a new store.
 """
 
 from __future__ import annotations
@@ -40,8 +41,7 @@ def merge_from(a: IVFIndex, b: IVFIndex) -> IVFIndex:
     be globally unique, as add_with_ids requires)."""
     check_compatible_for_merge(a, b)
     merged = a.data.unionByName(b.data)
-    out = IVFIndex(a.spark, a.centroids, None, a.metric, merged.cache())
-    return out
+    return IVFIndex(a.spark, a.centroids, None, a.metric, merged)
 
 
 def copy_subset_to(
@@ -60,13 +60,13 @@ def copy_subset_to(
     if mod is not None:
         m, r = mod
         d = d.filter(F.col("id") % m == r)
-    return IVFIndex(idx.spark, idx.centroids, None, idx.metric, d.cache())
+    return IVFIndex(idx.spark, idx.centroids, None, idx.metric, d)
 
 
 def set_invlist_range(idx: IVFIndex, list_lo: int, list_hi: int) -> IVFIndex:
     """``IVFlib::set_invlist_range``: restrict the searchable index to
-    posting lists [list_lo, list_hi) — a pure partition filter, no data
-    movement."""
+    posting lists [list_lo, list_hi): a filter on list_no, written into
+    the new index's store."""
     d = idx.data.filter(
         (F.col("list_no") >= list_lo) & (F.col("list_no") < list_hi)
     )
@@ -92,8 +92,8 @@ def reconstruct(idx: IVFIndex, ids: DataFrame, id_col: str = "id") -> DataFrame:
 
 class SlidingIndexWindow:
     """``SlidingIndexWindow.step`` semantics: a rolling window of the
-    last W ingest batches; the searchable table is their union. Batch
-    eviction is partition drop — no rewrite of survivors."""
+    last W ingest batches; the searchable index is a store written from
+    their union at each step. Evicting a batch drops its cached frame."""
 
     def __init__(self, base_index: IVFIndex, window: int):
         self.index = base_index

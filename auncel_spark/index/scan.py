@@ -8,9 +8,16 @@ training queries over a 1M corpus that is 5·10⁹ joined rows (~4 TB of
 vector payload through Arrow). These kernels restore the reference's
 asymptotics, distributed:
 
-- the (pruned) lists table is scanned ONCE — each vector crosses the
-  Arrow boundary exactly one time regardless of how many queries probe
-  its list;
+- the lists live in the index's list store (index/list_store.py): one
+  list-ordered file per column in which list l is the contiguous row
+  range ``[offsets[l], offsets[l+1])``, as in the reference's
+  ``OnDiskInvertedLists`` (``Auncel/OnDiskInvertedLists.h:51-110``);
+- one Spark job of ``defaultParallelism`` tasks scans the probed lists.
+  The broadcast gives each task a contiguous run of them, balanced by
+  row count from ``offsets``: no file listing, no sampling job, no
+  shuffle before the kernel. Each task memmaps its scanner's column,
+  issues one ``POSIX_FADV_WILLNEED`` per contiguous byte range of its
+  run, and reads each list's slice once, however many queries probe it;
 - the query matrix + a per-query list→rank table are broadcast (a few
   MB at nq=5000, nlist=1024 — shard bigger query batches);
 - each task computes real BLAS GEMMs (list block × all probing queries)
@@ -30,15 +37,16 @@ reference gets for free inside its sequential loop,
 
 Every list codec runs through that one loop. As the reference's index
 types each supply only an ``InvertedListScanner``
-(``Auncel/IndexIVF.h:316-358``), a scanner here supplies only the list
-column it reads, the decode of that Arrow column, and a per-task scorer
-of (queries × decoded rows) distances: fp32 vectors (``FlatScanner``),
-the SQ8 scan replica (``SQ8Scanner``), IVF-SQ codes (``SQScanner``),
-PQ codes by ADC (``PQScanner``) and packed bits by popcount
+(``Auncel/IndexIVF.h:316-358``), a scanner here supplies only the store
+column it reads, the decode of a list's rows, and a per-task scorer of
+(queries × decoded rows) distances: fp32 vectors (``FlatScanner``), the
+SQ8 scan replica (``SQ8Scanner``), IVF-SQ codes (``SQScanner``), PQ
+codes by ADC (``PQScanner``) and packed bits by popcount
 (``HammingScanner``).
 
 Shuffle volume is O(tasks · touched-queries · k), independent of corpus
-size; scan I/O is the pruned lists, once.
+size; scan I/O is the probed lists, once. Store reads are memmap reads,
+not Spark input, so Spark's input metrics read about 0 for a scan.
 """
 
 from __future__ import annotations
@@ -47,7 +55,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
@@ -217,10 +225,11 @@ def _dist_block(
 
 # --- scanners: what each list codec supplies to the one loop ----------
 #
-# ``col``: the list column read. ``decode(arrow_column)``: its rows as
-# one array, once per Arrow batch. ``kernel(qmat, metric)``: called once
-# per task, returns ``score(sel, rows, list_no)`` → the (len(sel) ×
-# len(rows)) ascending distances of queries ``sel`` to one list's rows.
+# ``col``: the store column read. ``decode(rows)``: one list's (n,
+# width) store rows as the array ``score`` takes. ``kernel(qmat,
+# metric)``: called once per task, returns ``score(sel, rows, list_no)``
+# → the (len(sel) × len(rows)) ascending distances of queries ``sel``
+# to one list's rows.
 
 
 class FlatScanner:
@@ -230,9 +239,8 @@ class FlatScanner:
     col = "vec"
     dtype = np.float64
 
-    def decode(self, col: pa.Array) -> np.ndarray:
-        flat = col.flatten().to_numpy(zero_copy_only=False)
-        return np.asarray(flat, dtype=np.float64).reshape(len(col), -1)
+    def decode(self, rows: np.ndarray) -> np.ndarray:
+        return np.asarray(rows, dtype=np.float64)
 
     def kernel(self, qmat: np.ndarray, metric: Metric):
         bq = np.asarray(qmat, dtype=np.float64).astype(self.dtype, copy=False)
@@ -241,14 +249,14 @@ class FlatScanner:
 
 
 class SQ8Scanner(FlatScanner):
-    """The SQ8 scan replica (``IVFIndex.scan_source``'s (off, scale)
-    codec): codes·scale + off — one fused multiply-add per element
-    against 4x less scan IO (exactness restored downstream by the
-    refine sidecar).
+    """The SQ8 scan replica of an IVF-Flat store (its ``code`` column,
+    ``IVFIndex.build_scan_replica``): codes·scale + off — one fused
+    multiply-add per element against 4x less scan IO (exactness
+    restored downstream by the exact refine against ``vec``).
 
     float32 end-to-end: the flat scan's f64 GEMM is the exactness source
     in flat mode, but here exactness is settled downstream by the fp32
-    refine sidecar and the SQ8 step (~1e-2 of typical distances) dwarfs
+    refine and the SQ8 step (~1e-2 of typical distances) dwarfs
     f32 rounding (~1e-6 relative). f64 decode allocated an 8x-expanded
     temporary and ran the GEMM at half BLAS throughput for precision the
     path cannot use — measured as the warm-grid regression vs the flat
@@ -260,8 +268,8 @@ class SQ8Scanner(FlatScanner):
     def __init__(self, off: np.ndarray, scale: np.ndarray):
         self.off, self.scale = off, scale
 
-    def decode(self, col: pa.Array) -> np.ndarray:
-        mat = _binary_matrix(col).astype(np.float32)
+    def decode(self, rows: np.ndarray) -> np.ndarray:
+        mat = rows.astype(np.float32)
         mat *= np.asarray(self.scale, dtype=np.float32)[None, :]
         mat += np.asarray(self.off, dtype=np.float32)[None, :]
         return mat
@@ -269,7 +277,7 @@ class SQ8Scanner(FlatScanner):
 
 class SQScanner(FlatScanner):
     """IVF-SQ lists: ``ScalarQuantizer`` codes decoded to float64 once
-    per batch, then the flat GEMM (the reference's IVFScalarQuantizer
+    per list, then the flat GEMM (the reference's IVFScalarQuantizer
     scanner decodes inline, ``Auncel/IndexScalarQuantizer.h:90-150``)."""
 
     col = "code"
@@ -277,8 +285,8 @@ class SQScanner(FlatScanner):
     def __init__(self, sq):
         self.sq = sq
 
-    def decode(self, col: pa.Array) -> np.ndarray:
-        return self.sq.decode_np(_binary_matrix(col))
+    def decode(self, rows: np.ndarray) -> np.ndarray:
+        return self.sq.decode_np(rows)
 
 
 class PQScanner:
@@ -298,8 +306,7 @@ class PQScanner:
 
     The query-dependent term3 LUT (−2·q_m·z for L2, −q_m·z for IP) is
     built lazily PER TASK, only for the queries that probe a list in
-    that task's partitions (partition pruning keeps this a small
-    subset)."""
+    task's run of lists."""
 
     col = "code"
 
@@ -307,8 +314,8 @@ class PQScanner:
         self.books, self.cents, self.term2 = books, cents, term2
         self.enc_of, self.fp32 = enc_of, fp32
 
-    def decode(self, col: pa.Array) -> np.ndarray:
-        return _binary_matrix(col)
+    def decode(self, rows: np.ndarray) -> np.ndarray:
+        return np.asarray(rows)
 
     def kernel(self, qmat: np.ndarray, metric: Metric):
         bq = np.asarray(qmat, dtype=np.float64)
@@ -381,8 +388,8 @@ class HammingScanner:
 
     col = "bits"
 
-    def decode(self, col: pa.Array) -> np.ndarray:
-        return _binary_matrix(col)
+    def decode(self, rows: np.ndarray) -> np.ndarray:
+        return np.asarray(rows)
 
     def kernel(self, qmat: np.ndarray, metric: Metric):
         from auncel_spark.index.binary import _hamming_matrix
@@ -391,8 +398,23 @@ class HammingScanner:
         return lambda sel, rows, ln: _hamming_matrix(qb[sel], rows).astype(np.float64)
 
 
+def _task_runs(offsets: np.ndarray, lists, ntasks: int) -> list[np.ndarray]:
+    """Split ascending list ids into at most ``ntasks`` contiguous runs
+    of about equal row count (from the store's ``offsets``); empty lists
+    are dropped. Each run is one contiguous row range of the store."""
+    lists = np.asarray(lists, dtype=np.int64)
+    lists = lists[offsets[lists + 1] > offsets[lists]]
+    if len(lists) == 0:
+        return []
+    cum = np.cumsum(offsets[lists + 1] - offsets[lists])
+    ntasks = max(1, min(ntasks, len(lists)))
+    cuts = np.searchsorted(cum, cum[-1] * np.arange(1, ntasks) / ntasks) + 1
+    bounds = np.unique(np.concatenate(([0], cuts, [len(lists)])))
+    return [lists[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
 def scan_ranked(
-    data: DataFrame,
+    data,
     qids: np.ndarray,
     qmat: np.ndarray,
     ranked: np.ndarray,
@@ -409,10 +431,10 @@ def scan_ranked(
     list ranks [edges[si], edges[si+1]); a fixed-nprobe search is the
     one-bucket case ``edges=[0, nprobe]``. Callers reduce with
     ``reduce_bucketed`` (or ``topk_per_query``, dropping ``si``, when
-    there is one bucket). ``codec``: the list scanner — None scans
-    fp32 vectors (``FlatScanner``), a ``scan_source()`` (off, scale)
-    pair the SQ8 replica (``SQ8Scanner``); any other scanner is used as
-    given, its ``col`` read from ``data``.
+    there is one bucket). ``data``: the index's ``ListStore``.
+    ``codec``: the list scanner — None scans fp32 vectors
+    (``FlatScanner``); any other scanner reads its ``col`` from the
+    store.
 
     ``active``: optional mask of the queries to scan. ``hi_q``:
     optional per-query exclusive rank bound (clipped to edges[-1]) —
@@ -420,11 +442,10 @@ def scan_ranked(
     whose per-query probe depths are already known (LAET budgets, ELP
     post-stop extension targets) need ONE scan instead of a log2-deep
     ladder of stage jobs."""
-    spark = data.sparkSession
+    spark = SparkSession.active()
+    store = data
     if codec is None:
         codec = FlatScanner()
-    elif isinstance(codec, tuple):
-        codec = SQ8Scanner(*codec)
     nq = len(qids)
     lo = edges[0]
     hi = min(edges[-1], ranked.shape[1], nlist)
@@ -443,7 +464,9 @@ def scan_ranked(
         if not mask.any():
             return spark.createDataFrame([], BUCKET_SCHEMA)
         cols = cols[mask]
-    probed = np.unique(cols).tolist()
+    runs = _task_runs(store.offsets, np.unique(cols), spark.sparkContext.defaultParallelism)
+    if not runs:
+        return spark.createDataFrame([], BUCKET_SCHEMA)
     # bucket of rank r: index of the last edge <= r
     bucket_of_rank = np.searchsorted(np.asarray(edges), np.arange(hi), side="right") - 1
     nb = len(edges) - 1
@@ -456,40 +479,41 @@ def scan_ranked(
             bucket_of_rank.astype(np.int32),
             codec,
             bhi,
+            store,
+            runs,
         )
     )
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bqids, bq, binv, bact, brank2b, scanner, bbhi = bc.value
+        bqids, bq, binv, bact, brank2b, scanner, bbhi, bstore, bruns = bc.value
         score = scanner.kernel(bq, metric)
-        state_d = state_i = None
+        state_d = np.full((len(bqids), nb, k), np.inf)
+        state_i = np.full((len(bqids), nb, k), -1, dtype=np.int64)
         touched = np.zeros((len(bqids), nb), dtype=bool)
+        col, ids_all, offs = bstore.column(scanner.col), bstore.ids(), bstore.offsets
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if state_d is None:
-                state_d = np.full((len(bqids), nb, k), np.inf)
-                state_i = np.full((len(bqids), nb, k), -1, dtype=np.int64)
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            vals = scanner.decode(batch.column(1))
-            lns = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            for ln in np.unique(lns):
-                r = binv[:, int(ln)]
-                sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
-                if len(sel) == 0:
-                    continue
-                m = lns == ln
-                si_all = brank2b[r[sel]]
-                for q0, ss, nd, ni in _tiled_topk(score, sel, vals[m], ids[m], int(ln), k):
-                    si = si_all[q0 : q0 + len(ss)]
-                    for b in np.unique(si):
-                        pick = si == b
-                        rows = ss[pick]
-                        _merge_rows(
-                            state_d[:, b, :], state_i[:, b, :], rows, nd[pick], ni[pick]
-                        )
-                        touched[rows, b] = True
-        if state_d is None or not touched.any():
+            for t in batch.column(0).to_numpy():
+                mine = bruns[int(t)]
+                bstore.willneed(scanner.col, mine)
+                for ln in mine.tolist():
+                    r = binv[:, ln]
+                    sel = np.where(bact & (r >= lo) & (r < bbhi))[0]
+                    if len(sel) == 0:
+                        continue
+                    r0, r1 = int(offs[ln]), int(offs[ln + 1])
+                    vals = scanner.decode(col[r0:r1])
+                    ids = np.asarray(ids_all[r0:r1])
+                    si_all = brank2b[r[sel]]
+                    for q0, ss, nd, ni in _tiled_topk(score, sel, vals, ids, ln, k):
+                        si = si_all[q0 : q0 + len(ss)]
+                        for b in np.unique(si):
+                            pick = si == b
+                            rows = ss[pick]
+                            _merge_rows(
+                                state_d[:, b, :], state_i[:, b, :], rows, nd[pick], ni[pick]
+                            )
+                            touched[rows, b] = True
+        if not touched.any():
             return
         tq, tb = np.where(touched)
         keep = state_i[tq, tb] >= 0  # (nt, k)
@@ -502,10 +526,9 @@ def scan_ranked(
             }
         )
 
-    pruned = data.filter(F.col("list_no").isin(probed)).select(
-        "id", codec.col, F.col("list_no").cast("long")
+    return spark.range(len(runs), numPartitions=len(runs)).mapInArrow(
+        scan, schema=BUCKET_SCHEMA
     )
-    return pruned.mapInArrow(scan, schema=BUCKET_SCHEMA)
 
 
 def reduce_bucketed(partial: DataFrame, k: int) -> "pd.DataFrame":

@@ -18,8 +18,9 @@ sequential probing inside a thread, the engine runs synchronized
 stages nprobe ∈ {1,2,4,…,nlist/8}. Each stage:
 1. builds the *delta* probe set (lists ranked [prev, cur)) for the
    still-active queries only — no list is ever scanned twice;
-2. scans those lists distributed (partition-pruned broadcast-queries
-   GEMM kernel, the same ``scan_ranked`` as ``IVFIndex.search``),
+2. scans those lists distributed (the broadcast-queries GEMM kernel
+   over the index's list store, the same ``scan_ranked`` as
+   ``IVFIndex.search``),
    returning ≤ nq·k rows;
 3. merges them into the running per-query top-k and evaluates the
    stop predicate vectorized in numpy;
@@ -53,7 +54,7 @@ from pyspark.sql import functions as F
 
 from auncel_spark.config import ELP_STAGE_CAP_FRACTION, Metric
 from auncel_spark.index.ivf import IVFIndex
-from auncel_spark.index.refine_blob import REFINE_PAD
+from auncel_spark.index.list_store import REFINE_PAD
 from auncel_spark.index.scan import (
     _merge_rows,
     assemble_states,
@@ -153,9 +154,9 @@ class ErrorProfile:
         Rows of inactive queries, and buckets a query did not reach,
         hold (inf, -1)."""
         sk = self.state_k
-        sdf, codec = self.index.scan_source()
+        store, codec = self.index._scanner()
         part = scan_ranked(
-            sdf,
+            store,
             qids,
             qmat,
             ranked,
@@ -469,11 +470,6 @@ class ErrorProfile:
         from auncel_spark.config import ELP_FUSE_PREFIX
 
         qids, qmat, ranked, cdist, dtb = self._coarse(queries)
-        # readahead for the whole reachable probe set: stage extensions
-        # (multipler/std_m) can touch any ranked list, and a
-        # disk-resident index otherwise serializes IO stalls into the
-        # staged scan (see IVFIndex.prefetch)
-        self.index.prefetch()
         nq = len(qids)
         acc = np.broadcast_to(np.asarray(require_acc, dtype=np.float64), (nq,)).copy()
         state_d = np.full((nq, self.state_k), np.inf)
@@ -554,8 +550,7 @@ class ErrorProfile:
     # 64 covers that regime with margin; pool cost is linear and tiny
     # (positioned reads of nq·(k+64) rows; scan-state argpartition at
     # width max_topk+64 is noise next to the GEMM). The value lives in
-    # refine_blob.REFINE_PAD (shared with IVFIndex.search — ADVICE r09:
-    # a retune must update every consumer through one constant).
+    # list_store.REFINE_PAD, shared with IVFIndex.search.
     _REFINE_PAD = REFINE_PAD
 
     def _refined_result(
@@ -568,20 +563,19 @@ class ErrorProfile:
     ):
         """Result materialization. Under the coded scan replica the
         kept state distances are SQ8-approximate, so the final top-k is
-        re-ranked EXACTLY against the refine sidecar (positioned reads
-        of the candidate pool only — nq·(topk+pad) rows, not a corpus
+        re-ranked EXACTLY against the store's ``vec`` column (positioned
+        reads of the candidate pool only — nq·(topk+pad) rows, not a corpus
         stream). This is what keeps the worst-case bound criterion
         (eval/bound.cpp:404-414 — returned dist vs true k-th) intact on
         a compressed scan path: the scan pays 1 byte/dim, the contract
         is settled in fp32."""
-        blob = self.index.refine_blob if self.index.codec_active else None
-        if blob is None:
+        if not self.index.codec_active:
             return self._state_to_df(qids, state_d, state_i, topk)
         pool = min(state_i.shape[1], topk + self._REFINE_PAD)
         ids = state_i[:, :pool]
         qpos = np.repeat(np.arange(len(qids), dtype=np.int32), pool)
         mask = ids.ravel() >= 0
-        return blob.refine_topk(
+        return self.index.store.refine_topk(
             self.index.spark,
             qids,
             qmat,
@@ -800,7 +794,6 @@ class ErrorProfile:
         semantics require budget → ∞ to converge to the exact scan.
         """
         qids, qmat, ranked, cdist, dtb = self._coarse(queries)
-        self.index.prefetch()  # see search(): disk-resident readahead
         nq = len(qids)
         budget = np.broadcast_to(np.asarray(budget_ms, dtype=np.float64), (nq,)).copy()
         state_d = np.full((nq, self.state_k), np.inf)

@@ -8,8 +8,8 @@ searched per micro-batch against a persisted index and results are
 appended to a sink, exactly-once via checkpointing.
 
 ``foreachBatch`` is the idiomatic shape here: each micro-batch is a
-normal DataFrame, so the full batch search machinery (partition-pruned
-IVF scans, broadcast-queries kernels, even the ELP bounded search with
+normal DataFrame, so the full batch search machinery (list-store IVF
+scans, broadcast-queries kernels, even the ELP bounded search with
 a trained profile) runs unchanged — no operator re-implementation, and
 micro-batch size is the natural query-sharding unit the batch path
 already assumes (the training sweep shards at

@@ -71,18 +71,11 @@ def main() -> None:
     split = IVFPQIndex.load(spark, str(cache / "ivfpq_m32_s4"))
     split.adc_fp32 = SCALE_ADC_FP32
 
-    # warm protocol: flat lists (the refine source) + both code tables
-    # synchronously page-cached — the head-to-head measures scan
+    # warm protocol: the flat store (the refine source) + both code
+    # stores synchronously page-cached — the head-to-head measures scan
     # compute, not IO lottery (125 GB RAM fits 37 + 3.9 + 3.7 GB)
-    warm = _warm_read(
-        [
-            os.path.join(idx.data_path, "lists"),
-            str(cache / "ivfpq_m32" / "lists"),
-            str(cache / "ivfpq_m32_s4" / "lists"),
-        ]
-    )
+    warm = _warm_read([idx.store.dir, parent.store.dir, split.store.dir])
     print(f"# warm {warm}", file=sys.stderr)
-    idx._prefetch_done = True
 
     k = 10
     sides = [

@@ -163,12 +163,11 @@ def main() -> None:
         )
         return float((hits / float(K)).mean())
 
-    # one id-addressed exact store for every search_refine below, built
-    # once and untimed: a DataFrame base would be written into a store
-    # on each index's first call, inside the timed ms_per_query
-    if flat.refine_blob is None:
-        flat.build_refine_sidecar()
-    refine_base = flat.refine_blob
+    # one id-addressed exact store for every search_refine below: the
+    # flat index's own list store (a DataFrame base would be written
+    # into a store on each index's first call, inside the timed
+    # ms_per_query)
+    refine_base = flat.store
 
     out = dict(saved) if saved is not None else {
         "n": N_HD, "d": D_HD, "nlist": NLIST_HD, "M": M_HD, "rungs": []

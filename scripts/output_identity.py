@@ -4,7 +4,10 @@
 index, and pickles the result rows (qid, pos, id, dist) and
 ``return_info`` arrays of ``IVFIndex.search``, ``ErrorProfile.search``,
 ``ErrorProfile.time_search`` and ``LearnedTermination.search`` — first on
-the flat lists, then on the SQ8 scan replica with its refine sidecar.
+the flat lists, then on the SQ8 scan replica with its exact refine. A
+tree whose replica is opted in separately (``use_replica``, with a
+``build_refine_sidecar`` refine store) gets those calls; a tree without
+them scans the replica once it is built.
 A third, coded section dumps searches over coded lists at nprobe <
 nlist: ``IVFPQIndex.search`` (residual L2 and IP), ``search_refine``
 against a DataFrame base (twice, so the second call reads the store the
@@ -15,15 +18,17 @@ difference. A refactor that claims "the same bits" runs ``dump`` once
 per tree (e.g. a ``git archive`` of the parent and the working tree) and
 ``compare`` on the two files.
 
-One exception: the distances of ``IVFPQIndex.search`` and
-``IVFSQIndex.search`` need only agree within 1e-9 relative (qid, pos
-and id must still be equal). Their scan reads a list in whichever row
-groups the task layout gives it, and BLAS may round one element of a
-GEMM differently when the block has another shape: the IVF-SQ distance
-block is one GEMM per row group, and a PQ scan task builds the
-query-side lookup table with one GEMM over the queries it meets first.
-A change of task layout may so move a coded distance by a rounding
-step.
+One exception: the distances of the flat and replica sections (IVF,
+ELP and LAET searches) and of ``IVFPQIndex.search`` and
+``IVFSQIndex.search`` need only agree within 1e-9 relative (qid, pos,
+id and every ``return_info`` array must still be equal). Their scan
+reads a list in whichever blocks the task layout gives it, and BLAS may
+round one element of a GEMM differently when the block has another
+shape: a scan's distance block is one GEMM per block of a list, and a PQ
+scan task builds the query-side lookup table with one GEMM over the
+queries it meets first. Since the list store, the GEMM blocks follow
+whole lists rather than parquet row groups, so a tree on either side of
+that change may move a distance by a rounding step.
 
 Usage:
     python scripts/output_identity.py dump TREE OUT.pkl [--corpus small|perf] [--work DIR]
@@ -48,7 +53,7 @@ import tempfile
 import numpy as np
 
 # dumps whose dist may move by a rounding step with the task layout
-ROUNDED = ("coded/ivfpq.search/", "coded/ivfsq.search/")
+ROUNDED = ("flat/", "replica/", "coded/ivfpq.search/", "coded/ivfsq.search/")
 
 CORPORA = {
     # n_blobs, per_blob, d, nq, n_train, nlist, max_topk, topk
@@ -135,8 +140,9 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
     for mode in ("flat", "replica"):
         if mode == "replica":
             idx.build_scan_replica()
-            idx.build_refine_sidecar()
-            idx.use_replica(True)
+            if hasattr(idx, "use_replica"):
+                idx.build_refine_sidecar()
+                idx.use_replica(True)
         for nprobe in (1, 8):
             got[f"{mode}/ivf.search/nprobe{nprobe}"] = (rows(idx.search(queries, topk, nprobe)), {})
         for acc, mult in ((0.5, 1.0), (0.9, 1.0), (0.9, 3.0)):

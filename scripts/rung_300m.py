@@ -290,14 +290,15 @@ def ensure_split(spark, cache: Path, cents1024: np.ndarray, pq, children,
                 }
             )
 
-    (
+    from auncel_spark.index.list_store import write_store
+
+    # each encode task holds whole refined lists: stage without a shuffle
+    write_store(
         spark.read.parquet(assign_path)
         .mapInPandas(route, "id bigint, list_no int, rlist int")
         .repartition(256, "rlist")
-        .mapInPandas(encode, "id bigint, code binary, list_no int")
-        .write.mode("overwrite")
-        .partitionBy("list_no")
-        .parquet(str(path / "lists"))
+        .mapInPandas(encode, "id bigint, code binary, list_no int"),
+        str(path), NLIST * SPLIT, ("code",), shuffle=False,
     )
     child_flat = children.reshape(NLIST * SPLIT, D)
     enc_of = np.repeat(np.arange(NLIST, dtype=np.int32), SPLIT)
@@ -420,7 +421,7 @@ def main() -> None:
     # side's cheapest point with recall within 0.01 of the best side
     if "probe" not in out:
         out["warm_load"] = _warm_read(
-            [str(cache / "parent" / "lists"), str(cache / "split" / "lists")]
+            [str(cache / "parent" / "store"), str(cache / "split" / "store")]
         )
         probe = {"parent": [], "split": []}
         for npb in (8, 16, 32):

@@ -281,8 +281,8 @@ def _lazy_base_df(spark, n: int):
 
 
 def _warm_read(roots: list[str], threads: int = 8) -> dict:
-    """Physically read every parquet file under ``roots`` into the OS
-    page cache and WAIT for completion. The baseline's protocol holds
+    """Physically read every file under ``roots`` (an index's list
+    store) into the OS page cache and WAIT for completion. The baseline's protocol holds
     the index in RAM (its per-query figures never include load IO), so
     the honest warm grid runs against a cache-resident index — r06's
     ``.count()`` warm-up read only footers, leaving the first timed
@@ -291,12 +291,39 @@ def _warm_read(roots: list[str], threads: int = 8) -> dict:
     this is synchronous: the return means the pages are IN. Cached
     pages re-read at memory bandwidth, so a warm rerun costs seconds.
     Timed and reported separately as ``warm_load`` (startup, not
-    per-query cost). Body lives in ``index/ivf.preload_paths`` (r08:
-    sequential-hinted, WILLNEED-pipelined, 8 threads — the same reader
-    the engine's ``IVFIndex.preload`` cold-start path uses)."""
-    from auncel_spark.index.ivf import preload_paths
+    per-query cost). ``threads`` readers share the file list, so the
+    device queue never empties between files. Returns {files, gb, sec,
+    mb_s}."""
+    import threading
 
-    return preload_paths(roots, threads=threads)
+    files = [
+        os.path.join(d, f) for root in roots for d, _, names in os.walk(root) for f in names
+    ]
+    total = [0] * max(1, threads)
+
+    def work(ti: int) -> None:
+        buf = memoryview(bytearray(8 << 20))
+        for fp in files[ti::threads]:
+            try:
+                with open(fp, "rb", buffering=0) as f:
+                    while nb := f.readinto(buf):
+                        total[ti] += nb
+            except OSError:
+                continue
+
+    t0 = time.perf_counter()
+    ts = [threading.Thread(target=work, args=(i,)) for i in range(threads)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    sec = time.perf_counter() - t0
+    return {
+        "files": len(files),
+        "gb": round(sum(total) / 1e9, 2),
+        "sec": round(sec, 2),
+        "mb_s": round(sum(total) / 1e6 / max(sec, 1e-9), 1),
+    }
 
 
 def _diskstats() -> dict | None:
@@ -448,12 +475,13 @@ def ensure_index_big(spark, cache: Path, n: int):
     # 256 write partitions (not the session's 32): bounds each task's
     # regen+sort+write volume to ~400 MB at 100M — long-tail stragglers
     # shrink 8x and a lost task costs minutes, not the whole stage
-    (
-        light.repartition(256, "list_no")
-        .mapInPandas(regen, "id bigint, vec array<float>, list_no int")
-        .write.mode("overwrite")
-        .partitionBy("list_no")
-        .parquet(os.path.join(ivf_path, "lists"))
+    from auncel_spark.index.list_store import write_store
+
+    write_store(
+        light.repartition(256, "list_no").mapInPandas(
+            regen, "id bigint, vec array<float>, list_no int"
+        ),
+        ivf_path, len(cents), ("vec",), shuffle=False,
     )
     idx = IVFIndex(spark, cents, ivf_path, Metric.L2)
     with open(os.path.join(ivf_path, "meta.json"), "w") as f:
@@ -1147,11 +1175,11 @@ def run_ivfpq_default(
         base = spark.read.parquet(base_path)
         base = base.persist()
         base.count()
-    elif flat_idx.refine_blob is not None:
-        # id-addressable refine sidecar: positioned reads of the
+    elif flat_idx.data_path is not None:
+        # the flat index's list store: positioned reads of the
         # candidate rows only, instead of a 38 GB streamed pass over
-        # the flat lists per refine call (r09; see index/refine_blob)
-        base = flat_idx.refine_blob
+        # the flat lists per refine call (see index/list_store)
+        base = flat_idx.store
     else:
         base = flat_idx.data.select("id", "vec")
     ladder = ladder or PQ_LADDER_10M
@@ -1449,11 +1477,10 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
             "fit_calibrate_sec": round(fit_s, 2),
         }
 
-    # SQ8 coded scan replica + exact-refine sidecar (VERDICT r08
-    # Next #1): above BIG_N the standard at-scale layout is the
-    # disk-neutral swap — scans stream 1-byte codes (4x less cold IO
-    # than fp32 by construction) and the returned top-k is settled in
-    # fp32 against the id-addressable blob. Built ONCE per tier, last
+    # SQ8 coded scan replica (VERDICT r08 Next #1): above BIG_N the
+    # standard at-scale layout scans 1-byte codes (4x less cold IO
+    # than fp32 by construction) and settles the returned top-k in
+    # fp32 against the store's id-addressable vec column. Built ONCE per tier, last
     # in the build chain so every exact one-time pass above (profile
     # calibration's train GT, ensure_gt) ran on the fast flat scan.
     # Gated like the PQ builds: a routine driver bench must never
@@ -1461,17 +1488,14 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
     if (
         n >= N10
         and idx.data_path is not None
-        and idx._replica_sq is None
+        and not idx.codec_active
         and os.environ.get("SPARK_GRAFT_BUILD_REPLICA", "0") == "1"
     ):
         t_rep = time.perf_counter()
         rep = idx.build_scan_replica()
-        sc = idx.build_refine_sidecar(delete_source=True)
         out["replica_build"] = {
             "encode_sec": rep.get("sec"),
-            "sidecar_sec": sc.get("sec"),
             "total_sec": round(time.perf_counter() - t_rep, 1),
-            "blob_gb": sc.get("gb"),
         }
 
     test = spark.createDataFrame(_gen_queries_pdf(11, N_TEST, 20_000_000)).cache()
@@ -1486,24 +1510,14 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
     # Next #1; telemetry_start showed 59.9 GB page cache vs ~46 GB of
     # tier artifacts at tier start). The baseline's per-query figures
     # are against a RAM-resident index, so excluding the one-time load
-    # is protocol parity, not flattery. Marks the prefetch pass done —
-    # the fadvise walk would only re-queue already-cached pages.
+    # is protocol parity, not flattery.
     if n >= N10 and idx.data_path is not None:
-        scan_sub = "lists_sq8" if idx._use_replica else "lists"
-        # scan source only: the refine sidecar is touched with ~50 MB
-        # of positioned reads per grid config (nq x pool rows x 384 B)
-        # — demand paging that costs ~0.1 ms/q; preloading its 38 GB
-        # would add minutes of tier wall for nothing
-        roots = [os.path.join(idx.data_path, scan_sub)]
-        out["scan_source"] = scan_sub
         out["warm_load"] = {
-            **_warm_read(roots),
-            "note": "synchronous page-cache load of the active scan"
-            " source (+ refine sidecar) before the timed grid"
-            " (baseline holds the index in RAM); startup cost,"
-            " excluded from per-query figures",
+            **_warm_read([idx.store.dir]),
+            "note": "synchronous page-cache load of the list store"
+            " before the timed grid (baseline holds the index in"
+            " RAM); startup cost, excluded from per-query figures",
         }
-        idx._prefetch_done = True
 
     def config_grid(repeats: int = 1) -> tuple[dict, list]:
         """One pass over the calibrated (k, bound) grid; with
@@ -1546,18 +1560,12 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
             results[f"k{k}_b{int(bound * 100)}"] = rec
         return results, lat
 
-    # warm-up, UNTIMED: footers/page cache (count) plus one throwaway
-    # search — the first search in a fresh JVM pays JIT/codegen and
+    # warm-up, UNTIMED: one throwaway search — the first search in a fresh JVM pays JIT/codegen and
     # Arrow pipeline spin-up (measured ~1.5-2x on the first grid
     # config at 100M: 35.4 ms/q first-ever vs 22.6 steady-state). The
     # baseline's figures are steady-state on a long-lived process, so
     # attributing process warm-up to the first timed config would
     # misreport every tier.
-    # count the ACTIVE scan source: under the replica swap, idx.data
-    # is the exact view reassembled through the refine blob (a full
-    # positioned-read gather pass — minutes at 100M), while the warm-up
-    # only needs parquet footers + page cache of what the grid scans
-    idx.scan_source()[0].count()
     k_w, bound_w = (configs or (CONFIGS if n == N else CONFIGS_10M))[0]
     p = params[(k_w, bound_w)]
     ep.multipler, ep.std_m = p["multipler"], p["std_m"]
@@ -1759,9 +1767,9 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                     }
                 ]
                 lists_dir = (
-                    cache / f"ivfpq_m32_s{SPLIT_100M}" / "lists"
+                    cache / f"ivfpq_m32_s{SPLIT_100M}" / "store"
                     if is_split
-                    else cache / "ivfpq_m32" / "lists"
+                    else cache / "ivfpq_m32" / "store"
                 )
                 if lists_dir.exists():
                     out["warm_load_codes"] = _warm_read([str(lists_dir)])
@@ -1836,7 +1844,7 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                         "k_factor": cmp_saved["k_factor"],
                     }
                 ]
-                m32_lists = cache / "ivfpq_m32" / "lists"
+                m32_lists = cache / "ivfpq_m32" / "store"
                 if m32_lists.exists():
                     out["warm_load_codes"] = _warm_read([str(m32_lists)])
                 out["ivfpq_default"] = run_ivfpq_default(
@@ -1872,7 +1880,7 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                         spark, cache, idx, cand["M"], SPLIT_100M
                     )
 
-                split_lists_dir = cache / f"ivfpq_m32_s{SPLIT_100M}" / "lists"
+                split_lists_dir = cache / f"ivfpq_m32_s{SPLIT_100M}" / "store"
                 if split_lists_dir.exists():
                     # codes are 3.7 GB — one synchronous pass so the
                     # timed re-measure is not an IO lottery (same
@@ -1922,9 +1930,7 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                         parent.adc_fp32 = SCALE_ADC_FP32
                         pt1024 = _refine_point(
                             parent,
-                            idx.refine_blob
-                            if idx.refine_blob is not None
-                            else idx.data.select("id", "vec"),
+                            idx.store,
                             test, gt, 10, 16, 32,
                         )
                         saved = {
@@ -2007,15 +2013,14 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                 #   bandwidth under the scan's demand reads -> 74 ms/q.
                 # - plain demand paging (32 parquet streams): 154 MB/s,
                 #   50 ms/q.
-                # - PACED WILLNEED (the engine prefetch since r08,
-                #   ivf.prefetch: hint ~2 s of IO ahead of a 200 MB/s
-                #   pace clock): 242 MB/s effective, 32.0 ms/q.
+                # - PACED WILLNEED (a driver-side pacer, r08-r10):
+                #   242 MB/s effective, 32.0 ms/q.
                 # Preloading a probed SUBSET is not an option: 5000
                 # clustered queries probe ~95% of the lists even at
-                # window 8 (measured). The cold grid simply re-arms the
-                # engine's own prefetch and lets the first search fire
-                # it; diskstats deltas keep the IO model measured.
-                idx.reset_prefetch()
+                # window 8 (measured). The list store's scan tasks each
+                # hint their own contiguous byte ranges (WILLNEED); the
+                # cold grid lets them, and diskstats deltas keep the IO
+                # model measured.
                 ds0 = _diskstats()
                 t_cold_grid = time.perf_counter()
                 cold_results, cold_lat = config_grid()
@@ -2026,8 +2031,8 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                     "ms_per_query_worst": round(float(np.max(cold_lat)), 3),
                     "all_bounds_hold": all(v["holds"] for v in cold_results.values()),
                     "wall_sec": round(time.perf_counter() - t_cold_grid, 2),
-                    "note": "drop_caches -> grid; first search re-arms"
-                    " the paced-WILLNEED engine prefetch (JIT warm)",
+                    "note": "drop_caches -> grid; scan tasks hint their"
+                    " list ranges with WILLNEED (JIT warm)",
                 }
                 if ds0 and ds1:
                     gb = ds1["read_gb"] - ds0["read_gb"]
@@ -2037,9 +2042,8 @@ def run(spark, configs=None, n: int = N, budget_s: float | None = None) -> dict:
                         1,
                     )
                 out["cold_page_cache"]["scan_source"] = (
-                    "lists_sq8" if idx._use_replica else "lists"
+                    "store_sq8" if idx.codec_active else "store"
                 )
-                out["cold_page_cache"]["prefetch_rate_mbs"] = idx.prefetch_rate_mbs
             except Exception as e:
                 out["cold_page_cache"] = {"error": f"{type(e).__name__}: {e}"}
         record_duration(f"cold_{n}", time.perf_counter() - t_cold)

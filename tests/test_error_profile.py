@@ -374,9 +374,9 @@ def test_scan_ranked_keeps_each_bucket_and_query_bound(fitted):
     hi_q = rng.integers(0, 18, len(q))  # some below edges[0], some past edges[-1]
     active = np.ones(len(q), dtype=bool)
     active[::5] = False
-    sdf, codec = idx.scan_source()
+    store, codec = idx._scanner()
     pdf = scan_ranked(
-        sdf, qids, q, ranked, edges, len(xb), idx.metric, idx.nlist,
+        store, qids, q, ranked, edges, len(xb), idx.metric, idx.nlist,
         active=active, codec=codec, hi_q=hi_q,
     ).toPandas()
     lists = idx.data.select("id", "list_no").toPandas()

@@ -92,36 +92,6 @@ def test_remove_ids_anti_join(base_df, tiny_vectors):
     assert kept.filter("id < 50").count() == 0
 
 
-def test_search_with_stats(base_df, query_df, tiny_vectors, tmp_path):
-    xb, xq = tiny_vectors
-    # every scanned (query, row) pair computed one distance: ndis is
-    # Σ over (query, probed list) of the list's size
-    b, q = xb.astype(np.float64), xq.astype(np.float64)
-    c = b[:NLIST]
-    sizes = np.bincount(
-        ((b[:, None, :] - c[None]) ** 2).sum(-1).argmin(axis=1), minlength=NLIST
-    )
-    probed = np.argsort(((q[:, None, :] - c[None]) ** 2).sum(-1), axis=1)[:, :4]
-    idx = IVFIndex.build(base_df, nlist=NLIST, centroids=c)
-    swapped = IVFIndex.build(base_df, nlist=NLIST, centroids=c, path=str(tmp_path / "ivf"))
-    swapped.build_scan_replica()
-    swapped.build_refine_sidecar(delete_source=True)
-
-    def gather_all():
-        raise AssertionError("counting list rows must not gather vectors")
-
-    # after the swap ``data`` gathers every vector from the refine blob;
-    # the list sizes come from the scan source (the SQ8 codes)
-    swapped._data_from_blob = gather_all
-    for index in (idx, swapped):
-        res, st = index.search_with_stats(query_df, K, nprobe=4)
-        assert res.count() > 0
-        assert st["nq"] == 20 and st["nprobe"] == 4
-        assert 0 < st["nlists_scanned"] <= NLIST
-        assert st["ndis"] == int(sizes[probed].sum())
-        assert st["search_time_s"] > 0
-
-
 def _jobs_of(sc, group: str, action) -> list[int]:
     """Ids of the Spark jobs ``action()`` launches from this thread."""
     sc.setJobGroup(group, group)
@@ -132,12 +102,75 @@ def _jobs_of(sc, group: str, action) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_search_with_stats(base_df, query_df, tiny_vectors, tmp_path, spark):
+    xb, xq = tiny_vectors
+    # every scanned (query, row) pair computed one distance: ndis is
+    # Σ over (query, probed list) of the list's size
+    b, q = xb.astype(np.float64), xq.astype(np.float64)
+    c = b[:NLIST]
+    sizes = np.bincount(
+        ((b[:, None, :] - c[None]) ** 2).sum(-1).argmin(axis=1), minlength=NLIST
+    )
+    probed = np.argsort(((q[:, None, :] - c[None]) ** 2).sum(-1), axis=1)[:, :4]
+    idx = IVFIndex.build(base_df, nlist=NLIST, centroids=c)
+    replica = IVFIndex.build(base_df, nlist=NLIST, centroids=c, path=str(tmp_path / "ivf"))
+    replica.build_scan_replica()
+    sc = spark.sparkContext
+    for index in (idx, replica):
+        got = []
+        jobs = _jobs_of(
+            sc, "with_stats", lambda: got.append(index.search_with_stats(query_df, K, nprobe=4))
+        )
+        res, st = got[0]
+        assert res.count() > 0
+        assert st["nq"] == 20 and st["nprobe"] == 4
+        assert 0 < st["nlists_scanned"] <= NLIST
+        assert st["ndis"] == int(sizes[probed].sum())
+        assert st["search_time_s"] > 0
+        res.unpersist()
+        # ndis comes from the store's offsets: the call runs the search
+        # (its query collects and its cached result) and nothing else
+        again = []
+        plain = _jobs_of(
+            sc, "plain_search",
+            lambda: (query_df.select("qid", "vec").toPandas(),
+                     again.append(index.search(query_df, K, nprobe=4).cache()),
+                     again[0].count()),
+        )
+        again[0].unpersist()
+        assert len(jobs) == len(plain), (jobs, plain)
+
+
+def test_list_stats_launch_no_job(base_df, tiny_vectors, spark):
+    """list_sizes, stats and imbalance read the store's offsets: no
+    Spark job, and the same numbers as numpy."""
+    xb, _ = tiny_vectors
+    b = xb.astype(np.float64)
+    c = b[:NLIST]
+    sizes = np.bincount(
+        ((b[:, None, :] - c[None]) ** 2).sum(-1).argmin(axis=1), minlength=NLIST
+    )
+    idx = IVFIndex.build(base_df, nlist=NLIST, centroids=c)
+    sc = spark.sparkContext
+    out = {}
+    assert _jobs_of(sc, "list_sizes", lambda: out.update(ls=idx.list_sizes())) == []
+    assert _jobs_of(sc, "stats", lambda: out.update(st=idx.stats())) == []
+    assert _jobs_of(sc, "imbalance", lambda: out.update(im=idx.imbalance())) == []
+    got = out["ls"].toPandas().sort_values("list_no")
+    nz = np.flatnonzero(sizes)
+    np.testing.assert_array_equal(got["list_no"].to_numpy(), nz)
+    np.testing.assert_array_equal(got["count"].to_numpy(), sizes[nz])
+    assert out["st"]["ntotal"] == len(xb)
+    assert out["st"]["nonempty_lists"] == len(nz)
+    want = NLIST * (sizes.astype(np.float64) ** 2).sum() / float(len(xb)) ** 2
+    assert out["im"] == pytest.approx(want) == out["st"]["imbalance_factor"]
+
+
 def test_persisted_lists_opened_once(spark, tmp_path):
-    """A path-built index lists its files once. At nlist 64 — above
-    Spark's 32-path threshold for parallel partition discovery — a
-    fresh ``spark.read.parquet(lists/)`` costs a schema job plus a
-    64-task discovery job; a repeated ``data``/``scan_source()`` must
-    cost none, and a bounded search must run no nlist-task job."""
+    """A loaded index reads its lists from the store by path: ``data``
+    and ``_scanner()`` launch no job, a second search on a loaded index
+    runs no file-listing job (the same jobs as the first), and a bounded
+    search runs no nlist-task job."""
     from auncel_spark.profile.error_profile import ErrorProfile
 
     nlist, d = 64, 8
@@ -147,13 +180,11 @@ def test_persisted_lists_opened_once(spark, tmp_path):
         [(i, [float(v) for v in row]) for i, row in enumerate(xb)], "id bigint, vec array<float>"
     )
     # corpus rows as centroids: each list holds at least its own row
-    idx = IVFIndex.build(
-        base, nlist=nlist, centroids=xb[:nlist].astype(np.float64), path=str(tmp_path / "ivf")
-    )
+    path = str(tmp_path / "ivf")
+    IVFIndex.build(base, nlist=nlist, centroids=xb[:nlist].astype(np.float64), path=path)
+    idx = IVFIndex.load(spark, path)
     sc = spark.sparkContext
-    first = _jobs_of(sc, "lists_first_open", lambda: idx.scan_source())
-    assert first, "the first open lists the files"
-    assert _jobs_of(sc, "lists_scan_source", lambda: idx.scan_source()) == []
+    assert _jobs_of(sc, "lists_scanner", lambda: idx._scanner()) == []
     assert _jobs_of(sc, "lists_data", lambda: idx.data) == []
 
     def q(n, seed):
@@ -162,16 +193,25 @@ def test_persisted_lists_opened_once(spark, tmp_path):
             [(i, [float(v) for v in row]) for i, row in enumerate(x)], "qid bigint, vec array<float>"
         )
 
+    st = sc.statusTracker()
+
+    def widest(jobs):
+        # the status store may hold no info for a stage the job skipped
+        return {
+            j: max((i.numTasks for s in st.getJobInfo(j).stageIds if (i := st.getStageInfo(s))), default=0)
+            for j in jobs
+        }
+
+    fixed = q(10, 3)
+    first = _jobs_of(sc, "first_search", lambda: idx.search(fixed, K, 8).toPandas())
+    again = _jobs_of(sc, "second_search", lambda: idx.search(fixed, K, 8).toPandas())
+    assert len(again) == len(first) and max(widest(again).values()) < nlist
+
     ep = ErrorProfile(idx, max_topk=10)
     ep.fit(q(40, 1))
     queries = q(20, 2)
     res = []
     jobs = _jobs_of(sc, "bounded_search", lambda: res.append(ep.search(queries, K, 0.9).toPandas()))
     assert jobs and len(res[0]) == 20 * K
-    st = sc.statusTracker()
-    # the status store may hold no info for a stage the job skipped
-    tasks = {
-        j: max((i.numTasks for s in st.getJobInfo(j).stageIds if (i := st.getStageInfo(s))), default=0)
-        for j in jobs
-    }
+    tasks = widest(jobs)
     assert max(tasks.values()) < nlist, tasks

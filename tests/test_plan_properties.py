@@ -9,21 +9,45 @@ import pytest
 from auncel_spark.index.ivf import IVFIndex
 
 
-def test_ivf_scan_prunes_partitions_and_broadcasts(base_df, query_df, tiny_vectors, tmp_path):
+def _spy_runs(monkeypatch) -> list:
+    """Record the per-task list runs each scan job broadcasts."""
+    from auncel_spark.index import scan
+
+    seen, real = [], scan._task_runs
+
+    def spy(offsets, lists, ntasks):
+        seen.append(real(offsets, lists, ntasks))
+        return seen[-1]
+
+    monkeypatch.setattr(scan, "_task_runs", spy)
+    return seen
+
+
+def _probed(idx, query_df, nprobe):
+    pdf = query_df.select("qid", "vec").toPandas()
+    q = np.array(list(pdf["vec"]), dtype=np.float64)
+    ranked, _ = idx.coarse_rank(pdf["qid"].to_numpy(), q, nprobe)
+    return np.unique(ranked)
+
+
+def test_ivf_scan_prunes_partitions_and_broadcasts(base_df, query_df, tiny_vectors, tmp_path, monkeypatch):
+    """A loaded index's search reads only the probed lists — the runs
+    of lists its scan tasks get cover exactly the probed ones — and the
+    queries ride in a task broadcast: no join against the lists."""
     xb, _ = tiny_vectors
     path = str(tmp_path / "ivf_plan")
-    idx = IVFIndex.build(
-        base_df, nlist=16, centroids=xb[:16].astype(np.float64), path=path
-    )
+    IVFIndex.build(base_df, nlist=16, centroids=xb[:16].astype(np.float64), path=path)
     idx2 = IVFIndex.load(base_df.sparkSession, path)
+    seen = _spy_runs(monkeypatch)
     res = idx2.search(query_df, 10, 4)
+    (runs,) = seen
+    np.testing.assert_array_equal(np.concatenate(runs), _probed(idx2, query_df, 4))
     plan = res._jdf.queryExecution().executedPlan().toString()
-    # static partition pruning from the isin filter over list_no
-    assert "PartitionFilters" in plan and "INSET" in plan, plan[:2000]
-    # queries ride in a task broadcast: no join against the lists table
     assert "Join" not in plan, plan[:2000]
-    # no full-corpus exchange before the scan kernel
-    assert plan.count("FileScan parquet") == 1
+    # the scan reads the store, not a file scan, and nothing is
+    # shuffled before the kernel: one exchange, the top-k window's
+    assert "FileScan" not in plan and plan.count("MapInArrow") == 1, plan[:2000]
+    assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
 
 
 def test_exact_knn_has_no_shuffle_before_kernel(base_df, query_df):
@@ -99,23 +123,25 @@ def test_flat_topk_is_one_arrow_scan(spark, base_df, query_df, tiny_vectors, op)
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
 
 
-def test_coded_scan_prunes_partitions_no_join(base_df, query_df, tmp_path):
-    """The broadcast-queries coded scan must read only probed list
-    partitions (PartitionFilters INSET) and contain NO join at all —
-    queries ride in a task broadcast, codes cross Arrow once."""
+def test_coded_scan_prunes_partitions_no_join(base_df, query_df, tmp_path, monkeypatch):
+    """The broadcast-queries coded scan reads only the probed lists'
+    codes and contains NO join at all — queries ride in a task
+    broadcast, each code is read once."""
     from auncel_spark.index.ivfsq import IVFSQIndex
 
     path = str(tmp_path / "ivfsq_plan")
-    idx = IVFSQIndex.build(base_df, nlist=16, kmeans_iter=3, qtype="4bit", path=path)
+    IVFSQIndex.build(base_df, nlist=16, kmeans_iter=3, qtype="4bit", path=path)
     idx2 = IVFSQIndex.load(base_df.sparkSession, path)
-    res = idx2.search(query_df.limit(3), 5, 2)
+    seen = _spy_runs(monkeypatch)
+    queries = query_df.limit(3)
+    res = idx2.search(queries, 5, 2)
+    (runs,) = seen
+    np.testing.assert_array_equal(np.concatenate(runs), _probed(idx2, queries, 2))
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and (
-        "INSET" in plan or "list_no" in plan.split("PartitionFilters")[1][:120]
-    ), plan[:2000]
     assert "Join" not in plan, plan[:2000]
-    # only the code and partition columns are read — never a vec column
-    assert "ReadSchema" in plan and "vec" not in plan.split("ReadSchema")[1][:200]
+    # the scanner reads the store's code column, never a vec column
+    store, scanner = idx2._scanner()
+    assert scanner.col == "code" and "vec" not in store.columns
 
 
 def test_word_chunks_shuffle_free(spark):
