@@ -42,7 +42,8 @@ from auncel_spark.index.transforms import (
     TransformChain,
     VectorTransform,
 )
-from auncel_spark.operators.knn import knn_by_ids, knn_exact
+from auncel_spark.index.list_store import store_of
+from auncel_spark.operators.knn import knn_exact
 
 
 @dataclass
@@ -142,7 +143,11 @@ class SearchIndex:
     def search(self, queries: DataFrame, k: int, nprobe: int = 8) -> DataFrame:
         q = self._xform_queries(queries)
         t = self.spec.index_type
-        k_eff = k * 4 if self.spec.refine else k
+        refine = self.spec.refine
+        k_eff = k * 4 if refine else k
+        # under RFlat the queries are collected once: an IVF search and
+        # the re-rank share them
+        qarr = IVFIndex._query_arrays(q) if refine else q
         if t == "flat":
             res = knn_exact(q, self.tbase, k_eff, self.metric)
         elif t == "sq8":
@@ -153,16 +158,18 @@ class SearchIndex:
         elif t == "pq":
             res = pq_knn(q, self.coded, self.pq, k_eff, self.metric)
         elif t in ("ivfflat", "ivfsq", "ivfpq", "ivfpqr"):
-            res = self.ivf.search(q, k_eff, nprobe)
+            res = self.ivf.search(qarr, k_eff, nprobe)
         else:
             raise AssertionError(t)
-        if self.spec.refine:
+        if refine:
             # refine in TRANSFORMED space (faiss keeps the refine Flat
             # storage inside IndexPreTransform): q is already
-            # transformed, so re-rank against tbase — using the raw
+            # transformed, so re-rank against tbase's store — the raw
             # base would compare vectors of different dimension after
             # PCA, or silently wrong distances after OPQ/RR.
-            res = knn_by_ids(q, self.tbase, res.select("qid", "id"), k, self.metric)
+            return store_of(self.tbase).refine_topk(
+                q.sparkSession, *qarr, res, k, self.metric
+            )
         return res
 
     @property

@@ -288,6 +288,14 @@ class IVFIndex:
         ).toPandas()
         return qpdf["qid"].to_numpy(dtype=np.int64), as_matrix(qpdf["vec"])
 
+    def _code_space(self, qmat: np.ndarray) -> np.ndarray:
+        """The query matrix in the space the lists are coded in: shaped
+        to the index's width (zero cells decode to shape (0,)) and
+        rotated when the index has a pre-rotation."""
+        rot = self.rotation
+        qmat = qmat.reshape(-1, self.d if rot is None else rot.shape[1])
+        return qmat if rot is None else qmat @ rot.T
+
     def search(
         self,
         queries,
@@ -295,6 +303,7 @@ class IVFIndex:
         nprobe: int,
         qid_col: str = "qid",
         vec_col: str = "vec",
+        **kw,
     ) -> DataFrame:
         """Fixed-nprobe IVF search. Returns (qid, pos, id, dist).
 
@@ -304,16 +313,20 @@ class IVFIndex:
         queries probe its list. ``queries`` is a DataFrame, or the
         (qids, qmat) arrays a caller already collected from one: a
         caller that needs the query vectors itself (``search_refine``)
-        so collects them once, not twice."""
+        so collects them once, not twice. ``kw`` goes to
+        ``_search_ranked`` (IVFPQR's ``k_factor``)."""
+        qids, qmat = self._query_arrays(queries, qid_col, vec_col)
+        qmat = self._code_space(qmat)
+        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
+        return self._search_ranked(qids, qmat, ranked, k, nprobe, **kw)
+
+    def _search_ranked(self, qids, qmat, ranked, k: int, nprobe: int) -> DataFrame:
+        """``search`` after the coarse ranking: scan the ``nprobe``
+        lists each query ranks first. Under the SQ8 replica the padded
+        pool is re-ranked exactly against the store's ``vec`` column
+        (``ListStore.refine_topk``)."""
         from auncel_spark.index.scan import scan_ranked
 
-        qids, qmat = self._query_arrays(queries, qid_col, vec_col)
-        # width from the index: zero cells decode to shape (0,)
-        rot = self.rotation
-        qmat = qmat.reshape(-1, self.d if rot is None else rot.shape[1])
-        if rot is not None:
-            qmat = qmat @ rot.T  # into code space
-        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
         store, scanner = self._scanner()
         refine = self.codec_active
         kk = k + REFINE_PAD if refine else k
@@ -322,18 +335,8 @@ class IVFIndex:
             self.nlist, codec=scanner,
         )
         if refine:
-            # coded scan: exact re-rank of the padded pool against the
-            # store's vec column (see ErrorProfile._refined_result)
-            pool = topk_per_query(partial, kk).select("qid", "id").toPandas()
-            qpos = {int(x): i for i, x in enumerate(qids)}
             return store.refine_topk(
-                self.spark,
-                qids,
-                qmat,
-                pool["qid"].map(qpos).to_numpy(dtype=np.int32),
-                pool["id"].to_numpy(dtype=np.int64),
-                k,
-                self.metric,
+                self.spark, qids, qmat, topk_per_query(partial, kk), k, self.metric
             )
         return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
@@ -345,26 +348,23 @@ class IVFIndex:
         distances computed and wall times for the quantization and scan
         phases. ndis is Σ over (query, probed list) of the list's row
         count — every probed row is scored against every query probing
-        its list — read from the store's offsets, with no Spark job."""
+        its list — read from the store's offsets, with no Spark job. The
+        queries are collected and coarse-ranked once."""
         import time as _time
 
-        qpdf = queries.select("qid", "vec").toPandas()
-        qmat = as_matrix(qpdf["vec"])
-        if self.rotation is not None:
-            qmat = qmat @ self.rotation.T
+        qids, qmat = self._query_arrays(queries)
+        qmat = self._code_space(qmat)
         t0 = _time.perf_counter()
-        ranked, _ = self.coarse_rank(
-            qpdf["qid"].to_numpy(dtype=np.int64), qmat, nprobe
-        )
+        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
         t_quant = _time.perf_counter() - t0
         t1 = _time.perf_counter()
-        res = self.search(queries, k, nprobe).cache()
+        res = self._search_ranked(qids, qmat, ranked, k, nprobe).cache()
         res.count()
         t_search = _time.perf_counter() - t1
         probed, probes = np.unique(ranked, return_counts=True)
         ndis = int((self.store.list_sizes()[probed] * probes).sum())
         return res, {
-            "nq": int(len(qpdf)),
+            "nq": int(len(qids)),
             "nprobe": int(nprobe),
             "nlists_scanned": len(probed),
             "ndis": ndis,

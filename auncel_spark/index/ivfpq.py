@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import weakref
 from typing import Iterator
 
 import numpy as np
@@ -26,23 +25,12 @@ from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
 
 from auncel_spark.config import DEFAULT_NLIST, Metric
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.kmeans import assign_lists, train_kmeans
-from auncel_spark.index.list_store import (
-    RESULT_SCHEMA,
-    ListStore,
-    pair_topk,
-    temp_store,
-    write_store,
-)
+from auncel_spark.index.list_store import store_of, write_store
 from auncel_spark.index.pq import ProductQuantizer
-
-# search_refine's store per DataFrame base, shared by every index that
-# refines against it and dropped with the base
-_REFINE_STORES = weakref.WeakKeyDictionary()
 
 
 class IVFPQIndex(IVFIndex):
@@ -340,60 +328,13 @@ class IVFPQIndex(IVFIndex):
         ``IndexRefineFlat`` reads its own id-addressed store and never
         scans the corpus. ``full_base`` is a ``ListStore`` with a
         ``vec`` column (e.g. an IVF-Flat index's ``store``) or an (id,
-        vec) DataFrame with unique ids. A DataFrame base is read once
-        per DataFrame object: its first ``search_refine`` (on any index)
-        writes it into a store that every later call with the same
-        object reads, as Spark's ``cache()`` behaves.
-
-        What a DataFrame base needs: ``vec`` must be ``array<float>``
-        (the store holds float32, so an ``array<double>`` base raises
-        ``ValueError`` rather than re-rank silently rounded vectors;
-        cast it to make the rounding explicit). The store is a float32
-        copy of the base in a driver-local temporary directory, removed
-        with the store: plan driver disk about the size of the base.
-        The executors write the base there first, so their writes must
-        be visible to the driver — local mode or a shared filesystem.
-        On a cluster without one, pass a ``ListStore`` built on shared
-        storage."""
+        vec) DataFrame with unique ids and ``vec`` ``array<float>``: its
+        first re-rank (on any index) writes it into a store that every
+        later call with the same object reads (``list_store.store_of``,
+        which also states what such a base costs)."""
         qids, qmat = self._query_arrays(queries)
-        cand = self.search((qids, qmat), k * k_factor, nprobe).select("qid", "id").toPandas()
-        if len(cand) == 0:
-            # empty candidate set (e.g. empty query frame or all-empty
-            # probed lists): nothing to re-rank
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        qpos = {int(x): i for i, x in enumerate(qids)}
-        return self._refine_store(full_base).refine_topk(
-            self.spark,
-            qids,
-            qmat,
-            cand["qid"].map(qpos).to_numpy(dtype=np.int32),
-            cand["id"].to_numpy(dtype=np.int64),
-            k,
-            self.metric,
-        )
-
-    def _refine_store(self, base) -> ListStore:
-        """The store that ``search_refine`` reads for ``base``: the
-        store itself, or the one written from a DataFrame base on its
-        first use (the list store writer with one list per partition of
-        the base and no shuffle, so the driver appends one staged file
-        at a time and never holds the whole base)."""
-        if isinstance(base, ListStore):
-            return base
-        store = _REFINE_STORES.get(base)
-        if store is None:
-            vt = base.schema["vec"].dataType
-            if not (isinstance(vt, ArrayType) and isinstance(vt.elementType, FloatType)):
-                raise ValueError(
-                    "search_refine: a DataFrame base needs vec array<float> "
-                    f"(the refine store is float32), got {vt.simpleString()}"
-                )
-            store = temp_store(
-                base.withColumn("list_no", F.spark_partition_id()),
-                base.rdd.getNumPartitions(), ("vec",), shuffle=False,
-            )
-            _REFINE_STORES[base] = store
-        return store
+        cand = self.search((qids, qmat), k * k_factor, nprobe)
+        return store_of(full_base).refine_topk(self.spark, qids, qmat, cand, k, self.metric)
 
 
 class IVFPQRIndex(IVFPQIndex):
@@ -482,42 +423,33 @@ class IVFPQRIndex(IVFPQIndex):
             refine_pq=ProductQuantizer.from_dict(meta["refine_pq"]),
         )
 
-    def search(self, queries, k, nprobe, qid_col="qid", vec_col="vec", k_factor: int = 4):
+    def _search_ranked(self, qids, qmat, ranked, k, nprobe, k_factor: int = 4):
         """ADC over the first-level codes for k·k_factor candidates,
         then codes-only re-rank through the second-level residual
-        (IndexIVFPQR::search_preassigned two-pass shape)."""
-        qids, qmat = self._query_arrays(queries, qid_col, vec_col)
-        cand = super().search((qids, qmat), k * k_factor, nprobe)
+        (IndexIVFPQR::search_preassigned two-pass shape); ``search``'s
+        ``k_factor`` arrives here."""
+        cand = super()._search_ranked(qids, qmat, ranked, k * k_factor, nprobe)
         return self.refine_by_codes((qids, qmat), cand, k)
 
     def refine_by_codes(self, queries, cand: DataFrame, k: int) -> DataFrame:
         """Exact-in-reconstruction distances |q − (c + z₁ + z₂)|² for
-        the (qid, id) candidate pairs, ranked as the vector refine ranks
-        (``pair_topk``); no raw vectors are read. ``queries``: a (qid,
-        vec) DataFrame or collected (qids, qmat) arrays. A driver-side
-        kernel: the candidates' ``code``/``rcode`` rows are read by
-        position through the store's id → row map, no Spark job."""
+        the (qid, id) candidate pairs, through the vector refine's
+        ``ListStore.refine_topk`` with the reconstruction as its decode;
+        no raw vectors are read. ``queries``: a (qid, vec) DataFrame or
+        collected (qids, qmat) arrays. A driver-side kernel: the
+        candidates' ``code``/``rcode`` rows are read by position through
+        the store's id → row map, no Spark job."""
         qids, qmat = self._query_arrays(queries)
-        pool = cand.select("qid", "id").toPandas()
-        if len(pool) == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        qpos = {int(x): i for i, x in enumerate(qids)}
-        cand_qpos = pool["qid"].map(qpos).to_numpy(dtype=np.int64)
-        cand_ids = pool["id"].to_numpy(dtype=np.int64)
         store = self.store
-        rows = store.rows_of(cand_ids)
-        xhat = (
-            self.centroids[store.list_of_rows(rows)]
-            + self.pq.decode_np(store.gather(cand_ids, "code"))
-            + self.refine_pq.decode_np(store.gather(cand_ids, "rcode"))
-        )
-        qv = np.asarray(qmat, dtype=np.float64)[cand_qpos]
-        if self.metric == Metric.L2:
-            diff = xhat - qv
-            dist = (diff * diff).sum(axis=1)
-        else:
-            dist = -(xhat * qv).sum(axis=1)
-        return pair_topk(self.spark, qids, cand_qpos, cand_ids, dist, k)
+
+        def decode(rows):
+            return (
+                self.centroids[store.list_of_rows(rows)]
+                + self.pq.decode_np(store.read_rows(rows, "code"))
+                + self.refine_pq.decode_np(store.read_rows(rows, "rcode"))
+            )
+
+        return store.refine_topk(self.spark, qids, qmat, cand, k, self.metric, decode=decode)
 
 
 def _residual2_df(coded: DataFrame, pq: ProductQuantizer) -> DataFrame:

@@ -29,7 +29,6 @@ import numpy as np
 from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
 
@@ -238,18 +237,3 @@ def inter_centroid_matrix(centroids: np.ndarray, metric: Metric = Metric.L2) -> 
     cos = np.clip(cn @ cn.T, -1.0, 1.0)
     np.fill_diagonal(cos, 1.0)
     return np.arccos(cos)
-
-
-def imbalance_factor(df_with_lists: DataFrame, nlist: int) -> float:
-    """Reference ``imbalance_factor`` (utils.h:98-101;
-    InvertedLists.h:107): n·Σsᵢ² / (Σsᵢ)² ≥ 1, =1 when balanced."""
-    sizes = (
-        df_with_lists.groupBy("list_no").count().agg(
-            F.sum(F.col("count") * F.col("count")).alias("sq"),
-            F.sum("count").alias("tot"),
-        )
-    ).collect()[0]
-    tot = sizes["tot"] or 0
-    if tot == 0:
-        return 0.0
-    return float(nlist * sizes["sq"] / (tot * tot))

@@ -5,8 +5,11 @@ keeps an index's lists in one mmapped file in which each list is a
 contiguous ``[offset, size)`` range, and both the scan loop and the
 refine read it. Here the same layout serves the list scan
 (``index/scan.py::scan_ranked`` memmaps it inside its tasks), the exact
-refine (positioned reads on the driver, ``ListStore.refine_topk``) and
-the ``IVFIndex.data`` DataFrame view.
+refine (positioned reads on the driver, ``ListStore.refine_topk``: the
+one re-rank of every candidate pool, as Faiss's ``IndexRefineFlat``
+re-ranks by id from one id-addressed store) and the ``IVFIndex.data``
+DataFrame view. ``store_of`` writes a DataFrame base into a store once,
+for every later re-rank against it.
 
 Layout under ``<path>/store/``:
 - ``ids.i64`` — the n ids, in list order;
@@ -66,10 +69,12 @@ INDEX_FILES = (
 
 # Refine-pool headroom under a coded scan: the kept top-k state is
 # padded by this many extra candidates so code-space rank slips at the
-# pool boundary stay recoverable by the exact refine (measured at 100M:
-# pad 16 lost true members below rank 66 on the worst query — bound
-# satisfaction 0.94; pad 64 restores 1.0/1.0/0.98 at zero flat-scan
-# cost). ErrorProfile and IVFIndex.search both read this one value.
+# pool boundary stay recoverable by the exact refine. SQ8's error is
+# local (vdiff/255 per dim), but the ranks it spans grow with corpus
+# density: pad 16 lost no pool member at 10M, yet at 100M k50_b5's
+# worst query lost 3 below rank 66 (bound satisfaction 0.94 against
+# 0.95); pad 64 restores 1.0/1.0/0.98 for nq·(k+64) positioned reads.
+# ErrorProfile and IVFIndex.search both read this one value.
 REFINE_PAD = 64
 
 # candidate pairs per block of the exact re-rank: 64k pairs at d 96 is
@@ -79,6 +84,11 @@ _REFINE_BLOCK = 1 << 16
 # WILLNEED bridge cap: coalesced readahead ranges may cover at most
 # this multiple of the rows a gather needs (see ``_willneed_rows``)
 _WILLNEED_INFL = 2.0
+
+# WILLNEED hints per call: one posix_fadvise costs ~1.3 µs, so a sparse
+# pool hinted row by row paid 0.85 s for 635k rows; past this many
+# ranges the smallest holes between them are bridged
+_WILLNEED_MAX_RANGES = 1 << 12
 
 # rows per Arrow batch of the ``data`` view
 _FRAME_BATCH = 1 << 16
@@ -115,7 +125,10 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     queues the batch ahead of the gather. When the ranges would cover
     more than ``_WILLNEED_INFL``× the rows needed, ``gap_rows`` halves
     until they do not: dense sets keep long sequential ranges, sparse
-    ones fall back toward one hint per row."""
+    ones fall back toward one hint per row. At most
+    ``_WILLNEED_MAX_RANGES`` hints go out: beyond that the smallest
+    holes between ranges are bridged first, trading readahead bytes for
+    syscalls."""
     if len(rows_sorted) == 0 or not hasattr(os, "posix_fadvise"):
         return
     rb = d * itemsize
@@ -134,6 +147,12 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     while gap > 0 and int((ends - starts).sum()) + len(starts) > _WILLNEED_INFL * len(rows):
         gap //= 2
         starts, ends = ranges(gap)
+    if len(starts) > _WILLNEED_MAX_RANGES:
+        # bridge the narrowest holes, keep the widest as breaks
+        bridged = len(starts) - _WILLNEED_MAX_RANGES
+        keep = np.sort(np.argpartition(starts[1:] - ends[:-1], bridged)[bridged:])
+        starts = starts[np.concatenate(([0], keep + 1))]
+        ends = ends[np.concatenate((keep, [len(ends) - 1]))]
     # plain ints: a sparse pool is one hint per row, and numpy scalar
     # arithmetic per hint cost more than the syscall
     offs = (offset + starts * rb).tolist()
@@ -154,6 +173,25 @@ def _rows_of_arrow(col, name: str) -> np.ndarray:
         flat = col.flatten().to_numpy(zero_copy_only=False)
         return np.asarray(flat, dtype=np.float32).reshape(n, -1)
     return _binary_matrix(col).reshape(n, -1)
+
+
+def _pool_pairs(qids, pool):
+    """(query position, id) per candidate of a pool: a ``(qid, id)``
+    DataFrame, collected here and mapped to positions in ``qids`` by
+    one sorted lookup, or an ``(nq, P)`` id matrix whose row i holds
+    query i's candidates, padded with -1."""
+    if isinstance(pool, np.ndarray):
+        ids = pool.astype(np.int64, copy=False).ravel()
+        qpos = np.repeat(np.arange(pool.shape[0], dtype=np.int64), pool.shape[1])
+        keep = ids >= 0
+        return qpos[keep], ids[keep]
+    pdf = pool.select("qid", "id").toPandas()
+    qids = np.asarray(qids, dtype=np.int64)
+    by_qid = np.argsort(qids, kind="stable")
+    at = np.searchsorted(
+        qids, pdf["qid"].to_numpy(dtype=np.int64), side="right", sorter=by_qid
+    ) - 1
+    return by_qid[at], pdf["id"].to_numpy(dtype=np.int64)
 
 
 def pair_topk(spark, qids, cand_qpos, cand_ids, dist, k: int):
@@ -292,46 +330,55 @@ class ListStore:
         return np.asarray(self._maps["rows_sorted"][pos], dtype=np.int64)
 
     def gather(self, ids: np.ndarray, name: str = "vec") -> np.ndarray:
-        """(len(ids), width) rows of one column by id, positioned reads
-        in offset order."""
+        """(len(ids), width) rows of one column by id."""
         self._random_access()
-        col = self.column(name)
         rows = self.rows_of(ids)
         order = np.argsort(rows, kind="stable")
-        _willneed_rows(self.path_of(name), rows[order], self.columns[name],
-                       itemsize=col.dtype.itemsize)
-        out = np.empty((len(rows), self.columns[name]), dtype=col.dtype)
-        out[order] = col[rows[order]]
+        out = np.empty((len(rows), self.columns[name]), dtype=COLUMNS[name][1])
+        out[order] = self.read_rows(rows[order], name)
         return out
+
+    def read_rows(self, rows: np.ndarray, name: str) -> np.ndarray:
+        """Rows of one column at ascending store ``rows``: one coalesced
+        WILLNEED queues them all, then the reads go in offset order."""
+        col = self.column(name)
+        _willneed_rows(self.path_of(name), rows, self.columns[name],
+                       itemsize=col.dtype.itemsize)
+        return col[rows]
 
     def list_of_rows(self, rows: np.ndarray) -> np.ndarray:
         """List number of each store row."""
         return np.searchsorted(self.offsets, rows, side="right") - 1
 
-    def refine_topk(self, spark, qids, qmat, cand_qpos, cand_ids, k: int, metric: Metric):
-        """Exact (qid, pos, id, dist) top-k over a candidate pair set.
+    def refine_topk(self, spark, qids, qmat, pool, k: int, metric: Metric, decode=None):
+        """Exact (qid, pos, id, dist) top-k of a candidate pool: the one
+        re-rank every index runs, on the driver with no Spark job.
 
-        cand_qpos: row index into qids/qmat per candidate; cand_ids:
-        candidate vector id. A driver-side numpy kernel, no Spark job:
-        the pairs are sorted by store row once, one coalesced WILLNEED
-        queues the whole batch's reads ahead of the first one, and the
-        ``vec`` rows are read in that offset order (semi-sequential) in
-        blocks of ``_REFINE_BLOCK`` pairs, so driver memory stays
-        bounded at any batch size. Float64 distances are taken row by
-        row, and ``pair_topk`` ranks them."""
-        cand_qpos = np.asarray(cand_qpos, dtype=np.int64)
-        cand_ids = np.asarray(cand_ids, dtype=np.int64)
+        ``qids``/``qmat``: the collected queries. ``pool``: a ``(qid,
+        id)`` DataFrame or an ``(nq, P)`` id matrix padded with -1 (see
+        ``_pool_pairs``); an empty pool gives an empty result. The pairs
+        are sorted by store row once and scored in blocks of
+        ``_REFINE_BLOCK`` pairs, so driver memory stays bounded at any
+        pool size. ``decode(rows)`` gives a block's float64 vectors at
+        ascending store rows; by default the ``vec`` column's, read by
+        ``read_rows`` in offset order (semi-sequential). IVFPQR passes
+        its reconstruction from ``code``/``rcode``. Float64 distances
+        are taken row by row, and ``pair_topk`` ranks them."""
+        cand_qpos, cand_ids = _pool_pairs(qids, pool)
+        if len(cand_ids) == 0:
+            return spark.createDataFrame([], RESULT_SCHEMA)
+        if decode is None:
+            def decode(r):
+                return np.asarray(self.read_rows(r, "vec"), dtype=np.float64)
         qmat = np.asarray(qmat, dtype=np.float64)
         self._random_access()
-        vecs = self.column("vec")
         rows = self.rows_of(cand_ids)
         by_row = np.argsort(rows, kind="stable")
         rows = rows[by_row]
-        _willneed_rows(self.path_of("vec"), rows, self.columns["vec"])
         dist = np.empty(len(cand_ids), dtype=np.float64)
         for lo in range(0, len(rows), _REFINE_BLOCK):
             blk = by_row[lo : lo + _REFINE_BLOCK]
-            mat = np.asarray(vecs[rows[lo : lo + _REFINE_BLOCK]], dtype=np.float64)
+            mat = decode(rows[lo : lo + _REFINE_BLOCK])
             qv = qmat[cand_qpos[blk]]
             if metric == Metric.L2:
                 diff = mat - qv
@@ -570,4 +617,46 @@ def temp_store(df, nlist: int, columns, **kw) -> ListStore:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
     weakref.finalize(store, shutil.rmtree, tmp, ignore_errors=True)
+    return store
+
+
+# the store of each DataFrame base a refine reads, kept while the base
+# lives
+_BASE_STORES = weakref.WeakKeyDictionary()
+
+
+def store_of(base) -> ListStore:
+    """The ``vec`` store an exact re-rank reads for ``base``: a
+    ``ListStore`` itself, or the store written from an (id, vec)
+    DataFrame on its first use and read by every later re-rank against
+    the same DataFrame object, as Spark's ``cache()`` behaves. The
+    writer takes one list per partition of the base with no shuffle, so
+    the driver appends one staged file at a time and never holds the
+    whole base.
+
+    ``vec`` must be ``array<float>``: the store holds float32, so an
+    ``array<double>`` base raises ``ValueError`` rather than re-rank
+    silently rounded vectors (cast it to make the rounding explicit).
+    The store is a float32 copy of the base in a driver-local temporary
+    directory (``temp_store``), removed with the store: plan driver disk
+    about the size of the base. On a cluster without a shared
+    filesystem, pass a ``ListStore`` built on shared storage."""
+    if isinstance(base, ListStore):
+        return base
+    store = _BASE_STORES.get(base)
+    if store is None:
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import ArrayType, FloatType
+
+        vt = base.schema["vec"].dataType
+        if not (isinstance(vt, ArrayType) and isinstance(vt.elementType, FloatType)):
+            raise ValueError(
+                "refine: a DataFrame base needs vec array<float> "
+                f"(the refine store is float32), got {vt.simpleString()}"
+            )
+        store = temp_store(
+            base.withColumn("list_no", F.spark_partition_id()),
+            base.rdd.getNumPartitions(), ("vec",), shuffle=False,
+        )
+        _BASE_STORES[base] = store
     return store

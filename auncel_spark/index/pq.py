@@ -212,7 +212,8 @@ def pq_knn(
     with a per-query LUT gather-sum as the distance block.
 
     Approximation contract: distances are ADC estimates; callers wanting
-    exact ranks re-rank with ``knn_by_ids`` (O9 / IndexRefineFlat)."""
+    exact ranks re-rank the pool with ``ListStore.refine_topk`` (O9 /
+    IndexRefineFlat; the factory's ``RFlat``)."""
     books = queries.sparkSession.sparkContext.broadcast(pq.codebooks)
 
     def kernel(qmat):

@@ -391,6 +391,9 @@ def knn_by_ids(
 
     ``candidates`` must have columns (qid, id). The join on id prunes
     the base scan to candidate rows before any distance is computed.
+    This SQL re-rank serves the catalog's ``q_knn_rerank_subset``, whose
+    oracle is float64 SQL; every index refine re-ranks through
+    ``ListStore.refine_topk`` on the driver instead.
     """
     q = _prep_queries(queries, qid_col, q_vec_col)
     b = _prep_base(base, id_col, vec_col)

@@ -47,7 +47,6 @@ import time as _time
 
 import numpy as np
 
-from auncel_spark.functions.vector import as_matrix
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -124,15 +123,14 @@ class ErrorProfile:
         config's topk (≤ max_topk), so the extra tail columns feed ONLY
         the refine pool; flat-scan behavior is unchanged
         (state_k == max_topk when no codec is active)."""
-        return self.max_topk + (
-            self._REFINE_PAD if self.index.codec_active else 0
-        )
+        return self.max_topk + (REFINE_PAD if self.index.codec_active else 0)
 
-    def _coarse(self, queries: DataFrame):
-        qpdf = queries.select("qid", "vec").toPandas()
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
+    def _coarse(self, queries):
+        """(qids, qmat, ranked, cdist, dtb) of a query DataFrame: one
+        collect and one full-width coarse ranking."""
+        qids, qmat = self.index._query_arrays(queries)
         # width from the index: zero cells decode to shape (0,)
-        qmat = as_matrix(qpdf["vec"]).reshape(-1, self.index.d)
+        qmat = qmat.reshape(-1, self.index.d)
         ranked, cdist = self.index.coarse_rank(qids, qmat, self.index.nlist)
         dtb = boundary_distances(cdist, ranked, self.index.interdis, self.index.metric)
         return qids, qmat, ranked, cdist, dtb
@@ -539,20 +537,6 @@ class ErrorProfile:
             return result, {"qid": qids, "nprobe": np.where(target > 0, target, cap)}
         return result
 
-    # refine-pool padding over topk: the coded scan's rank errors are
-    # LOCAL (SQ8 max per-dim error = vdiff/255, so only near-boundary
-    # pairs can swap), but "near-boundary" is a DENSITY statement: how
-    # many ranks a fixed distance perturbation spans grows with the
-    # corpus. Measured: pad 16 showed 0 pool misses at 10M, yet at
-    # 100M k50_b5's worst query lost 3 true members below rank 66
-    # (bound satisfaction 0.94 vs the 0.95 target — the 10x denser
-    # top-k window turns the same SQ8 error into a deeper rank slip).
-    # 64 covers that regime with margin; pool cost is linear and tiny
-    # (positioned reads of nq·(k+64) rows; scan-state argpartition at
-    # width max_topk+64 is noise next to the GEMM). The value lives in
-    # list_store.REFINE_PAD, shared with IVFIndex.search.
-    _REFINE_PAD = REFINE_PAD
-
     def _refined_result(
         self,
         qids: np.ndarray,
@@ -571,18 +555,9 @@ class ErrorProfile:
         is settled in fp32."""
         if not self.index.codec_active:
             return self._state_to_df(qids, state_d, state_i, topk)
-        pool = min(state_i.shape[1], topk + self._REFINE_PAD)
-        ids = state_i[:, :pool]
-        qpos = np.repeat(np.arange(len(qids), dtype=np.int32), pool)
-        mask = ids.ravel() >= 0
+        pool = state_i[:, : topk + REFINE_PAD]
         return self.index.store.refine_topk(
-            self.index.spark,
-            qids,
-            qmat,
-            qpos[mask],
-            ids.ravel()[mask],
-            topk,
-            self.index.metric,
+            self.index.spark, qids, qmat, pool, topk, self.index.metric
         )
 
     def _predicted_recall(

@@ -72,11 +72,8 @@ class LearnedTermination:
             if si < len(stages) - 1:
                 labels[fresh] = float(si)
 
-        q = train_queries.select("qid", "vec").collect()
-        qmat = np.array([r["vec"] for r in q], dtype=np.float64)
-        _, cdist = self.index.coarse_rank(
-            np.array([r["qid"] for r in q]), qmat, self.index.nlist
-        )
+        fq, qmat = self.index._query_arrays(train_queries)
+        _, cdist = self.index.coarse_rank(fq, qmat, self.index.nlist)
         feats = self._features(qmat, cdist)
         spark = self.index.spark
         rows = [
@@ -94,38 +91,37 @@ class LearnedTermination:
         return self
 
     def predict_stages(self, queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        """(qids, nprobe): each query's predicted probe target."""
+        qids, qmat = self.index._query_arrays(queries)
+        # width from the index: zero rows decode to shape (0,)
+        qmat = qmat.reshape(-1, self.index.d)
+        _, cdist = self.index.coarse_rank(qids, qmat, self.index.nlist)
+        return qids, self._predict(qmat, cdist)
+
+    def _predict(self, qmat: np.ndarray, cdist: np.ndarray) -> np.ndarray:
+        """Predicted probe target per query row, from its features."""
         from pyspark.ml.functions import array_to_vector
 
-        q = queries.select("qid", "vec").collect()
-        qids = np.array([r["qid"] for r in q], dtype=np.int64)
-        # width from the index: zero rows decode to shape (0,)
-        qmat = np.array([r["vec"] for r in q], dtype=np.float64).reshape(-1, self.index.d)
-        _, cdist = self.index.coarse_rank(qids, qmat, self.index.nlist)
         feats = self._features(qmat, cdist)
-        spark = self.index.spark
-        df = spark.createDataFrame(
-            [(int(qids[i]), [float(v) for v in feats[i]]) for i in range(len(qids))],
-            "qid bigint, raw array<double>",
-        ).select("qid", array_to_vector("raw").alias("features"))
-        pred = {r["qid"]: r["prediction"] for r in self.model.transform(df).collect()}
-        stage_idx = np.array(
-            [max(0.0, pred[int(x)]) for x in qids]
-        )
-        nprobe = np.minimum(
-            np.ceil((2.0 ** stage_idx) * self.multiplier), self.index.nlist
+        df = self.index.spark.createDataFrame(
+            [(i, [float(v) for v in f]) for i, f in enumerate(feats)],
+            "row int, raw array<double>",
+        ).select("row", array_to_vector("raw").alias("features"))
+        pred = self.model.transform(df).select("row", "prediction").toPandas()
+        stage_idx = np.empty(len(feats))
+        stage_idx[pred["row"].to_numpy()] = pred["prediction"].to_numpy()
+        return np.minimum(
+            np.ceil((2.0 ** np.maximum(stage_idx, 0.0)) * self.multiplier), self.index.nlist
         ).astype(np.int64)
-        return qids, nprobe
 
     def search(self, queries: DataFrame, topk: int, return_info: bool = False):
         """Probe each query to its predicted target via staged delta
-        scans (shared machinery with the ELP loop)."""
-        qids_order, nprobe = self.predict_stages(queries)
+        scans (shared machinery with the ELP loop). The queries are
+        collected and coarse-ranked once, for the features and the
+        scan."""
         ep = self._helper
         qids, qmat, ranked, cdist, _ = ep._coarse(queries)
-        pos = {int(q): i for i, q in enumerate(qids)}
-        targets = np.empty(len(qids), dtype=np.int64)
-        for q, np_ in zip(qids_order, nprobe):
-            targets[pos[int(q)]] = np_
+        targets = self._predict(qmat, cdist)
         state_d = np.full((len(qids), ep.max_topk), np.inf)
         state_i = np.full((len(qids), ep.max_topk), -1, dtype=np.int64)
         # every per-query probe budget is known BEFORE any scan (the

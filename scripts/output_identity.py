@@ -12,14 +12,18 @@ A third, coded section dumps searches over coded lists at nprobe <
 nlist: ``IVFPQIndex.search`` (residual L2 and IP), ``search_refine``
 against a DataFrame base (twice, so the second call reads the store the
 first wrote), ``IVFSQIndex.search`` (8bit and 4bit) and
-``BinaryIVFIndex.search``. ``compare`` checks two dumps with
+``BinaryIVFIndex.search``. A fourth, ``rflat`` section dumps the index
+factory's ``RFlat`` re-rank for ``IVF8,PQ4,RFlat`` and
+``PCA8,IVF8,Flat,RFlat`` (each index's k·4 candidates re-ranked exactly
+against the base, in the transformed space for the PCA chain).
+``compare`` checks two dumps with
 ``DataFrame.equals`` / ``array_equal`` and exits non-zero on any
 difference. A refactor that claims "the same bits" runs ``dump`` once
 per tree (e.g. a ``git archive`` of the parent and the working tree) and
 ``compare`` on the two files.
 
-One exception: the distances of the flat and replica sections (IVF,
-ELP and LAET searches) and of ``IVFPQIndex.search`` and
+One exception: the distances of the flat, replica and rflat sections
+(IVF, ELP, LAET and factory searches) and of ``IVFPQIndex.search`` and
 ``IVFSQIndex.search`` need only agree within 1e-9 relative (qid, pos,
 id and every ``return_info`` array must still be equal). Their scan
 reads a list in whichever blocks the task layout gives it, and BLAS may
@@ -28,7 +32,9 @@ shape: a scan's distance block is one GEMM per block of a list, and a PQ
 scan task builds the query-side lookup table with one GEMM over the
 queries it meets first. Since the list store, the GEMM blocks follow
 whole lists rather than parquet row groups, so a tree on either side of
-that change may move a distance by a rounding step.
+that change may move a distance by a rounding step. ``RFlat``'s re-rank
+was a float64 SQL join before it read a store on the driver, and the two
+sum a distance's terms in different orders.
 
 Usage:
     python scripts/output_identity.py dump TREE OUT.pkl [--corpus small|perf] [--work DIR]
@@ -53,7 +59,7 @@ import tempfile
 import numpy as np
 
 # dumps whose dist may move by a rounding step with the task layout
-ROUNDED = ("flat/", "replica/", "coded/ivfpq.search/", "coded/ivfsq.search/")
+ROUNDED = ("flat/", "replica/", "coded/ivfpq.search/", "coded/ivfsq.search/", "rflat/")
 
 CORPORA = {
     # n_blobs, per_blob, d, nq, n_train, nlist, max_topk, topk
@@ -109,6 +115,7 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
         raise SystemExit(f"engine imported from {auncel_spark.__file__}, not {tree}")
     from auncel_spark.config import Metric
     from auncel_spark.index.binary import BinaryIVFIndex, pack_bits_np
+    from auncel_spark.index.factory import build_index
     from auncel_spark.index.ivf import IVFIndex
     from auncel_spark.index.ivfpq import IVFPQIndex
     from auncel_spark.index.ivfsq import IVFSQIndex
@@ -190,6 +197,11 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
 
     bidx = BinaryIVFIndex.build(bits(xb, "id"), nlist=16)
     got["coded/binary_ivf.search"] = (rows(bidx.search(bits(xq, "qid"), topk, 4)), {})
+
+    # the factory's exact re-rank of each index's candidates
+    for spec in ("IVF8,PQ4,RFlat", "PCA8,IVF8,Flat,RFlat"):
+        si = build_index(base, spec, seed=4)
+        got[f"rflat/{spec}"] = (rows(si.search(queries, topk, nprobe=4)), {})
 
     with open(out, "wb") as f:
         pickle.dump(got, f)

@@ -128,13 +128,13 @@ def test_search_with_stats(base_df, query_df, tiny_vectors, tmp_path, spark):
         assert st["ndis"] == int(sizes[probed].sum())
         assert st["search_time_s"] > 0
         res.unpersist()
-        # ndis comes from the store's offsets: the call runs the search
-        # (its query collects and its cached result) and nothing else
+        # ndis comes from the store's offsets: the call runs one search
+        # (one query collect, its scan and its cached result) and
+        # nothing else — no second collect of the queries
         again = []
         plain = _jobs_of(
             sc, "plain_search",
-            lambda: (query_df.select("qid", "vec").toPandas(),
-                     again.append(index.search(query_df, K, nprobe=4).cache()),
+            lambda: (again.append(index.search(query_df, K, nprobe=4).cache()),
                      again[0].count()),
         )
         again[0].unpersist()

@@ -72,3 +72,44 @@ def test_laet_empty_query_frame_returns_no_rows(laet_setup):
     res, info = lt.search(queries.limit(0), TOPK, return_info=True)
     assert res.collect() == []
     assert len(info["qid"]) == len(info["nprobe"]) == 0
+
+
+def test_laet_search_collects_queries_once(laet_setup, spark, monkeypatch):
+    """A search reads its query frame once: the features and the scan
+    share one collect and one coarse ranking. Outside its scan jobs it
+    runs exactly the jobs ``predict_stages`` runs (the collect and the
+    model's predictions)."""
+    _, xq, lt, queries = laet_setup
+    sc = spark.sparkContext
+    read = sc.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            read.add(len(b))
+            yield b
+
+    q = queries.mapInPandas(counted, queries.schema)
+    scan = lt._helper._scan_delta
+
+    def scan_in_own_group(*a, **kw):
+        sc.setJobGroup("laet_scan", "laet_scan")
+        try:
+            return scan(*a, **kw)
+        finally:
+            sc.setJobGroup("laet_search", "laet_search")
+
+    monkeypatch.setattr(lt._helper, "_scan_delta", scan_in_own_group)
+
+    def jobs_of(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setJobGroup(None, None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    searched = jobs_of("laet_search", lambda: lt.search(q, TOPK))
+    assert read.value == len(xq)
+    assert sc.statusTracker().getJobIdsForGroup("laet_scan")
+    predicted = jobs_of("laet_predict", lambda: lt.predict_stages(q))
+    assert len(searched) == len(predicted), (searched, predicted)

@@ -90,12 +90,11 @@ def test_refine_topk_is_exact(spark, replica_idx):
     idx, _, vec, ids = replica_idx
     _, q = _queries(spark, nq=8)
     qids = np.arange(8, dtype=np.int64) + 1000
-    # candidate pool: 64 arbitrary ids per query
+    # candidate pool: 64 arbitrary ids per query, as an id matrix
     rng = np.random.default_rng(0)
     pool = rng.choice(N, size=(8, 64), replace=False).astype(np.int64)
-    qpos = np.repeat(np.arange(8, dtype=np.int32), 64)
     res = idx.store.refine_topk(
-        spark, qids, q.astype(np.float64), qpos, pool.ravel(), 5, Metric.L2
+        spark, qids, q.astype(np.float64), pool, 5, Metric.L2
     ).toPandas()
     for i in range(8):
         d = ((vec[pool[i]].astype(np.float64) - q[i].astype(np.float64)) ** 2).sum(1)
@@ -262,12 +261,14 @@ def test_blob_rejects_duplicate_ids(tmp_path, ids):
 
 def test_refine_pad_single_source():
     """The refine pad has exactly one definition: the ELP kept-state and
-    the fixed-nprobe search path must both read list_store.REFINE_PAD."""
+    the fixed-nprobe search path must both read list_store.REFINE_PAD,
+    and ErrorProfile keeps no alias of its own."""
     from auncel_spark.index import ivf
     from auncel_spark.index.list_store import REFINE_PAD
-    from auncel_spark.profile.error_profile import ErrorProfile
+    from auncel_spark.profile import error_profile
 
-    assert ErrorProfile._REFINE_PAD is REFINE_PAD
+    assert error_profile.REFINE_PAD is REFINE_PAD
+    assert not hasattr(error_profile.ErrorProfile, "_REFINE_PAD")
     assert ivf.REFINE_PAD is REFINE_PAD
 
 
@@ -294,3 +295,27 @@ def test_willneed_density_gate(tmp_path, monkeypatch):
     rows = np.arange(0, 5000, dtype=np.int64)
     ls._willneed_rows(str(path), rows, d=1, gap_rows=256, itemsize=4)
     assert len(calls) == 1 and calls[0][1] == 5000 * 4
+
+
+def test_willneed_hints_capped(monkeypatch):
+    """A sparse pool must not cost one posix_fadvise per row (635k
+    calls took 0.85 s of a 2.7 s refine): at most
+    ``_WILLNEED_MAX_RANGES`` ranges go out, and every requested row
+    still lies inside a hinted range."""
+    from auncel_spark.index import list_store as ls
+
+    calls = []
+    monkeypatch.setattr(ls, "_fadvise", lambda path, ranges: calls.append(list(ranges)))
+    rng = np.random.default_rng(4)
+    rows = np.sort(rng.choice(60_000_000, 600_000, replace=False)).astype(np.int64)
+    d, itemsize = 96, 4
+    ls._willneed_rows("unused.f32", rows, d=d, itemsize=itemsize)
+    assert len(calls) == 1
+    ranges = np.asarray(calls[0], dtype=np.int64)
+    assert 0 < len(ranges) <= ls._WILLNEED_MAX_RANGES
+    rb = d * itemsize
+    assert (ranges[:, 0] % rb == 0).all() and (ranges[:, 1] % rb == 0).all()
+    lo, hi = ranges[:, 0] // rb, (ranges[:, 0] + ranges[:, 1]) // rb
+    assert (lo[1:] >= hi[:-1]).all()  # ascending, disjoint
+    at = np.searchsorted(lo, rows, side="right") - 1
+    assert (at >= 0).all() and (rows < hi[at]).all()
