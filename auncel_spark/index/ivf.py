@@ -303,7 +303,6 @@ class IVFIndex:
         nprobe: int,
         qid_col: str = "qid",
         vec_col: str = "vec",
-        **kw,
     ) -> DataFrame:
         """Fixed-nprobe IVF search. Returns (qid, pos, id, dist).
 
@@ -313,12 +312,16 @@ class IVFIndex:
         queries probe its list. ``queries`` is a DataFrame, or the
         (qids, qmat) arrays a caller already collected from one: a
         caller that needs the query vectors itself (``search_refine``)
-        so collects them once, not twice. ``kw`` goes to
-        ``_search_ranked`` (IVFPQR's ``k_factor``)."""
+        so collects them once, not twice."""
+        return self._search_ranked(
+            *self._rank_queries(queries, nprobe, qid_col, vec_col), k, nprobe
+        )
+
+    def _rank_queries(self, queries, nprobe: int, qid_col: str = "qid", vec_col: str = "vec"):
+        """(qids, qmat in code space, ranked lists): one collect, one coarse ranking."""
         qids, qmat = self._query_arrays(queries, qid_col, vec_col)
         qmat = self._code_space(qmat)
-        ranked, _ = self.coarse_rank(qids, qmat, nprobe)
-        return self._search_ranked(qids, qmat, ranked, k, nprobe, **kw)
+        return qids, qmat, self.coarse_rank(qids, qmat, nprobe)[0]
 
     def _search_ranked(self, qids, qmat, ranked, k: int, nprobe: int) -> DataFrame:
         """``search`` after the coarse ranking: scan the ``nprobe``

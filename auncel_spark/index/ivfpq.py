@@ -423,11 +423,16 @@ class IVFPQRIndex(IVFPQIndex):
             refine_pq=ProductQuantizer.from_dict(meta["refine_pq"]),
         )
 
-    def _search_ranked(self, qids, qmat, ranked, k, nprobe, k_factor: int = 4):
+    def search(self, queries, k, nprobe, qid_col="qid", vec_col="vec", k_factor: int = 4):
         """ADC over the first-level codes for k·k_factor candidates,
         then codes-only re-rank through the second-level residual
-        (IndexIVFPQR::search_preassigned two-pass shape); ``search``'s
-        ``k_factor`` arrives here."""
+        (IndexIVFPQR::search_preassigned two-pass shape)."""
+        return self._search_ranked(
+            *self._rank_queries(queries, nprobe, qid_col, vec_col), k, nprobe, k_factor
+        )
+
+    def _search_ranked(self, qids, qmat, ranked, k, nprobe, k_factor: int = 4):
+        """``search`` after the coarse ranking."""
         cand = super()._search_ranked(qids, qmat, ranked, k * k_factor, nprobe)
         return self.refine_by_codes((qids, qmat), cand, k)
 
@@ -442,11 +447,11 @@ class IVFPQRIndex(IVFPQIndex):
         qids, qmat = self._query_arrays(queries)
         store = self.store
 
-        def decode(rows):
+        def decode(rows, read):
             return (
                 self.centroids[store.list_of_rows(rows)]
-                + self.pq.decode_np(store.read_rows(rows, "code"))
-                + self.refine_pq.decode_np(store.read_rows(rows, "rcode"))
+                + self.pq.decode_np(read("code", rows))
+                + self.refine_pq.decode_np(read("rcode", rows))
             )
 
         return store.refine_topk(self.spark, qids, qmat, cand, k, self.metric, decode=decode)

@@ -81,13 +81,11 @@ REFINE_PAD = 64
 # a 50 MB float64 block
 _REFINE_BLOCK = 1 << 16
 
-# WILLNEED bridge cap: coalesced readahead ranges may cover at most
-# this multiple of the rows a gather needs (see ``_willneed_rows``)
+# WILLNEED: bridged ranges cover at most _INFL× the bytes the rows of a
+# gather need (past _MAX_RANGES ranges, the pages they sit on); one
+# posix_fadvise costs ~1.3 µs, and a pool hinted row by row paid 0.85 s
+# for 635k rows (see ``_willneed_rows``)
 _WILLNEED_INFL = 2.0
-
-# WILLNEED hints per call: one posix_fadvise costs ~1.3 µs, so a sparse
-# pool hinted row by row paid 0.85 s for 635k rows; past this many
-# ranges the smallest holes between them are bridged
 _WILLNEED_MAX_RANGES = 1 << 12
 
 # rows per Arrow batch of the ``data`` view
@@ -114,45 +112,50 @@ def _fadvise(path: str, ranges) -> None:
         os.close(fd)
 
 
+def _bridge(starts, ends, cost, budget, limit):
+    """Merge ascending inclusive row runs across their cheapest holes:
+    at most ``limit`` holes, whose ``cost``s sum to at most ``budget``."""
+    order = np.argsort(cost)  # ties break arbitrarily, but the same way each call
+    n = min(int(limit), int(np.searchsorted(np.cumsum(cost[order]), budget, side="right")))
+    brk = np.sort(order[n:])  # the holes left as breaks
+    return starts[np.r_[0, brk + 1]], ends[np.r_[brk, len(ends) - 1]]
+
+
 def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
                    gap_rows: int = 256, itemsize: int = 4,
                    offset: int = 0) -> None:
     """Coalesced async readahead for a sorted row set before a memmap
     gather. MADV_RANDOM (set on the driver's maps to stop 128 KB
-    readahead per fault) also means every cold row is a synchronous
-    4 KB page fault, so adjacent rows coalesce into ranges (gaps under
-    ``gap_rows`` rows are bridged) and one POSIX_FADV_WILLNEED per range
-    queues the batch ahead of the gather. When the ranges would cover
-    more than ``_WILLNEED_INFL``× the rows needed, ``gap_rows`` halves
-    until they do not: dense sets keep long sequential ranges, sparse
-    ones fall back toward one hint per row. At most
-    ``_WILLNEED_MAX_RANGES`` hints go out: beyond that the smallest
-    holes between ranges are bridged first, trading readahead bytes for
-    syscalls."""
+    readahead per fault) makes every cold row a synchronous 4 KB page
+    fault, so runs of rows coalesce into ranges, one WILLNEED each.
+    Holes are bridged smallest first: under ``gap_rows`` rows, within
+    ``_WILLNEED_INFL``× the rows' bytes; then, past
+    ``_WILLNEED_MAX_RANGES`` ranges, down to that many if that stays
+    within ``_WILLNEED_INFL``× the pages the rows sit on (the kernel
+    reads whole pages), else only across shared pages."""
     if len(rows_sorted) == 0 or not hasattr(os, "posix_fadvise"):
         return
     rb = d * itemsize
     rows = np.asarray(rows_sorted, dtype=np.int64)
-    diffs = np.diff(rows)
-
-    def ranges(gap):
-        brk = np.where(diffs > gap)[0]
-        return (
-            rows[np.concatenate(([0], brk + 1))],
-            rows[np.concatenate((brk, [len(rows) - 1]))],
-        )
-
-    gap = gap_rows
-    starts, ends = ranges(gap)
-    while gap > 0 and int((ends - starts).sum()) + len(starts) > _WILLNEED_INFL * len(rows):
-        gap //= 2
-        starts, ends = ranges(gap)
+    brk = np.flatnonzero(np.diff(rows) > 1)
+    runs = rows[np.r_[0, brk + 1]], rows[np.r_[brk, len(rows) - 1]]
+    hole = runs[0][1:] - runs[1][:-1] - 1
+    starts, ends = _bridge(
+        *runs, hole, _WILLNEED_INFL * len(rows) - int((runs[1] - runs[0] + 1).sum()),
+        (hole < gap_rows).sum(),
+    )
     if len(starts) > _WILLNEED_MAX_RANGES:
-        # bridge the narrowest holes, keep the widest as breaks
-        bridged = len(starts) - _WILLNEED_MAX_RANGES
-        keep = np.sort(np.argpartition(starts[1:] - ends[:-1], bridged)[bridged:])
-        starts = starts[np.concatenate(([0], keep + 1))]
-        ends = ends[np.concatenate((keep, [len(ends) - 1]))]
+        def pages(s, e):  # first/last page per range, pages covered
+            p0, p1 = (offset + s * rb) // mmap.PAGESIZE, (offset + (e + 1) * rb - 1) // mmap.PAGESIZE
+            return p0, p1, int((p1 - p0 + 1).sum() - (p0[1:] == p1[:-1]).sum())
+
+        p0, p1, covered = pages(starts, ends)
+        cost = np.maximum(p0[1:] - p1[:-1] - 1, 0)
+        over = len(starts) - _WILLNEED_MAX_RANGES
+        budget = _WILLNEED_INFL * pages(*runs)[2] - covered
+        if np.partition(cost, over - 1)[:over].sum() > budget:
+            budget = 0  # the cap is out of reach: bridge only shared pages
+        starts, ends = _bridge(starts, ends, cost, budget, over)
     # plain ints: a sparse pool is one hint per row, and numpy scalar
     # arithmetic per hint cost more than the syscall
     offs = (offset + starts * rb).tolist()
@@ -329,23 +332,6 @@ class ListStore:
             raise KeyError("list store: unknown id in lookup")
         return np.asarray(self._maps["rows_sorted"][pos], dtype=np.int64)
 
-    def gather(self, ids: np.ndarray, name: str = "vec") -> np.ndarray:
-        """(len(ids), width) rows of one column by id."""
-        self._random_access()
-        rows = self.rows_of(ids)
-        order = np.argsort(rows, kind="stable")
-        out = np.empty((len(rows), self.columns[name]), dtype=COLUMNS[name][1])
-        out[order] = self.read_rows(rows[order], name)
-        return out
-
-    def read_rows(self, rows: np.ndarray, name: str) -> np.ndarray:
-        """Rows of one column at ascending store ``rows``: one coalesced
-        WILLNEED queues them all, then the reads go in offset order."""
-        col = self.column(name)
-        _willneed_rows(self.path_of(name), rows, self.columns[name],
-                       itemsize=col.dtype.itemsize)
-        return col[rows]
-
     def list_of_rows(self, rows: np.ndarray) -> np.ndarray:
         """List number of each store row."""
         return np.searchsorted(self.offsets, rows, side="right") - 1
@@ -357,32 +343,49 @@ class ListStore:
         ``qids``/``qmat``: the collected queries. ``pool``: a ``(qid,
         id)`` DataFrame or an ``(nq, P)`` id matrix padded with -1 (see
         ``_pool_pairs``); an empty pool gives an empty result. The pairs
-        are sorted by store row once and scored in blocks of
-        ``_REFINE_BLOCK`` pairs, so driver memory stays bounded at any
-        pool size. ``decode(rows)`` gives a block's float64 vectors at
-        ascending store rows; by default the ``vec`` column's, read by
-        ``read_rows`` in offset order (semi-sequential). IVFPQR passes
-        its reconstruction from ``code``/``rcode``. Float64 distances
-        are taken row by row, and ``pair_topk`` ranks them."""
+        are sorted by store row and scored in blocks of
+        ``_REFINE_BLOCK``, so driver memory stays bounded. ``decode(rows,
+        read)`` gives a block's float64 vectors, ``read(name, rows)``
+        the block's rows of one column: ``vec`` by default, IVFPQR's
+        reconstruction from ``code``/``rcode``. A column's first read
+        queues one WILLNEED over the whole sorted pool, so later blocks
+        are read ahead while earlier ones are scored. Distances are
+        ``operators/knn.py::_metric_dist``'s, row by row (COSINE: −cos,
+        0 at a zero norm); ``pair_topk`` ranks them."""
         cand_qpos, cand_ids = _pool_pairs(qids, pool)
         if len(cand_ids) == 0:
             return spark.createDataFrame([], RESULT_SCHEMA)
-        if decode is None:
-            def decode(r):
-                return np.asarray(self.read_rows(r, "vec"), dtype=np.float64)
         qmat = np.asarray(qmat, dtype=np.float64)
         self._random_access()
         rows = self.rows_of(cand_ids)
         by_row = np.argsort(rows, kind="stable")
         rows = rows[by_row]
+        hinted = set()
+
+        def read(name, r):
+            col = self.column(name)
+            if name not in hinted:
+                hinted.add(name)
+                _willneed_rows(self.path_of(name), rows, self.columns[name],
+                               itemsize=col.dtype.itemsize)
+            return col[r]
+
+        if decode is None:
+            def decode(r, read):
+                return np.asarray(read("vec", r), dtype=np.float64)
+
         dist = np.empty(len(cand_ids), dtype=np.float64)
         for lo in range(0, len(rows), _REFINE_BLOCK):
             blk = by_row[lo : lo + _REFINE_BLOCK]
-            mat = decode(rows[lo : lo + _REFINE_BLOCK])
+            mat = decode(rows[lo : lo + _REFINE_BLOCK], read)
             qv = qmat[cand_qpos[blk]]
             if metric == Metric.L2:
                 diff = mat - qv
                 dist[blk] = (diff * diff).sum(axis=1)
+            elif metric == Metric.COSINE:
+                norms = np.sqrt((qv * qv).sum(axis=1)) * np.sqrt((mat * mat).sum(axis=1))
+                norms[norms == 0] = 1.0
+                dist[blk] = -(mat * qv).sum(axis=1) / norms
             else:
                 dist[blk] = -(mat * qv).sum(axis=1)
         return pair_topk(spark, qids, cand_qpos, cand_ids, dist, k)

@@ -81,19 +81,19 @@ def test_store_round_trip(spark, base_df, query_df, tiny_vectors, tmp_path, kind
         want_i, want_d = _np_topk(xq, xb, K)
         got_i, got_d = _result(idx.search(query_df, K, NLIST), len(xq), K)
     elif kind == "sq":
-        dec = idx.sq.decode_np(store.gather(np.arange(len(xb)), "code"))
+        dec = idx.sq.decode_np(store.column("code")[store.rows_of(np.arange(len(xb)))])
         want_i, want_d = _np_topk(xq, dec, K)
         got_i, got_d = _result(idx.search(query_df, K, NLIST), len(xq), K)
     elif kind == "pq":
-        dec = idx.pq.decode_np(store.gather(np.arange(len(xb)), "code"))
+        dec = idx.pq.decode_np(store.column("code")[store.rows_of(np.arange(len(xb)))])
         want_i, want_d = _np_topk(xq, dec + cents[_assigned(xb, cents)], K)
         got_i, got_d = _result(idx.search(query_df, K, NLIST), len(xq), K)
     else:
         rows = np.arange(len(xb))
         xhat = (
             cents[_assigned(xb, cents)]
-            + idx.pq.decode_np(store.gather(rows, "code"))
-            + idx.refine_pq.decode_np(store.gather(rows, "rcode"))
+            + idx.pq.decode_np(store.column("code")[store.rows_of(rows)])
+            + idx.refine_pq.decode_np(store.column("rcode")[store.rows_of(rows)])
         )
         want_i, want_d = _np_topk(xq, xhat, K)
         # k·k_factor covers the base: the re-rank sees every row
@@ -118,7 +118,7 @@ def test_binary_store_round_trip(spark):
     pop = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
     ham = lambda a, b: pop[a[:, None, :] ^ b[None, :, :]].sum(-1)  # noqa: E731
     _check_layout(store, len(xb), ham(xb, xb[:NLIST]).argmin(axis=1))
-    np.testing.assert_array_equal(store.gather(np.arange(len(xb)), "bits"), xb)
+    np.testing.assert_array_equal(store.column("bits")[store.rows_of(np.arange(len(xb)))], xb)
     res = idx.search(queries, K, nprobe=NLIST).toPandas().sort_values(["qid", "pos"])
     d = ham(xq, xb)
     want = np.lexsort((np.broadcast_to(np.arange(len(xb)), d.shape), d), axis=1)[:, :K]
@@ -161,7 +161,7 @@ def test_rebuild_at_used_path_serves_new_index(spark, tmp_path):
     # ADC over the new codes: the loaded index scores as the build's
     # own handle does, and numpy over the decoded new codes agrees
     lists = ListStore(p_pq)
-    dec = new_pq.pq.decode_np(lists.gather(np.arange(n), "code"))
+    dec = new_pq.pq.decode_np(lists.column("code")[lists.rows_of(np.arange(n))])
     dec += new_pq.centroids[lists.list_of_rows(lists.rows_of(np.arange(n)))]
     want_i, want_d = _np_topk(xq, dec, K)
     for index in (pq, new_pq):

@@ -7,7 +7,7 @@ store's id-addressable fp32 ``vec`` column with positioned reads
 ``Auncel/OnDiskInvertedLists.h:51-110``, ``Auncel/DirectMap.h:35-60``).
 
 Contracts pinned here:
-- store round-trip: gather(ids) returns the exact float32 vectors, for
+- store round-trip: the rows of ids return the exact float32 vectors, for
   dense AND non-dense id spaces;
 - refine_topk == exact brute-force top-k over the candidate pool;
 - IVFIndex.search on a replica-built index == search on a flat index
@@ -72,7 +72,7 @@ def replica_idx(spark, tmp_path):
 def test_blob_gather_exact(replica_idx):
     idx, _, vec, ids = replica_idx
     pick = np.array([0, 17, 4242, N - 1], dtype=np.int64)
-    got = idx.store.gather(pick)
+    got = idx.store.column("vec")[idx.store.rows_of(pick)]
     np.testing.assert_array_equal(got, vec[pick])
 
 
@@ -81,7 +81,7 @@ def test_blob_non_dense_ids(spark, tmp_path):
     store = ListStore(idx.data_path)
     assert not store.dense
     pick = ids[[5, 99, 1500]]
-    np.testing.assert_array_equal(store.gather(pick), vec[[5, 99, 1500]])
+    np.testing.assert_array_equal(store.column("vec")[store.rows_of(pick)], vec[[5, 99, 1500]])
     with pytest.raises(KeyError):
         store.rows_of(np.array([1], dtype=np.int64))  # 1 is not 7k+3
 
@@ -242,7 +242,9 @@ def test_manifest_restart(tmp_path):
     # the resumed id stream still maps every id to its own vector
     store = ListStore(str(tmp_path))
     for ln, (pid, pvec) in parts.items():
-        np.testing.assert_array_equal(store.gather(pid), pvec.astype(np.float32))
+        np.testing.assert_array_equal(
+            store.column("vec")[store.rows_of(pid)], pvec.astype(np.float32)
+        )
 
 
 @pytest.mark.parametrize("ids", [[0, 0, 2, 3], [5, 9, 9, 12]])
@@ -297,25 +299,48 @@ def test_willneed_density_gate(tmp_path, monkeypatch):
     assert len(calls) == 1 and calls[0][1] == 5000 * 4
 
 
-def test_willneed_hints_capped(monkeypatch):
-    """A sparse pool must not cost one posix_fadvise per row (635k
-    calls took 0.85 s of a 2.7 s refine): at most
-    ``_WILLNEED_MAX_RANGES`` ranges go out, and every requested row
-    still lies inside a hinted range."""
+def _hinted(monkeypatch, rows, d=96, itemsize=4):
+    """(first row, end row) of each range one ``_willneed_rows`` call
+    hints, after checking they are row-aligned, ascending and disjoint
+    and that every requested row lies inside one."""
     from auncel_spark.index import list_store as ls
 
     calls = []
     monkeypatch.setattr(ls, "_fadvise", lambda path, ranges: calls.append(list(ranges)))
-    rng = np.random.default_rng(4)
-    rows = np.sort(rng.choice(60_000_000, 600_000, replace=False)).astype(np.int64)
-    d, itemsize = 96, 4
     ls._willneed_rows("unused.f32", rows, d=d, itemsize=itemsize)
     assert len(calls) == 1
     ranges = np.asarray(calls[0], dtype=np.int64)
-    assert 0 < len(ranges) <= ls._WILLNEED_MAX_RANGES
     rb = d * itemsize
     assert (ranges[:, 0] % rb == 0).all() and (ranges[:, 1] % rb == 0).all()
     lo, hi = ranges[:, 0] // rb, (ranges[:, 0] + ranges[:, 1]) // rb
-    assert (lo[1:] >= hi[:-1]).all()  # ascending, disjoint
+    assert (lo[1:] >= hi[:-1]).all()
     at = np.searchsorted(lo, rows, side="right") - 1
     assert (at >= 0).all() and (rows < hi[at]).all()
+    return lo, hi
+
+
+def _pages(lo, hi, rb=384):
+    """Distinct 4 KB pages under the row ranges [lo, hi)."""
+    import mmap
+
+    return len(np.unique(np.concatenate([
+        np.arange(a * rb // mmap.PAGESIZE, (b * rb - 1) // mmap.PAGESIZE + 1)
+        for a, b in zip(lo.tolist(), hi.tolist())
+    ])))
+
+
+def test_willneed_hints_capped(monkeypatch):
+    """A sparse pool must not cost one posix_fadvise per row (635k
+    calls took 0.85 s of a 2.7 s refine): 600k of 4M d96 rows (a refine
+    pool at replica density) go out in at most ``_WILLNEED_MAX_RANGES``
+    ranges, within twice the pages the rows sit on. 600k of 60M rows,
+    each on a page of its own, keep that page bound instead of the cap:
+    bridging to the cap there would read most of the file."""
+    from auncel_spark.index import list_store as ls
+
+    rng = np.random.default_rng(4)
+    for n, capped in ((4_000_000, True), (60_000_000, False)):
+        rows = np.sort(rng.choice(n, 600_000, replace=False)).astype(np.int64)
+        lo, hi = _hinted(monkeypatch, rows)
+        assert (len(lo) <= ls._WILLNEED_MAX_RANGES) == capped, len(lo)
+        assert _pages(lo, hi) <= ls._WILLNEED_INFL * _pages(rows, rows + 1)
