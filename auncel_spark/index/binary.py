@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from auncel_spark.index.scan import _binary_matrix
 from auncel_spark.operators.knn import (
     _bcast_queries,
     _block_rows,
@@ -223,8 +224,8 @@ class BinaryIVFIndex:
         # deterministic coarse codes: the nlist lowest-id codes act as
         # medoids (the reference trains k-means in float space then
         # binarizes; medoid init keeps this oracle-friendly)
-        rows = base.select(id_col, bits_col).orderBy(id_col).limit(nlist).collect()
-        cents = np.array([np.frombuffer(r[bits_col], dtype=np.uint8) for r in rows])
+        first = base.orderBy(id_col).select(bits_col).limit(nlist).toArrow()
+        cents = _binary_matrix(first.column(0).combine_chunks()).copy()
         idx = cls(spark, cents)
         bc = spark.sparkContext.broadcast(cents)
 
@@ -258,12 +259,11 @@ class BinaryIVFIndex:
         from auncel_spark.config import Metric
         from auncel_spark.index.scan import HammingScanner, scan_ranked
 
-        qrows = queries.select("qid", "bits").collect()
-        qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-        # width from the index: no queries decode to shape (0,)
-        qb = np.array(
-            [np.frombuffer(r["bits"], dtype=np.uint8) for r in qrows], dtype=np.uint8
-        ).reshape(-1, self.centroids.shape[1])
+        qt = queries.select("qid", "bits").toArrow()
+        qids = qt.column("qid").to_numpy().astype(np.int64, copy=False)
+        # width from the index: no queries decode to shape (0, 0)
+        w = self.centroids.shape[1]
+        qb = _binary_matrix(qt.column("bits").combine_chunks()).reshape(-1, w)
         cd = _hamming_matrix(qb, self.centroids)
         order = np.argsort(cd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
         partial = scan_ranked(

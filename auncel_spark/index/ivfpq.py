@@ -30,7 +30,7 @@ from auncel_spark.config import DEFAULT_NLIST, Metric
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.kmeans import assign_lists, train_kmeans
 from auncel_spark.index.list_store import store_of, write_store
-from auncel_spark.index.pq import ProductQuantizer
+from auncel_spark.index.pq import ProductQuantizer, train_codebook
 
 
 class IVFPQIndex(IVFIndex):
@@ -535,14 +535,12 @@ def split_ivfpq_lists(
         .toPandas()
     )
     children = np.empty((nlist, split, d))
-    from auncel_spark.index.pq import _lloyd_np
-
     lns = samp["list_no"].to_numpy()
     for p in range(nlist):
         rows = np.where(lns == p)[0]
         if len(rows) >= split:
             x = as_matrix(samp["vec"].iloc[rows])
-            children[p] = _lloyd_np(x, split, kmeans_iter, seed + p)
+            children[p] = train_codebook(x, split, kmeans_iter, seed + p)
         else:
             # empty/thin parent: children collapse onto the parent cell
             # (deterministic jitter keeps argmin well-defined)

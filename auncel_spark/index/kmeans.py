@@ -1,23 +1,19 @@
-"""Distributed Lloyd's k-means and centroid assignment.
+"""k-means: the engine's one Lloyd kernel, and centroid assignment.
 
 Reference surface (SURVEY.md §2.2 B1-B4):
 - ``Clustering::train`` (``Auncel/Clustering.h:56-94``, ``Clustering.cpp``):
-  Lloyd's iterations (niter=25 default), random-subset init, optional
-  spherical normalization, empty-cluster splitting
-  (``utils.h:308-313`` ``km_update_centroids``).
+  in-memory Lloyd's iterations on at most ``max_points_per_centroid``·k
+  sampled rows, random-subset init, optional spherical normalization,
+  empty-cluster splitting (``utils.h:308-313`` ``km_update_centroids``).
 - ``Index::assign`` (``Auncel/Index.h:155``): nearest-centroid labels.
 
-Spark shape: centroids are tiny driver/broadcast state (nlist×d floats,
-≤ a few MB at nlist=1024); vectors never leave executors. Each Lloyd's
-iteration is one job: per-partition GEMM argmin + partial (sum, count)
-per cluster via ``mapInPandas``, combined on the driver (numpy over
-≤ partitions×k tiny rows). This is the map-side-combine pattern — the
-shuffle-free equivalent of groupBy(cluster).avg over 100 TB of rows.
-
-An explicit ``init="first_k"`` mode (centroids = the k lowest-id
-vectors) exists so correctness queries are SQL-oracle-expressible
-without replaying random init; benchmarks use seeded random init, as
-the reference does (``Clustering.cpp`` subsample + rand perm).
+Spark shape: training runs on the driver, as in the reference.
+``train_kmeans`` collects ≤ ``MAX_POINTS_PER_CENTROID``·k rows in one
+Arrow job (≤ 100 MB at nlist=1024, d=96) and runs ``lloyd``, which also
+trains every PQ/OPQ sub-codebook and split-list child; its jobs do not
+grow with the iterations. Only ``assign_lists`` passes over the whole
+base. ``init="first_k"`` (the k lowest-id vectors) keeps correctness
+queries SQL-oracle-expressible; benchmarks use seeded random init.
 """
 
 from __future__ import annotations
@@ -31,12 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from auncel_spark.config import Metric
+from auncel_spark.index.scan import _TILE_ELEMS
 
-
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
-    rows = df.select(id_col, vec_col).collect()
-    rows.sort(key=lambda r: r[id_col])
-    return np.array([r[vec_col] for r in rows], dtype=np.float64)
+MAX_POINTS_PER_CENTROID = 256  # Clustering.h: training rows per centroid
 
 
 def assign_lists(
@@ -85,58 +78,112 @@ def assign_lists(
     return df.mapInPandas(work, schema=out_schema)
 
 
-def _partial_sums(df: DataFrame, centroids: np.ndarray, metric: Metric, vec_col: str):
-    """One Lloyd's half-step: per-partition (cluster, count, sum-vector,
-    objective) partials. Returns driver-side combined arrays."""
-    spark = df.sparkSession
-    d = centroids.shape[1]
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    is_l2 = metric == Metric.L2
+def lloyd(
+    x: np.ndarray,
+    cents: np.ndarray,
+    n_iter: int,
+    rng: np.random.Generator,
+    metric: Metric = Metric.L2,
+    spherical: bool = False,
+    tol: float = 0.0,
+) -> tuple[np.ndarray, list[float]]:
+    """Lloyd's iterations on ``x`` (n×d) from ``cents`` (k×d); returns
+    (centroids, objective history). Assignment is the argmin of |x|² +
+    |c|² − 2·x·c (L2) or −x·c (IP) over row blocks of ~``_TILE_ELEMS``
+    distances; the update sums each cluster in row order; an empty
+    cluster splits the largest one (``_split``); ``spherical``
+    renormalizes; a squared shift below ``tol`` stops.
+    """
+    x = np.asarray(x, dtype=np.float64)
+    cents = np.asarray(cents, dtype=np.float64)
+    k, d = cents.shape
+    block = max(64, _TILE_ELEMS // max(k, 1))
+    x2 = (x * x).sum(axis=1)
+    history: list[float] = []
+    for _ in range(n_iter):
+        lab, obj = _assign(x, x2, cents, metric, block)
+        history.append(obj)
+        counts = np.bincount(lab, minlength=k)
+        sums = np.stack(
+            [np.bincount(lab, weights=x[:, j], minlength=k) for j in range(d)], axis=1
+        )
+        nonzero = counts > 0
+        new = cents.copy()
+        new[nonzero] = sums[nonzero] / counts[nonzero, None]
+        for ci in np.where(~nonzero)[0]:
+            big = int(counts.argmax())
+            new[ci], new[big] = _split(new, ci, big, rng)
+            counts[ci] = counts[big] // 2
+            counts[big] -= counts[ci]
+        if spherical:
+            new = _renorm(new)
+        shift = float(((new - cents) ** 2).sum())
+        cents = new
+        if shift < tol:
+            break
+    return cents, history
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        k = cents.shape[0]
-        c_norms = (cents * cents).sum(axis=1)[None, :]
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype=np.int64)
-        obj = 0.0
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            seen = True
-            mat = as_matrix(pdf[vec_col])
-            dots = mat @ cents.T
-            if is_l2:
-                dist = (mat * mat).sum(axis=1)[:, None] + c_norms - 2.0 * dots
-            else:
-                dist = -dots
-            lab = dist.argmin(axis=1)
-            obj += float(dist[np.arange(len(lab)), lab].sum())
-            np.add.at(counts, lab, 1)
-            np.add.at(sums, lab, mat)
-        if seen:
-            yield pd.DataFrame(
-                {
-                    "cluster": np.arange(k, dtype=np.int32),
-                    "cnt": counts,
-                    "vsum": list(sums),
-                    "obj": [obj] + [0.0] * (k - 1),
-                }
-            )
 
-    parts = df.select(vec_col).mapInPandas(
-        work, schema="cluster int, cnt bigint, vsum array<double>, obj double"
-    ).collect()
-    k = centroids.shape[0]
-    sums = np.zeros((k, d))
-    counts = np.zeros(k, dtype=np.int64)
+def _split(
+    cents: np.ndarray, ci: int, big: int, rng: np.random.Generator
+) -> tuple[np.ndarray, np.ndarray]:
+    """Centroid ``big`` ± a tiny random-sign perturbation, for empty
+    cluster ``ci`` and ``big`` (km_update_centroids). A draw that lands
+    on another centroid (few dimensions, as in a PQ subspace) is redrawn."""
+    eps = 1e-4 * (1.0 + np.abs(cents[big]))
+    others = np.delete(cents, ci, axis=0)
+    for _ in range(8):
+        sign = rng.choice([-1.0, 1.0], size=cents.shape[1])
+        pair = cents[big] + eps * sign, cents[big] - eps * sign
+        if not any((others == c).all(axis=1).any() for c in pair):
+            break
+    return pair
+
+
+def _assign(
+    x: np.ndarray, x2: np.ndarray, cents: np.ndarray, metric: Metric, block: int
+) -> tuple[np.ndarray, float]:
+    """(nearest-centroid labels, summed smallest distance), one block
+    of rows at a time."""
+    c2 = (cents * cents).sum(axis=1)[None, :]
+    lab = np.empty(len(x), dtype=np.int64)
     obj = 0.0
-    for r in parts:
-        sums[r["cluster"]] += np.array(r["vsum"])
-        counts[r["cluster"]] += r["cnt"]
-        obj += r["obj"]
-    return sums, counts, obj
+    for s in range(0, len(x), block):
+        dist = x[s : s + block] @ cents.T
+        # in place, bit-equal to (|x|² + |c|²) − 2·x·c and −x·c
+        if metric == Metric.L2:
+            dist *= -2.0
+            dist += x2[s : s + block, None] + c2
+        else:
+            np.negative(dist, out=dist)
+        bl = dist.argmin(axis=1)
+        lab[s : s + block] = bl
+        obj += float(dist[np.arange(len(bl)), bl].sum())
+    return lab, obj
+
+
+def sample_matrix(df: DataFrame, vec_col: str, size: int, factor: float, seed: int, n=None):
+    """≤ ``size`` rows of ``vec_col`` (float64) in one Arrow collect: a
+    seeded factor·size/n sample, cut to its first ``size`` rows."""
+    n = df.count() if n is None else n
+    frac = min(1.0, size * factor / max(n, 1))
+    pdf = df.select(vec_col).sample(fraction=frac, seed=seed).limit(size).toPandas()
+    return as_matrix(pdf[vec_col])
+
+
+def _training_set(df: DataFrame, vec_col: str, n: int, k: int, seed: int) -> np.ndarray:
+    """Every row when n ≤ MAX_POINTS_PER_CENTROID·k, else a seeded
+    uniform sample of that many: an over-sized Bernoulli draw cut by a
+    seeded choice, so every partition contributes."""
+    cap = MAX_POINTS_PER_CENTROID * k
+    sel = df.select(vec_col)
+    if n > cap:
+        sel = sel.sample(fraction=min(1.0, 1.1 * cap / n), seed=seed)
+    x = as_matrix(sel.toPandas()[vec_col])
+    if len(x) > cap:
+        keep = np.random.default_rng(seed).choice(len(x), cap, replace=False)
+        x = x[np.sort(keep)]
+    return x
 
 
 def train_kmeans(
@@ -154,30 +201,22 @@ def train_kmeans(
 ) -> tuple[np.ndarray, list[float]]:
     """Lloyd's k-means; returns (centroids k×d float64, objective history).
 
-    - ``init="sample"``: k seeded-random distinct rows (reference:
-      random perm of a training subsample, Clustering.cpp).
-    - ``init="first_k"``: the k lowest-id rows — deterministic,
-      SQL-expressible (used by oracle-checked catalog queries).
-    - ``spherical``: L2-renormalize centroids after every update
-      (Clustering.h ``spherical``; used for IP/cosine metrics).
-    - Empty clusters are re-seeded by splitting the largest cluster's
-      centroid with a tiny symmetric perturbation, the same fix
-      ``km_update_centroids`` applies (utils.h:308-313).
+    - ``init="sample"``: k seeded-random rows of a seeded
+      ``sample_size``-row sample (Clustering.cpp's random perm).
+    - ``init="first_k"``: the k lowest-id rows (SQL-expressible).
+    - ``spherical``: L2-renormalize centroids after every update.
 
-    Each iteration is one distributed pass; driver work is O(k·d).
+    ``lloyd`` runs on ``_training_set``: a count and two collects,
+    whatever ``max_iter``.
     """
+    n = df.count()
     if init == "first_k":
-        cents = _collect_matrix(
-            df.orderBy(id_col).limit(k), id_col, vec_col
-        )
+        pdf = df.select(id_col, vec_col).orderBy(id_col).limit(k).toPandas()
+        cents = as_matrix(pdf.sort_values(id_col, kind="stable")[vec_col])
     elif init == "sample":
-        n = df.count()
-        frac = min(1.0, (sample_size * 3.0) / max(n, 1))
-        samp = df.sample(fraction=frac, seed=seed).limit(sample_size)
-        rows = samp.select(id_col, vec_col).collect()
-        rng = np.random.default_rng(seed)
-        idx = rng.permutation(len(rows))[:k]
-        cents = np.array([rows[i][vec_col] for i in idx], dtype=np.float64)
+        rows = sample_matrix(df, vec_col, sample_size, 3.0, seed, n)
+        idx = np.random.default_rng(seed).permutation(len(rows))[:k]
+        cents = rows[idx]
         if len(cents) < k:
             raise ValueError(f"not enough rows ({len(rows)}) for k={k}")
     else:
@@ -185,31 +224,8 @@ def train_kmeans(
 
     if spherical:
         cents = _renorm(cents)
-
-    history: list[float] = []
-    rng = np.random.default_rng(seed + 1)
-    for _ in range(max_iter):
-        sums, counts, obj = _partial_sums(df, cents, metric, vec_col)
-        history.append(obj)
-        nonzero = counts > 0
-        new = cents.copy()
-        new[nonzero] = sums[nonzero] / counts[nonzero, None]
-        # empty-cluster splitting (km_update_centroids, utils.h:308-313)
-        for ci in np.where(~nonzero)[0]:
-            big = int(counts.argmax())
-            eps = 1e-4 * (1.0 + np.abs(new[big]))
-            sign = rng.choice([-1.0, 1.0], size=new.shape[1])
-            new[ci] = new[big] + eps * sign
-            new[big] = new[big] - eps * sign
-            counts[ci] = counts[big] // 2
-            counts[big] -= counts[ci]
-        if spherical:
-            new = _renorm(new)
-        shift = float(((new - cents) ** 2).sum())
-        cents = new
-        if shift < tol:
-            break
-    return cents, history
+    x = _training_set(df, vec_col, n, k, seed)
+    return lloyd(x, cents, max_iter, np.random.default_rng(seed + 1), metric, spherical, tol)
 
 
 def _renorm(x: np.ndarray) -> np.ndarray:

@@ -178,6 +178,16 @@ def _rows_of_arrow(col, name: str) -> np.ndarray:
     return _binary_matrix(col).reshape(n, -1)
 
 
+def qid_positions(qids, keys) -> np.ndarray:
+    """Position in ``qids`` of each qid in ``keys`` (each must occur in
+    ``qids``; a repeated qid maps to its last position) by one sorted
+    lookup, not a per-row dict."""
+    qids = np.asarray(qids, dtype=np.int64)
+    by_qid = np.argsort(qids, kind="stable")
+    keys = np.asarray(keys, dtype=np.int64)
+    return by_qid[np.searchsorted(qids, keys, side="right", sorter=by_qid) - 1]
+
+
 def _pool_pairs(qids, pool):
     """(query position, id) per candidate of a pool: a ``(qid, id)``
     DataFrame, collected here and mapped to positions in ``qids`` by
@@ -189,12 +199,7 @@ def _pool_pairs(qids, pool):
         keep = ids >= 0
         return qpos[keep], ids[keep]
     pdf = pool.select("qid", "id").toPandas()
-    qids = np.asarray(qids, dtype=np.int64)
-    by_qid = np.argsort(qids, kind="stable")
-    at = np.searchsorted(
-        qids, pdf["qid"].to_numpy(dtype=np.int64), side="right", sorter=by_qid
-    ) - 1
-    return by_qid[at], pdf["id"].to_numpy(dtype=np.int64)
+    return qid_positions(qids, pdf["qid"]), pdf["id"].to_numpy(dtype=np.int64)
 
 
 def pair_topk(spark, qids, cand_qpos, cand_ids, dist, k: int):

@@ -30,40 +30,21 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from auncel_spark.config import Metric
+from auncel_spark.index.kmeans import lloyd, sample_matrix
 from auncel_spark.operators.knn import _flat_partials, ids_codes_from_arrow
 from auncel_spark.operators.topk import topk_per_query
 
 
-def _lloyd_np(x: np.ndarray, k: int, n_iter: int, seed: int) -> np.ndarray:
-    """In-memory Lloyd's for one subspace codebook (the reference runs
-    the same Clustering machinery over the sampled slice). Assignment
-    is a GEMM argmin (|c|² − 2·x·cᵀ; |x|² is constant per row) and the
-    update a per-dim bincount — the r06 M32 train at ksub=256 spent
-    ~9 min in the per-cluster masked-mean loop (256 clusters × 25
-    iters × 32 books, single-threaded); this form runs in seconds."""
+def train_codebook(x: np.ndarray, k: int, n_iter: int, seed: int) -> np.ndarray:
+    """``kmeans.lloyd`` from k seeded-permutation rows of ``x`` (padded
+    with jittered copies when x has fewer): one sub-codebook."""
     rng = np.random.default_rng(seed)
     n = x.shape[0]
     k_eff = min(k, n)
     cents = x[rng.permutation(n)[:k_eff]].copy()
     if k_eff < k:
         cents = np.vstack([cents, cents[rng.integers(0, k_eff, k - k_eff)] + 1e-6])
-    for _ in range(n_iter):
-        d = (cents * cents).sum(-1)[None, :] - 2.0 * (x @ cents.T)
-        lab = d.argmin(axis=1)
-        counts = np.bincount(lab, minlength=k)
-        sums = np.stack(
-            [
-                np.bincount(lab, weights=x[:, j], minlength=k)
-                for j in range(x.shape[1])
-            ],
-            axis=1,
-        )
-        ne = counts > 0
-        cents[ne] = sums[ne] / counts[ne, None]
-        for ci in np.nonzero(~ne)[0]:
-            # empty-cluster re-seed (km_update_centroids analogue)
-            cents[ci] = x[rng.integers(0, n)] + rng.normal(0, 1e-5, x.shape[1])
-    return cents
+    return lloyd(x, cents, n_iter, rng)[0]
 
 
 class ProductQuantizer:
@@ -84,17 +65,14 @@ class ProductQuantizer:
         n_iter: int = 25,
         seed: int = 42,
     ) -> "ProductQuantizer":
-        n = df.count()
-        frac = min(1.0, sample_size * 1.2 / max(n, 1))
-        rows = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample_size).collect()
-        x = np.array([r[vec_col] for r in rows], dtype=np.float64)
+        x = sample_matrix(df, vec_col, sample_size, 1.2, seed)
         d = x.shape[1]
         if d % M != 0:
             raise ValueError(f"d={d} not divisible by M={M}")
         dsub, ksub = d // M, 1 << nbits
         books = np.stack(
             [
-                _lloyd_np(x[:, m * dsub : (m + 1) * dsub], ksub, n_iter, seed + m)
+                train_codebook(x[:, m * dsub : (m + 1) * dsub], ksub, n_iter, seed + m)
                 for m in range(M)
             ]
         )

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
+from auncel_spark.index.list_store import qid_positions
 
 
 BUCKET_SCHEMA = "qid bigint, si int, id bigint, dist double"
@@ -100,6 +101,8 @@ def _binary_matrix(arr: pa.Array) -> np.ndarray:
         if n and (widths == widths[0]).all():
             data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
             return data[offs[0] : offs[-1]].reshape(n, int(widths[0]))
+    if n == 0:
+        return np.empty((0, 0), dtype=np.uint8)
     return np.stack([np.frombuffer(b, dtype=np.uint8) for b in arr.to_pylist()])
 
 
@@ -556,8 +559,7 @@ def assemble_states(
     arr_i = np.full((nq, nb, k), -1, dtype=np.int64)
     if len(pdf) == 0:
         return arr_d, arr_i
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    qi = pdf["qid"].map(qpos).to_numpy(dtype=np.int64)
+    qi = qid_positions(qids, pdf["qid"])
     arr_d[qi, pdf["si"].to_numpy(), pdf["pos"].to_numpy()] = pdf["dist"].to_numpy()
     arr_i[qi, pdf["si"].to_numpy(), pdf["pos"].to_numpy()] = pdf["id"].to_numpy(
         dtype=np.int64

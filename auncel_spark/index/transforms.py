@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from auncel_spark.index.kmeans import sample_matrix
+
 
 class VectorTransform:
     """Base: y = f(x). Subclasses implement ``apply_np``; ``apply``
@@ -108,10 +110,7 @@ class PCATransform(LinearTransform):
         sample_size: int = 16384,
         seed: int = 42,
     ) -> "PCATransform":
-        n = df.count()
-        frac = min(1.0, sample_size * 1.2 / max(n, 1))
-        rows = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample_size).collect()
-        x = np.array([r[vec_col] for r in rows], dtype=np.float64)
+        x = sample_matrix(df, vec_col, sample_size, 1.2, seed)
         mu = x.mean(axis=0)
         xc = x - mu
         cov = xc.T @ xc / max(len(x) - 1, 1)
@@ -146,12 +145,9 @@ class OPQTransform(LinearTransform):
         sample_size: int = 8192,
         seed: int = 42,
     ) -> "OPQTransform":
-        from auncel_spark.index.pq import _lloyd_np
+        from auncel_spark.index.pq import train_codebook
 
-        n = df.count()
-        frac = min(1.0, sample_size * 1.2 / max(n, 1))
-        rows = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample_size).collect()
-        x = np.array([r[vec_col] for r in rows], dtype=np.float64)
+        x = sample_matrix(df, vec_col, sample_size, 1.2, seed)
         d = x.shape[1]
         dsub = d // M
         R = np.eye(d)
@@ -161,7 +157,7 @@ class OPQTransform(LinearTransform):
             xhat = np.empty_like(xr)
             for m in range(M):
                 sl = slice(m * dsub, (m + 1) * dsub)
-                cents = _lloyd_np(xr[:, sl], min(256, len(x)), 4, seed + it * M + m)
+                cents = train_codebook(xr[:, sl], min(256, len(x)), 4, seed + it * M + m)
                 lab = ((xr[:, sl, None] - cents.T[None, :, :]) ** 2).sum(1).argmin(1)
                 xhat[:, sl] = cents[lab]
             u, _, vt = np.linalg.svd(x.T @ xhat)

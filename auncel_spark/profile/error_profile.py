@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from auncel_spark.config import ELP_STAGE_CAP_FRACTION, Metric
 from auncel_spark.index.ivf import IVFIndex
-from auncel_spark.index.list_store import REFINE_PAD
+from auncel_spark.index.list_store import REFINE_PAD, qid_positions
 from auncel_spark.index.scan import (
     _merge_rows,
     assemble_states,
@@ -386,6 +386,8 @@ class ErrorProfile:
             states_i.append(state_i.copy())
         return {
             "qids": qids,
+            "qmat": qmat,
+            "cdist": cdist,
             "dtb": dtb,
             "stages": list(stages),
             "states_d": states_d,
@@ -423,12 +425,10 @@ class ErrorProfile:
             self.index.data.select("id", "vec"),
             self.max_topk,
             self.index.metric,
-        ).collect()
-        qids = sorted({r["qid"] for r in res})
-        qpos = {q: i for i, q in enumerate(qids)}
+        ).toPandas()
+        qids = np.unique(res["qid"].to_numpy(dtype=np.int64))
         out = np.full((len(qids), self.max_topk), np.inf)
-        for r in res:
-            out[qpos[r["qid"]], r["pos"]] = r["dist"]
+        out[qid_positions(qids, res["qid"]), res["pos"].to_numpy()] = res["dist"].to_numpy()
         return out
 
     @staticmethod

@@ -72,9 +72,7 @@ class LearnedTermination:
             if si < len(stages) - 1:
                 labels[fresh] = float(si)
 
-        fq, qmat = self.index._query_arrays(train_queries)
-        _, cdist = self.index.coarse_rank(fq, qmat, self.index.nlist)
-        feats = self._features(qmat, cdist)
+        feats = self._features(sweep["qmat"], sweep["cdist"])
         spark = self.index.spark
         rows = [
             ([float(v) for v in feats[i]], float(labels[i])) for i in range(len(qids))

@@ -15,7 +15,10 @@ first wrote), ``IVFSQIndex.search`` (8bit and 4bit) and
 ``BinaryIVFIndex.search``. A fourth, ``rflat`` section dumps the index
 factory's ``RFlat`` re-rank for ``IVF8,PQ4,RFlat`` and
 ``PCA8,IVF8,Flat,RFlat`` (each index's k·4 candidates re-ranked exactly
-against the base, in the transformed space for the PCA chain).
+against the base, in the transformed space for the PCA chain). A fifth,
+``train`` section dumps ``train_kmeans`` on the base (L2, and IP with
+spherical centroids): the centroids, the objective history and every
+base row's list under them.
 ``compare`` checks two dumps with
 ``DataFrame.equals`` / ``array_equal`` and exits non-zero on any
 difference. A refactor that claims "the same bits" runs ``dump`` once
@@ -34,7 +37,9 @@ queries it meets first. Since the list store, the GEMM blocks follow
 whole lists rather than parquet row groups, so a tree on either side of
 that change may move a distance by a rounding step. ``RFlat``'s re-rank
 was a float64 SQL join before it read a store on the driver, and the two
-sum a distance's terms in different orders.
+sum a distance's terms in different orders. The train section's labels
+must be equal, and its centroids and history within 1e-9 relative: a
+Lloyd update's sums follow the order its rows were summed in.
 
 Usage:
     python scripts/output_identity.py dump TREE OUT.pkl [--corpus small|perf] [--work DIR]
@@ -60,6 +65,9 @@ import numpy as np
 
 # dumps whose dist may move by a rounding step with the task layout
 ROUNDED = ("flat/", "replica/", "coded/ivfpq.search/", "coded/ivfsq.search/", "rflat/")
+# dumps whose return_info arrays (trained centroids, objective history)
+# may move by a rounding step: the Lloyd sums' order follows the layout
+TRAINED = "train/"
 
 CORPORA = {
     # n_blobs, per_blob, d, nq, n_train, nlist, max_topk, topk
@@ -119,6 +127,7 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
     from auncel_spark.index.ivf import IVFIndex
     from auncel_spark.index.ivfpq import IVFPQIndex
     from auncel_spark.index.ivfsq import IVFSQIndex
+    from auncel_spark.index.kmeans import assign_lists, train_kmeans
     from auncel_spark.index.pq import ProductQuantizer
     from auncel_spark.profile.error_profile import ErrorProfile
     from auncel_spark.profile.laet import LearnedTermination
@@ -203,6 +212,19 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
         si = build_index(base, spec, seed=4)
         got[f"rflat/{spec}"] = (rows(si.search(queries, topk, nprobe=4)), {})
 
+    # the engine's own k-means on the base: centroids, history and the
+    # list of every base row under them
+    for metric in (Metric.L2, Metric.IP):
+        tc, hist = train_kmeans(
+            base, nlist, metric=metric, max_iter=4, seed=7, sample_size=4096,
+            spherical=metric == Metric.IP,
+        )
+        labels = assign_lists(base, tc, metric).select("id", "list_no").toPandas()
+        got[f"train/kmeans/{metric.value}"] = (
+            labels.sort_values("id").reset_index(drop=True),
+            {"centroids": tc, "history": np.asarray(hist)},
+        )
+
     with open(out, "wb") as f:
         pickle.dump(got, f)
     for name, (pdf, _) in got.items():
@@ -229,7 +251,14 @@ def compare(a: str, b: str) -> int:
         else:
             same = ra.equals(rb)
         same = same and ia.keys() == ib.keys()
-        same = same and all(np.array_equal(ia[k], ib[k]) for k in ia)
+        if name.startswith(TRAINED):
+            same = same and all(
+                ia[k].shape == ib[k].shape
+                and np.allclose(ia[k], ib[k], rtol=1e-9, atol=0)
+                for k in ia
+            )
+        else:
+            same = same and all(np.array_equal(ia[k], ib[k]) for k in ia)
         print(f"{'same' if same else 'DIFF'} {name} ({len(ra)} rows)")
         bad += not same
     print(f"{len(da) - bad}/{len(da)} identical")

@@ -204,7 +204,7 @@ def ensure_children(spark, cache: Path, cents1024: np.ndarray, assign_path: str)
     ch_path = cache / "children.npy"
     if ch_path.exists():
         return np.load(ch_path)
-    from auncel_spark.index.pq import _lloyd_np
+    from auncel_spark.index.pq import train_codebook
 
     t0 = time.perf_counter()
     frac = min(1.0, 1.5 * 256 * NLIST / N300)
@@ -223,7 +223,7 @@ def ensure_children(spark, cache: Path, cents1024: np.ndarray, assign_path: str)
     for p in range(NLIST):
         rows = np.where(lns == p)[0]
         if len(rows) >= SPLIT:
-            children[p] = _lloyd_np(mat[rows], SPLIT, 8, rng_base + p)
+            children[p] = train_codebook(mat[rows], SPLIT, 8, rng_base + p)
         else:
             rng = np.random.default_rng(rng_base + p)
             children[p] = parents[p][None, :] + rng.normal(0, 1e-6, (SPLIT, D))

@@ -113,3 +113,25 @@ def test_laet_search_collects_queries_once(laet_setup, spark, monkeypatch):
     assert sc.statusTracker().getJobIdsForGroup("laet_scan")
     predicted = jobs_of("laet_predict", lambda: lt.predict_stages(q))
     assert len(searched) == len(predicted), (searched, predicted)
+
+
+def test_laet_fit_collects_and_ranks_queries_once(laet_setup, monkeypatch):
+    """``fit`` builds its features from the sweep's own collect and
+    coarse ranking: one ``_query_arrays`` and one ``coarse_rank`` call."""
+    _, _, lt, queries = laet_setup
+    idx = lt.index
+    calls = {"_query_arrays": 0, "coarse_rank": 0}
+
+    def counting(name):
+        inner = getattr(idx, name)
+
+        def wrapped(*a, **kw):
+            calls[name] += 1
+            return inner(*a, **kw)
+
+        return wrapped
+
+    for name in calls:
+        monkeypatch.setattr(idx, name, counting(name))
+    LearnedTermination(idx, max_topk=40).fit(queries, TOPK, target_recall=0.9, gbt_iter=2)
+    assert calls == {"_query_arrays": 1, "coarse_rank": 1}

@@ -19,7 +19,7 @@ import pytest
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.ivfpq import IVFPQIndex, IVFPQRIndex
 from auncel_spark.index.ivfsq import IVFSQIndex
-from auncel_spark.index.list_store import ListStore
+from auncel_spark.index.list_store import ListStore, qid_positions
 
 K, NLIST = 5, 8
 
@@ -169,3 +169,15 @@ def test_rebuild_at_used_path_serves_new_index(spark, tmp_path):
         np.testing.assert_array_equal(got_i, want_i)
         np.testing.assert_allclose(got_d, want_d, rtol=1e-9)
     assert set(os.listdir(p_pq)) == {"store", "meta.json", "centroids.npy"}
+
+
+def test_qid_positions_match_a_qid_dict():
+    """The sorted lookup maps each qid to the position a ``{qid: i}``
+    dict would (the last one for a repeated qid)."""
+    rng = np.random.default_rng(8)
+    qids = rng.permutation(np.arange(1000, 1300))
+    qids[[7, 40]] = qids[3]  # a repeated qid
+    keys = rng.choice(qids, 2000)
+    want = {int(q): i for i, q in enumerate(qids)}
+    got = qid_positions(qids, pd.Series(keys))
+    assert got.tolist() == [want[int(q)] for q in keys]
