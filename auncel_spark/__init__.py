@@ -18,7 +18,9 @@ Datasets") on top of the Spark DataFrame/SQL engine:
 Design rule (SURVEY.md §4): the relational shell stays pure DataFrame so
 Catalyst does pruning/pushdown/AQE; numeric kernels run inside tasks —
 the scan kernels in ``mapInArrow`` tasks that memmap the list store,
-encoders and k-means steps in ``mapInPandas``. Scans never bring the
+every encoder, transform and list assignment of a build in one
+``mapInArrow`` row-map (``functions/vector.py`` ``map_rows``), k-means
+on the driver over one Arrow-collected sample. Scans never bring the
 base to the driver: only small state (centroids, codebooks, traces —
 MBs) crosses to the driver or a broadcast, plus the exact refine's nq ×
 pool candidate vectors, which ``ListStore.refine_topk`` reads there by

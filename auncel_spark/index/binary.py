@@ -22,19 +22,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from auncel_spark.index.scan import _binary_matrix
-from auncel_spark.operators.knn import (
-    _bcast_queries,
-    _block_rows,
-    _flat_partials,
-    ids_codes_from_arrow,
-)
+from auncel_spark.functions.vector import _binary_matrix, ids_codes_from_arrow, map_rows
+from auncel_spark.operators.knn import _bcast_queries, _block_rows, _flat_partials
 from auncel_spark.operators.topk import topk_per_query
 
 _POP = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
@@ -50,22 +42,10 @@ def float_to_binary(
 ) -> DataFrame:
     """IndexBinaryFromFloat bridge (O14): sign-threshold each component
     and pack. d must be a multiple of 8 (IndexBinary.h:36)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != out_col]
-        + [T.StructField(out_col, T.BinaryType())]
+    return map_rows(
+        df, lambda x: pack_bits_np(x > threshold), [vec_col], [(out_col, "binary")],
+        keep=[c for c in df.columns if c != out_col],
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = as_matrix(pdf[vec_col])
-            packed = pack_bits_np(mat > threshold)
-            yield pdf.assign(**{out_col: [bytes(p) for p in packed]})
-
-    return df.mapInPandas(work, schema=schema)
 
 
 def lsh_sketch(
@@ -77,28 +57,14 @@ def lsh_sketch(
 ) -> DataFrame:
     """IndexLSH (B14): seeded random-hyperplane sign sketch → packed
     binary codes (rotation matrix broadcast, one GEMM per batch)."""
-    from pyspark.sql import types as T
-
     first = df.select(vec_col).first()
     d = len(first[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_bits, d))
-    bc = df.sparkSession.sparkContext.broadcast(planes)
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != out_col]
-        + [T.StructField(out_col, T.BinaryType())]
+    return map_rows(
+        df, lambda P, x: pack_bits_np((x @ P.T) >= 0), [vec_col], [(out_col, "binary")],
+        keep=[c for c in df.columns if c != out_col], state=planes,
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = as_matrix(pdf[vec_col])
-            packed = pack_bits_np((mat @ P.T) >= 0)
-            yield pdf.assign(**{out_col: [bytes(p) for p in packed]})
-
-    return df.mapInPandas(work, schema=schema)
 
 
 def _hamming_matrix(qbytes: np.ndarray, bbytes: np.ndarray) -> np.ndarray:
@@ -227,26 +193,13 @@ class BinaryIVFIndex:
         first = base.orderBy(id_col).select(bits_col).limit(nlist).toArrow()
         cents = _binary_matrix(first.column(0).combine_chunks()).copy()
         idx = cls(spark, cents)
-        bc = spark.sparkContext.broadcast(cents)
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            C = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                bb = np.array([np.frombuffer(x, dtype=np.uint8) for x in pdf[bits_col]])
-                lab = _hamming_matrix(bb, C).argmin(axis=1)
-                yield pdf.assign(list_no=lab.astype(np.int32))
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(base.select(id_col, bits_col).schema.fields)
-            + [T.StructField("list_no", T.IntegerType())]
-        )
         from auncel_spark.index.list_store import temp_store
 
-        assigned = base.select(id_col, bits_col).mapInPandas(assign, schema)
+        assigned = map_rows(
+            base.select(id_col, bits_col),
+            lambda C, bb: _hamming_matrix(bb, C).argmin(axis=1),
+            [bits_col], [("list_no", "int")], state=cents,
+        )
         idx.store = temp_store(
             assigned.select(F.col(id_col).alias("id"), F.col(bits_col).alias("bits"), "list_no"),
             idx.nlist, ("bits",),

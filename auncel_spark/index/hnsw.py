@@ -334,11 +334,13 @@ class ShardedHNSWIndex:
         M, efc = self.M, self.ef_construction
 
         def kernel(batches):
+            import pyarrow as pa
+
             # accumulate per shard: a task may carry >1 arrow batch (and,
             # after coalescing, >1 shard); group rows before graph rebuild
             parts: dict[int, list[pd.DataFrame]] = {}
-            for pdf in batches:
-                for s, grp in pdf.groupby("shard"):
+            for batch in batches:
+                for s, grp in batch.to_pandas().groupby("shard"):
                     parts.setdefault(int(s), []).append(grp)
             q_ids, q_mat = bq.value
             for s, chunks in parts.items():
@@ -360,11 +362,17 @@ class ShardedHNSWIndex:
                         out_p.append(pos)
                         out_i.append(ext)
                         out_d.append(float(d))
-                yield pd.DataFrame(
-                    {"qid": out_q, "pos": out_p, "id": out_i, "dist": out_d}
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(out_q, pa.int64()),
+                        pa.array(out_p, pa.int32()),
+                        pa.array(out_i, pa.int64()),
+                        pa.array(out_d, pa.float64()),
+                    ],
+                    names=["qid", "pos", "id", "dist"],
                 )
 
-        cand = self.data.mapInPandas(
+        cand = self.data.mapInArrow(
             kernel, "qid bigint, pos int, id bigint, dist double"
         )
         from auncel_spark.operators.topk import merge_topk

@@ -16,14 +16,13 @@ multi-sequence scan, here exact since nq·ksub² is small driver-side).
 from __future__ import annotations
 
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
+from auncel_spark.functions.vector import map_rows
 from auncel_spark.index.ivf import IVFIndex
-from auncel_spark.index.kmeans import train_kmeans
+from auncel_spark.index.kmeans import exact_argmin, train_kmeans
 
 
 class IMIIndex(IVFIndex):
@@ -80,31 +79,20 @@ class IMIIndex(IVFIndex):
             c0, _ = train_kmeans(half0, ksub, metric=metric, max_iter=kmeans_iter, seed=seed)
             c1, _ = train_kmeans(half1, ksub, metric=metric, max_iter=kmeans_iter, seed=seed + 1)
         # assignment: two half-argmins composed into list_no
-        from typing import Iterator
+        def assign(st, mat):
+            a0, a1 = st
+            n = len(mat)
+            l0 = exact_argmin(
+                n, a0.size, lambda s: ((mat[s, None, :dsub] - a0[None]) ** 2).sum(-1)
+            )
+            l1 = exact_argmin(
+                n, a1.size, lambda s: ((mat[s, None, dsub:] - a1[None]) ** 2).sum(-1)
+            )
+            return l0 * ksub + l1
 
-        import pandas as pd
-
-        bc = base.sparkSession.sparkContext.broadcast((c0, c1, dsub, ksub))
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            a0, a1, ds, ks = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = as_matrix(pdf["vec"])
-                d0 = ((mat[:, None, :ds] - a0[None, :, :]) ** 2).sum(-1)
-                d1 = ((mat[:, None, ds:] - a1[None, :, :]) ** 2).sum(-1)
-                lab = d0.argmin(1) * ks + d1.argmin(1)
-                yield pdf.assign(list_no=lab.astype(np.int32))
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(b.schema.fields) + [T.StructField("list_no", T.IntegerType())]
-        )
         return cls(
             base.sparkSession, np.stack([c0, c1]), None, metric,
-            data_df=b.mapInPandas(assign, schema),
+            data_df=map_rows(b, assign, ["vec"], [("list_no", "int")], state=(c0, c1)),
         )
 
     def coarse_rank(self, qids: np.ndarray, qmat: np.ndarray, nprobe: int):

@@ -17,16 +17,13 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auncel_spark.config import DEFAULT_NLIST, Metric
+from auncel_spark.functions.vector import as_matrix, map_rows
 from auncel_spark.index.ivf import IVFIndex
 from auncel_spark.index.kmeans import assign_lists, train_kmeans
 from auncel_spark.index.list_store import store_of, write_store
@@ -459,25 +456,10 @@ class IVFPQRIndex(IVFPQIndex):
 
 def _residual2_df(coded: DataFrame, pq: ProductQuantizer) -> DataFrame:
     """r2 = rvec − decode(code), Arrow-batched."""
-    from pyspark.sql import types as T
-
-    spark = coded.sparkSession
-    bc = spark.sparkContext.broadcast(pq.codebooks)
-    schema = T.StructType(
-        list(coded.schema.fields) + [T.StructField("r2", T.ArrayType(T.FloatType()))]
+    return map_rows(
+        coded, lambda pq, rv, codes: rv - pq.decode_np(codes),
+        ["rvec", "code"], [("r2", "array<float>")], state=pq,
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = ProductQuantizer(bc.value)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rv = as_matrix(pdf["rvec"])
-            codes = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]])
-            r2 = rv - kernel.decode_np(codes)
-            yield pdf.assign(r2=list(r2.astype(np.float32)))
-
-    return coded.mapInPandas(work, schema=schema)
 
 
 def split_ivfpq_lists(
@@ -551,26 +533,18 @@ def split_ivfpq_lists(
     #    light pass over the flat lists: the per-row work is a
     #    split-way argmin, and the emitted frame is (id, rlist) — the
     #    same ~12 bytes/row exchange shape as ensure_index_big)
-    bc = spark.sparkContext.broadcast(children)
+    def route(ch, ids, mat, lns_b):
+        rl = np.empty(len(ids), dtype=np.int32)
+        for ln in np.unique(lns_b):
+            m = lns_b == ln
+            c = ch[int(ln)]
+            dd = (c * c).sum(axis=1)[None, :] - 2.0 * (mat[m] @ c.T)
+            rl[m] = int(ln) * split + dd.argmin(axis=1).astype(np.int32)
+        return ids, rl
 
-    def route(batches):
-        ch = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy()
-            lns_b = pdf["list_no"].to_numpy()
-            mat = as_matrix(pdf["vec"])
-            rl = np.empty(len(ids), dtype=np.int32)
-            for ln in np.unique(lns_b):
-                m = lns_b == ln
-                c = ch[int(ln)]
-                dd = (c * c).sum(axis=1)[None, :] - 2.0 * (mat[m] @ c.T)
-                rl[m] = int(ln) * split + dd.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame({"id": ids, "rlist": rl})
-
-    routed = flat_idx.data.select("id", "vec", "list_no").mapInPandas(
-        route, "id bigint, rlist int"
+    routed = map_rows(
+        flat_idx.data, route, ["id", "vec", "list_no"],
+        [("id", "bigint"), ("rlist", "int")], keep=[], state=children,
     )
     # 3) re-key the codes by the refined list id (codes unchanged) into
     #    the new index's store
@@ -604,22 +578,7 @@ def split_ivfpq_lists(
 
 def _residual_df(assigned: DataFrame, centroids: np.ndarray) -> DataFrame:
     """rvec = vec − centroid[list_no], Arrow-batched."""
-    from pyspark.sql import types as T
-
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    schema = T.StructType(
-        list(assigned.schema.fields)
-        + [T.StructField("rvec", T.ArrayType(T.FloatType()))]
+    return map_rows(
+        assigned, lambda cents, mat, lns: mat - cents[lns], ["vec", "list_no"],
+        [("rvec", "array<float>")], state=np.asarray(centroids, dtype=np.float64),
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = as_matrix(pdf["vec"])
-            res = mat - cents[pdf["list_no"].to_numpy()]
-            yield pdf.assign(rvec=list(res.astype(np.float32)))
-
-    return assigned.mapInPandas(work, schema=schema)

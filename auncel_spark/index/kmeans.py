@@ -18,15 +18,11 @@ queries SQL-oracle-expressible; benchmarks use seeded random init.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from auncel_spark.config import Metric
+from auncel_spark.functions.vector import as_matrix, map_rows
 from auncel_spark.index.scan import _TILE_ELEMS
 
 MAX_POINTS_PER_CENTROID = 256  # Clustering.h: training rows per centroid
@@ -44,38 +40,22 @@ def assign_lists(
     Broadcast-GEMM argmin per Arrow batch; ties broken by lowest
     centroid index (np.argmin semantics == ORDER BY dist, centroid id).
     """
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
     is_l2 = metric == Metric.L2
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("list_no", T.IntegerType()),
-            T.StructField("cdist", T.DoubleType()),
-        ]
+
+    def kernel(cents, mat):
+        dots = mat @ cents.T
+        if is_l2:
+            c_norms = (cents * cents).sum(axis=1)[None, :]
+            dist = (mat * mat).sum(axis=1)[:, None] + c_norms - 2.0 * dots
+        else:
+            dist = -dots
+        lab = dist.argmin(axis=1)
+        return lab, dist[np.arange(len(lab)), lab]
+
+    return map_rows(
+        df, kernel, [vec_col], [("list_no", "int"), ("cdist", "double")],
+        state=np.asarray(centroids, dtype=np.float64),
     )
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        c_norms = (cents * cents).sum(axis=1)[None, :]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = as_matrix(pdf[vec_col])
-            dots = mat @ cents.T
-            if is_l2:
-                dist = (mat * mat).sum(axis=1)[:, None] + c_norms - 2.0 * dots
-            else:
-                dist = -dots
-            lab = dist.argmin(axis=1)
-            yield pdf.assign(
-                list_no=lab.astype(np.int32),
-                cdist=dist[np.arange(len(lab)), lab],
-            )
-
-    return df.mapInPandas(work, schema=out_schema)
 
 
 def lloyd(
@@ -122,6 +102,18 @@ def lloyd(
         if shift < tol:
             break
     return cents, history
+
+
+def exact_argmin(n: int, width: int, dist) -> np.ndarray:
+    """Row-wise argmin of ``dist(rows)``, a caller's exact |x − c|²
+    broadcast over a slice of its n rows, one block of ~``_TILE_ELEMS``
+    (rows × ``width``) temporaries at a time instead of one (n, k, dsub)
+    block. Each row's arithmetic is the unblocked expression's, so the
+    labels are too."""
+    block = max(1, _TILE_ELEMS // max(width, 1))
+    return np.concatenate(
+        [dist(slice(s, s + block)).argmin(axis=1) for s in range(0, max(n, 1), block)]
+    )
 
 
 def _split(

@@ -51,6 +51,7 @@ import numpy as np
 import pandas as pd
 
 from auncel_spark.config import Metric
+from auncel_spark.functions.vector import _rows_of_arrow, to_arrow
 
 # column name -> (file, dtype)
 COLUMNS = {
@@ -161,21 +162,6 @@ def _willneed_rows(path: str, rows_sorted: np.ndarray, d: int,
     offs = (offset + starts * rb).tolist()
     lens = ((ends - starts + 1) * rb).tolist()
     _fadvise(path, zip(offs, lens))
-
-
-def _rows_of_arrow(col, name: str) -> np.ndarray:
-    """(n, width) rows of one staged Arrow column: float32 vectors for
-    ``vec``, uint8 bytes for the code columns."""
-    import pyarrow as pa
-
-    from auncel_spark.index.scan import _binary_matrix
-
-    col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    n = len(col)
-    if name == "vec":
-        flat = col.flatten().to_numpy(zero_copy_only=False)
-        return np.asarray(flat, dtype=np.float32).reshape(n, -1)
-    return _binary_matrix(col).reshape(n, -1)
 
 
 def qid_positions(qids, keys) -> np.ndarray:
@@ -407,27 +393,15 @@ class ListStore:
         from auncel_spark.index.scan import _task_runs
 
         columns = list(columns)
+        types = {c: "array<float>" if c == "vec" else "binary" for c in columns}
         schema = ", ".join(
-            ["id bigint"]
-            + [f"{c} {'array<float>' if c == 'vec' else 'binary'}" for c in columns]
-            + ["list_no int"]
+            ["id bigint"] + [f"{c} {types[c]}" for c in columns] + ["list_no int"]
         )
         lists = np.flatnonzero(self.list_sizes())
         runs = _task_runs(self.offsets, lists, spark.sparkContext.defaultParallelism)
         if not runs:
             return spark.createDataFrame([], schema)
         store = self
-
-        def arrow_col(name, rows):
-            m = len(rows)
-            if name == "vec":
-                w = rows.shape[1]
-                offs = pa.array(np.arange(0, (m + 1) * w, w, dtype=np.int32))
-                return pa.ListArray.from_arrays(offs, pa.array(rows.ravel()))
-            offs = np.arange(0, (m + 1) * rows.shape[1], rows.shape[1], dtype=np.int32)
-            return pa.Array.from_buffers(
-                pa.binary(), m, [None, pa.py_buffer(offs), pa.py_buffer(rows.tobytes())]
-            )
 
         def read(batches):
             for batch in batches:
@@ -442,8 +416,7 @@ class ListStore:
                         r1 = min(hi, r0 + _FRAME_BATCH)
                         arrays = [pa.array(np.asarray(store.ids()[r0:r1]))]
                         arrays += [
-                            arrow_col(c, np.ascontiguousarray(store.column(c)[r0:r1]))
-                            for c in columns
+                            to_arrow(store.column(c)[r0:r1], types[c]) for c in columns
                         ]
                         arrays.append(pa.array(list_no[r0 - lo : r1 - lo]))
                         yield pa.RecordBatch.from_arrays(

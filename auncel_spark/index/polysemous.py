@@ -9,25 +9,30 @@ Reference (SURVEY.md §2.2 B12, §2.3 O11):
   that code Hamming distance correlates with true distance — making
   the cheap filter meaningful.
 
-Spark shape: the filter is a popcount column predicate evaluated
-before the (more expensive) ADC gather — Catalyst's
-filter-before-expensive-projection, expressed inside one Arrow kernel.
+Spark shape: both searches are the brute-force scan of
+``operators/knn.py`` (``_flat_partials``) with a code-table distance
+block; the polysemous filter masks the ADC block by popcount, after
+one counting scan has decided which queries fall back to full ADC.
 Annealing runs driver-side (the codebook permutation is M×256 ints;
 the reference trains on a sample too).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from auncel_spark.config import Metric
-from auncel_spark.index.binary import _POP
+from auncel_spark.functions.vector import (
+    _binary_matrix,
+    ids_codes_from_arrow,
+    ids_mat_from_arrow,
+    map_rows,
+    vec_matrix,
+)
+from auncel_spark.index.binary import _POP, hamming_range_count
 from auncel_spark.index.pq import ProductQuantizer
+from auncel_spark.operators.knn import _flat_partials
 from auncel_spark.operators.topk import topk_per_query
 
 
@@ -146,25 +151,14 @@ def polysemous_permutation(
     return perms
 
 
+def _permute(perms: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Codes with subspace m's code c replaced by ``perms[m][c]``."""
+    return perms[np.arange(perms.shape[0])[None, :], codes].astype(np.uint8)
+
+
 def remap_codes(df: DataFrame, perms: np.ndarray, code_col: str = "code") -> DataFrame:
     """Apply the polysemous permutation to stored codes."""
-    from pyspark.sql import types as T
-
-    bc = df.sparkSession.sparkContext.broadcast(perms)
-    schema = df.schema
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf[code_col]])
-            out = np.empty_like(codes)
-            for m in range(P.shape[0]):
-                out[:, m] = P[m][codes[:, m]]
-            yield pdf.assign(**{code_col: [bytes(c) for c in out]})
-
-    return df.mapInPandas(work, schema=schema)
+    return map_rows(df, _permute, [code_col], [(code_col, "binary")], state=perms)
 
 
 def polysemous_knn(
@@ -177,54 +171,50 @@ def polysemous_knn(
     perms: np.ndarray | None = None,
 ) -> DataFrame:
     """ST_polysemous: filter candidates whose code Hamming distance to
-    the query's code is < ht, ADC only on survivors; candidates the
-    filter starves below k fall back to full ADC for that query
-    (matching the reference's behavior of returning k results)."""
-    spark = queries.sparkSession
-    qrows = queries.select("qid", "vec").collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["vec"] for r in qrows], dtype=np.float64)
-    qcodes = pq.encode_np(qmat)
-    if perms is not None:
-        for m in range(pq.M):
-            qcodes[:, m] = perms[m][qcodes[:, m]]
-    bc = spark.sparkContext.broadcast((qids, qmat, qcodes, pq.codebooks))
-    b = coded_base.select("id", "code")
+    the query's code is < ht, ADC only on survivors. A query with fewer
+    than k survivors in the whole base falls back to full ADC (matching
+    the reference's behavior of returning k results): one counting
+    scan (``hamming_range_count``) decides that per query before the
+    ``_flat_partials`` scan, so the result does not depend on how the
+    base is partitioned."""
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gqids, gq, gqc, books = bc.value
-        kernel = ProductQuantizer(books)
-        luts = np.stack([kernel.lut_np(q, metric) for q in gq])
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]])
-            ham = _POP[gqc[:, None, :] ^ codes[None, :, :]].sum(axis=2)  # (nq, n)
-            out = []
-            for qi in range(len(gqids)):
-                mask = ham[qi] < ht
-                if mask.sum() < k:  # filter too aggressive → full ADC
-                    mask = np.ones(len(ids), dtype=bool)
-                sub = codes[mask]
-                gathered = luts[qi][np.arange(kernel.M)[None, :], sub]
-                dist = gathered.sum(axis=1)
-                sids = ids[mask]
-                kk = min(k, len(dist))
-                sel = np.lexsort((sids, dist))[:kk]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": np.full(kk, gqids[qi], dtype=np.int64),
-                            "id": sids[sel],
-                            "dist": dist[sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def encode(st, x):
+        books, P = st
+        codes = ProductQuantizer(books).encode_np(x)
+        return codes if P is None else _permute(P, codes)
 
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
+    q = map_rows(
+        queries.select("qid", "vec"), encode, ["vec"], [("code", "binary")],
+        state=(pq.codebooks, perms),
+    )
+    base = coded_base.select("id", "code")
+    survivors = hamming_range_count(q, base, ht, q_bits_col="code", bits_col="code")
+    q = q.join(survivors, "qid", "left")
+
+    def qdecode(batch):
+        qids = batch.column("qid").to_numpy(zero_copy_only=False).astype(np.int64)
+        full = batch.column("cnt").fill_null(0).to_numpy(zero_copy_only=False) < k
+        qmat = vec_matrix(batch.column("vec"))
+        return qids, (qmat, _binary_matrix(batch.column("code")), full)
+
+    books = queries.sparkSession.sparkContext.broadcast(pq.codebooks)
+
+    def kernel(qs):
+        qmat, qcodes, full = qs
+        adc = ProductQuantizer(books.value)
+        luts = np.stack([adc.lut_np(q, metric) for q in qmat])  # (nq, M, ksub)
+        sub = np.arange(adc.M)[None, :]
+
+        def score(codes):
+            dist = luts[:, sub, codes].sum(axis=2)
+            ham = _POP[qcodes[:, None, :] ^ codes[None, :, :]].sum(axis=2)
+            return np.where((ham < ht) | full[:, None], dist, np.inf)
+
+        return score
+
+    partial = _flat_partials(
+        q, base, k, kernel, decode=ids_codes_from_arrow, qdecode=qdecode
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")
 
 
@@ -237,11 +227,6 @@ def sdc_knn(
     """ST_SDC: symmetric distance — the query is PQ-encoded too and
     distances come from precomputed centroid-to-centroid tables
     (cheaper queries, coarser distances)."""
-    spark = queries.sparkSession
-    qrows = queries.select("qid", "vec").collect()
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["vec"] for r in qrows], dtype=np.float64)
-    qcodes = pq.encode_np(qmat)
     # (M, ksub, ksub) symmetric tables
     sdc = np.stack(
         [
@@ -249,29 +234,24 @@ def sdc_knn(
             for m in range(pq.M)
         ]
     )
-    bc = spark.sparkContext.broadcast((qids, qcodes, sdc))
-    b = coded_base.select("id", "code")
+    tables = queries.sparkSession.sparkContext.broadcast(sdc)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gqids, gqc, tables = bc.value
-        M = tables.shape[0]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            codes = np.array([np.frombuffer(c, dtype=np.uint8) for c in pdf["code"]])
-            dist = np.zeros((len(gqids), len(ids)))
-            for m in range(M):
-                dist += tables[m][gqc[:, m][:, None], codes[:, m][None, :]]
-            kk = min(k, dist.shape[1])
-            part = np.lexsort((np.broadcast_to(ids, dist.shape), dist), axis=1)[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(gqids, kk),
-                    "id": ids[part].ravel(),
-                    "dist": np.take_along_axis(dist, part, axis=1).ravel(),
-                }
-            )
+    def qdecode(batch):
+        qids, qmat = ids_mat_from_arrow(batch)
+        return qids, pq.encode_np(qmat)
 
-    partial = b.mapInPandas(scan, schema="qid bigint, id bigint, dist double")
+    def kernel(qcodes):
+        def score(codes):
+            t = tables.value
+            dist = np.zeros((len(qcodes), len(codes)))
+            for m in range(t.shape[0]):
+                dist += t[m][qcodes[:, m][:, None], codes[:, m][None, :]]
+            return dist
+
+        return score
+
+    partial = _flat_partials(
+        queries.select("qid", "vec"), coded_base.select("id", "code"), k, kernel,
+        decode=ids_codes_from_arrow, qdecode=qdecode,
+    )
     return topk_per_query(partial, k).select("qid", "pos", "id", "dist")

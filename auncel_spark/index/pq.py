@@ -13,25 +13,22 @@ Reference (SURVEY.md §2.2 B6-B7, §2.3 O8):
 Spark shape: codebooks are tiny (M·ksub·dsub floats = d·256 ≈ 64 KB)
 → trained driver-side on a bounded seeded sample (the reference also
 trains on ≤ max_train_points sampled rows, ProductQuantizer.cpp) and
-broadcast. Encoding and ADC scans are Arrow-batched numpy kernels; the
-relational shell (probe join, window top-k) is identical to IVF-Flat,
-so Catalyst pruning still applies. Codes cut scan+shuffle bytes by
+broadcast. Encoding is a numpy kernel over Arrow batches (``map_rows``);
+ADC scans run in the ranked-list scan (index/scan.py ``PQScanner``) or,
+flat, in ``_flat_partials``, and a window top-k merges their partials
+as for IVF-Flat. Codes cut scan+shuffle bytes by
 d·4/M (32× at d=64, M=8) — the 100 TB path (SURVEY §7.3 "Scale").
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from auncel_spark.config import Metric
-from auncel_spark.index.kmeans import lloyd, sample_matrix
-from auncel_spark.operators.knn import _flat_partials, ids_codes_from_arrow
+from auncel_spark.functions.vector import ids_codes_from_arrow, map_rows
+from auncel_spark.index.kmeans import exact_argmin, lloyd, sample_matrix
+from auncel_spark.operators.knn import _flat_partials
 from auncel_spark.operators.topk import topk_per_query
 
 
@@ -83,8 +80,7 @@ class ProductQuantizer:
     def encode_np(self, x: np.ndarray, gemm: bool = False) -> np.ndarray:
         """Per-subspace argmin encode. ``gemm=False`` (default) uses the
         exact |s − c|² broadcast — bit-matched to the SQL oracles'
-        list_distance replay, but it materializes an (n, ksub, dsub)
-        block per subspace (~800 MB at 64k-row Arrow batches).
+        list_distance replay, in row blocks (``exact_argmin``).
         ``gemm=True`` uses argmin(|c|² − 2·s·cᵀ) — same argmin up to
         float rounding on near-ties, O(n·ksub) memory and BLAS-bound;
         the big-tier build path (10⁸-row encodes) sets it."""
@@ -95,9 +91,12 @@ class ProductQuantizer:
             cb = self.codebooks[m]
             if gemm:
                 d = (cb * cb).sum(-1)[None, :] - 2.0 * (sub @ cb.T)
+                codes[:, m] = d.argmin(axis=1)
             else:
-                d = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-            codes[:, m] = d.argmin(axis=1)
+                codes[:, m] = exact_argmin(
+                    n, self.ksub * self.dsub,
+                    lambda s: ((sub[s, None, :] - cb[None, :, :]) ** 2).sum(-1),
+                )
         return codes
 
     def decode_np(self, codes: np.ndarray) -> np.ndarray:
@@ -130,44 +129,16 @@ class ProductQuantizer:
         code_col: str = "code",
         gemm: bool = False,
     ) -> DataFrame:
-        from pyspark.sql import types as T
-
-        bc = df.sparkSession.sparkContext.broadcast(self.codebooks)
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(code_col, T.BinaryType())]
+        return map_rows(
+            df, lambda pq, x: pq.encode_np(x, gemm=gemm),
+            [vec_col], [(code_col, "binary")], state=self,
         )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pq = ProductQuantizer(bc.value)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = as_matrix(pdf[vec_col])
-                codes = pq.encode_np(mat, gemm=gemm)
-                yield pdf.assign(**{code_col: [bytes(c) for c in codes]})
-
-        return df.mapInPandas(work, schema=schema)
 
     def decode(self, df: DataFrame, code_col: str = "code", out_col: str = "vec_dec") -> DataFrame:
-        from pyspark.sql import types as T
-
-        bc = df.sparkSession.sparkContext.broadcast(self.codebooks)
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
+        return map_rows(
+            df, lambda pq, c: pq.decode_np(c),
+            [code_col], [(out_col, "array<float>")], state=self,
         )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pq = ProductQuantizer(bc.value)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.array(
-                    [np.frombuffer(b, dtype=np.uint8) for b in pdf[code_col]]
-                )
-                yield pdf.assign(**{out_col: list(pq.decode_np(codes).astype(np.float32))})
-
-        return df.mapInPandas(work, schema=schema)
 
     def to_dict(self) -> dict:
         return {"codebooks": self.codebooks.tolist()}

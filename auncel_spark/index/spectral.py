@@ -15,15 +15,11 @@ threshold, packbits); search reuses the binary Hamming machinery
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from auncel_spark.functions.vector import map_rows
 from auncel_spark.index.binary import hamming_knn, pack_bits_np
 from auncel_spark.index.transforms import PCATransform
 
@@ -75,29 +71,9 @@ class SpectralHash:
         self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
     ) -> DataFrame:
         """(id, bits): packed spectral-hash codes."""
-        bc = df.sparkSession.sparkContext.broadcast(
-            (self.pca.to_dict(), self.thresholds)
-        )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from auncel_spark.index.transforms import transform_from_dict
-
-            pd_dict, th = bc.value
-            sh = SpectralHash(transform_from_dict(pd_dict), th)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = as_matrix(pdf[vec_col])
-                codes = sh.encode_np(mat)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf[id_col].to_numpy(dtype=np.int64),
-                        "bits": [bytes(c) for c in codes],
-                    }
-                )
-
-        return df.select(id_col, vec_col).mapInPandas(
-            work, schema="id bigint, bits binary"
+        return map_rows(
+            df, lambda sh, ids, x: (ids, sh.encode_np(x)), [id_col, vec_col],
+            [("id", "bigint"), ("bits", "binary")], keep=[], state=self,
         )
 
     def knn(

@@ -22,14 +22,11 @@ reference (4-bit halves the code footprint vs 8-bit).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from auncel_spark.functions.vector import as_matrix, map_rows
 
 _LEVELS = {"8bit": 255, "6bit": 63, "4bit": 15}
 
@@ -212,43 +209,16 @@ class ScalarQuantizer:
         return self.vmin + (c.astype(np.float64) + 0.5) / self.levels * self.vdiff
 
     def encode(self, df: DataFrame, vec_col: str = "vec", code_col: str = "code") -> DataFrame:
-        from pyspark.sql import types as T
-
-        bc = df.sparkSession.sparkContext.broadcast(self.to_dict())
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(code_col, T.BinaryType())]
+        return map_rows(
+            df, lambda sq, x: sq.encode_np(x),
+            [vec_col], [(code_col, "binary")], state=self,
         )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sq = ScalarQuantizer.from_dict(bc.value)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = as_matrix(pdf[vec_col])
-                codes = sq.encode_np(mat)
-                yield pdf.assign(**{code_col: [bytes(c) for c in codes]})
-
-        return df.mapInPandas(work, schema=schema)
 
     def decode(self, df: DataFrame, code_col: str = "code", out_col: str = "vec_dec") -> DataFrame:
-        from pyspark.sql import types as T
-
-        bc = df.sparkSession.sparkContext.broadcast(self.to_dict())
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
+        return map_rows(
+            df, lambda sq, c: sq.decode_np(c),
+            [code_col], [(out_col, "array<float>")], state=self,
         )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sq = ScalarQuantizer.from_dict(bc.value)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.array([np.frombuffer(b, dtype=np.uint8) for b in pdf[code_col]])
-                dec = sq.decode_np(codes).astype(np.float32)
-                yield pdf.assign(**{out_col: list(dec)})
-
-        return df.mapInPandas(work, schema=schema)
 
     def to_dict(self) -> dict:
         return {

@@ -20,18 +20,12 @@ reference's sequential apply).
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
-
 import numpy as np
-
-from auncel_spark.functions.vector import as_matrix
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from auncel_spark.index.kmeans import sample_matrix
+from auncel_spark.functions.vector import map_rows
+from auncel_spark.index.kmeans import exact_argmin, sample_matrix
 
 
 class VectorTransform:
@@ -46,25 +40,10 @@ class VectorTransform:
 
     def apply(self, df: DataFrame, vec_col: str = "vec", out_col: str | None = None) -> DataFrame:
         out_col = out_col or vec_col
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast(self)
-        fields = [f for f in df.schema.fields if f.name != out_col]
-        schema = T.StructType(
-            fields + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
+        return map_rows(
+            df, lambda vt, x: vt.apply_np(x), [vec_col], [(out_col, "array<float>")],
+            keep=[c for c in df.columns if c != out_col], state=self,
         )
-
-        def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vt = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = as_matrix(pdf[vec_col])
-                out = vt.apply_np(mat).astype(np.float32)
-                cols = {f.name: pdf[f.name] for f in fields}
-                cols[out_col] = list(out)
-                yield pd.DataFrame(cols)
-
-        return df.mapInPandas(work, schema=schema)
 
     def to_dict(self) -> dict:
         raise NotImplementedError
@@ -158,7 +137,10 @@ class OPQTransform(LinearTransform):
             for m in range(M):
                 sl = slice(m * dsub, (m + 1) * dsub)
                 cents = train_codebook(xr[:, sl], min(256, len(x)), 4, seed + it * M + m)
-                lab = ((xr[:, sl, None] - cents.T[None, :, :]) ** 2).sum(1).argmin(1)
+                lab = exact_argmin(
+                    len(xr), cents.size,
+                    lambda s: ((xr[s, sl, None] - cents.T[None, :, :]) ** 2).sum(1),
+                )
                 xhat[:, sl] = cents[lab]
             u, _, vt = np.linalg.svd(x.T @ xhat)
             R = (u @ vt).T

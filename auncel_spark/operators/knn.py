@@ -19,10 +19,11 @@ matrix in one vectorized pass), scores row blocks with one BLAS GEMM
 running (dist, id) top-k per task and emits it once — nq·k rows per
 task instead of nq·|partition| — then a global window merge. Shuffle
 volume is independent of base size. Exact kNN, multi-metric and
-per-shard kNN, BaseShift, split-vector, Hamming, PQ-ADC and the
-streaming standing-query scorer are thin callers that supply only the
-batch decode and the distance block. ``range_search`` is a filter, not
-a top-k, but shares the query broadcast, decode and distance helper.
+per-shard kNN, BaseShift, split-vector, Hamming, PQ-ADC, polysemous,
+SDC and the streaming standing-query scorer are thin callers that
+supply only the batch decode and the distance block. ``range_search``
+is a filter, not a top-k, but shares the query broadcast, decode and
+distance helper.
 
 Scale note: the base is scanned exactly once with only (id, vec) read
 from Parquet (column pruning); vectors are never collected to the
@@ -50,16 +51,6 @@ def _prep_queries(queries: DataFrame, qid_col: str, vec_col: str) -> DataFrame:
 
 def _prep_base(base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_bvec"))
-
-
-def ids_codes_from_arrow(batch):
-    """(int64 ids, (n, code_size) uint8 codes) from an Arrow record
-    batch of (id bigint, code binary) — the coded twin of
-    ``ids_mat_from_arrow``, read straight from the Arrow buffers."""
-    from auncel_spark.index.scan import _binary_matrix
-
-    ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    return ids, _binary_matrix(batch.column(1))
 
 
 def _metric_dist(

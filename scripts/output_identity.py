@@ -18,7 +18,13 @@ factory's ``RFlat`` re-rank for ``IVF8,PQ4,RFlat`` and
 against the base, in the transformed space for the PCA chain). A fifth,
 ``train`` section dumps ``train_kmeans`` on the base (L2, and IP with
 spherical centroids): the centroids, the objective history and every
-base row's list under them.
+base row's list under them. A sixth, ``store`` section dumps the list
+store of every coded build — ``store/ivfpq/l2`` and ``/ip`` (the coded
+section's), ``store/ivfpq/opq`` (OPQ rotation and codebooks trained
+in the build), ``store/ivfpqr``, ``store/ivfsq/8bit`` and ``/4bit``,
+``store/binary_ivf`` and ``store/imi``: its ``ids`` and ``offsets`` and
+every payload column (``code``, ``rcode``, ``bits``; ``vec`` for IMI),
+compared byte for byte.
 ``compare`` checks two dumps with
 ``DataFrame.equals`` / ``array_equal`` and exits non-zero on any
 difference. A refactor that claims "the same bits" runs ``dump`` once
@@ -62,6 +68,7 @@ import sys
 import tempfile
 
 import numpy as np
+import pandas as pd
 
 # dumps whose dist may move by a rounding step with the task layout
 ROUNDED = ("flat/", "replica/", "coded/ivfpq.search/", "coded/ivfsq.search/", "rflat/")
@@ -125,7 +132,8 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
     from auncel_spark.index.binary import BinaryIVFIndex, pack_bits_np
     from auncel_spark.index.factory import build_index
     from auncel_spark.index.ivf import IVFIndex
-    from auncel_spark.index.ivfpq import IVFPQIndex
+    from auncel_spark.index.imi import IMIIndex
+    from auncel_spark.index.ivfpq import IVFPQIndex, IVFPQRIndex
     from auncel_spark.index.ivfsq import IVFSQIndex
     from auncel_spark.index.kmeans import assign_lists, train_kmeans
     from auncel_spark.index.pq import ProductQuantizer
@@ -151,6 +159,12 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
 
     def info(d):
         return {k: np.asarray(v) for k, v in d.items() if k != "retired_ms"}
+
+    def store(idx):
+        st = idx.store
+        cols = {c: np.array(st.column(c)) for c in sorted(st.columns)}
+        sizes = pd.DataFrame({"size": st.list_sizes()})
+        return sizes, {"ids": np.array(st.ids()), "offsets": st.offsets.copy(), **cols}
 
     got = {}
     for mode in ("flat", "replica"):
@@ -185,6 +199,7 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
             path=os.path.join(work, f"ivfpq_{metric.value}"),
         )
         got[f"coded/ivfpq.search/{metric.value}"] = (rows(pidx.search(queries, topk, nprobe)), {})
+        got[f"store/ivfpq/{metric.value}"] = store(pidx)
         if metric == Metric.L2:
             # twice with one base: the second call reads the store the
             # first one wrote from it
@@ -197,6 +212,7 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
             path=os.path.join(work, f"ivfsq_{qtype}"),
         )
         got[f"coded/ivfsq.search/{qtype}"] = (rows(sidx.search(queries, topk, nprobe)), {})
+        got[f"store/ivfsq/{qtype}"] = store(sidx)
 
     def bits(x, id_col):
         return spark.createDataFrame(
@@ -206,6 +222,18 @@ def dump(tree: str, out: str, corpus: str, work: str) -> None:
 
     bidx = BinaryIVFIndex.build(bits(xb, "id"), nlist=16)
     got["coded/binary_ivf.search"] = (rows(bidx.search(bits(xq, "qid"), topk, 4)), {})
+    got["store/binary_ivf"] = store(bidx)
+
+    # builds that train and encode through the engine's own kernels
+    got["store/ivfpq/opq"] = store(IVFPQIndex.build(
+        base, nlist=nlist, centroids=cents, M=8, opq=True, seed=3,
+        path=os.path.join(work, "ivfpq_opq"),
+    ))
+    got["store/ivfpqr"] = store(IVFPQRIndex.build(
+        base, nlist=nlist, centroids=cents, M=4, refine_M=8, seed=3,
+        path=os.path.join(work, "ivfpqr"),
+    ))
+    got["store/imi"] = store(IMIIndex.build(base, ksub=8, kmeans_iter=4, seed=3))
 
     # the factory's exact re-rank of each index's candidates
     for spec in ("IVF8,PQ4,RFlat", "PCA8,IVF8,Flat,RFlat"):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from auncel_spark.index.scan import _binary_matrix
+from auncel_spark.functions.vector import _binary_matrix
 
 
 def _ref(rows):

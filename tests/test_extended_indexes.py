@@ -510,3 +510,38 @@ def test_ivfpq_opq_build_search_saveload(spark, base_df, query_df, tiny_vectors,
     # ADC-only path returns k rows per query and is code-consistent
     adc = idx2.search(query_df, K, nprobe=8)
     assert adc.count() == xq.shape[0] * K
+
+
+def test_polysemous_fallback_is_per_query_over_the_whole_base(base_df, query_df, tiny_vectors, pq4):
+    """The "fewer than k survivors → full ADC" fallback is decided per
+    query over the whole base, so the result does not depend on the
+    partitioning and matches a numpy reference."""
+    xb, xq = tiny_vectors
+    coded = pq4.encode(base_df).select("id", "code").cache()
+    codes = np.stack(
+        [np.frombuffer(r["code"], dtype=np.uint8) for r in coded.orderBy("id").collect()]
+    )
+    qcodes = pq4.encode_np(xq.astype(np.float64))
+    pop = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
+    ham = pop[qcodes[:, None, :] ^ codes[None, :, :]].sum(axis=2)
+    # a threshold most queries pass with a few dozen survivors: far
+    # fewer than k per partition at 7 partitions
+    ht = int(np.median(np.sort(ham, axis=1)[:, 3 * K]))
+    want_ids, want_d = [], []
+    for qi in range(len(xq)):
+        mask = ham[qi] < ht
+        if mask.sum() < K:
+            mask[:] = True
+        lut = pq4.lut_np(xq[qi].astype(np.float64), Metric.L2)
+        dist = np.where(mask, lut[np.arange(pq4.M)[None, :], codes].sum(axis=1), np.inf)
+        order = np.lexsort((np.arange(len(codes)), dist))[:K]
+        want_ids.append(order)
+        want_d.append(dist[order])
+    assert ((ham < ht).sum(axis=1) >= K).sum() > len(xq) // 2
+    for parts in (1, 7):
+        res = polysemous_knn(query_df, coded.repartition(parts), pq4, K, ht=ht)
+        got = res.orderBy("qid", "pos").collect()
+        ids = np.array([r["id"] for r in got]).reshape(len(xq), K)
+        dist = np.array([r["dist"] for r in got]).reshape(len(xq), K)
+        np.testing.assert_array_equal(ids, np.stack(want_ids), err_msg=f"{parts} partitions")
+        np.testing.assert_allclose(dist, np.stack(want_d), rtol=1e-12)

@@ -128,3 +128,27 @@ def test_pq_train_splits_empty_clusters(spark):
     assert np.isfinite(pq.codebooks).all()
     for book in pq.codebooks:
         assert len(np.unique(book, axis=0)) == len(book)
+
+
+@pytest.mark.parametrize("ties", [False, True])
+def test_exact_argmin_blocks_equal_unblocked(ties):
+    """Row blocks of the exact |x − c|² argmin give the labels of the
+    one-block expression, in both layouts the engine uses (PQ encode /
+    IMI: (n, k, dsub) summed last; OPQ: (n, dsub, k) summed over dsub),
+    also when many distances tie."""
+    from auncel_spark.index.kmeans import exact_argmin
+
+    rng = np.random.default_rng(3)
+    n, k, dsub = 6000, 256, 4  # ~3 blocks of _TILE_ELEMS
+    if ties:
+        x = rng.integers(0, 3, (n, dsub)).astype(np.float64)
+        c = rng.integers(0, 3, (k, dsub)).astype(np.float64)
+    else:
+        x = rng.standard_normal((n, dsub))
+        c = rng.standard_normal((k, dsub))
+    last = exact_argmin(n, k * dsub, lambda s: ((x[s, None, :] - c[None, :, :]) ** 2).sum(-1))
+    np.testing.assert_array_equal(last, ((x[:, None, :] - c[None, :, :]) ** 2).sum(-1).argmin(1))
+    mid = exact_argmin(n, k * dsub, lambda s: ((x[s, :, None] - c.T[None, :, :]) ** 2).sum(1))
+    np.testing.assert_array_equal(mid, ((x[:, :, None] - c.T[None, :, :]) ** 2).sum(1).argmin(1))
+    none = exact_argmin(0, k * dsub, lambda s: ((x[:0][s, None, :] - c[None]) ** 2).sum(-1))
+    assert len(none) == 0
